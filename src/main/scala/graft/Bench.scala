@@ -127,8 +127,9 @@ object Bench {
   /** A2 skew microbench: top-2000-per-IP selection where ONE ip holds
     * `n` rows — the regime where `row_number() OVER (PARTITION BY
     * first_ip ...)` buffers and fully sorts the whole IP in one task,
-    * while the bounded-heap WinnerTopK keeps O(k) state (VERDICT r2 #2).
-    * Same input, same output rows; wall seconds for each shape. */
+    * while the WinnerDole operator the scheduler runs keeps one O(k)
+    * heap per IP (VERDICT r2 #2). Same input, same output rows; wall
+    * seconds for each shape. */
   private[graft] def skewKernel(cpus: Int, n: Long, k: Int): (Double, Double) = {
     val spark = newSession(cpus)
     import org.apache.spark.sql.expressions.Window
@@ -143,14 +144,10 @@ object Bench {
       (col("id") % 7).cast("int").as("hop_count"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df.count() // materialize
-    def heapOnce(): Long = {
-      val winners = graft.plans.WinnerTopKColumn(
-        col("uh48"), col("url"), col("priority"), col("ufn"),
-        col("spider_time_ms"), col("hop_count"), lit(k), lit(false), lit(0L),
-        lit(0), lit(0), k)
-      df.groupBy(col("first_ip")).agg(winners.as("ws"))
-        .select(posexplode(col("ws"))).count()
-    }
+    def heapOnce(): Long =
+      graft.plans.WinnerDole(df.select(col("*"), lit(k).as("ip_max"),
+        lit(false).as("was_indexed_in"), lit(0L).as("flags"),
+        lit(0).as("site_hash32"), lit(0).as("dom_hash32")), k, k).count()
     def windowOnce(): Long = {
       val w = Window.partitionBy(col("first_ip"))
         .orderBy(col("priority").desc, col("hop_count").asc, col("spider_time_ms").asc, col("uh48").asc)
@@ -628,21 +625,16 @@ object Bench {
          |
          || shape | wall secs |
          ||---|---|
-         || bounded-heap WinnerTopK (O(k) state/IP, the schedule path) | $skewHeapSecs%.2f |
+         || WinnerDole (O(k) heap per IP, the schedule path) | $skewHeapSecs%.2f |
          || row_number() window (full per-IP sort, the r1-r2 shape) | $skewWindowSecs%.2f |
          |
-         |Identical output rows; the heap aggregate does partial (map-side)
-         |top-k per input partition and merges k-bounded heaps, so the skewed
-         |IP never concentrates an unbounded sort in one task.
-         |
-         |The r3 uniform-data gap (heap's interpreted per-row eval vs the
-         |window's codegen) is CLOSED: winner selection now runs as the
-         |WinnerDole custom exec (plans/WinnerDole.scala) — radix sort on
-         |first_ip + one streamed reused bounded heap per IP, winners
-         |written straight to UnsafeRows. Same-day A/B (tools/SchedProfile,
-         |16M rows, local[8]): dole-only 3.6 s vs the r2 window shape
-         |4.8 s — the skew-safe operator is now also the faster one on
-         |uniform data. Cross-ROUND absolute rates are box-day-confounded:
+         |Identical output rows; WinnerDole (plans/WinnerDole.scala) radix
+         |sorts on first_ip and streams each IP through one reused bounded
+         |heap, writing winners straight to UnsafeRows, so the skewed IP
+         |never concentrates an unbounded sort in one task. On uniform data
+         |it is also the faster shape (r4 same-day A/B, 16M rows, local[8]:
+         |dole-only 3.6 s vs the r2 window shape 4.8 s). Cross-ROUND
+         |absolute rates are box-day-confounded:
          |the same commit measured 4.0M urls/sec on its commit day and
          |2.7M on a later day; within-day A/Bs and the scaling ratio are
          |the comparisons to trust. Two r4 regressions were bisected out
@@ -670,15 +662,6 @@ object Bench {
          |
          |(256-host 6-iteration baseline at local[$hi]: $hiLoopSched%.1f
          |scheduled/sec, $loopJobsPerIter%.0f jobs/iteration.)
-         |
-         |A carried-state variant (in-memory working set, parquet as
-         |async checkpoint — the Rdb-tree analogue) is implemented and
-         |byte-identical (Config.loopChainState, LoopChainSpec) but
-         |measured SLOWER at every sandbox scale tried (r4 2x2 A/B,
-         |local[8]: ~56 vs ~67 scheduled/sec): each persist+lineage-cut
-         |point forces AQE stage materialization serially on the driver
-         |path, costing more than the tiny-parquet re-reads it saves.
-         |The delta-bucket disk chain is the default shape.
          |
          |Reference anchor (BASELINE.md): ~1 page/sec/core spider+index ⇒ a
          |32-core box ≈ 32 fetch-equivalents/sec; this engine schedules

@@ -8,7 +8,7 @@ import graft.frontier.{Corpus, Crawl}
   *
   *  - `loopjobs`: the 1024/4096-host loop points with per-iteration
   *    Spark-job counts (VERDICT r5 next #7 — the jobs/iter creep at
-  *    4096 hosts; the fix is Config.quietBatchThreshold)
+  *    4096 hosts; the fix is the GraftShim.QuietBatchRows session gate)
   *  - `headnoop`: headline queries timed with the noop sink instead of
   *    count() — times the full materialization of every column
   *

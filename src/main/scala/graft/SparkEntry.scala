@@ -101,20 +101,6 @@ object SparkEntry {
         .filter(col("rank") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rank"))
     }),
-    "a2_winner_heap" -> ((s, d) => {
-      // the SAME top-k via the bounded-heap winner aggregate the crawl
-      // scheduler actually uses (plans.WinnerTopK) — oracle-checked
-      // against the SQL window, proving heap ≡ window output
-      val o = read(s, d, "orders").select(col("o_custkey"), col("o_orderkey"),
-        (-round(col("o_totalprice") * 100).cast("long")).as("negcents"))
-      o.groupBy(col("o_custkey"))
-        .agg(graft.plans.WinnerTopKColumn(
-          col("o_orderkey"), col("o_orderkey").cast("string"), lit(0), lit(0),
-          col("negcents"), lit(0), lit(3), lit(false), lit(0L), lit(0), lit(0), 3).as("ws"))
-        .select(col("o_custkey"), posexplode(col("ws")).as(Seq("pos", "w")))
-        .select(col("o_custkey"), col("w.uh48").as("o_orderkey"),
-          (col("pos") + 1).cast("long").as("rank"))
-    }),
     "a2_winner_dole" -> ((s, d) => {
       // the SAME top-k via the custom WinnerDole operator (logical plan +
       // strategy + streamed-heap exec) the compiled scheduler actually
@@ -916,8 +902,6 @@ object SparkEntry {
     "q1_lineitem_agg" ->
       "SELECT l_returnflag, l_linestatus, CAST(sum(l_quantity) AS BIGINT) AS sum_qty, count(*) AS cnt FROM lineitem GROUP BY l_returnflag, l_linestatus",
     "a2_winner_topk" ->
-      "SELECT o_custkey, o_orderkey, rank FROM (SELECT o_custkey, o_orderkey, row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank FROM orders) WHERE rank <= 3",
-    "a2_winner_heap" ->
       "SELECT o_custkey, o_orderkey, rank FROM (SELECT o_custkey, o_orderkey, row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank FROM orders) WHERE rank <= 3",
     "a2_winner_dole" ->
       "SELECT o_custkey, o_orderkey, rank FROM (SELECT o_custkey, o_orderkey, row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank FROM orders) WHERE rank <= 3",

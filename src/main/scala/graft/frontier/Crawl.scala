@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -28,7 +28,7 @@ import graft.rules._
   *     robots gate (X5) via per-host broadcast join
   *   → parse/extract (X7-X12) → replies + outlink requests
   *   → admission: bloom-prefiltered anti-join vs the URL-seen set (J2)
-  *   → snapshot append with per-partition lineage counters
+  *   → snapshot append, counters in the snapshot manifest
   * }}}
   *
   * Scale notes (10^10-URL frontier, 1000 executors):
@@ -87,34 +87,7 @@ object Crawl {
       // (the Msg25 "good inlinks, 1 per c block" analogue; the reference
       // bounds work per site via Msg25's inlink limits — LinkInfo.cpp
       // maxNumInlinks order of magnitude, not a hard constant)
-      siteInlinkCap: Int = 128,
-      // Chain crawl state between iterations IN MEMORY (lazy plans over
-      // the persisted per-iteration deltas) and turn the snapshot
-      // parquet writes into an ASYNC checkpoint that overlaps the next
-      // iteration's planning + stage-1 job. The disk chain stays
-      // byte-equivalent (drained before compaction / at run end); the
-      // reference holds exactly this state in RAM too (its Rdb trees +
-      // waiting tree), with Rdb dumps as the checkpoint analogue.
-      // DEFAULT OFF: measured SLOWER than the delta-bucket disk chain
-      // at every sandbox scale tried (r4 A/B: ~56 vs ~67 urls/sec,
-      // local[8], 6 iters) — each persist+lineage-cut point forces AQE
-      // stage materialization on the driver path, costing more than the
-      // tiny-parquet re-reads it saves. Output is byte-identical either
-      // way (LoopChainSpec); kept as the documented in-memory variant
-      // for environments where state re-reads are the bottleneck.
-      loopChainState: Boolean = false,
-      // Batch size below which an iteration (and its stage-2 state
-      // writes) runs on the AQE-off sibling session: under AQE every
-      // query-stage materialization is its own Spark job, pure fixed
-      // cost when the merges are small. r6 (VERDICT r5 next #7): the
-      // old hard-coded 10k gate flipped AQE back ON at ~12k
-      // urls/iteration (the 4096-host loop point), and jobs/iter rose
-      // 46 → 60 for merges that still fit one partition. AQE's actual
-      // levers — skew-join splitting (≥256 MB partitions) and
-      // partition coalescing — buy nothing below ~10^6 rows/iteration,
-      // so the default gate moves there; parameterised (not a local[N]
-      // constant) so a cluster profile can lower it.
-      quietBatchThreshold: Long = 1000000L
+      siteInlinkCap: Int = 128
   )
 
   def nowSecs(cfg: Config, iteration: Int): Long = cfg.baseTimeSecs + iteration * (cfg.clockStepMs / 1000L).max(1L)
@@ -520,11 +493,9 @@ object Crawl {
 
       // A2: winner selection runs downstream as the BOUNDED-heap custom
       // operator (plans.WinnerDole — the winner-tree analogue,
-      // MAX_WINNER_NODES): O(k) state per IP instead of the window's
-      // per-IP full sort, which buffers an entire skewed IP in one task
-      // at 100 TB; and a single streamed pass instead of
-      // groupBy(WinnerTopK)'s partial+final aggregate, whose per-heap
-      // serialize/deserialize was the r3 schedule kernel's top cost.
+      // MAX_WINNER_NODES): O(k) state per IP in one streamed pass,
+      // instead of the window's per-IP full sort, which buffers an
+      // entire skewed IP in one task at 100 TB.
       joined
         .withColumn("ufn", compiled.ufn)
         .withColumn("priority", compiled.priority)
@@ -1585,7 +1556,7 @@ object Crawl {
 
   def writeManifest(workdir: String, i: Int, metrics: Seq[MetricsRow]): Unit = {
     val d = snapDir(workdir, i)
-    val m = metrics.map(x => s"""{"partition":${x.partition},"scheduled":${x.scheduled},"fetched":${x.fetched},"new_urls":${x.new_urls},"dups_dropped":${x.dups_dropped},"wall_ms":${x.wall_ms}}""").mkString("[", ",", "]")
+    val m = metrics.map(x => s"""{"scheduled":${x.scheduled},"fetched":${x.fetched},"robots_denied":${x.robots_denied},"errors":${x.errors},"new_urls":${x.new_urls},"dups_dropped":${x.dups_dropped},"wall_ms":${x.wall_ms}}""").mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$d/MANIFEST.json"),
       s"""{"iteration":$i,"lineage":$m}""")
   }
@@ -1646,14 +1617,8 @@ object Crawl {
                                    errors: Long, newUrls: Long, dupsDropped: Long,
                                    status: Int = SpiderStatus.InProgress)
 
-  /** In-memory continuation of the crawl loop between compactions: every
-    * state input an iteration needs, as LAZY plans over the persisted
-    * outputs of earlier iterations — the same rows the disk chain holds,
-    * without re-reading it. `pending` are the outstanding async snapshot
-    * writes (the disk chain is eventually identical; drain before any
-    * disk read — compaction, resume, external queries). `caches` are the
-    * persisted datasets the lazy plans lean on, freed together once the
-    * chain is re-rooted on a compacted snapshot. */
+  /** Every state input an iteration needs, as lazy plans over the
+    * snapshot chain as of one snapshot ([[loadLoopState]]). */
   final case class LoopState(
       requests: Dataset[FrontierRequest],
       replies: Dataset[FrontierReply],
@@ -1670,21 +1635,25 @@ object Crawl {
       seenOnDisk: Boolean, // seen_uh48 StateTable chain exists (else derived from requests)
       bloom: DataFrame,
       bloomOnDisk: Boolean,
-      buckets: Map[String, Int], // keyed-state bucket counts (constant between compactions)
-      pending: Seq[scala.concurrent.Future[Any]],
-      caches: Seq[Dataset[_]]) {
-    def drain(): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Await.result(Future.sequence(pending), Duration.Inf)
-    }
-    def freeCaches(): Unit = caches.foreach(_.unpersist())
-  }
+      buckets: Map[String, Int]) // keyed-state bucket counts (constant between compactions)
 
-  /** Root a LoopState on the DISK chain as of snapshot i (chain start /
-    * post-compaction re-root). Lazy — nothing executes here. */
-  def loadLoopState(spark: SparkSession, workdir: String, i: Int, cfg: Config): LoopState =
+  /** Root a LoopState on the disk chain as of snapshot i. Lazy — nothing
+    * executes here. */
+  def loadLoopState(spark: SparkSession, workdir: String, i: Int, cfg: Config): LoopState = {
+    val vecsOnDisk = vecChainExists(workdir, i)
+    val seenOnDisk = seenChainExists(workdir, i)
+    // a pre-chain workdir writes the seen_uh48 / title_vecs chain FULL on
+    // its next iteration, sized from the table it derives from (uh48s are
+    // ~1/16 of the requests bytes, vectors ~1/64 of titledb payloads — a
+    // migration heuristic only; the next compaction re-sizes from the
+    // chain's own measured bytes)
+    def chainBuckets(name: String): Int = name match {
+      case "seen_uh48" if !seenOnDisk =>
+        StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, "requests") / 16)
+      case "title_vecs" if !vecsOnDisk =>
+        StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, "titledb") / 64)
+      case _ => StateTable.bucketsOf(workdir, i, name)
+    }
     LoopState(
       requests = loadRequests(spark, workdir, i),
       replies = loadReplies(spark, workdir, i),
@@ -1695,265 +1664,267 @@ object Crawl {
       quotaState = loadQuotaState(spark, workdir, i),
       ipCounts = loadIpCounts(spark, workdir, i),
       ipNext = loadIpNext(spark, workdir, i, cfg),
-      titleVecs = {
-        // O(delta) path: the title_vecs StateTable chain already holds
-        // latest-per-uh48 vectors (no per-iteration O(crawled) titledb
-        // scan + re-aggregate); pre-chain workdirs derive from titledb
-        // once and the next iteration writes the chain full.
-        if (vecChainExists(workdir, i))
+      // O(delta) path: the title_vecs StateTable chain already holds
+      // latest-per-uh48 vectors (no per-iteration O(crawled) titledb
+      // scan + re-aggregate); pre-chain workdirs derive from titledb
+      // once and the next iteration writes the chain full.
+      titleVecs =
+        if (vecsOnDisk)
           StateTable.load(spark, workdir, i, "title_vecs",
             df => Seq(df("uh48")), StateTable.bucketsOf(workdir, i, "title_vecs"),
             emptyVecs(spark))
-        else loadTitleVecs(spark, workdir, i)
-      },
-      vecsOnDisk = vecChainExists(workdir, i),
-      seenUh48 = {
-        // O(delta) path: the seen-uh48 StateTable chain holds every
-        // request uh48, bucketed so admission loads only the buckets
-        // of this batch's bloom-positive candidates; pre-chain
-        // workdirs fall back to the O(frontier) uh48 column scan and
-        // the next iteration writes the chain full.
-        if (seenChainExists(workdir, i))
+        else loadTitleVecs(spark, workdir, i),
+      vecsOnDisk = vecsOnDisk,
+      // O(delta) path: the seen-uh48 StateTable chain holds every
+      // request uh48, bucketed so admission loads only the buckets of
+      // this batch's bloom-positive candidates; pre-chain workdirs fall
+      // back to the O(frontier) uh48 column scan and the next iteration
+      // writes the chain full.
+      seenUh48 =
+        if (seenOnDisk)
           StateTable.load(spark, workdir, i, "seen_uh48",
             df => Seq(df("uh48")), StateTable.bucketsOf(workdir, i, "seen_uh48"),
             emptySeen(spark))
-        else loadRequests(spark, workdir, i).select("uh48")
-      },
-      seenOnDisk = seenChainExists(workdir, i),
+        else loadRequests(spark, workdir, i).select("uh48"),
+      seenOnDisk = seenOnDisk,
       bloom = loadBloom(spark, workdir, i, cfg),
       bloomOnDisk = (0 to i).exists(k =>
         new java.io.File(s"${snapDir(workdir, k)}/seen_bloom").exists),
       buckets = Seq("ip_state", "dom_state", "inlink_state", "tag_state",
           "quota_state", "title_vecs", "seen_uh48")
-        .map(n => n -> StateTable.bucketsOf(workdir, i, n)).toMap,
-      pending = Nil,
-      caches = Nil)
+        .map(n => n -> chainBuckets(n)).toMap)
+  }
 
   /** Run one full crawl iteration: read state as of snapshot i-1, write
-    * snapshot i (request/reply DELTAS — O(new data), not O(frontier)). */
-  /** Legacy single-iteration entry: state from the disk chain, writes
-    * drained before returning (callers read the snapshot right after —
-    * GenGoldens, the crawl_iteration oracle). */
+    * snapshot i (request/reply DELTAS — O(new data), not O(frontier)).
+    * Phases: load → schedule → fetch → resolve+admit → merge+commit. The
+    * iteration runs entirely on `spark` (Crawl.run passes the AQE-off
+    * sibling for small batches) and every write has landed, manifest
+    * last, when it returns. */
   def runIteration(spark: SparkSession, workdir: String, i: Int,
                    pages: Dataset[PageRow], robots: Dataset[RobotsRow],
                    hostMeta: Dataset[HostMeta], cfg: Config,
-                   redirClosure: DataFrame = null): IterationResult =
-    runIterationChained(spark, workdir, i, pages, robots, hostMeta, cfg,
-      redirClosure, chained = None, async = false)._1
-
-  def runIterationChained(spark: SparkSession, workdir: String, i: Int,
-                   pages: Dataset[PageRow], robots: Dataset[RobotsRow],
-                   hostMeta: Dataset[HostMeta], cfg: Config,
-                   redirClosure: DataFrame,
-                   chained: Option[LoopState],
-                   async: Boolean): (IterationResult, LoopState) = {
-    import spark.implicits._
-    // per-phase wall clocks, printed when GRAFT_LOOP_TIMING is set
-    val timing = sys.env.contains("GRAFT_LOOP_TIMING")
-    def timed[T](tag: String)(f: => T): T =
-      if (!timing) f else {
-        val tt0 = System.nanoTime(); val r = f
-        println(f"[iter $i] $tag%-16s ${(System.nanoTime() - tt0) / 1e9}%6.2f s"); r
-      }
-    val st = timed("s0_loads") {
-      chained.getOrElse(loadLoopState(spark, workdir, i - 1, cfg))
-    }
-    val (requests, replies, ipState, domState, inlinks, tagState, quotaState) =
-      (st.requests, st.replies, st.ipState, st.domState, st.inlinks, st.tagState, st.quotaState)
-
+                   redirClosure: DataFrame = null): IterationResult = {
     val t0 = System.currentTimeMillis()
-    val d = snapDir(workdir, i)
+    val st = loadLoopState(spark, workdir, i - 1, cfg)
+    val doled = schedulePhase(st, cfg, i)
+    val fetched = fetchPhase(spark, st, doled, pages, robots, cfg, i, redirClosure, snapDir(workdir, i))
+    val admitted = admitPhase(spark, workdir, i, st, fetched, hostMeta, cfg)
+    commitPhase(spark, workdir, i, st, doled, fetched, admitted, cfg)
+    val r = IterationResult(fetched.scheduled, fetched.fetched, fetched.robotsDenied,
+      fetched.errors, admitted.newUrls, fetched.outlinks - admitted.newUrls)
+    // the manifest lands last: a snapshot without one is not resumable
+    writeManifest(workdir, i, Seq(MetricsRow(i, r.scheduled, r.fetched, r.robotsDenied,
+      r.errors, r.newUrls, r.dupsDropped, System.currentTimeMillis() - t0)))
+    (Seq(doled.cached, fetched.cached) ++ admitted.caches).foreach(_.unpersist())
+    r
+  }
 
+  /** The schedule phase's dole: winners plus, in the wake pass, one
+    * waiting-tree sentinel per scanned IP (seq_in_ip == -1). */
+  private final case class Doled(out: ScheduleOut, cached: DataFrame, dole: DataFrame)
+
+  /** A3: due-IP pruned schedule with waiting-tree sentinels. The dole is
+    * SMALL — persisted so fetch and the ip_next roll-forward don't
+    * recompute the frontier scan, and lineage-cut: the cut view's plan
+    * is a LogicalRDD leaf reading the cache, so downstream operator
+    * construction (Catalyst analyzes EAGERLY per transformation) stops
+    * re-walking the schedule tree, whose compiled rule table is a very
+    * large expression — measured ~5 s/iteration of driver-side analysis
+    * before the cut. Blocks evicted under pressure recompute through
+    * the InMemoryRelation as usual. */
+  private def schedulePhase(st: LoopState, cfg: Config, i: Int): Doled = {
+    val so = scheduleWake(st.requests, st.replies, st.ipState, st.domState, cfg, i,
+      st.inlinks, st.quotaState, st.ipNext)
+    val cached = so.dole.persist(StorageLevel.MEMORY_AND_DISK)
+    Doled(so, cached, GraftShim.cutLineage(cached))
+  }
+
+  /** The fetch phase's results (persisted + cut) and the outcome
+    * counters read off the fetch_log write. */
+  private final case class Fetched(cached: Dataset[FetchResult], results: Dataset[FetchResult],
+                                   scheduled: Long, fetched: Long, robotsDenied: Long,
+                                   outlinks: Long) {
+    def errors: Long = scheduled - fetched - robotsDenied
+  }
+
+  /** Fetch the dole's batch, then write fetch_log with the outcome
+    * counters FUSED into the same job via observe() — no separate stats
+    * pass. The job also materializes the results cache every later
+    * phase reads. */
+  private def fetchPhase(spark: SparkSession, st: LoopState, doled: Doled,
+                         pages: Dataset[PageRow], robots: Dataset[RobotsRow], cfg: Config,
+                         i: Int, redirClosure: DataFrame, d: String): Fetched = {
+    import spark.implicits._
+    val batch = doled.dole.filter(col("seq_in_ip") >= 0).as[FetchTask]
+    // old-doc sample vectors for percentChanged — slim titledb projection
+    val cached = fetch(batch, pages, robots, cfg, i, redirClosure, st.titleVecs)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val results = GraftShim.cutLineage(cached.toDF).as[FetchResult]
+    val obs = org.apache.spark.sql.Observation()
+    results
+      .map(r => (i, r.task.first_ip, r.task.seq_in_ip, r.task.url, r.task.priority, r.errCode, r.outlinks.size))
+      .toDF("iteration", "first_ip", "seq", "url", "priority", "err_code", "n_out")
+      .observe(obs,
+        count(lit(1)).as("scheduled"),
+        sum(when(col("err_code") === lit(Errs.OK), 1L).otherwise(0L)).as("fetched"),
+        sum(when(col("err_code") === lit(Errs.EDOCDISALLOWED), 1L).otherwise(0L)).as("robots_denied"),
+        coalesce(sum(col("n_out").cast("long")), lit(0L)).as("outs"))
+      .drop("n_out")
+      .write.mode("overwrite").parquet(s"$d/fetch_log")
+    val m = obs.get
+    def n(k: String): Long = Option(m(k)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    Fetched(cached, results, n("scheduled"), n("fetched"), n("robots_denied"), n("outs"))
+  }
+
+  /** The resolve+admit phase's output: this iteration's frontier delta
+    * and the A7 inlink feed, all persisted (`caches`) so the concurrent
+    * commit writes share them. */
+  private final case class Admitted(resolved: Dataset[ResolvedOutlink],
+                                    newPairs: DataFrame, // (first_ip, uh48, cblock)
+                                    fresh: Dataset[FrontierRequest],
+                                    revised: Dataset[FrontierRequest],
+                                    newUrls: Long,
+                                    caches: Seq[Dataset[_]])
+
+  /** J5 outlink resolution, the A8 overflow guard, J2 admission and J4
+    * within-batch dedup, plus the EFAKEFIRSTIP revised re-adds. */
+  private def admitPhase(spark: SparkSession, workdir: String, i: Int, st: LoopState,
+                         f: Fetched, hostMeta: Dataset[HostMeta], cfg: Config): Admitted = {
+    import spark.implicits._
     // A8 overflow guard: IPs with too many requests stop accepting
     // outlinks. Counts come from the incrementally-maintained ip_counts
     // state (identical values to a requests groupBy, without the
     // per-iteration O(frontier) scan).
-    val ipCounts = st.ipCounts
-    val overflowIps = ipCounts
-      .filter(col("n") > cfg.overflowCap).select("first_ip")
-
-    // A3: due-IP pruned schedule with waiting-tree sentinels. The dole
-    // output (winners + one sentinel per scanned IP) is SMALL — persist
-    // it so the batch consumer (fetch) and the ip_next roll-forward
-    // don't recompute the frontier scan.
-    val ipNextPrev = st.ipNext
-    val so = timed("s0_sched_plan") {
-      scheduleWake(requests, replies, ipState, domState, cfg, i, inlinks, quotaState, ipNextPrev)
-    }
-    // persist + lineage cut: the cut view's plan is a LogicalRDD leaf
-    // reading the cache, so downstream operator construction (Catalyst
-    // analyzes EAGERLY per transformation) stops re-walking the
-    // schedule tree, whose compiled rule table is a very large
-    // expression — measured ~5 s/iteration of pure driver-side
-    // analysis in the admission section, and about as much again
-    // spread over the stage-2 futures. Blocks evicted under pressure
-    // recompute through the InMemoryRelation as usual.
-    val doleOutP = so.dole.persist(StorageLevel.MEMORY_AND_DISK)
-    val doleOut = org.apache.spark.sql.GraftShim.cutLineage(doleOutP)
-    val batch = doleOut.filter(col("seq_in_ip") >= 0).as[FetchTask]
-    // old-doc sample vectors for percentChanged — slim titledb projection
-    val oldVecs = st.titleVecs
-    val (resultsP, results) = timed("s0_fetch_plan") {
-      val p = fetch(batch, pages, robots, cfg, i, redirClosure, oldVecs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (p, org.apache.spark.sql.GraftShim.cutLineage(p.toDF).as[FetchResult])
-    }
-
-    // STAGE 1 (job 1): fetch_log write with the outcome counters FUSED
-    // into the same job via observe() — no separate stats pass
-    val obsLog = org.apache.spark.sql.Observation()
-    timed("s1_fetch_log") {
-      results
-        .map(r => (i, r.task.first_ip, r.task.seq_in_ip, r.task.url, r.task.priority, r.errCode, r.outlinks.size))
-        .toDF("iteration", "first_ip", "seq", "url", "priority", "err_code", "n_out")
-        .observe(obsLog,
-          count(lit(1)).as("scheduled"),
-          sum(when(col("err_code") === lit(Errs.OK), 1L).otherwise(0L)).as("fetched"),
-          sum(when(col("err_code") === lit(Errs.EDOCDISALLOWED), 1L).otherwise(0L)).as("robots_denied"),
-          coalesce(sum(col("n_out").cast("long")), lit(0L)).as("outs"))
-        .drop("n_out")
-        .write.mode("overwrite").parquet(s"$d/fetch_log")
-    }
-    val mLog = timed("s1_obs_get") { obsLog.get }
-    val scheduled = mLog("scheduled").asInstanceOf[Long]
-    val fetched = Option(mLog("fetched")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val robotsDenied = Option(mLog("robots_denied")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val errors = scheduled - fetched - robotsDenied
-    val outlinkTotal = Option(mLog("outs")).map(_.asInstanceOf[Long]).getOrElse(0L)
-
-    // micro-batch write mode: below ~10k scheduled urls the iteration
-    // cost is pure per-job overhead — under AQE every query-stage
-    // materialization of the ~dozen tiny state-merge writes is its own
-    // Spark job (2-4× the job count, measured). Execute stage-2 writes
-    // through a sibling session with AQE off; output is byte-equivalent
-    // (AQE only re-plans), and big batches keep AQE (skew/coalescing
-    // matter there). The sibling shares the SparkContext and cache.
-    val quietWrites: Option[SparkSession] =
-      if (scheduled >= cfg.quietBatchThreshold ||
-        spark.conf.get("spark.sql.adaptive.enabled", "true") == "false") None
-      else Some {
-        val q = spark.newSession()
-        spark.conf.getAll.foreach { case (k, v) =>
-          try q.conf.set(k, v) catch { case _: Throwable => () }
-        }
-        q.conf.set("spark.sql.adaptive.enabled", "false")
-        q
-      }
-    def qw(df: DataFrame): DataFrame =
-      quietWrites.map(q => org.apache.spark.sql.GraftShim.onSession(q, df)).getOrElse(df)
+    val overflowIps = st.ipCounts.filter(col("n") > cfg.overflowCap).select(col("first_ip").as("of_ip"))
 
     // J5: resolve outlink hosts via the host_meta + tagdb joins, then
     // drop those landing on overflowed IPs (A8)
-    val sAdmitPlan0 = System.nanoTime()
-    val resolvedP = resolveOutlinks(results, hostMeta, tagState)
+    val resolvedP = resolveOutlinks(f.results, hostMeta, st.tagState)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val resolved = org.apache.spark.sql.GraftShim.cutLineage(resolvedP.toDF).as[ResolvedOutlink]
+    val resolved = GraftShim.cutLineage(resolvedP.toDF).as[ResolvedOutlink]
     val candidates = resolved.map(_.req)
-      .join(overflowIps.withColumnRenamed("first_ip", "of_ip"), col("first_ip") === col("of_ip"), "left_anti")
+      .join(overflowIps, col("first_ip") === col("of_ip"), "left_anti")
       .as[FrontierRequest]
-
-    val bloomTable = st.bloom
-
-    // touched-bucket pruning helpers (ids ≤ bucket count ≤ 65536;
-    // Catalyst compiles the membership test to one InSet node — no
-    // broadcast-build stage). Semantics identical to the chain
-    // reader's newest-bucket-wins: merged shadows touched, prior
-    // serves the rest.
-    def semiTouched(prior: DataFrame, keys: DataFrame => Seq[org.apache.spark.sql.Column], b: Int, ids: Set[Int]): DataFrame =
-      if (ids.isEmpty) prior.limit(0)
-      else prior.filter(StateTable.bucketCol(keys(prior), b).isInCollection(ids))
-    def antiTouched(prior: DataFrame, keys: DataFrame => Seq[org.apache.spark.sql.Column], b: Int, ids: Set[Int]): DataFrame =
-      if (ids.isEmpty) prior
-      else prior.filter(!StateTable.bucketCol(keys(prior), b).isInCollection(ids))
 
     // J2's exact side, O(delta) end-to-end: the candidates are tagged
     // by the bloom ONCE (persisted — three consumers), and the exact
     // anti-join's right side loads ONLY the seen-chain buckets the
-    // bloom-POSITIVE candidates hash into (path-level pruning on the
-    // disk chain; InSet row pruning on a chained in-memory state).
+    // bloom-POSITIVE candidates hash into (path-level pruning).
     // Legacy workdirs without the chain keep the O(frontier) uh48
     // column scan and write the chain FULL this iteration.
-    val seenKeys = (df: DataFrame) => Seq(df("uh48"))
-    val bSeen =
-      if (st.seenOnDisk) st.buckets("seen_uh48")
-      else StateTable.bucketsForBytes(
-        StateTable.chainBytes(workdir, i - 1, "requests") / 16)
-    val taggedP = SeenBloom.tagged(candidates, bloomTable, cfg.seenBuckets)
+    val taggedP = SeenBloom.tagged(candidates, st.bloom, cfg.seenBuckets)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val seenRight =
       if (!st.seenOnDisk) st.seenUh48
       else {
-        import spark.implicits._
+        val seenKeys = (df: DataFrame) => Seq(df("uh48"))
+        val bSeen = st.buckets("seen_uh48")
         val pos = taggedP.filter(_._2).map(_._1.uh48).toDF("uh48")
-        val ids = StateTable.touchedBuckets(pos, seenKeys, bSeen)
-        chained match {
-          case None => StateTable.loadBuckets(spark, workdir, i - 1, "seen_uh48",
-            seenKeys, bSeen, emptySeen(spark), Some(ids))
-          case Some(_) => semiTouched(st.seenUh48, seenKeys, bSeen, ids)
-        }
+        StateTable.loadBuckets(spark, workdir, i - 1, "seen_uh48", seenKeys, bSeen,
+          emptySeen(spark), Some(StateTable.touchedBuckets(pos, seenKeys, bSeen)))
       }
-    // within-batch dedup (J4) with the same merge semantics as the
-    // reference's scan-time duplicate merge (Spider.cpp:4799-4836):
-    // min hop/discovery, OR of flags (a ParentIsRSS discovery must
-    // survive a same-batch section discovery of the same url), max
-    // sni/errors. Native struct aggregate (same shape as J1's
-    // latest-reply max) — no object serialization on the candidate
-    // path: base row = max added_time, tie → min parent_doc_id, with
-    // the whole-row struct as a deterministic final tiebreak.
-    val fresh = {
-      val adm = admitTagged(taggedP, seenRight).toDF()
-      val rowStruct = struct(adm.columns.map(col): _*)
-      adm.groupBy("uh48").agg(
-          max(struct(col("added_time"), (-col("parent_doc_id")).as("npdi"),
-            rowStruct.as("row"))).as("m"),
-          min(col("hop_count")).as("min_hop"),
-          min(col("discovery_time")).as("min_disc"),
-          expr("bit_or(flags)").as("or_flags"),
-          max(col("site_num_inlinks")).as("max_sni"),
-          max(col("err_count")).as("max_err"))
-        .select(col("m.row.uh48"), col("m.row.first_ip"), col("m.row.url"),
-          col("m.row.host_hash32"), col("m.row.dom_hash32"),
-          col("m.row.site_hash32"),
-          col("max_sni").as("site_num_inlinks"),
-          col("m.row.added_time"),
-          col("min_disc").as("discovery_time"),
-          col("min_hop").as("hop_count"),
-          col("m.row.parent_lang"),
-          col("or_flags").as("flags"),
-          col("max_err").as("err_count"),
-          col("m.row.parent_doc_id"))
-        .as[FrontierRequest]
-    }
+    val fresh = dedupBatch(admitTagged(taggedP, seenRight).toDF())
 
     // revised re-adds for this iteration's EFAKEFIRSTIP answers (the
     // reference counts these as re-shards, not new urls —
     // Spider.cpp:4279-4282 skips fakeFirstIp in m_totalNewSpiderRequests)
     val revised = resolveRevised(
-      results.filter(_.errCode == Errs.EFAKEFIRSTIP), requests, hostMeta, tagState)
+      f.results.filter(_.errCode == Errs.EFAKEFIRSTIP), st.requests, hostMeta, st.tagState)
 
-    // politeness state update: last download end per IP; crawl delay per
-    // dom. State maintenance is O(delta): each table's update joins the
-    // PRIOR ROWS OF THE TOUCHED BUCKETS ONLY (StateTable path-pruned
-    // load) with this iteration's delta under the same merge semantics
-    // as before — untouched buckets are never read, shuffled, or
-    // rewritten (the SeenBloom touched-buckets pattern generalized;
-    // VERDICT r3 "What's wrong" #2).
+    // A7: inlink c-block accumulation — every outlink DISCOVERY counts
+    // (pre-admission, like the reference's spiderdb request rows), except
+    // those dropped by the A8 overflow guard.
+    val newPairs = resolved
+      .map(r => (r.req.first_ip, r.req.uh48, r.parent_cblock))
+      .toDF("first_ip", "uh48", "cblock")
+      .join(overflowIps, col("first_ip") === col("of_ip"), "left_anti")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+    // fresh/revised are persisted so the delta, bloom, A8-count and
+    // seen-set writes all derive from the SAME admitted rows. ONE
+    // shuffle-free job materializes BOTH caches, uncontended, before the
+    // concurrent commit writes (otherwise the first write to touch them
+    // pays the whole admission chain while its siblings fight it for
+    // task slots) and returns the fresh count — the new-url metric
+    // (per-partition tallies summed on the driver: a count() each would
+    // be two jobs, and an agg() would shuffle).
+    val freshP = fresh.persist(StorageLevel.MEMORY_AND_DISK)
+    val revisedP = revised.persist(StorageLevel.MEMORY_AND_DISK)
+    val freshCut = GraftShim.cutLineage(freshP.toDF).as[FrontierRequest]
+    val revisedCut = GraftShim.cutLineage(revisedP.toDF).as[FrontierRequest]
+    val newUrls = {
+      import org.apache.spark.sql.Encoders
+      freshCut.toDF().select(lit(0).as("t"))
+        .unionByName(revisedCut.toDF().select(lit(1).as("t")))
+        .as[Int](Encoders.scalaInt)
+        .mapPartitions { it =>
+          var n = 0L; it.foreach(t => if (t == 0) n += 1); Iterator(n)
+        }(Encoders.scalaLong)
+        .collect().sum
+    }
+    Admitted(resolved, newPairs, freshCut, revisedCut, newUrls,
+      Seq(resolvedP, taggedP, newPairs, freshP, revisedP))
+  }
+
+  /** J4: within-batch dedup with the same merge semantics as the
+    * reference's scan-time duplicate merge (Spider.cpp:4799-4836): min
+    * hop/discovery, OR of flags (a ParentIsRSS discovery must survive a
+    * same-batch section discovery of the same url), max sni/errors.
+    * Native struct aggregate (same shape as J1's latest-reply max) — no
+    * object serialization on the candidate path: base row = max
+    * added_time, tie → min parent_doc_id, with the whole-row struct as a
+    * deterministic final tiebreak. */
+  private def dedupBatch(adm: DataFrame): Dataset[FrontierRequest] = {
+    import adm.sparkSession.implicits._
+    val rowStruct = struct(adm.columns.map(col): _*)
+    adm.groupBy("uh48").agg(
+        max(struct(col("added_time"), (-col("parent_doc_id")).as("npdi"),
+          rowStruct.as("row"))).as("m"),
+        min(col("hop_count")).as("min_hop"),
+        min(col("discovery_time")).as("min_disc"),
+        expr("bit_or(flags)").as("or_flags"),
+        max(col("site_num_inlinks")).as("max_sni"),
+        max(col("err_count")).as("max_err"))
+      .select(col("m.row.uh48"), col("m.row.first_ip"), col("m.row.url"),
+        col("m.row.host_hash32"), col("m.row.dom_hash32"),
+        col("m.row.site_hash32"),
+        col("max_sni").as("site_num_inlinks"),
+        col("m.row.added_time"),
+        col("min_disc").as("discovery_time"),
+        col("min_hop").as("hop_count"),
+        col("m.row.parent_lang"),
+        col("or_flags").as("flags"),
+        col("max_err").as("err_count"),
+        col("m.row.parent_doc_id"))
+      .as[FrontierRequest]
+  }
+
+  /** One bucketed state table's roll-forward (StateTable): `merge`
+    * combines the prior rows of the buckets `delta` touches with the
+    * delta under the table's own semantics, and only those buckets are
+    * written forward — untouched buckets are never read, shuffled, or
+    * rewritten. `full`: a pre-chain workdir merges the whole derived
+    * prior table instead and writes the chain FULL once. */
+  private final case class StateMerge(name: String, key: String, prior: DataFrame,
+                                      delta: DataFrame, buckets: Int, full: Boolean,
+                                      merge: DataFrame => DataFrame)
+
+  /** The seven keyed state tables' merges for this iteration. */
+  private def stateMerges(spark: SparkSession, st: LoopState, f: Fetched, a: Admitted,
+                          cfg: Config, i: Int): Seq[StateMerge] = {
+    import spark.implicits._
+    val results = f.results
+    def sm(name: String, key: String, prior: DataFrame, delta: DataFrame, full: Boolean = false)(
+        merge: DataFrame => DataFrame) =
+      StateMerge(name, key, prior, delta, st.buckets(name), full, merge)
+
+    // politeness state: last download end per IP; crawl delay per dom
     val ipUpdates = results.groupByKey(_.task.first_ip)
       .mapGroups((ip, it) => IpState(ip, it.map(_.downloadEndMs).max))
     val domUpdates = results
       .filter(_.crawlDelayMs >= 0)
-      .map(r => DomState(GbUrl.parse(r.task.url).domHash32, r.crawlDelayMs))
-
-    // A7: inlink c-block accumulation — every outlink DISCOVERY counts
-    // (pre-admission, like the reference's spiderdb request rows), except
-    // those dropped by the A8 overflow guard. O(urls-with-inlinks), not
-    // O(frontier): merged per (first_ip, uh48) with a 20-cap.
-    val newPairs = resolved
-      .map(r => (r.req.first_ip, r.req.uh48, r.parent_cblock))
-      .toDF("first_ip", "uh48", "cblock")
-      .join(overflowIps.withColumnRenamed("first_ip", "of_ip"),
-        col("first_ip") === col("of_ip"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .map(r => DomState(GbUrl.parse(r.task.url).domHash32, r.crawlDelayMs)).toDF()
 
     // tagdb maintenance, three delta streams merged into tag_state:
     //  (a) updateTagdb at index time (XmlDoc.cpp updateTagdb): the doc's
@@ -1976,423 +1947,191 @@ object Crawl {
         val pinIp = if (Flags.has(r.task.req_flags, Flags.FakeFirstIp)) 0 else r.task.first_ip
         TagState(GbHash.hash32(site), site, pinIp, has_site_tag = true, Array.empty[Int], i)
       }
-    val pinTags = resolved.map(r =>
+    val pinTags = a.resolved.map(r =>
       TagState(r.tag_key_hash32, r.tag_key, r.req.first_ip, has_site_tag = false, Array.empty[Int], i))
-    val linkTags = resolved.map(r =>
+    val linkTags = a.resolved.map(r =>
       TagState(r.link_site_hash32, r.link_site, 0, has_site_tag = false, Array(r.parent_cblock), i))
-    val cap = cfg.siteInlinkCap
     val tagDelta = docTags.union(pinTags).union(linkTags)
+    val cap = cfg.siteInlinkCap
 
     // A6 quota-state roll-forward (m_localTable, Spider.cpp:4355-4421):
     //  - one vote per NEWLY indexed url → firstIp, siteHash32, domHash32
-    //    keys (the was_indexed flag makes the transition O(batch))
+    //    keys (the was_indexed flag makes the transition O(batch)); a
+    //    reindex re-fetch runs under a fake ip whose reply join can't
+    //    see the prior OK reply, so it is gated on the flag too (the
+    //    reference votes once per unique uh48)
     //  - one vote per answered manual add (the revised non-fake request;
     //    fake-firstIp rows are skipped like the reference's
     //    `if (sreq->m_fakeFirstIp) continue`) → the ^0x123456 seed keys
     val indexedKeys = results
-      // one vote per url's FIRST index; a reindex re-fetch runs under a
-      // fake ip whose reply join can't see the prior OK reply, so gate
-      // on the flag too (the reference votes once per unique uh48)
       .filter(r => r.errCode == Errs.OK && !r.task.was_indexed &&
         !Flags.has(r.task.req_flags, Flags.IsPageReindex))
       .flatMap(r => Seq(r.task.first_ip, r.task.site_hash32, r.task.dom_hash32))
       .toDF("key")
-
-    // STAGE 2: everything else is ONE flat concurrent write batch
-    // (results is already materialized in cache by the fetch_log job, so
-    // concurrent jobs share partitions instead of recomputing the
-    // fetch). fresh/revised are persisted so the bloom and A8-count
-    // roll-forwards derive from the SAME admitted rows as the delta
-    // write without re-reading it from parquet — the former
-    // delta→{bloom, counts} ordering edge is gone, leaving exactly one
-    // job barrier after fetch_log. Per-iteration fixed cost is the
-    // full-loop bottleneck at small batch sizes (VERDICT r1/r2).
-    val freshP0 = fresh.persist(StorageLevel.MEMORY_AND_DISK)
-    val freshP = org.apache.spark.sql.GraftShim.cutLineage(freshP0.toDF).as[FrontierRequest]
-    val revisedP0 = revised.persist(StorageLevel.MEMORY_AND_DISK)
-    val revisedP = org.apache.spark.sql.GraftShim.cutLineage(revisedP0.toDF).as[FrontierRequest]
-    // manual-add seed keys derive from the PERSISTED revised rows: the
-    // quota delta is evaluated more than once (touched buckets + merge)
-    // and the unpersisted `revised` would recompute resolveRevised's
-    // frontier joins each time
-    val manualKeys = revisedP.toDF()
+    val manualKeys = a.revised.toDF()
       .filter(col("flags").bitwiseAND(lit(Flags.IsAddUrl | Flags.IsInjecting)) =!= 0)
       .select(explode(array(
         col("site_hash32").bitwiseXOR(lit(0x123456)),
         col("dom_hash32").bitwiseXOR(lit(0x123456)))).as("key"))
     val quotaDelta = indexedKeys.unionByName(manualKeys)
       .groupBy("key").agg(count(lit(1)).as("n"))
-    if (timing) println(f"[iter $i] s1_admit_plan    ${(System.nanoTime() - sAdmitPlan0) / 1e9}%6.2f s")
-    // materialize the shared caches ONCE, uncontended, before the
-    // concurrent write batch: otherwise the first future to touch
-    // freshP pays the whole admission chain while eleven sibling jobs
-    // fight it for task slots. The fresh count IS the new-url metric
-    // (revised EFAKEFIRSTIP re-adds are re-shards, not new urls —
-    // Spider.cpp:4279-4282 skips fakeFirstIp in m_totalNewSpiderRequests).
-    // ONE shuffle-free job materializes BOTH caches and returns the
-    // fresh count (per-partition tallies summed on the driver — a
-    // count() each would be two jobs, and an agg() would shuffle)
-    val newUrls = timed("s2_materialize") {
-      import org.apache.spark.sql.Encoders
-      freshP.toDF().select(lit(0).as("t"))
-        .unionByName(revisedP.toDF().select(lit(1).as("t")))
-        .as[Int](Encoders.scalaInt)
-        .mapPartitions { it =>
-          var f = 0L; it.foreach(t => if (t == 0) f += 1); Iterator(f)
-        }(Encoders.scalaLong)
-        .collect().sum
-    }
 
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val sMergePlan0 = System.nanoTime()
-    // next-iteration state datasets are built alongside the write jobs
-    // as LAZY plans over the SAME persisted inputs — the write jobs
-    // materialize those caches, so in chained mode the next iteration
-    // reads memory while the parquet chain (byte-equivalent rows)
-    // lands asynchronously. Persist only in chained+async mode; the
-    // legacy path discards the forward state.
-    val fwdCaches = scala.collection.mutable.ListBuffer[Dataset[_]]()
-    // persist + lineage cut: the write job materializes the cache, and
-    // every LATER plan built on the table (the forward state, next
-    // iteration's consumers, the next merge round) analyzes a leaf
-    // instead of re-walking the merge tree — without the cut, driver-side
-    // Catalyst analysis grows with every chained generation
-    def fwd(df: DataFrame): DataFrame =
-      if (async) {
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        fwdCaches.synchronized { fwdCaches += p }
-        org.apache.spark.sql.GraftShim.cutLineage(p)
-      } else df
-    // the cut's toRdd runs analyzer+optimizer+physical planning on the
-    // DRIVER at construction time — ~0.5-1s per state table. The eleven
-    // tables are independent, so each plan is built on its own thread;
-    // the segment costs max(plan) instead of sum(plan).
-    def plannedT[T](lbl: String)(body: => T): Future[T] = Future {
-      val t = System.nanoTime(); val r = body
-      if (timing) println(f"[iter $i] plan_$lbl%-12s ${(System.nanoTime() - t) / 1e9}%6.2f s")
-      r
-    }
-    def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
-
-    // ---- state merges (lazy plans; shared by the write jobs and the
-    // ---- forward state)
-    val bIp = st.buckets("ip_state")
-    val bDom = st.buckets("dom_state")
-    val bInl = st.buckets("inlink_state")
-    val bTag = st.buckets("tag_state")
-    val bQuota = st.buckets("quota_state")
-    // title_vecs bucket count: from the chain when it exists; a
-    // pre-chain workdir writes the chain FULL this iteration, sized
-    // from the titledb chain's bytes (vectors are ~1/64 of page
-    // payloads — a migration heuristic only; the next compaction
-    // re-sizes from the vec chain's own measured bytes)
-    val bVec =
-      if (st.vecsOnDisk) st.buckets("title_vecs")
-      else StateTable.bucketsForBytes(
-        StateTable.chainBytes(workdir, i - 1, "titledb") / 64)
-
-    // per-url sample-vec delta feeding the title_vecs chain and the
-    // forward state (latest vector per uh48 — percentChanged's old-doc
-    // side on the NEXT fetch of the url)
+    // per-url sample vector: latest per uh48 — percentChanged's old-doc
+    // side on the NEXT fetch of the url
     val vecDelta = results.filter(_.found)
       .map(r => (r.task.uh48, nowSecs(cfg, i),
         if (r.sampleVec == null) Array.empty[Int] else r.sampleVec))
       .toDF("uh48", "t", "sample_vec")
+    val freshUh48 = a.fresh.toDF().select("uh48")
 
-    val fRepDelta = plannedT("rep") { fwd(repliesOf(results, replies, cfg, i).toDF) }
+    Seq(
+      sm("ip_state", "first_ip", st.ipState.toDF(), ipUpdates.toDF()) { p =>
+        p.as[IpState].union(ipUpdates)
+          .groupByKey(_.first_ip)
+          .reduceGroups((x, y) => if (x.last_download_end_ms >= y.last_download_end_ms) x else y)
+          .map(_._2).toDF()
+      },
+      sm("dom_state", "dom_hash32", st.domState.toDF(), domUpdates) { p =>
+        p.withColumn("stamp", lit(0))
+          .unionByName(domUpdates.withColumn("stamp", lit(1)))
+          .groupBy("dom_hash32")
+          .agg(max(struct(col("stamp"), col("crawl_delay_ms"))).as("s"))
+          .select(col("dom_hash32"), col("s.crawl_delay_ms").as("crawl_delay_ms"))
+      },
+      // A7, merged per (first_ip, uh48) with a 20-cap
+      sm("inlink_state", "uh48", st.inlinks.toDF(), a.newPairs) { p =>
+        p.select(col("first_ip"), col("uh48"), explode(col("cblocks")).as("cblock"))
+          .unionByName(a.newPairs)
+          .groupBy("first_ip", "uh48")
+          .agg(slice(sort_array(collect_set(col("cblock"))), 1, 20).as("cblocks"))
+      },
+      sm("tag_state", "site_hash32", st.tagState.toDF(), tagDelta.toDF()) { p =>
+        p.as[TagState].union(tagDelta)
+          .groupByKey(_.site_hash32)
+          .reduceGroups((x, y) => combineTags(x, y, cap))
+          .map(_._2).toDF()
+      },
+      sm("quota_state", "key", st.quotaState, quotaDelta) { p =>
+        p.unionByName(quotaDelta).groupBy("key").agg(sum(col("n")).as("n"))
+      },
+      // fresh uh48s are disjoint from the prior set by the anti-join
+      // itself, and revised re-adds keep their url's uh48 (already
+      // seen) — so the merge is a bare union, no distinct
+      sm("seen_uh48", "uh48", st.seenUh48, freshUh48, full = !st.seenOnDisk) { p =>
+        p.select("uh48").unionByName(freshUh48)
+      },
+      // latest vector per uh48 (delta t=now shadows prior t=0)
+      sm("title_vecs", "uh48", st.titleVecs, vecDelta, full = !st.vecsOnDisk) { p =>
+        p.withColumn("t", lit(0L))
+          .unionByName(vecDelta)
+          .groupBy("uh48").agg(max(struct(col("t"), col("sample_vec"))).as("s"))
+          .select(col("uh48"), col("s.sample_vec").as("sample_vec"))
+      })
+  }
 
-    val ipKeys = (df: DataFrame) => Seq(df("first_ip"))
-    val domKeys = (df: DataFrame) => Seq(df("dom_hash32"))
-    val inlKeys = (df: DataFrame) => Seq(df("uh48"))
-    val tagKeys = (df: DataFrame) => Seq(df("site_hash32"))
-    val quotaKeys = (df: DataFrame) => Seq(df("key"))
-    val vecKeys = (df: DataFrame) => Seq(df("uh48"))
-    // ONE fused job for every table's touched-bucket ids (was seven
-    // one-task jobs — at micro scale the job-scheduling fixed cost of
-    // seven collects outweighed the scans; the fused query is
-    // shuffle-free so AQE can't re-split it). The seen/vec slots are
-    // scanned only when their chain exists (pre-chain workdirs write
-    // FULL this iteration and ignore the ids).
-    val fAllIds = plannedT("ids") {
-      val parts = Seq.newBuilder[(DataFrame, DataFrame => Seq[org.apache.spark.sql.Column], Int)]
-      parts += ((ipUpdates.toDF(), ipKeys, bIp))
-      parts += ((domUpdates.toDF(), domKeys, bDom))
-      parts += ((newPairs, inlKeys, bInl))
-      parts += ((tagDelta.toDF(), tagKeys, bTag))
-      parts += ((quotaDelta, quotaKeys, bQuota))
-      if (st.seenOnDisk) parts += ((freshP.toDF().select("uh48"), seenKeys, bSeen))
-      if (st.vecsOnDisk) parts += ((vecDelta, vecKeys, bVec))
-      val r = StateTable.touchedBucketsMulti(parts.result())
-      val seenIds = if (st.seenOnDisk) r(5) else Set.empty[Int]
-      val vecIds = if (st.vecsOnDisk) r(if (st.seenOnDisk) 6 else 5) else Set.empty[Int]
-      (r(0), r(1), r(2), r(3), r(4), seenIds, vecIds)
+  /** Merge + commit: every snapshot-i write as ONE flat batch of
+    * concurrent jobs (results and the admitted rows are cached, so the
+    * jobs share partitions instead of recomputing the fetch). Each job
+    * builds its own plan on its own thread — driver-side analysis of
+    * the ~13 plans overlaps instead of adding up. The seven keyed state
+    * tables first wait for ONE fused job that finds every table's
+    * touched buckets (seven one-task jobs cost more than the scans at
+    * micro scale). */
+  private def commitPhase(spark: SparkSession, workdir: String, i: Int, st: LoopState,
+                          doled: Doled, f: Fetched, a: Admitted, cfg: Config): Unit = {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val d = snapDir(workdir, i)
+    val merges = stateMerges(spark, st, f, a, cfg, i)
+    val chained = merges.filterNot(_.full)
+    val touched = Future {
+      chained.map(_.name).zip(StateTable.touchedBucketsMulti(chained.map(m =>
+        (m.delta, (df: DataFrame) => Seq(df(m.key)), m.buckets)))).toMap
     }
-    val fIpIds = fAllIds.map(_._1)
-    val fDomIds = fAllIds.map(_._2)
-    val fInlIds = fAllIds.map(_._3)
-    val fTagIds = fAllIds.map(_._4)
-    val fQuotaIds = fAllIds.map(_._5)
-    val fSeenIds = fAllIds.map(_._6)
-    val fVecIds = fAllIds.map(_._7)
+    val stateWrites = merges.map(m => Future {
+      val keys = Seq(col(m.key))
+      if (m.full) StateTable.writeFull(m.merge(m.prior), keys, m.buckets, s"$d/${m.name}")
+      else {
+        val ids = Await.result(touched, Duration.Inf)(m.name)
+        val prior =
+          if (ids.isEmpty) m.prior.limit(0)
+          else m.prior.filter(StateTable.bucketCol(Seq(m.prior(m.key)), m.buckets).isInCollection(ids))
+        StateTable.writeDelta(m.merge(prior), keys, m.buckets, s"$d/${m.name}")
+      }
+    })
+    val admittedDf = a.fresh.toDF().unionByName(a.revised.toDF())
+    val writes = stateWrites ++ Seq(
+      Future { admittedDf.write.mode("overwrite").parquet(s"$d/requests_delta") },
+      Future { repliesOf(f.results, st.replies, cfg, i).write.mode("overwrite").parquet(s"$d/replies_delta") },
+      Future {
+        // A8 state roll-forward: prior counts + this delta's counts
+        st.ipCounts
+          .unionByName(admittedDf.groupBy("first_ip").agg(count(lit(1)).as("n")))
+          .groupBy("first_ip").agg(sum(col("n")).as("n"))
+          .write.mode("overwrite").parquet(s"$d/ip_counts")
+      },
+      Future {
+        // incremental seen-bloom maintenance, O(new urls) I/O: ONLY the
+        // touched buckets' rebuilt blooms are written forward as this
+        // snapshot's chain delta (loadBloom resolves the chain;
+        // compaction resets it). On a pre-bloom resume the loaded table
+        // was rebuilt in memory, so a delta would orphan its untouched
+        // buckets (bloom false NEGATIVES skip the exact anti-join):
+        // write the one-time full instead.
+        SeenBloom.update(st.bloom, admittedDf.select("uh48").as[java.lang.Long],
+          cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp, deltaOnly = st.bloomOnDisk)
+          .write.mode("overwrite").parquet(s"$d/seen_bloom")
+        if (st.bloomOnDisk) java.nio.file.Files.write(
+          new java.io.File(s"$d/seen_bloom", "_GRAFT_DELTA").toPath, Array.empty[Byte])
+      },
+      Future {
+        // S7: titledb sink — the crawled-content snapshot (Titledb.cpp
+        // titleRec analogue): raw bytes + extracted text per fetched
+        // url, appended as a delta; compaction keeps latest per uh48
+        f.results.filter(_.found)
+          .map(r => TitleRow(r.task.uh48, r.task.url, nowSecs(cfg, i),
+            r.httpStatus, r.lang, r.contentHash32, r.html, r.extractedText,
+            if (r.sampleVec == null) Array.empty[Int] else r.sampleVec))
+          .write.mode("overwrite").parquet(s"$d/titledb_delta")
+      }) ++ wakeRollForward(spark, st, doled, f, a).map(ipn => Future {
+        ipn.write.mode("overwrite").parquet(s"$d/ip_next")
+        writeIpNextMarker(workdir, i, cfg)
+      })
+    Await.result(Future.sequence(writes), Duration.Inf)
+  }
 
-    val fMergedIp = plannedT("ip") {
-      val ipIds = await(fIpIds)
-      fwd(semiTouched(ipState.toDF(), ipKeys, bIp, ipIds).as[IpState]
-        .union(ipUpdates)
-        .groupByKey(_.first_ip)
-        .reduceGroups((a, b) => if (a.last_download_end_ms >= b.last_download_end_ms) a else b)
-        .map(_._2).toDF())
-    }
-
-    val fMergedDom = plannedT("dom") {
-      val domIds = await(fDomIds)
-      fwd(semiTouched(domState.toDF(), domKeys, bDom, domIds)
-        .withColumn("stamp", lit(0))
-        .unionByName(domUpdates.toDF().withColumn("stamp", lit(1)))
-        .groupBy("dom_hash32")
-        .agg(max(struct(col("stamp"), col("crawl_delay_ms"))).as("s"))
-        .select(col("dom_hash32"), col("s.crawl_delay_ms").as("crawl_delay_ms")))
-    }
-
-    // O(delta) inlink_state (A7): the explode+re-agg runs over touched
-    // buckets only — the r3 full-table explode is gone
-    val fMergedInl = plannedT("inl") {
-      val inlIds = await(fInlIds)
-      fwd(semiTouched(inlinks.toDF(), inlKeys, bInl, inlIds)
-        .select(col("first_ip"), col("uh48"), explode(col("cblocks")).as("cblock"))
-        .unionByName(newPairs)
-        .groupBy("first_ip", "uh48")
-        .agg(slice(sort_array(collect_set(col("cblock"))), 1, 20).as("cblocks")))
-    }
-
-    val fMergedTag = plannedT("tag") {
-      val tagIds = await(fTagIds)
-      fwd(semiTouched(tagState.toDF(), tagKeys, bTag, tagIds).as[TagState]
-        .union(tagDelta)
-        .groupByKey(_.site_hash32)
-        .reduceGroups((a, b) => combineTags(a, b, cap))
-        .map(_._2).toDF())
-    }
-
-    val fMergedQuota = plannedT("quota") {
-      val quotaIds = await(fQuotaIds)
-      fwd(semiTouched(quotaState, quotaKeys, bQuota, quotaIds)
-        .unionByName(quotaDelta)
-        .groupBy("key").agg(sum(col("n")).as("n")))
-    }
-
-    // seen_uh48 merge, O(new urls + touched buckets): fresh uh48s are
-    // disjoint from the prior set by the anti-join itself, and revised
-    // re-adds keep their url's uh48 (already seen) — so the merge is a
-    // bare union of the touched buckets' prior rows with the fresh
-    // keys, no distinct. A pre-chain workdir unions the full
-    // requests-derived view once and writes the chain FULL.
-    val fMergedSeen = plannedT("seen") {
-      val seenIds = await(fSeenIds)
-      val prior =
-        if (st.seenOnDisk) semiTouched(st.seenUh48, seenKeys, bSeen, seenIds)
-        else st.seenUh48
-      fwd(prior.select("uh48").unionByName(freshP.toDF().select("uh48")))
-    }
-
-    // title_vecs merge, O(batch + touched buckets): latest vector per
-    // uh48 (delta t=now shadows prior t=0). A pre-chain workdir merges
-    // the titledb-derived full table instead and writes the chain FULL.
-    val fMergedVec = plannedT("vec") {
-      val vecIds = await(fVecIds)
-      val prior =
-        if (st.vecsOnDisk) semiTouched(st.titleVecs, vecKeys, bVec, vecIds)
-        else st.titleVecs
-      fwd(prior.withColumn("t", lit(0L))
-        .unionByName(vecDelta)
-        .groupBy("uh48").agg(max(struct(col("t"), col("sample_vec"))).as("s"))
-        .select(col("uh48"), col("s.sample_vec").as("sample_vec")))
-    }
-
-    // A8 state roll-forward: prior counts + this delta's counts
-    val fIpCountsNext = plannedT("ipcounts") { fwd(ipCounts
-      .unionByName(freshP.toDF().unionByName(revisedP.toDF())
-        .groupBy("first_ip").agg(count(lit(1)).as("n")))
-      .groupBy("first_ip").agg(sum(col("n")).as("n"))) }
-
-    // incremental seen-bloom maintenance, O(new urls) I/O: ONLY the
-    // touched buckets' rebuilt blooms are written forward as this
-    // snapshot's chain delta; untouched buckets are not even copied
-    // (loadBloom resolves the chain; compaction resets it). On a
-    // pre-bloom resume the chain has nothing persisted — the loaded
-    // table was rebuilt in memory, so a delta would orphan its
-    // untouched buckets (bloom false NEGATIVES skip the exact
-    // anti-join): write the one-time full instead.
-    val chainHasBloom = st.bloomOnDisk
-    val fBloomW = plannedT("bloom") { fwd(SeenBloom.update(bloomTable,
-      freshP.map(r => java.lang.Long.valueOf(r.uh48))
-        .union(revisedP.map(r => java.lang.Long.valueOf(r.uh48))),
-      cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp, deltaOnly = chainHasBloom)) }
-
-    // A3 waiting-tree roll-forward, priority-layered upsert:
-    //   prior entries (0) < due-but-now-empty IPs (1, sleep forever
-    //   until touched — their rows were compacted away or F7/force-
-    //   delete-only) < freshly scanned minima (2) < TOUCHED IPs (3,
-    //   due next iteration: new/revised requests, replies+ip_state
-    //   from this batch, inlink-count changes — every channel that
-    //   can move a row's spider time or ufn).
-    val fIpNextNext: Future[Option[DataFrame]] = if (!so.wake) Future.successful(None) else plannedT("ipnext") { Some {
+  /** A3 waiting-tree roll-forward (None when the schedule ran without
+    * wake maintenance), priority-layered upsert:
+    *   prior entries (0) < due-but-now-empty IPs (1, sleep forever
+    *   until touched — their rows were compacted away or F7/force-
+    *   delete-only) < freshly scanned minima (2) < TOUCHED IPs (3,
+    *   due next iteration: new/revised requests, replies+ip_state
+    *   from this batch, inlink-count changes — every channel that
+    *   can move a row's spider time or ufn). */
+  private def wakeRollForward(spark: SparkSession, st: LoopState, doled: Doled,
+                              f: Fetched, a: Admitted): Option[DataFrame] =
+    if (!doled.out.wake) None
+    else Some {
+      import spark.implicits._
       def tag(df: DataFrame, p: Int) =
         df.select(col("first_ip"), col("next_ms"), lit(p).as("pri"))
-      val prior = ipNextPrev.getOrElse(
-        spark.emptyDataset[(Int, Long)].toDF("first_ip", "next_ms"))
-      val dueDefault = so.dueIps.map(_.withColumn("next_ms", lit(Long.MaxValue)))
-        .getOrElse(spark.emptyDataset[(Int, Long)].toDF("first_ip", "next_ms"))
-      val wakeRows = doleOut.filter(col("seq_in_ip") === -1)
+      val none = spark.emptyDataset[(Int, Long)].toDF("first_ip", "next_ms")
+      val dueDefault = doled.out.dueIps.map(_.withColumn("next_ms", lit(Long.MaxValue))).getOrElse(none)
+      val wakeRows = doled.dole.filter(col("seq_in_ip") === -1)
         .select(col("first_ip"), col("spider_time_ms").as("next_ms"))
-      val touched = results.map(_.task.first_ip).toDF("first_ip")
-        .unionByName(freshP.select("first_ip"))
-        .unionByName(revisedP.select("first_ip"))
-        .unionByName(newPairs.select("first_ip"))
+      val touched = f.results.map(_.task.first_ip).toDF("first_ip")
+        .unionByName(a.fresh.select("first_ip"))
+        .unionByName(a.revised.select("first_ip"))
+        .unionByName(a.newPairs.select("first_ip"))
         .distinct().withColumn("next_ms", lit(0L))
-      fwd(tag(prior, 0).unionByName(tag(dueDefault, 1))
+      tag(st.ipNext.getOrElse(none), 0).unionByName(tag(dueDefault, 1))
         .unionByName(tag(wakeRows, 2)).unionByName(tag(touched, 3))
         .groupBy("first_ip")
         .agg(max(struct(col("pri"), col("next_ms"))).as("s"))
-        .select(col("first_ip"), col("s.next_ms").as("next_ms")))
-    } }
-
-    // plan-construction barrier: every forward-state table is now
-    // analyzed/planned/cut; the write batch below consumes leaves
-    val repDelta = await(fRepDelta)
-    val ipIds = await(fIpIds); val domIds = await(fDomIds)
-    val inlIds = await(fInlIds); val tagIds = await(fTagIds)
-    val quotaIds = await(fQuotaIds); val vecIds = await(fVecIds)
-    val seenIds = await(fSeenIds)
-    val mergedSeen = await(fMergedSeen)
-    val mergedVec = await(fMergedVec)
-    val mergedIp = await(fMergedIp)
-    val mergedDom = await(fMergedDom)
-    val mergedInl = await(fMergedInl)
-    val mergedTag = await(fMergedTag)
-    val mergedQuota = await(fMergedQuota)
-    val ipCountsNext = await(fIpCountsNext)
-    val bloomW = await(fBloomW)
-    val ipNextNext = await(fIpNextNext)
-
-    if (timing) println(f"[iter $i] s2_merge_plan    ${(System.nanoTime() - sMergePlan0) / 1e9}%6.2f s")
-    // ---- STAGE 2: one flat concurrent write batch. In async mode the
-    // ---- futures are NOT awaited here — they overlap the next
-    // ---- iteration's plan construction and stage-1 job; the manifest
-    // ---- lands only after every write of this snapshot AND the
-    // ---- previous pending chain (resume sees manifests in order).
-    val pendingAll = timed("s2_issue") {
-      val fDelta = Future { timed("w_req_delta") {
-        qw(freshP.toDF().unionByName(revisedP.toDF()))
-          .write.mode("overwrite").parquet(s"$d/requests_delta")
-      } }
-      val fBloom = Future { timed("w_bloom") {
-        qw(bloomW).write.mode("overwrite").parquet(s"$d/seen_bloom")
-        if (chainHasBloom) java.nio.file.Files.write(
-          new java.io.File(s"$d/seen_bloom", "_GRAFT_DELTA").toPath, Array.empty[Byte])
-      } }
-      val fCounts = Future { timed("w_ip_counts") {
-        qw(ipCountsNext).write.mode("overwrite").parquet(s"$d/ip_counts")
-      } }
-      val fIpNext = ipNextNext.toSeq.map(ipn => Future { timed("w_ip_next") {
-        qw(ipn).write.mode("overwrite").parquet(s"$d/ip_next")
-        writeIpNextMarker(workdir, i, cfg)
-      } })
-      val writes = fIpNext ++ Seq(
-        fDelta, fBloom, fCounts,
-        Future { timed("w_replies") { qw(repDelta).write.mode("overwrite").parquet(s"$d/replies_delta") } },
-        Future { timed("w_ip_state") {
-          StateTable.writeDelta(qw(mergedIp), Seq(col("first_ip")), bIp, s"$d/ip_state") } },
-        Future { timed("w_dom_state") {
-          StateTable.writeDelta(qw(mergedDom), Seq(col("dom_hash32")), bDom, s"$d/dom_state") } },
-        Future { timed("w_inlink") {
-          StateTable.writeDelta(qw(mergedInl), Seq(col("uh48")), bInl, s"$d/inlink_state") } },
-        Future { timed("w_tag") {
-          StateTable.writeDelta(qw(mergedTag), Seq(col("site_hash32")), bTag, s"$d/tag_state") } },
-        Future { timed("w_quota") {
-          StateTable.writeDelta(qw(mergedQuota), Seq(col("key")), bQuota, s"$d/quota_state") } },
-        Future { timed("w_title_vecs") {
-          // latest sample vector per uh48 — O(touched buckets); the
-          // first write after a pre-chain resume is FULL (chain start)
-          if (st.vecsOnDisk)
-            StateTable.writeDelta(qw(mergedVec), Seq(col("uh48")), bVec, s"$d/title_vecs")
-          else
-            StateTable.writeFull(qw(mergedVec), Seq(col("uh48")), bVec, s"$d/title_vecs") } },
-        Future { timed("w_seen_uh48") {
-          if (st.seenOnDisk)
-            StateTable.writeDelta(qw(mergedSeen), Seq(col("uh48")), bSeen, s"$d/seen_uh48")
-          else
-            StateTable.writeFull(qw(mergedSeen), Seq(col("uh48")), bSeen, s"$d/seen_uh48") } },
-        Future { timed("w_titledb") {
-          // S7: titledb sink — the crawled-content snapshot (Titledb.cpp
-          // titleRec analogue): raw bytes + extracted text per fetched
-          // url, appended as a delta; compaction keeps latest per uh48
-          qw(results.filter(_.found)
-            .map(r => TitleRow(r.task.uh48, r.task.url, nowSecs(cfg, i),
-              r.httpStatus, r.lang, r.contentHash32, r.html, r.extractedText,
-              if (r.sampleVec == null) Array.empty[Int] else r.sampleVec)).toDF())
-            .write.mode("overwrite").parquet(s"$d/titledb_delta")
-        } }
-      )
-      val wall = System.currentTimeMillis() - t0
-      val metrics = Seq(MetricsRow(i, 0, scheduled, fetched, robotsDenied, errors, newUrls,
-        outlinkTotal - newUrls, 0, wall))
-      Future.sequence(writes ++ st.pending).map { _ =>
-        // lineage/counters live in MANIFEST.json (no one-row parquet job)
-        writeManifest(workdir, i, metrics)
-      }
+        .select(col("first_ip"), col("s.next_ms").as("next_ms"))
     }
-
-    // ---- forward state: same rows the disk chain now (eventually)
-    // ---- holds, as plans over this iteration's caches
-    val sFwd0 = System.nanoTime()
-    val iterCaches: Seq[Dataset[_]] =
-      Seq(doleOutP, resultsP, resolvedP, taggedP, newPairs, freshP0, revisedP0) ++ fwdCaches
-    val next = LoopState(
-      requests = requests.union(freshP).union(revisedP),
-      replies = replies.union(repDelta.as[FrontierReply]),
-      ipState = antiTouched(ipState.toDF(), ipKeys, bIp, ipIds).as[IpState]
-        .union(mergedIp.as[IpState]),
-      domState = antiTouched(domState.toDF(), domKeys, bDom, domIds).as[DomState]
-        .union(mergedDom.as[DomState]),
-      inlinks = antiTouched(inlinks.toDF(), inlKeys, bInl, inlIds).as[InlinkState]
-        .union(mergedInl.as[InlinkState]),
-      tagState = antiTouched(tagState.toDF(), tagKeys, bTag, tagIds).as[TagState]
-        .union(mergedTag.as[TagState]),
-      quotaState = antiTouched(quotaState, quotaKeys, bQuota, quotaIds)
-        .unionByName(mergedQuota),
-      ipCounts = ipCountsNext,
-      ipNext = ipNextNext,
-      titleVecs =
-        (if (st.vecsOnDisk) antiTouched(st.titleVecs, vecKeys, bVec, vecIds)
-         else st.titleVecs.limit(0)) // migration wrote FULL: merged is the whole table
-          .unionByName(mergedVec),
-      vecsOnDisk = true,
-      seenUh48 =
-        (if (st.seenOnDisk) antiTouched(st.seenUh48.select("uh48"), seenKeys, bSeen, seenIds)
-         else st.seenUh48.select("uh48").limit(0)) // migration wrote FULL
-          .unionByName(mergedSeen),
-      seenOnDisk = true,
-      bloom = if (chainHasBloom)
-        bloomW.withColumn("ord", lit(1))
-          .unionByName(bloomTable.withColumn("ord", lit(0)))
-          .groupBy("bucket").agg(max_by(col("bloom"), col("ord")).as("bloom"))
-      else bloomW,
-      bloomOnDisk = true,
-      buckets = st.buckets + ("title_vecs" -> bVec) + ("seen_uh48" -> bSeen),
-      pending = Seq(pendingAll),
-      caches = st.caches ++ iterCaches)
-
-    if (timing) println(f"[iter $i] s2_fwd_state     ${(System.nanoTime() - sFwd0) / 1e9}%6.2f s")
-    if (!async) {
-      timed("s2_barrier") { Await.result(pendingAll, Duration.Inf) }
-      iterCaches.foreach(_.unpersist())
-    }
-    (IterationResult(scheduled, fetched, robotsDenied, errors, newUrls, outlinkTotal - newUrls),
-      next)
-  }
 
   /** J3: frontier compaction — dedupSpiderdbList (Spider.cpp:13609-13823):
     * rewrite the delta chain into one full table, one request per
@@ -2549,7 +2288,7 @@ object Crawl {
     writeIpNextMarker(workdir, 0, cfg)
     Seq.empty[(Int, Int, Int, String, Int, Int)].toDF("iteration", "first_ip", "seq", "url", "priority", "err_code")
       .write.mode("overwrite").parquet(s"$d/fetch_log")
-    writeManifest(workdir, 0, Seq(MetricsRow(0, 0, 0, 0, 0, 0, seedUrls.size, 0, 0, 0)))
+    writeManifest(workdir, 0, Seq(MetricsRow(0, 0, 0, 0, 0, seedUrls.size, 0, 0)))
   }
 
   /** S2: injection — push urls straight into the frontier with the
@@ -2679,12 +2418,6 @@ object Crawl {
         init(spark, workdir, if (seedUrls.nonEmpty) seedUrls else Corpus.seeds(spec), cfg); 1
       case Some(n) => n + 1
     }
-    val timing = sys.env.contains("GRAFT_LOOP_TIMING")
-    // chained mode: state flows between iterations in memory; the
-    // snapshot writes are an async checkpoint drained before every disk
-    // read (compaction, end of run) — the on-disk chain is identical to
-    // the legacy per-iteration-synchronous one.
-    var st: Option[LoopState] = None
     // A9: collection-level crawl status (CollectionRec::m_spiderStatus).
     // Rounds increment at exhaustion boundaries (spiderRoundIncremented,
     // Spider.cpp:14296: ROUNDDONE when a dole cycle schedules nothing);
@@ -2693,35 +2426,25 @@ object Crawl {
     var round = 1
     var stopStatus = -1
     // micro-batch iterations run END-TO-END on an AQE-off sibling
-    // session (shared SparkContext + cache; strategies re-register per
-    // df session): under AQE every query-stage materialization is its
-    // own Spark job, and below ~10k urls/iteration the loop is bound by
-    // job-scheduling fixed cost, not work (80 → 50 jobs/iter measured
-    // from AQE alone). Rows are byte-equivalent — AQE only re-plans
-    // execution. Big batches keep AQE: skew-join splitting and
-    // partition coalescing are the 100×-scale story there. Gated on the
-    // PREVIOUS iteration's scheduled count (seeds for the first; a
-    // resume without that signal stays on the AQE session).
-    lazy val quietSpark: SparkSession = {
-      val q = spark.newSession()
-      spark.conf.getAll.foreach { case (k, v) =>
-        try q.conf.set(k, v) catch { case _: Throwable => () }
-      }
-      q.conf.set("spark.sql.adaptive.enabled", "false")
-      q
-    }
+    // session (GraftShim.quietSession): under AQE every query-stage
+    // materialization is its own Spark job, and at small batches the
+    // loop is bound by job-scheduling fixed cost, not work (80 → 50
+    // jobs/iter measured from AQE alone). Rows are byte-equivalent —
+    // AQE only re-plans execution. Big batches keep AQE: skew-join
+    // splitting and partition coalescing are the 100×-scale story
+    // there. Gated on the PREVIOUS iteration's scheduled count (seeds
+    // for the first; a resume without that signal stays on the AQE
+    // session). Compaction always runs on the caller's session.
+    lazy val quietSpark = GraftShim.quietSession(spark)
     var lastSched: Long =
       if (start == 1) (if (seedUrls.nonEmpty) seedUrls else Corpus.seeds(spec)).size.toLong
       else Long.MaxValue
     val out = scala.collection.mutable.ListBuffer[IterationResult]()
     var i = start
     while (i < start + iterations && stopStatus < 0) {
-      val it0 = System.nanoTime()
-      val iterSpark = if (lastSched < cfg.quietBatchThreshold) quietSpark else spark
-      val (r0, nextSt) = runIterationChained(iterSpark, workdir, i, pages, robots, hostMeta,
-        cfg, redirClosure, chained = st, async = cfg.loopChainState)
+      val iterSpark = if (lastSched < GraftShim.QuietBatchRows) quietSpark else spark
+      val r0 = runIteration(iterSpark, workdir, i, pages, robots, hostMeta, cfg, redirClosure)
       lastSched = r0.scheduled
-      if (cfg.loopChainState) st = Some(nextSt)
       downloaded += r0.fetched
       val status = SpiderStatus.convert(cfg.maxToCrawl, downloaded,
         cfg.maxRounds, round, r0.scheduled)
@@ -2729,24 +2452,11 @@ object Crawl {
         round += 1
       if (status == SpiderStatus.MaxToCrawl || status == SpiderStatus.MaxRounds)
         stopStatus = status
-      val r = r0.copy(status = status)
       writeStatus(workdir, i, status, downloaded, round)
-      if (timing) println(f"[iter $i] iter_wall        ${(System.nanoTime() - it0) / 1e9}%6.2f s")
-      if (i % compactEvery == 0 || stopStatus >= 0) {
-        val c0 = System.nanoTime()
-        st.foreach(_.drain())
-        if (i % compactEvery == 0) compact(spark, workdir, i, cfg)
-        // re-root the chain on the compacted snapshot and release every
-        // cache the pre-compaction plans leaned on
-        st.foreach(_.freeCaches())
-        st = if (cfg.loopChainState && stopStatus < 0)
-          Some(loadLoopState(spark, workdir, i, cfg)) else None
-        if (timing) println(f"[iter $i] compact_wall     ${(System.nanoTime() - c0) / 1e9}%6.2f s")
-      }
-      out += r
+      if (i % compactEvery == 0) compact(spark, workdir, i, cfg)
+      out += r0.copy(status = status)
       i += 1
     }
-    st.foreach { s => s.drain(); s.freeCaches() }
     redirClosure.unpersist()
     pages.unpersist()
     out.toSeq

@@ -200,17 +200,15 @@ final case class TitleRow(
     sample_vec: Array[Int] = Array.empty
 )
 
-/** Per-iteration, per-partition lineage counters (north_rule). */
+/** Per-iteration counters, recorded in the snapshot's MANIFEST.json. */
 final case class MetricsRow(
     iteration: Int,
-    partition: Int,
     scheduled: Long,
     fetched: Long,
     robots_denied: Long,
     errors: Long,
     new_urls: Long,
     dups_dropped: Long,
-    filtered: Long,
     wall_ms: Long
 )
 

@@ -3,9 +3,9 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{GbHash, GbUrl, GbXml}
@@ -135,8 +135,14 @@ case class MinhashSigExpr(child: Expression, n: Int) extends UnaryExpression {
 /** Sign-LSH hyperplane signature of a float embedding. Planes are a
   * pure function of (nPlanes, dim) (TextOps.planesFor: deterministic
   * SplitMix64 Box-Muller), so each JVM derives them locally from the
-  * baked-in constants — no broadcast, no closure capture. */
-case class PlaneSigExpr(child: Expression, nPlanes: Int, dim: Int) extends UnaryExpression {
+  * baked-in constants — no broadcast, no closure capture. The input must
+  * be array<float> (checked at analysis: the kernel reads elements with
+  * getFloat, which would silently reinterpret any other element type).
+  * Elements are assumed non-null — embeddings are dense vectors — even
+  * though parquet-read arrays carry containsNull = true. */
+case class PlaneSigExpr(child: Expression, nPlanes: Int, dim: Int) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "plane_sig"
   override protected def nullSafeEval(in: Any): Any =
@@ -147,8 +153,11 @@ case class PlaneSigExpr(child: Expression, nPlanes: Int, dim: Int) extends Unary
 }
 /** Dot product of two float vectors in double precision (see
   * Native.vdot for the equivalence argument vs the aggregate/zip_with
-  * form it replaces). */
-case class VDotExpr(left: Expression, right: Expression) extends BinaryExpression {
+  * form it replaces). Both inputs must be array<float> (checked at
+  * analysis, as for [[PlaneSigExpr]]); elements are assumed non-null. */
+case class VDotExpr(left: Expression, right: Expression) extends BinaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vdot"
   override protected def nullSafeEval(a: Any, b: Any): Any =

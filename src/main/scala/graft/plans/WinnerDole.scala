@@ -8,6 +8,96 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** One candidate in the winner heap (a doledb candidate row). */
+final class WinnerItem(
+    val uh48: Long, val url: UTF8String, val priority: Int, val ufn: Int,
+    val timeMs: Long, val hop: Int, val ipMax: Int, val wasIndexed: Boolean,
+    val reqFlags: Long, val siteHash32: Int, val domHash32: Int)
+
+/** Bounded winner heap: keeps the ≤ k best candidates in winner-tree key
+  * order — priority DESC, hopCount ASC, spiderTimeMS ASC, uh48 ASC (the
+  * reference's 192-bit winner-tree key: firstIp, 255-priority, hopCount,
+  * spiderTimeMS, uh48 — Spider.cpp:3461-3497; insertion comparison
+  * :4856-4893, whose overdue-time clamp reduces to exactly this order
+  * because the scheduler only feeds it candidates already eligible, i.e.
+  * spiderTimeMS <= now). Binary max-heap with the WORST item at the
+  * root, so a full heap evicts in O(log k). */
+final class WinnerHeap(val k: Int) {
+  var arr: Array[WinnerItem] = new Array[WinnerItem](math.min(k, 16))
+  var size: Int = 0
+
+  /** true if a ranks strictly WORSE than b in winner order. */
+  @inline def worse(a: WinnerItem, b: WinnerItem): Boolean = {
+    if (a.priority != b.priority) a.priority < b.priority
+    else if (a.hop != b.hop) a.hop > b.hop
+    else if (a.timeMs != b.timeMs) a.timeMs > b.timeMs
+    else a.uh48 > b.uh48
+  }
+
+  private def siftUp(i0: Int): Unit = {
+    var i = i0
+    while (i > 0) {
+      val p = (i - 1) >> 1
+      if (worse(arr(i), arr(p))) { val t = arr(i); arr(i) = arr(p); arr(p) = t; i = p }
+      else return
+    }
+  }
+
+  private def siftDown(i0: Int): Unit = {
+    var i = i0
+    while (true) {
+      val l = 2 * i + 1
+      val r = l + 1
+      var w = i
+      if (l < size && worse(arr(l), arr(w))) w = l
+      if (r < size && worse(arr(r), arr(w))) w = r
+      if (w == i) return
+      val t = arr(i); arr(i) = arr(w); arr(w) = t; i = w
+    }
+  }
+
+  /** Heap full and the worst kept item ranks strictly worse than the
+    * candidate described by these key fields — i.e. the candidate WOULD
+    * displace it. Allocation-free admission test for the hot path. */
+  @inline def rootStrictlyWorse(priority: Int, hop: Int, timeMs: Long, uh48: Long): Boolean = {
+    val a = arr(0)
+    if (a.priority != priority) a.priority < priority
+    else if (a.hop != hop) a.hop > hop
+    else if (a.timeMs != timeMs) a.timeMs > timeMs
+    else a.uh48 > uh48
+  }
+
+  def insert(it: WinnerItem): Unit = {
+    if (size < k) {
+      if (size == arr.length) {
+        val n = new Array[WinnerItem](math.min(k, arr.length * 2))
+        System.arraycopy(arr, 0, n, 0, size)
+        arr = n
+      }
+      arr(size) = it
+      size += 1
+      siftUp(size - 1)
+    } else if (worse(arr(0), it)) { // strictly better than the worst kept
+      arr(0) = it
+      siftDown(0)
+    } // ties keep the incumbent ("all tied, keep it the same", :4887)
+  }
+
+  /** Reset for reuse across groups (WinnerDoleExec streams one heap). */
+  def clear(): Unit = {
+    java.util.Arrays.fill(arr.asInstanceOf[Array[AnyRef]], 0, size, null)
+    size = 0
+  }
+
+  /** Items best-first (the dole order; seq_in_ip = index). */
+  def sorted: Array[WinnerItem] = {
+    val out = java.util.Arrays.copyOf(arr, size)
+    java.util.Arrays.sort(out, (a: WinnerItem, b: WinnerItem) => if (worse(a, b)) 1 else if (worse(b, a)) -1 else 0)
+    out
+  }
+}
 
 /** A2 winner selection as a WHOLE-OPERATOR custom plan (the doledb
   * population step): per-firstIp bounded top-k in winner-tree order
@@ -15,20 +105,19 @@ import org.apache.spark.sql.types._
   * emitted directly as dole rows with `seq_in_ip` = winner rank and the
   * per-row ipMaxSpiders cap already applied (Spider.cpp:4xxx dole loop).
   *
-  * Why a custom operator instead of groupBy().agg(WinnerTopK): Spark
-  * always splits a TypedImperativeAggregate into partial+final, which
-  * hands EVERY per-IP heap through serialize/deserialize even when the
-  * child is already hash-partitioned by first_ip — measured at ~2x the
-  * r3 schedule kernel's aggregate cost. This exec instead requires
+  * Why a custom operator: a bounded-heap aggregate would be split by
+  * Spark into partial+final, handing EVERY per-IP heap through
+  * serialize/deserialize even when the child is already
+  * hash-partitioned by first_ip. This exec instead requires
   * ClusteredDistribution(first_ip) + child sorted by first_ip (a
   * single-key RADIX sort), streams each IP group through ONE reused
-  * bounded heap (O(k) state — skew-safe like the aggregate: a 10^7-row
-  * IP never buffers), and writes winners straight to UnsafeRows. No
-  * object codec, no posexplode, no per-group allocation.
+  * bounded heap (O(k) state — skew-safe: a 10^7-row IP never buffers,
+  * unlike the window's per-IP full sort), and writes winners straight
+  * to UnsafeRows. No object codec, no per-group allocation.
   *
-  * Output is byte-identical to the groupBy(WinnerTopK)+posexplode+filter
-  * pipeline (proven by A2WinnerDoleSpec cross-check and the a2/crawl
-  * driver oracles).
+  * Output is byte-identical to the `row_number()` window top-k with the
+  * per-row ip_max cap (proven by WinnerDoleSpec's window cross-check and
+  * the a2_winner_dole and crawl oracle queries in SparkEntry).
   *
   * Child must provide columns: first_ip:int, uh48:long, url:string,
   * priority:int, ufn:int, spider_time_ms:long, hop_count:int, ip_max:int,
@@ -183,7 +272,7 @@ case class WinnerDoleExec(k: Int, maxWinners: Int, emitWake: Boolean,
         /** Stage the next output row: winners best-first with the
           * per-row ipMaxSpiders cap (`pos < least(ip_max, maxWinners)`)
           * applied to each winner's OWN ip_max, exactly like the
-          * groupBy(WinnerTopK)+posexplode+filter pipeline. */
+          * window's `rank <= least(ip_max, maxWinners)` filter. */
         private def stage(): Unit = {
           while (nextRow == null && !exhausted) {
             if (winners == null) {
@@ -209,7 +298,7 @@ case class WinnerDoleExec(k: Int, maxWinners: Int, emitWake: Boolean,
                 // spider_time_ms = min(next_lb) over the whole group
                 sentinelPending = false
                 outRow.update(0, 0L); outRow.update(1, groupIp)
-                outRow.update(2, org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8)
+                outRow.update(2, UTF8String.EMPTY_UTF8)
                 outRow.update(3, 0); outRow.update(4, 0)
                 outRow.update(5, groupMinLb); outRow.update(6, 0)
                 outRow.update(7, -1); outRow.update(8, false)

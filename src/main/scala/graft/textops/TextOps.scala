@@ -1,6 +1,6 @@
 package graft.textops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.GbHash
@@ -156,26 +156,22 @@ object TextOps {
     // sibling session with edge-count-derived shuffle partitions —
     // under AQE every query-stage materialization is its own Spark
     // job, which triples the per-round job count on a graph whose
-    // rounds take milliseconds (the Crawl stage-2 quiet-writes trick;
-    // same SparkContext, same cache, byte-equivalent output — AQE
-    // only re-plans). Big edge lists keep AQE: skew-join splitting
-    // and partition coalescing are the 100×-scale story there.
+    // rounds take milliseconds (the crawl loop's quiet session; same
+    // SparkContext, same cache, byte-equivalent output — AQE only
+    // re-plans). Big edge lists keep AQE: skew-join splitting and
+    // partition coalescing are the 100×-scale story there.
     val quiet: SparkSession =
-      if (nEdges >= 1000000L ||
+      if (nEdges >= GraftShim.QuietBatchRows ||
         spark.conf.get("spark.sql.adaptive.enabled", "true") == "false") spark
       else {
-        val q = spark.newSession()
-        spark.conf.getAll.foreach { case (k, v) =>
-          try q.conf.set(k, v) catch { case _: Throwable => () }
-        }
-        q.conf.set("spark.sql.adaptive.enabled", "false")
+        val q = GraftShim.quietSession(spark)
         q.conf.set("spark.sql.shuffle.partitions",
           math.max(1L, nEdges / 50000L).toString)
         q
       }
     def onQuiet(df: DataFrame): DataFrame =
       if (quiet eq spark) df
-      else org.apache.spark.sql.GraftShim.onSession(quiet, df)
+      else GraftShim.onSession(quiet, df)
     var labels = onQuiet(edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
       .withColumn("prev", col("lbl"))).persist()

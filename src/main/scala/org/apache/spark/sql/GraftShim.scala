@@ -37,14 +37,27 @@ object GraftShim {
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false))
   }
 
+  /** Work below this many rows (URLs per crawl iteration, edges per
+    * dedup graph) runs on the [[quietSession]]: AQE's levers —
+    * skew-join splitting (≥256 MB partitions) and partition coalescing
+    * — buy nothing below ~10^6 rows, while each of its query-stage
+    * materializations is one more Spark job of pure fixed cost. */
+  val QuietBatchRows: Long = 1000000L
+
+  /** The AQE-off sibling of `spark`: same SparkContext, shared state
+    * and cache, and a copy of the parent's SQL conf, registered
+    * functions and planning strategies (cloneSession is private[sql]).
+    * Only the sibling's AQE flag changes; the parent is untouched.
+    * Output is byte-equivalent — AQE only re-plans execution. */
+  def quietSession(spark: SparkSession): SparkSession = {
+    val q = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    q.conf.set("spark.sql.adaptive.enabled", "false")
+    q
+  }
+
   /** Re-bind a DataFrame's analyzed plan to another session (same
     * SparkContext/sharedState — caches still resolve), so a query can
-    * execute under that session's SQLConf. Used to run the crawl
-    * loop's tiny state-merge writes with AQE off: at micro batch
-    * sizes, each AQE query-stage materialization is a separate Spark
-    * job, and the ~dozen merge writes × 2-4 stage-jobs each were the
-    * measured fixed cost of an iteration. Output is byte-equivalent —
-    * AQE only re-plans execution. */
+    * execute under that session's SQLConf (e.g. a [[quietSession]]). */
   def onSession(spark: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed)

@@ -104,6 +104,25 @@ class CrawlSpec extends AnyFunSuite {
     assert(ips.forall(_.last_download_end_ms > Crawl.nowMs(cfg, 0)))
   }
 
+  test("every snapshot manifest carries the iteration's counters") {
+    val d = tmpdir()
+    val results = Crawl.run(spark, d, spec, 5, cfg)
+    assert(results.map(_.robotsDenied).sum > 0 && results.map(_.errors).sum > 0,
+      "the micro crawl must exercise both the robots and the error counters")
+    results.zipWithIndex.foreach { case (r, k) =>
+      val i = k + 1
+      val m = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"${Crawl.snapDir(d, i)}/MANIFEST.json")), "UTF-8")
+      def field(name: String): Long =
+        s""""$name":(-?\\d+)""".r.findFirstMatchIn(m).map(_.group(1).toLong)
+          .getOrElse(fail(s"snapshot $i manifest has no $name: $m"))
+      assert(field("iteration") == i)
+      assert(Seq(field("scheduled"), field("fetched"), field("robots_denied"), field("errors"),
+        field("new_urls")) == Seq(r.scheduled, r.fetched, r.robotsDenied, r.errors, r.newUrls),
+        s"snapshot $i manifest $m vs $r")
+    }
+  }
+
   test("extracted text matches the pages table golden text byte-for-byte") {
     import spark.implicits._
     val pages = Corpus.pages(spark, spec)

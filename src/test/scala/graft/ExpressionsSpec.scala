@@ -59,6 +59,21 @@ class ExpressionsSpec extends AnyFunSuite {
     rows.foreach(r => assert(r.getLong(1) == GbHash.uh48(r.getString(0))))
   }
 
+  test("vdot and plane_sig reject non-float arrays at analysis") {
+    import spark.implicits._
+    val df = Seq((Seq(1.0, 2.0), Seq(3.0f, 4.0f))).toDF("d", "f")
+    assert(df.select(GraftFunctions.vdot(col("f"), col("f"))).as[Double].head() == 25.0)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(GraftFunctions.vdot(col("d"), col("d")))
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(GraftFunctions.vdot(col("f"), col("d")))
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(GraftFunctions.planeSig(col("d"), 8, 2))
+    }
+  }
+
   test("null propagation") {
     import spark.implicits._
     val df = Seq[(String)](null.asInstanceOf[String]).toDF("u")
