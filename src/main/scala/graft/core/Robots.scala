@@ -137,7 +137,7 @@ object Robots {
           flag = true
           if (vLen > 0 && { val c = file(vOff); (c >= '0' && c <= '9') || c == '.' }) {
             val str = new String(file, vOff, vLen, java.nio.charset.StandardCharsets.ISO_8859_1)
-            val secs = try str.trim.takeWhile(c => c.isDigit || c == '.').toDouble catch { case _: Throwable => -1.0 }
+            val secs = try str.trim.takeWhile(c => c.isDigit || c == '.').toDouble catch { case _: NumberFormatException => -1.0 }
             if (secs >= 0) {
               val ms = (secs * 1000L).toLong
               crawlDelay = if (ms > 0x7fffffffL) 0x7fffffff else if (ms < 0) -1 else ms.toInt

@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Dataset, GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -1250,12 +1250,12 @@ object Crawl {
 
   /** The exact half of J2 over pre-tagged candidates: bloom-negatives
     * are definitely new; positives (incl. false positives) pay the
-    * exact left_anti against `seen` (a uh48 table — the full frontier
-    * column on legacy workdirs, or ONLY the positives' touched buckets
-    * of the seen_uh48 chain, which is what makes admission O(delta)
-    * end-to-end). No distinct() on the seen side: left_anti is
-    * set-semantics already, and the distinct was a full extra shuffle
-    * per iteration (uh48 is near-unique by the write invariant). */
+    * exact left_anti against `seen` (a uh48 table — in the loop, ONLY
+    * the positives' touched buckets of the seen_uh48 chain, which is
+    * what makes admission O(delta) end-to-end). No distinct() on the
+    * seen side: left_anti is set-semantics already, and the distinct
+    * was a full extra shuffle per iteration (uh48 is near-unique by the
+    * write invariant). */
   def admitTagged(tagged: Dataset[(FrontierRequest, Boolean)],
                   seen: DataFrame): Dataset[FrontierRequest] = {
     val spark = tagged.sparkSession
@@ -1274,13 +1274,10 @@ object Crawl {
     * chain: an iteration writes ONLY the touched buckets' rebuilt blooms
     * (a `_GRAFT_DELTA`-marked dir), so the loader walks newest-first
     * taking the newest version of each bucket and stops at the nearest
-    * full table (marker-less: init/compaction/injection rewrites — and
-    * every pre-chain snapshot, which wrote full). Compaction bounds the
-    * chain length, exactly like the keyed StateTable chains. Rebuilds
-    * from the request uh48s if no bloom exists at all (resume from a
-    * pre-bloom snapshot). */
-  def loadBloom(spark: SparkSession, workdir: String, i: Int, cfg: Config): DataFrame = {
-    import spark.implicits._
+    * full table (marker-less: init/compaction/injection rewrites).
+    * Compaction bounds the chain length, exactly like the keyed
+    * StateTable chains. */
+  def loadBloom(spark: SparkSession, workdir: String, i: Int): DataFrame = {
     val dirs = scala.collection.mutable.ListBuffer[(String, Int)]()
     var k = i
     var done = false
@@ -1292,10 +1289,8 @@ object Crawl {
       }
       k -= 1
     }
-    if (dirs.isEmpty)
-      SeenBloom.build(loadRequests(spark, workdir, i).select("uh48").as[java.lang.Long],
-        cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)
-    else if (dirs.size == 1) spark.read.schema(bloomSchema).parquet(dirs.head._1)
+    require(dirs.nonEmpty, s"no seen_bloom at or below snapshot $i")
+    if (dirs.size == 1) spark.read.schema(bloomSchema).parquet(dirs.head._1)
     else dirs.map { case (p, ord) =>
         spark.read.schema(bloomSchema).parquet(p).withColumn("ord", lit(ord))
       }
@@ -1440,56 +1435,28 @@ object Crawl {
       .agg(max(struct(col("spidered_time"), col("sample_vec"))).as("s"))
       .select(col("uh48"), col("s.sample_vec").as("sample_vec"))
 
-  /** title_vecs StateTable chain present at or below snapshot i (else
-    * the loader falls back to deriving vectors from titledb). */
-  def vecChainExists(workdir: String, i: Int): Boolean =
-    (0 to i).exists(k => new java.io.File(s"${snapDir(workdir, k)}/title_vecs").exists)
-
   private[graft] def emptyVecs(spark: SparkSession): DataFrame = {
     import spark.implicits._
     spark.emptyDataset[(Long, Array[Int])].toDF("uh48", "sample_vec")
   }
-
-  /** seen_uh48 StateTable chain present at or below snapshot i (else
-    * J2's exact side falls back to the requests uh48 column). */
-  def seenChainExists(workdir: String, i: Int): Boolean =
-    (0 to i).exists(k => new java.io.File(s"${snapDir(workdir, k)}/seen_uh48").exists)
 
   private[graft] def emptySeen(spark: SparkSession): DataFrame = {
     import spark.implicits._
     spark.emptyDataset[Long].toDF("uh48")
   }
 
-  /** Bucket count for a keyed state table's LSM chain, read from the
-    * chain's own full marker (StateTable.bucketsOf): chosen per table at
-    * compaction time from its on-disk size, so a micro-loop table is a
-    * single bucket (one file, one task) while a 10^10-url inlink_state
-    * gets thousands. Changing the count happens only at writeFull
-    * (compaction), which also records it. */
-  private def stateBuckets(workdir: String, i: Int, name: String): Int =
-    StateTable.bucketsOf(workdir, i, name)
-
-  /** Inlink c-block state as of snapshot i (empty for pre-inlink
-    * snapshots so resume keeps working). O(delta) maintained: only the
-    * buckets an iteration touches are written forward (StateTable). */
+  /** Inlink c-block state as of snapshot i. O(delta) maintained: only
+    * the buckets an iteration touches are written forward (StateTable). */
   def loadInlinkState(spark: SparkSession, workdir: String, i: Int): Dataset[InlinkState] = {
     import spark.implicits._
-    StateTable.load(spark, workdir, i, "inlink_state", df => Seq(df("uh48")),
-      stateBuckets(workdir, i, "inlink_state"), spark.emptyDataset[InlinkState].toDF).as[InlinkState]
-  }
-
-  /** Politeness state (per-IP last download end) as of snapshot i. */
-  def loadIpState(spark: SparkSession, workdir: String, i: Int): Dataset[IpState] = {
-    import spark.implicits._
-    StateTable.load(spark, workdir, i, "ip_state", df => Seq(df("first_ip")),
-      stateBuckets(workdir, i, "ip_state"), spark.emptyDataset[IpState].toDF).as[IpState]
+    StateTable.load(spark, workdir, i, "inlink_state",
+      spark.emptyDataset[InlinkState].toDF).as[InlinkState]
   }
 
   /** Per-domain robots crawl-delay state as of snapshot i. */
   def loadDomState(spark: SparkSession, workdir: String, i: Int): Dataset[DomState] = {
     import spark.implicits._
-    StateTable.load(spark, workdir, i, "dom_state", df => Seq(df("dom_hash32")),
-      stateBuckets(workdir, i, "dom_state"), spark.emptyDataset[DomState].toDF).as[DomState]
+    StateTable.load(spark, workdir, i, "dom_state", spark.emptyDataset[DomState].toDF).as[DomState]
   }
 
   /** A6 quota state (the reference's scan-built m_localTable,
@@ -1501,8 +1468,7 @@ object Crawl {
     * spiderdb re-scan. */
   def loadQuotaState(spark: SparkSession, workdir: String, i: Int): DataFrame = {
     import spark.implicits._
-    StateTable.load(spark, workdir, i, "quota_state", df => Seq(df("key")),
-      stateBuckets(workdir, i, "quota_state"), spark.emptyDataset[(Int, Long)].toDF("key", "n"))
+    StateTable.load(spark, workdir, i, "quota_state", spark.emptyDataset[(Int, Long)].toDF("key", "n"))
   }
 
   /** Minimal tagdb (see [[TagState]]): keyed by the SiteGetter site
@@ -1510,26 +1476,51 @@ object Crawl {
     * site-level inlinking c-blocks. Cumulative like ip/dom state. */
   def loadTagState(spark: SparkSession, workdir: String, i: Int): Dataset[TagState] = {
     import spark.implicits._
-    StateTable.load(spark, workdir, i, "tag_state", df => Seq(df("site_hash32")),
-      stateBuckets(workdir, i, "tag_state"), spark.emptyDataset[TagState].toDF).as[TagState]
+    StateTable.load(spark, workdir, i, "tag_state", spark.emptyDataset[TagState].toDF).as[TagState]
   }
 
-  /** A8 state: exact per-IP request counts as of snapshot i, maintained
-    * INCREMENTALLY from each delta (+ recomputed at compaction, which
-    * drops rows) so the overflow guard no longer pays an O(frontier)
-    * groupBy every iteration. Falls back to the full count for snapshots
-    * written before this table existed (resume compat). */
-  def loadIpCounts(spark: SparkSession, workdir: String, i: Int): DataFrame = {
-    val path = s"${snapDir(workdir, i)}/ip_counts"
-    if (new java.io.File(path).exists)
-      spark.read.schema("first_ip INT, n BIGINT").parquet(path)
-    else loadRequests(spark, workdir, i).groupBy("first_ip")
-      .agg(count(lit(1)).as("n"))
+  /** The per-IP table as of snapshot i: everything the spider keeps per
+    * firstIp (the SpiderColl's waiting-tree time, m_lastDownloadCache
+    * and per-IP counts, Spider.h:1225-1482) in one row per first_ip —
+    * `last_download_end_ms` (politeness), `n` (A8: exact request count)
+    * and `next_ms` (A3: waiting-tree lower bound), each null where the
+    * IP has no such state. Every snapshot rewrites it whole (O(#IPs)),
+    * so it is read from snapshot i alone. */
+  def loadIpTable(spark: SparkSession, workdir: String, i: Int): DataFrame =
+    spark.read.schema("first_ip INT, last_download_end_ms BIGINT, n BIGINT, next_ms BIGINT")
+      .parquet(s"${snapDir(workdir, i)}/ip_table")
+
+  private def ipStateOf(t: DataFrame): Dataset[IpState] = {
+    import t.sparkSession.implicits._
+    t.filter(col("last_download_end_ms").isNotNull)
+      .select("first_ip", "last_download_end_ms").as[IpState]
   }
+
+  private def ipCountsOf(t: DataFrame): DataFrame =
+    t.filter(col("n").isNotNull).select("first_ip", "n")
+
+  private def ipNextOf(workdir: String, i: Int, cfg: Config, t: DataFrame): Option[DataFrame] = {
+    val marker = ipTableMarker(workdir, i)
+    if (marker.exists &&
+      new String(java.nio.file.Files.readAllBytes(marker.toPath)).trim == rulesFingerprint(cfg))
+      Some(t.filter(col("next_ms").isNotNull).select("first_ip", "next_ms"))
+    else None
+  }
+
+  /** Politeness state (per-IP last download end) as of snapshot i. */
+  def loadIpState(spark: SparkSession, workdir: String, i: Int): Dataset[IpState] =
+    ipStateOf(loadIpTable(spark, workdir, i))
+
+  /** A8 state: exact per-IP request counts as of snapshot i, maintained
+    * INCREMENTALLY from each delta (+ recounted at compaction, which
+    * drops rows) so the overflow guard no longer pays an O(frontier)
+    * groupBy every iteration. */
+  def loadIpCounts(spark: SparkSession, workdir: String, i: Int): DataFrame =
+    ipCountsOf(loadIpTable(spark, workdir, i))
 
   /** A fingerprint of everything the waiting-tree lower bounds depend
     * on: if the rule table / site list / patterns change between runs,
-    * stored ip_next entries may no longer be lower bounds → discard. */
+    * stored next_ms entries may no longer be lower bounds → discard. */
   def rulesFingerprint(cfg: Config): String = {
     val s = cfg.rules.mkString("|") + "#" + cfg.siteList + "#" + cfg.patterns.toString
     java.lang.Long.toHexString(graft.core.GbHash.hash64b(s))
@@ -1537,22 +1528,40 @@ object Crawl {
 
   /** A3 waiting-tree state as of snapshot i: first_ip → next_ms (a lower
     * bound on the IP's earliest eligible spider time, valid until the IP
-    * is touched). None when absent (pre-A3 snapshots, resume) or written
-    * under a different rule config — the next iteration then runs a full
+    * is touched). None when the snapshot's schedule ran without wake
+    * maintenance or under a different rule config (`ip_table.rules`
+    * missing or different) — the next iteration then runs a full
     * bootstrap scan and rebuilds it. */
-  def loadIpNext(spark: SparkSession, workdir: String, i: Int, cfg: Config): Option[DataFrame] = {
-    val dir = s"${snapDir(workdir, i)}/ip_next"
-    val marker = new java.io.File(s"${snapDir(workdir, i)}/ip_next.rules")
-    if (new java.io.File(dir).exists && marker.exists &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)).trim == rulesFingerprint(cfg))
-      Some(spark.read.schema("first_ip INT, next_ms BIGINT").parquet(dir))
-    else None
-  }
+  def loadIpNext(spark: SparkSession, workdir: String, i: Int, cfg: Config): Option[DataFrame] =
+    ipNextOf(workdir, i, cfg, loadIpTable(spark, workdir, i))
 
-  private def writeIpNextMarker(workdir: String, i: Int, cfg: Config): Unit =
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"${snapDir(workdir, i)}/ip_next.rules"),
-      rulesFingerprint(cfg).getBytes("UTF-8"))
+  private def ipTableMarker(workdir: String, i: Int): java.io.File =
+    new java.io.File(s"${snapDir(workdir, i)}/ip_table.rules")
+
+  /** One per-IP table roll-forward. Every layer carries (first_ip,
+    * last_download_end_ms, n, pri, next_ms); the single groupBy keeps
+    * the latest download end, sums the counts and takes `next_ms` from
+    * the highest-`pri` layer that has one (layers with a null `pri`
+    * leave it alone). IPs left with no state at all drop out. */
+  private def mergeIpTable(layers: Seq[DataFrame]): DataFrame =
+    layers.reduce(_ unionByName _)
+      .groupBy("first_ip")
+      .agg(max(col("last_download_end_ms")).as("last_download_end_ms"),
+        sum(col("n")).as("n"),
+        max(when(col("pri").isNotNull, struct(col("pri"), col("next_ms")))).as("s"))
+      .select(col("first_ip"), col("last_download_end_ms"), col("n"), col("s.next_ms").as("next_ms"))
+      .filter(coalesce(col("last_download_end_ms"), col("n"), col("next_ms")).isNotNull)
+
+  private def ipLayer(df: DataFrame, last: Column = lit(null), n: Column = lit(null),
+                      pri: Column = lit(null), next: Column = lit(null)): DataFrame =
+    df.select(col("first_ip").cast("int").as("first_ip"),
+      last.cast("long").as("last_download_end_ms"), n.cast("long").as("n"),
+      pri.cast("int").as("pri"), next.cast("long").as("next_ms"))
+
+  /** A prior table as one layer: its `next_ms` entries at priority 0. */
+  private def priorIpLayer(t: DataFrame, n: Column = col("n")): DataFrame =
+    ipLayer(t, last = col("last_download_end_ms"), n = n,
+      pri = when(col("next_ms").isNotNull, lit(0)), next = col("next_ms"))
 
   def writeManifest(workdir: String, i: Int, metrics: Seq[MetricsRow]): Unit = {
     val d = snapDir(workdir, i)
@@ -1630,69 +1639,36 @@ object Crawl {
       ipCounts: DataFrame,
       ipNext: Option[DataFrame],
       titleVecs: DataFrame, // (uh48, sample_vec) — loadTitleVecs shape
-      vecsOnDisk: Boolean, // title_vecs StateTable chain exists (else derived from titledb)
       seenUh48: DataFrame, // (uh48) — the URL-seen exact set (J2's anti-join right side)
-      seenOnDisk: Boolean, // seen_uh48 StateTable chain exists (else derived from requests)
       bloom: DataFrame,
-      bloomOnDisk: Boolean,
       buckets: Map[String, Int]) // keyed-state bucket counts (constant between compactions)
 
   /** Root a LoopState on the disk chain as of snapshot i. Lazy — nothing
     * executes here. */
   def loadLoopState(spark: SparkSession, workdir: String, i: Int, cfg: Config): LoopState = {
-    val vecsOnDisk = vecChainExists(workdir, i)
-    val seenOnDisk = seenChainExists(workdir, i)
-    // a pre-chain workdir writes the seen_uh48 / title_vecs chain FULL on
-    // its next iteration, sized from the table it derives from (uh48s are
-    // ~1/16 of the requests bytes, vectors ~1/64 of titledb payloads — a
-    // migration heuristic only; the next compaction re-sizes from the
-    // chain's own measured bytes)
-    def chainBuckets(name: String): Int = name match {
-      case "seen_uh48" if !seenOnDisk =>
-        StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, "requests") / 16)
-      case "title_vecs" if !vecsOnDisk =>
-        StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, "titledb") / 64)
-      case _ => StateTable.bucketsOf(workdir, i, name)
-    }
+    val ipTable = loadIpTable(spark, workdir, i)
     LoopState(
       requests = loadRequests(spark, workdir, i),
       replies = loadReplies(spark, workdir, i),
-      ipState = loadIpState(spark, workdir, i),
+      ipState = ipStateOf(ipTable),
       domState = loadDomState(spark, workdir, i),
       inlinks = loadInlinkState(spark, workdir, i),
       tagState = loadTagState(spark, workdir, i),
       quotaState = loadQuotaState(spark, workdir, i),
-      ipCounts = loadIpCounts(spark, workdir, i),
-      ipNext = loadIpNext(spark, workdir, i, cfg),
+      ipCounts = ipCountsOf(ipTable),
+      ipNext = ipNextOf(workdir, i, cfg, ipTable),
       // O(delta) path: the title_vecs StateTable chain already holds
       // latest-per-uh48 vectors (no per-iteration O(crawled) titledb
-      // scan + re-aggregate); pre-chain workdirs derive from titledb
-      // once and the next iteration writes the chain full.
-      titleVecs =
-        if (vecsOnDisk)
-          StateTable.load(spark, workdir, i, "title_vecs",
-            df => Seq(df("uh48")), StateTable.bucketsOf(workdir, i, "title_vecs"),
-            emptyVecs(spark))
-        else loadTitleVecs(spark, workdir, i),
-      vecsOnDisk = vecsOnDisk,
+      // scan + re-aggregate)
+      titleVecs = StateTable.load(spark, workdir, i, "title_vecs", emptyVecs(spark)),
       // O(delta) path: the seen-uh48 StateTable chain holds every
       // request uh48, bucketed so admission loads only the buckets of
-      // this batch's bloom-positive candidates; pre-chain workdirs fall
-      // back to the O(frontier) uh48 column scan and the next iteration
-      // writes the chain full.
-      seenUh48 =
-        if (seenOnDisk)
-          StateTable.load(spark, workdir, i, "seen_uh48",
-            df => Seq(df("uh48")), StateTable.bucketsOf(workdir, i, "seen_uh48"),
-            emptySeen(spark))
-        else loadRequests(spark, workdir, i).select("uh48"),
-      seenOnDisk = seenOnDisk,
-      bloom = loadBloom(spark, workdir, i, cfg),
-      bloomOnDisk = (0 to i).exists(k =>
-        new java.io.File(s"${snapDir(workdir, k)}/seen_bloom").exists),
-      buckets = Seq("ip_state", "dom_state", "inlink_state", "tag_state",
+      // this batch's bloom-positive candidates
+      seenUh48 = StateTable.load(spark, workdir, i, "seen_uh48", emptySeen(spark)),
+      bloom = loadBloom(spark, workdir, i),
+      buckets = Seq("dom_state", "inlink_state", "tag_state",
           "quota_state", "title_vecs", "seen_uh48")
-        .map(n => n -> chainBuckets(n)).toMap)
+        .map(n => n -> StateTable.bucketsOf(workdir, i, n)).toMap)
   }
 
   /** Run one full crawl iteration: read state as of snapshot i-1, write
@@ -1725,7 +1701,7 @@ object Crawl {
   private final case class Doled(out: ScheduleOut, cached: DataFrame, dole: DataFrame)
 
   /** A3: due-IP pruned schedule with waiting-tree sentinels. The dole is
-    * SMALL — persisted so fetch and the ip_next roll-forward don't
+    * SMALL — persisted so fetch and the waiting-tree roll-forward don't
     * recompute the frontier scan, and lineage-cut: the cut view's plan
     * is a LogicalRDD leaf reading the cache, so downstream operator
     * construction (Catalyst analyzes EAGERLY per transformation) stops
@@ -1793,8 +1769,8 @@ object Crawl {
                          f: Fetched, hostMeta: Dataset[HostMeta], cfg: Config): Admitted = {
     import spark.implicits._
     // A8 overflow guard: IPs with too many requests stop accepting
-    // outlinks. Counts come from the incrementally-maintained ip_counts
-    // state (identical values to a requests groupBy, without the
+    // outlinks. Counts come from the per-IP table's incrementally
+    // maintained `n` (identical values to a requests groupBy, without the
     // per-iteration O(frontier) scan).
     val overflowIps = st.ipCounts.filter(col("n") > cfg.overflowCap).select(col("first_ip").as("of_ip"))
 
@@ -1811,19 +1787,11 @@ object Crawl {
     // by the bloom ONCE (persisted — three consumers), and the exact
     // anti-join's right side loads ONLY the seen-chain buckets the
     // bloom-POSITIVE candidates hash into (path-level pruning).
-    // Legacy workdirs without the chain keep the O(frontier) uh48
-    // column scan and write the chain FULL this iteration.
     val taggedP = SeenBloom.tagged(candidates, st.bloom, cfg.seenBuckets)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val seenRight =
-      if (!st.seenOnDisk) st.seenUh48
-      else {
-        val seenKeys = (df: DataFrame) => Seq(df("uh48"))
-        val bSeen = st.buckets("seen_uh48")
-        val pos = taggedP.filter(_._2).map(_._1.uh48).toDF("uh48")
-        StateTable.loadBuckets(spark, workdir, i - 1, "seen_uh48", seenKeys, bSeen,
-          emptySeen(spark), Some(StateTable.touchedBuckets(pos, seenKeys, bSeen)))
-      }
+    val pos = taggedP.filter(_._2).map(_._1.uh48).toDF("uh48")
+    val seenRight = StateTable.loadBuckets(spark, workdir, i - 1, "seen_uh48", emptySeen(spark),
+      Some(StateTable.touchedBuckets(pos, df => Seq(df("uh48")), st.buckets("seen_uh48"))))
     val fresh = dedupBatch(admitTagged(taggedP, seenRight).toDF())
 
     // revised re-adds for this iteration's EFAKEFIRSTIP answers (the
@@ -1904,24 +1872,22 @@ object Crawl {
     * combines the prior rows of the buckets `delta` touches with the
     * delta under the table's own semantics, and only those buckets are
     * written forward — untouched buckets are never read, shuffled, or
-    * rewritten. `full`: a pre-chain workdir merges the whole derived
-    * prior table instead and writes the chain FULL once. */
+    * rewritten. */
   private final case class StateMerge(name: String, key: String, prior: DataFrame,
-                                      delta: DataFrame, buckets: Int, full: Boolean,
+                                      delta: DataFrame, buckets: Int,
                                       merge: DataFrame => DataFrame)
 
-  /** The seven keyed state tables' merges for this iteration. */
+  /** The six keyed state tables' merges for this iteration. */
   private def stateMerges(spark: SparkSession, st: LoopState, f: Fetched, a: Admitted,
                           cfg: Config, i: Int): Seq[StateMerge] = {
     import spark.implicits._
     val results = f.results
-    def sm(name: String, key: String, prior: DataFrame, delta: DataFrame, full: Boolean = false)(
+    def sm(name: String, key: String, prior: DataFrame, delta: DataFrame)(
         merge: DataFrame => DataFrame) =
-      StateMerge(name, key, prior, delta, st.buckets(name), full, merge)
+      StateMerge(name, key, prior, delta, st.buckets(name), merge)
 
-    // politeness state: last download end per IP; crawl delay per dom
-    val ipUpdates = results.groupByKey(_.task.first_ip)
-      .mapGroups((ip, it) => IpState(ip, it.map(_.downloadEndMs).max))
+    // robots crawl delay per dom (the per-IP politeness state is in
+    // the per-IP table, ipTableRollForward)
     val domUpdates = results
       .filter(_.crawlDelayMs >= 0)
       .map(r => DomState(GbUrl.parse(r.task.url).domHash32, r.crawlDelayMs)).toDF()
@@ -1985,12 +1951,6 @@ object Crawl {
     val freshUh48 = a.fresh.toDF().select("uh48")
 
     Seq(
-      sm("ip_state", "first_ip", st.ipState.toDF(), ipUpdates.toDF()) { p =>
-        p.as[IpState].union(ipUpdates)
-          .groupByKey(_.first_ip)
-          .reduceGroups((x, y) => if (x.last_download_end_ms >= y.last_download_end_ms) x else y)
-          .map(_._2).toDF()
-      },
       sm("dom_state", "dom_hash32", st.domState.toDF(), domUpdates) { p =>
         p.withColumn("stamp", lit(0))
           .unionByName(domUpdates.withColumn("stamp", lit(1)))
@@ -2017,11 +1977,11 @@ object Crawl {
       // fresh uh48s are disjoint from the prior set by the anti-join
       // itself, and revised re-adds keep their url's uh48 (already
       // seen) — so the merge is a bare union, no distinct
-      sm("seen_uh48", "uh48", st.seenUh48, freshUh48, full = !st.seenOnDisk) { p =>
+      sm("seen_uh48", "uh48", st.seenUh48, freshUh48) { p =>
         p.select("uh48").unionByName(freshUh48)
       },
       // latest vector per uh48 (delta t=now shadows prior t=0)
-      sm("title_vecs", "uh48", st.titleVecs, vecDelta, full = !st.vecsOnDisk) { p =>
+      sm("title_vecs", "uh48", st.titleVecs, vecDelta) { p =>
         p.withColumn("t", lit(0L))
           .unionByName(vecDelta)
           .groupBy("uh48").agg(max(struct(col("t"), col("sample_vec"))).as("s"))
@@ -2033,9 +1993,9 @@ object Crawl {
     * concurrent jobs (results and the admitted rows are cached, so the
     * jobs share partitions instead of recomputing the fetch). Each job
     * builds its own plan on its own thread — driver-side analysis of
-    * the ~13 plans overlaps instead of adding up. The seven keyed state
+    * the ~12 plans overlaps instead of adding up. The six keyed state
     * tables first wait for ONE fused job that finds every table's
-    * touched buckets (seven one-task jobs cost more than the scans at
+    * touched buckets (six one-task jobs cost more than the scans at
     * micro scale). */
   private def commitPhase(spark: SparkSession, workdir: String, i: Int, st: LoopState,
                           doled: Doled, f: Fetched, a: Admitted, cfg: Config): Unit = {
@@ -2045,46 +2005,37 @@ object Crawl {
     import scala.concurrent.duration.Duration
     val d = snapDir(workdir, i)
     val merges = stateMerges(spark, st, f, a, cfg, i)
-    val chained = merges.filterNot(_.full)
     val touched = Future {
-      chained.map(_.name).zip(StateTable.touchedBucketsMulti(chained.map(m =>
+      merges.map(_.name).zip(StateTable.touchedBucketsMulti(merges.map(m =>
         (m.delta, (df: DataFrame) => Seq(df(m.key)), m.buckets)))).toMap
     }
     val stateWrites = merges.map(m => Future {
-      val keys = Seq(col(m.key))
-      if (m.full) StateTable.writeFull(m.merge(m.prior), keys, m.buckets, s"$d/${m.name}")
-      else {
-        val ids = Await.result(touched, Duration.Inf)(m.name)
-        val prior =
-          if (ids.isEmpty) m.prior.limit(0)
-          else m.prior.filter(StateTable.bucketCol(Seq(m.prior(m.key)), m.buckets).isInCollection(ids))
-        StateTable.writeDelta(m.merge(prior), keys, m.buckets, s"$d/${m.name}")
-      }
+      val ids = Await.result(touched, Duration.Inf)(m.name)
+      val prior =
+        if (ids.isEmpty) m.prior.limit(0)
+        else m.prior.filter(StateTable.bucketCol(Seq(m.prior(m.key)), m.buckets).isInCollection(ids))
+      StateTable.writeDelta(m.merge(prior), Seq(col(m.key)), m.buckets, s"$d/${m.name}")
     })
     val admittedDf = a.fresh.toDF().unionByName(a.revised.toDF())
     val writes = stateWrites ++ Seq(
       Future { admittedDf.write.mode("overwrite").parquet(s"$d/requests_delta") },
       Future { repliesOf(f.results, st.replies, cfg, i).write.mode("overwrite").parquet(s"$d/replies_delta") },
       Future {
-        // A8 state roll-forward: prior counts + this delta's counts
-        st.ipCounts
-          .unionByName(admittedDf.groupBy("first_ip").agg(count(lit(1)).as("n")))
-          .groupBy("first_ip").agg(sum(col("n")).as("n"))
-          .write.mode("overwrite").parquet(s"$d/ip_counts")
+        ipTableRollForward(st, doled, f, a)
+          .write.mode("overwrite").parquet(s"$d/ip_table")
+        // the marker says next_ms was rolled forward under these rules
+        if (doled.out.wake) writeIpTableMarker(workdir, i, cfg)
+        else Files.deleteIfExists(ipTableMarker(workdir, i).toPath)
       },
       Future {
         // incremental seen-bloom maintenance, O(new urls) I/O: ONLY the
         // touched buckets' rebuilt blooms are written forward as this
         // snapshot's chain delta (loadBloom resolves the chain;
-        // compaction resets it). On a pre-bloom resume the loaded table
-        // was rebuilt in memory, so a delta would orphan its untouched
-        // buckets (bloom false NEGATIVES skip the exact anti-join):
-        // write the one-time full instead.
+        // compaction resets it)
         SeenBloom.update(st.bloom, admittedDf.select("uh48").as[java.lang.Long],
-          cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp, deltaOnly = st.bloomOnDisk)
+          cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp, deltaOnly = true)
           .write.mode("overwrite").parquet(s"$d/seen_bloom")
-        if (st.bloomOnDisk) java.nio.file.Files.write(
-          new java.io.File(s"$d/seen_bloom", "_GRAFT_DELTA").toPath, Array.empty[Byte])
+        Files.write(new java.io.File(s"$d/seen_bloom", "_GRAFT_DELTA").toPath, Array.empty[Byte])
       },
       Future {
         // S7: titledb sink — the crawled-content snapshot (Titledb.cpp
@@ -2095,43 +2046,46 @@ object Crawl {
             r.httpStatus, r.lang, r.contentHash32, r.html, r.extractedText,
             if (r.sampleVec == null) Array.empty[Int] else r.sampleVec))
           .write.mode("overwrite").parquet(s"$d/titledb_delta")
-      }) ++ wakeRollForward(spark, st, doled, f, a).map(ipn => Future {
-        ipn.write.mode("overwrite").parquet(s"$d/ip_next")
-        writeIpNextMarker(workdir, i, cfg)
       })
     Await.result(Future.sequence(writes), Duration.Inf)
   }
 
-  /** A3 waiting-tree roll-forward (None when the schedule ran without
-    * wake maintenance), priority-layered upsert:
-    *   prior entries (0) < due-but-now-empty IPs (1, sleep forever
-    *   until touched — their rows were compacted away or F7/force-
-    *   delete-only) < freshly scanned minima (2) < TOUCHED IPs (3,
-    *   due next iteration: new/revised requests, replies+ip_state
-    *   from this batch, inlink-count changes — every channel that
-    *   can move a row's spider time or ufn). */
-  private def wakeRollForward(spark: SparkSession, st: LoopState, doled: Doled,
-                              f: Fetched, a: Admitted): Option[DataFrame] =
-    if (!doled.out.wake) None
-    else Some {
-      import spark.implicits._
-      def tag(df: DataFrame, p: Int) =
-        df.select(col("first_ip"), col("next_ms"), lit(p).as("pri"))
-      val none = spark.emptyDataset[(Int, Long)].toDF("first_ip", "next_ms")
-      val dueDefault = doled.out.dueIps.map(_.withColumn("next_ms", lit(Long.MaxValue))).getOrElse(none)
-      val wakeRows = doled.dole.filter(col("seq_in_ip") === -1)
-        .select(col("first_ip"), col("spider_time_ms").as("next_ms"))
-      val touched = f.results.map(_.task.first_ip).toDF("first_ip")
-        .unionByName(a.fresh.select("first_ip"))
-        .unionByName(a.revised.select("first_ip"))
-        .unionByName(a.newPairs.select("first_ip"))
-        .distinct().withColumn("next_ms", lit(0L))
-      tag(st.ipNext.getOrElse(none), 0).unionByName(tag(dueDefault, 1))
-        .unionByName(tag(wakeRows, 2)).unionByName(tag(touched, 3))
-        .groupBy("first_ip")
-        .agg(max(struct(col("pri"), col("next_ms"))).as("s"))
-        .select(col("first_ip"), col("s.next_ms").as("next_ms"))
-    }
+  private def writeIpTableMarker(workdir: String, i: Int, cfg: Config): Unit =
+    Files.write(ipTableMarker(workdir, i).toPath, rulesFingerprint(cfg).getBytes("UTF-8"))
+
+  /** The per-IP table's roll-forward, one groupBy (mergeIpTable) over:
+    *  - the prior table's politeness and A8 state;
+    *  - this batch's download ends (latest per IP wins);
+    *  - the admitted rows, one count each (A8);
+    *  - with wake maintenance, the A3 waiting tree as a priority-layered
+    *    upsert: prior entries (0, only when still valid under these
+    *    rules) < due-but-now-empty IPs (1, sleep forever until touched —
+    *    their rows were compacted away or F7/force-delete-only) <
+    *    freshly scanned minima (2) < TOUCHED IPs (3, due next
+    *    iteration: new/revised requests, replies+politeness state from
+    *    this batch, inlink-count changes — every channel that can move
+    *    a row's spider time or ufn). Without it, next_ms is null. */
+  private def ipTableRollForward(st: LoopState, doled: Doled, f: Fetched, a: Admitted): DataFrame = {
+    val downloads = f.results.toDF().select(col("task.first_ip").as("first_ip"), col("downloadEndMs"))
+    val admitted = a.fresh.select("first_ip").unionByName(a.revised.select("first_ip"))
+    val wake =
+      if (!doled.out.wake) Nil
+      else {
+        val touched = downloads.select("first_ip")
+          .unionByName(admitted)
+          .unionByName(a.newPairs.select("first_ip"))
+        st.ipNext.map(ipLayer(_, pri = lit(0), next = col("next_ms"))).toSeq ++
+          doled.out.dueIps.map(ipLayer(_, pri = lit(1), next = lit(Long.MaxValue))) ++
+          Seq(ipLayer(doled.dole.filter(col("seq_in_ip") === -1), pri = lit(2),
+              next = col("spider_time_ms")),
+            ipLayer(touched, pri = lit(3), next = lit(0L)))
+      }
+    mergeIpTable(Seq(
+      ipLayer(st.ipState.toDF(), last = col("last_download_end_ms")),
+      ipLayer(st.ipCounts, n = col("n")),
+      ipLayer(downloads, last = col("downloadEndMs")),
+      ipLayer(admitted, n = lit(1L))) ++ wake)
+  }
 
   /** J3: frontier compaction — dedupSpiderdbList (Spider.cpp:13609-13823):
     * rewrite the delta chain into one full table, one request per
@@ -2173,9 +2127,16 @@ object Crawl {
       .groupByKey(r => (r.first_ip, r.uh48, r.site_hash32, r.hop_count, r.flags & sigMask))
       .reduceGroups((a, b) => if (a.added_time <= b.added_time) a else b)
       .map(_._2)
+    // the keyed state chains compaction resets: (name, key, table as of i)
+    val states = Seq(
+      ("dom_state", "dom_hash32", loadDomState(spark, workdir, i).toDF()),
+      ("tag_state", "site_hash32", loadTagState(spark, workdir, i).toDF()),
+      ("quota_state", "key", loadQuotaState(spark, workdir, i)),
+      ("inlink_state", "uh48", loadInlinkState(spark, workdir, i).toDF()),
+      ("title_vecs", "uh48", StateTable.load(spark, workdir, i, "title_vecs", emptyVecs(spark))))
     // the three table rewrites are independent — run them as concurrent
-    // jobs (same shape as the iteration write graph); the bloom + ip
-    // count rebuilds chain off the compacted requests
+    // jobs (same shape as the iteration write graph); the bloom, seen
+    // set and per-IP count rebuilds chain off the compacted requests
     locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -2183,46 +2144,37 @@ object Crawl {
       val fReq = Future {
         dedupedReq.write.mode("overwrite").parquet(s"$d/requests_full_tmp")
         // rebuild the partitioned bloom from the compacted table (fpp
-        // hygiene) and the A8 counts (compaction drops rows)
+        // hygiene) and the per-IP A8 counts (compaction drops rows; an
+        // IP left with no rows gets a null count)
         val compacted = spark.read.parquet(s"$d/requests_full_tmp")
         SeenBloom.build(compacted.select("uh48").as[java.lang.Long],
           cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)
           .write.mode("overwrite").parquet(s"$d/seen_bloom_full_tmp")
-        compacted.groupBy("first_ip").agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$d/ip_counts_full_tmp")
+        mergeIpTable(Seq(priorIpLayer(loadIpTable(spark, workdir, i), n = lit(null)),
+            ipLayer(compacted, n = lit(1L))))
+          .write.mode("overwrite").parquet(s"$d/ip_table_full_tmp")
         // seen_uh48 chain reset FROM GROUND TRUTH (the compacted
         // requests): re-establishes seen == requests-uh48s exactly,
         // bounding any superset drift to one compaction interval.
-        // Bucket count from the prior chain's measured bytes (or a
-        // requests-bytes/16 estimate on first migration).
-        val priorBytes = StateTable.chainBytes(workdir, i, "seen_uh48")
-        val reqBytes = Option(new java.io.File(s"$d/requests_full_tmp").listFiles())
-          .map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
-        val nbSeen = StateTable.bucketsForBytes(
-          if (priorBytes > 0) priorBytes else reqBytes / 16)
-        StateTable.writeFull(compacted.select("uh48").distinct(),
-          Seq(col("uh48")), nbSeen, s"$d/seen_uh48_full_tmp")
+        // Bucket count from the chain's measured bytes, like the other
+        // state tables.
+        StateTable.writeFull(compacted.select("uh48").distinct(), Seq(col("uh48")),
+          StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, "seen_uh48")),
+          s"$d/seen_uh48_full_tmp")
       }
       val fRep = Future { dedupedRep.write.mode("overwrite").parquet(s"$d/replies_full_tmp") }
       val fTitle = Future { loadTitledb(spark, workdir, i).write.mode("overwrite").parquet(s"$d/titledb_full_tmp") }
       // state-table chain resets (the RdbMerge analogue for the keyed
       // state LSM chains): one bucketed FULL write per table, so loads
       // stop walking the delta chain here
-      val fStates = Seq(
-        ("ip_state", "first_ip"), ("dom_state", "dom_hash32"),
-        ("tag_state", "site_hash32"), ("quota_state", "key"),
-        ("inlink_state", "uh48"), ("title_vecs", "uh48")).map { case (name, key) =>
+      val fStates = states.map { case (name, key, cur) =>
         Future {
-          val cur = StateTable.load(spark, workdir, i, name, df => Seq(df(key)),
-            stateBuckets(workdir, i, name), null) // null only if the chain is empty (pre-state workdir)
-          if (cur != null) {
-            // re-size the bucket count to the chain's measured bytes: the
-            // full write records it, so the next chain's deltas and loads
-            // inherit it (a grown table gets more buckets here, a
-            // compacted-away one shrinks back toward 1)
-            val nb = StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, name))
-            StateTable.writeFull(cur, Seq(col(key)), nb, s"$d/${name}_full_tmp")
-          }
+          // re-size the bucket count to the chain's measured bytes: the
+          // full write records it, so the next chain's deltas and loads
+          // inherit it (a grown table gets more buckets here, a
+          // compacted-away one shrinks back toward 1)
+          val nb = StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, name))
+          StateTable.writeFull(cur, Seq(col(key)), nb, s"$d/${name}_full_tmp")
         }
       }
       Await.result(Future.sequence(Seq(fReq, fRep, fTitle) ++ fStates), Duration.Inf)
@@ -2239,20 +2191,13 @@ object Crawl {
     fs.delete(new org.apache.hadoop.fs.Path(s"$d/replies"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$d/titledb"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$d/seen_bloom"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/ip_counts"), true)
     fs.rename(new org.apache.hadoop.fs.Path(s"$d/requests_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/requests"))
     fs.rename(new org.apache.hadoop.fs.Path(s"$d/replies_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/replies"))
     fs.rename(new org.apache.hadoop.fs.Path(s"$d/titledb_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/titledb"))
     fs.rename(new org.apache.hadoop.fs.Path(s"$d/seen_bloom_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/seen_bloom"))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$d/ip_counts_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/ip_counts"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/seen_uh48"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$d/seen_uh48_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/seen_uh48"))
-    Seq("ip_state", "dom_state", "tag_state", "quota_state", "inlink_state", "title_vecs").foreach { name =>
-      val tmp = new org.apache.hadoop.fs.Path(s"$d/${name}_full_tmp")
-      if (fs.exists(tmp)) {
-        fs.delete(new org.apache.hadoop.fs.Path(s"$d/$name"), true)
-        fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$d/$name"))
-      }
+    (Seq("ip_table", "seen_uh48") ++ states.map(_._1)).foreach { name =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$d/$name"), true)
+      fs.rename(new org.apache.hadoop.fs.Path(s"$d/${name}_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/$name"))
     }
   }
 
@@ -2264,14 +2209,17 @@ object Crawl {
     SeenBloom.build(spark.read.parquet(s"$d/requests").select("uh48").as[java.lang.Long],
       cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)
       .write.mode("overwrite").parquet(s"$d/seen_bloom")
-    spark.read.parquet(s"$d/requests").groupBy("first_ip")
-      .agg(count(lit(1)).as("n")).write.mode("overwrite").parquet(s"$d/ip_counts")
+    // per-IP table: seed counts (A8), and all seed IPs are immediately
+    // due (A3)
+    mergeIpTable(Seq(ipLayer(spark.read.parquet(s"$d/requests"), n = lit(1L), pri = lit(0),
+        next = lit(0L))))
+      .write.mode("overwrite").parquet(s"$d/ip_table")
+    writeIpTableMarker(workdir, 0, cfg)
     spark.emptyDataset[FrontierReply].write.mode("overwrite").parquet(s"$d/replies")
     // keyed state tables: bucketed full writes (chain terminators for
     // the StateTable LSM loads; empty → marker-only dirs)
     // empty chains start at ONE bucket (one file, one task per write);
     // the first compaction after growth re-sizes from measured bytes
-    StateTable.writeFull(spark.emptyDataset[IpState].toDF(), Seq(col("first_ip")), 1, s"$d/ip_state")
     StateTable.writeFull(spark.emptyDataset[DomState].toDF(), Seq(col("dom_hash32")), 1, s"$d/dom_state")
     StateTable.writeFull(spark.emptyDataset[TagState].toDF(), Seq(col("site_hash32")), 1, s"$d/tag_state")
     StateTable.writeFull(spark.emptyDataset[(Int, Long)].toDF("key", "n"), Seq(col("key")), 1, s"$d/quota_state")
@@ -2281,11 +2229,6 @@ object Crawl {
     StateTable.writeFull(spark.read.parquet(s"$d/requests").select("uh48"),
       Seq(col("uh48")), 1, s"$d/seen_uh48")
     spark.emptyDataset[TitleRow].write.mode("overwrite").parquet(s"$d/titledb")
-    // A3: all seed IPs are immediately due
-    spark.read.parquet(s"$d/requests").select("first_ip").distinct()
-      .withColumn("next_ms", lit(0L))
-      .write.mode("overwrite").parquet(s"$d/ip_next")
-    writeIpNextMarker(workdir, 0, cfg)
     Seq.empty[(Int, Int, Int, String, Int, Int)].toDF("iteration", "first_ip", "seq", "url", "priority", "err_code")
       .write.mode("overwrite").parquet(s"$d/fetch_log")
     writeManifest(workdir, 0, Seq(MetricsRow(0, 0, 0, 0, 0, seedUrls.size, 0, 0)))
@@ -2328,62 +2271,50 @@ object Crawl {
       .as[FrontierRequest]
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = fresh.count()
-    val target = s"${snapDir(workdir, i)}/requests_delta"
-    val mode = if (new java.io.File(target).exists) "append" else "overwrite"
-    fresh.write.mode(mode).parquet(target)
+    val d = snapDir(workdir, i)
     // the exact seen set must gain the injected uh48s too (J2's
     // anti-join right side): merge them into the touched buckets of
     // the seen_uh48 chain — dynamic overwrite leaves this snapshot's
     // other buckets (and a FULL marker) intact. distinct(): an
     // injected url may already be seen under another first_ip, and
     // the (first_ip, uh48) dedup above doesn't collapse that.
-    if (seenChainExists(workdir, i)) {
-      val seenKeys = (df: org.apache.spark.sql.DataFrame) => Seq(df("uh48"))
-      val bSeen = StateTable.bucketsOf(workdir, i, "seen_uh48")
-      val ids = StateTable.touchedBuckets(fresh.toDF().select("uh48"), seenKeys, bSeen)
-      val merged = StateTable.loadBuckets(spark, workdir, i, "seen_uh48",
-          seenKeys, bSeen, emptySeen(spark), Some(ids))
-        .select("uh48")
-        .unionByName(fresh.toDF().select("uh48"))
-        .distinct()
-      StateTable.writeDelta(merged, Seq(col("uh48")), bSeen,
-        s"${snapDir(workdir, i)}/seen_uh48", dynamic = true)
-    }
+    val seenKeys = (df: DataFrame) => Seq(df("uh48"))
+    val bSeen = StateTable.bucketsOf(workdir, i, "seen_uh48")
+    val ids = StateTable.touchedBuckets(fresh.toDF().select("uh48"), seenKeys, bSeen)
+    val merged = StateTable.loadBuckets(spark, workdir, i, "seen_uh48", emptySeen(spark), Some(ids))
+      .select("uh48")
+      .unionByName(fresh.toDF().select("uh48"))
+      .distinct()
+    StateTable.writeDelta(merged, Seq(col("uh48")), bSeen, s"$d/seen_uh48", dynamic = true)
     // the seen bloom must remain a SUPERSET of all request uh48s, or a
     // future bloom-negative would skip the exact anti-join and re-admit
-    SeenBloom.update(loadBloom(spark, workdir, i, cfg),
+    SeenBloom.update(loadBloom(spark, workdir, i),
       reqs.map(r => java.lang.Long.valueOf(r.uh48)),
       cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)
-      .write.mode("overwrite").parquet(s"${snapDir(workdir, i)}/seen_bloom_tmp")
-    // A8 state roll-forward for the injected rows
-    loadIpCounts(spark, workdir, i)
-      .unionByName(fresh.groupBy("first_ip").agg(count(lit(1)).as("n")))
-      .groupBy("first_ip").agg(sum(col("n")).as("n"))
-      .write.mode("overwrite").parquet(s"${snapDir(workdir, i)}/ip_counts_tmp")
-    // A3: an injected IP must wake the scheduler next iteration, or the
-    // due-IP prefilter would never scan its new rows
-    val hasIpNext = new java.io.File(s"${snapDir(workdir, i)}/ip_next").exists
-    if (hasIpNext) {
-      spark.read.parquet(s"${snapDir(workdir, i)}/ip_next").withColumn("pri", lit(0))
-        .unionByName(reqs.select(col("first_ip")).distinct()
-          .withColumn("next_ms", lit(0L)).withColumn("pri", lit(1)))
-        .groupBy("first_ip")
-        .agg(max(struct(col("pri"), col("next_ms"))).as("s"))
-        .select(col("first_ip"), col("s.next_ms").as("next_ms"))
-        .write.mode("overwrite").parquet(s"${snapDir(workdir, i)}/ip_next_tmp")
-    }
+      .write.mode("overwrite").parquet(s"$d/seen_bloom_tmp")
+    // per-IP table: A8 counts for the injected rows, and (when the
+    // snapshot maintains the waiting tree) an injected IP must wake the
+    // scheduler next iteration, or the due-IP prefilter would never
+    // scan its new rows
+    val wake =
+      if (!ipTableMarker(workdir, i).exists) Nil
+      else Seq(ipLayer(reqs.toDF(), pri = lit(1), next = lit(0L)))
+    mergeIpTable(Seq(priorIpLayer(loadIpTable(spark, workdir, i)),
+        ipLayer(fresh.toDF(), n = lit(1L))) ++ wake)
+      .write.mode("overwrite").parquet(s"$d/ip_table_tmp")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"${snapDir(workdir, i)}/seen_bloom"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"${snapDir(workdir, i)}/seen_bloom_tmp"),
-      new org.apache.hadoop.fs.Path(s"${snapDir(workdir, i)}/seen_bloom"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"${snapDir(workdir, i)}/ip_counts"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"${snapDir(workdir, i)}/ip_counts_tmp"),
-      new org.apache.hadoop.fs.Path(s"${snapDir(workdir, i)}/ip_counts"))
-    if (hasIpNext) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"${snapDir(workdir, i)}/ip_next"), true)
-      fs.rename(new org.apache.hadoop.fs.Path(s"${snapDir(workdir, i)}/ip_next_tmp"),
-        new org.apache.hadoop.fs.Path(s"${snapDir(workdir, i)}/ip_next"))
+    Seq("seen_bloom", "ip_table").foreach { name =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$d/$name"), true)
+      fs.rename(new org.apache.hadoop.fs.Path(s"$d/${name}_tmp"), new org.apache.hadoop.fs.Path(s"$d/$name"))
     }
+    // the requests delta lands LAST: appending to it re-caches every
+    // cached plan that reads the path — `fresh` included, whose
+    // anti-join would then see its own rows and come back empty for
+    // any write still to run. This order also keeps a crash safe: the
+    // seen set may cover more than the requests, never less.
+    val target = s"$d/requests_delta"
+    val mode = if (new java.io.File(target).exists) "append" else "overwrite"
+    fresh.write.mode(mode).parquet(target)
     fresh.unpersist()
     reqs.unpersist()
     n

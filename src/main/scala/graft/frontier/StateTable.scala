@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** O(delta) state maintenance: hash-bucketed LSM chain for the small
-  * keyed state tables (inlink/tag/quota/ip/dom state).
+  * keyed state tables (inlink/tag/quota/dom state, title vectors and
+  * the exact seen set).
   *
   * The r3 engine rewrote EVERY state table in full each iteration even
   * though the per-iteration delta is tiny (VERDICT r3 "What's wrong"
@@ -43,11 +44,6 @@ object StateTable {
 
   private def fullMarker(dir: String) = new java.io.File(dir, "_GRAFT_FULL")
 
-  /** Bucket count used when a chain has no recorded count (r3 layout,
-    * whose `_GRAFT_FULL` markers are empty, and legacy loose-file
-    * fulls). Matches the old fixed `Crawl.StateBuckets`. */
-  val LegacyBuckets = 64
-
   /** One bucket is one task's worth of rows — so the COUNT must follow
     * the table's size, not a constant: a 100-row micro-loop table wants
     * 1 bucket (the r4 profile showed 64 near-empty partitions per write
@@ -63,35 +59,20 @@ object StateTable {
 
   /** Driver-side on-disk size of the table's live chain (file metadata
     * only — no jobs). Sizes the NEXT compaction's bucket count. */
-  def chainBytes(workdir: String, i: Int, name: String): Long = {
-    val (paths, legacy) = resolve(workdir, i, name, None)
-    def dirBytes(p: String): Long = {
+  def chainBytes(workdir: String, i: Int, name: String): Long =
+    resolve(workdir, i, name, None).map { p =>
       val fs = new java.io.File(p).listFiles()
       if (fs == null) 0L else fs.filter(_.isFile).map(_.length).sum
-    }
-    paths.map(dirBytes).sum + legacy.map(l => dirBytes(l._1)).sum
-  }
+    }.sum
 
   /** The chain's bucket count as of snapshot i: recorded in the nearest
     * full marker at or below i. */
-  def bucketsOf(workdir: String, i: Int, name: String): Int = {
-    var k = i
-    while (k >= 0) {
-      val dir = new java.io.File(s"${Crawl.snapDir(workdir, k)}/$name")
-      if (dir.exists) {
-        val m = fullMarker(dir.getPath)
-        if (m.exists()) {
-          val txt = new String(java.nio.file.Files.readAllBytes(m.toPath)).trim
-          return if (txt.isEmpty) LegacyBuckets else txt.toInt
-        }
-        val fs = dir.listFiles()
-        if (fs != null && fs.exists(f => f.isFile && f.getName.startsWith("part-")))
-          return LegacyBuckets // legacy loose-file full table
-      }
-      k -= 1
-    }
-    LegacyBuckets
-  }
+  def bucketsOf(workdir: String, i: Int, name: String): Int =
+    (i to 0 by -1).iterator
+      .map(k => fullMarker(s"${Crawl.snapDir(workdir, k)}/$name"))
+      .find(_.exists())
+      .map(m => new String(java.nio.file.Files.readAllBytes(m.toPath)).trim.toInt)
+      .getOrElse(sys.error(s"state table $name has no full write at or below snapshot $i"))
 
   /** Full write (init / compaction): all buckets, chain reset. An empty
     * table writes no bucket dirs — just the marker — and loads as
@@ -136,76 +117,47 @@ object StateTable {
 
   private def bucketId(f: java.io.File): Int = f.getName.stripPrefix("bucket=").toInt
 
-  /** Per-bucket newest paths across the chain, optionally restricted to
-    * `wanted` bucket ids. Returns (leafDirs, legacyFullDir): a legacy
-    * full dir (pre-bucketing layout: plain part files, no marker
-    * needed — every pre-StateTable snapshot wrote full) is read whole
-    * minus the buckets already shadowed. */
+  /** Per-bucket newest leaf dirs across the chain, optionally
+    * restricted to `wanted` bucket ids: newest-first, stopping at the
+    * nearest full write. An empty delta has no bucket dirs and simply
+    * contributes nothing. */
   private def resolve(workdir: String, i: Int, name: String,
-                      wanted: Option[Set[Int]]): (Seq[String], Option[(String, Set[Int])]) = {
+                      wanted: Option[Set[Int]]): Seq[String] = {
     val seen = scala.collection.mutable.Set[Int]()
     val paths = scala.collection.mutable.ListBuffer[String]()
-    var legacy: Option[(String, Set[Int])] = None
     var k = i
     var done = false
     while (k >= 0 && !done) {
       val dir = new java.io.File(s"${Crawl.snapDir(workdir, k)}/$name")
       if (dir.exists) {
-        val bds = bucketDirs(dir)
-        val hasLoose = {
-          val fs = dir.listFiles()
-          fs != null && fs.exists(f => f.isFile && f.getName.startsWith("part-"))
-        }
-        if (bds.isEmpty && hasLoose) {
-          // legacy layout: unbucketed full table → base, stop
-          legacy = Some((dir.getPath, seen.toSet)); done = true
-        } else {
-          // bucketed delta/full (an empty delta has neither bucket dirs
-          // nor part files and simply contributes nothing)
-          bds.foreach { bd =>
-            val id = bucketId(bd)
-            if (!seen(id) && wanted.forall(_.contains(id))) { seen += id; paths += bd.getPath }
-            else if (!seen(id)) seen += id // shadowed for legacy-base exclusion
+        bucketDirs(dir).foreach { bd =>
+          val id = bucketId(bd)
+          if (!seen(id)) {
+            seen += id
+            if (wanted.forall(_.contains(id))) paths += bd.getPath
           }
-          if (fullMarker(dir.getPath).exists()) done = true
         }
+        done = fullMarker(dir.getPath).exists()
       }
       k -= 1
     }
-    (paths.toSeq, legacy)
+    paths.toSeq
   }
 
-  /** Load the table as of snapshot i. `keys` recompute the bucket id
-    * for legacy-base exclusion; `empty` supplies the schema when the
-    * chain holds nothing. */
+  /** Load the table as of snapshot i; `empty` supplies the schema. */
   def load(spark: SparkSession, workdir: String, i: Int, name: String,
-           keys: DataFrame => Seq[Column], buckets: Int, empty: => DataFrame): DataFrame =
-    loadBuckets(spark, workdir, i, name, keys, buckets, empty, None)
+           empty: DataFrame): DataFrame =
+    loadBuckets(spark, workdir, i, name, empty, None)
 
-  /** Load ONLY the given buckets (the merge path's prior side). */
+  /** Load ONLY the given buckets (the merge path's prior side). The
+    * explicit schema keeps the file listing but drops the footer-reading
+    * schema-inference job per load — the chains produce many small leaf
+    * dirs by design. */
   def loadBuckets(spark: SparkSession, workdir: String, i: Int, name: String,
-                  keys: DataFrame => Seq[Column], buckets: Int, empty: => DataFrame,
-                  wanted: Option[Set[Int]]): DataFrame = {
-    val (paths, legacy) = resolve(workdir, i, name, wanted)
-    // explicit schema (from `empty`): file-listing stays, but the
-    // footer-reading schema-inference job per load goes away — the
-    // chains produce many small leaf dirs by design
-    def reader = {
-      val e = empty
-      if (e != null) spark.read.schema(e.schema) else spark.read
-    }
-    val parts = scala.collection.mutable.ListBuffer[DataFrame]()
-    if (paths.nonEmpty)
-      parts += reader.parquet(paths: _*)
-    legacy.foreach { case (dir, shadowed) =>
-      var df = reader.parquet(dir)
-      if (shadowed.nonEmpty)
-        df = df.filter(!bucketCol(keys(df), buckets).isInCollection(shadowed))
-      wanted.foreach(w => df = df.filter(bucketCol(keys(df), buckets).isInCollection(w)))
-      parts += df
-    }
-    if (parts.isEmpty) empty
-    else parts.reduce(_ unionByName _)
+                  empty: DataFrame, wanted: Option[Set[Int]]): DataFrame = {
+    val paths = resolve(workdir, i, name, wanted)
+    if (paths.isEmpty) empty
+    else spark.read.schema(empty.schema).parquet(paths: _*)
   }
 
   /** The touched bucket ids of a delta (one tiny job on the — cached —

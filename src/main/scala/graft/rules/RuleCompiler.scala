@@ -107,7 +107,7 @@ object RuleCompiler {
         case 5 => a >= b
         case 6 => a <= b
       }
-      val v = try value.toDouble.toLong catch { case _: Throwable => return None }
+      val v = try value.toDouble.toLong catch { case _: NumberFormatException => return None }
       name match {
         case "hopcount" => return Some(cmp(c.hopCount, v)) // no '!' form in C
         case "errorcount" => return Some(c.repExists && cmp(c.repErrCount, v))

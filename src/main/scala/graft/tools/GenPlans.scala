@@ -47,7 +47,7 @@ object GenPlans {
     section("schedule (F1+A1+A2+A3): due-IP prune → scan → score → streamed-heap dole",
       """What to look for:
 - the A3 waiting-tree prune: BOTH the frontier scan AND the reply
-  scan semi-join `ip_next`'s due IPs (BroadcastHashJoin LeftSemi)
+  scan semi-join the per-IP table's due IPs (`next_ms`) (BroadcastHashJoin LeftSemi)
   BELOW the one Exchange, so non-due requests never shuffle and the
   latest-reply aggregate runs over O(due slices), not O(crawled) —
   the reference's per-IP spiderdb read covers that IP's requests and
@@ -63,7 +63,7 @@ object GenPlans {
     // J2: admission anti-join with bloom prefilter over the seen_uh48
     // chain (only the positives' touched buckets are even READ)
     val cand = requests.limit(200)
-    val bloom = Crawl.loadBloom(spark, work, i, cfg)
+    val bloom = Crawl.loadBloom(spark, work, i)
     val seenKeys = (df: org.apache.spark.sql.DataFrame) => Seq(df("uh48"))
     val bSeen = StateTable.bucketsOf(work, i, "seen_uh48")
     val tagged = graft.frontier.SeenBloom.tagged(cand, bloom, cfg.seenBuckets)
@@ -72,11 +72,7 @@ object GenPlans {
       StateTable.touchedBuckets(
         tagged.filter(_._2).map(_._1.uh48).toDF("uh48"), seenKeys, bSeen)
     }
-    val seen =
-      if (Crawl.seenChainExists(work, i))
-        StateTable.loadBuckets(spark, work, i, "seen_uh48", seenKeys, bSeen,
-          Crawl.emptySeen(spark), Some(posIds))
-      else Crawl.loadRequests(spark, work, i).select("uh48")
+    val seen = StateTable.loadBuckets(spark, work, i, "seen_uh48", Crawl.emptySeen(spark), Some(posIds))
     section("admission (J2): bloom-prefiltered URL-seen anti-join",
       """What to look for:
 - the candidate side probes the per-bucket bloom FIRST; only
@@ -88,12 +84,12 @@ object GenPlans {
       Crawl.admitTagged(tagged, seen).toDF)
 
     // state merge with InSet touched-bucket pruning
-    val delta = ipState.limit(3).toDF
-    val ids = StateTable.touchedBuckets(delta, df => Seq(df("first_ip")), 8)
-    val merged = ipState.toDF
-      .filter(StateTable.bucketCol(Seq(col("first_ip")), 8).isInCollection(ids))
+    val delta = quota.limit(3)
+    val ids = StateTable.touchedBuckets(delta, df => Seq(df("key")), 8)
+    val merged = quota
+      .filter(StateTable.bucketCol(Seq(col("key")), 8).isInCollection(ids))
       .unionByName(delta)
-      .groupBy("first_ip").agg(max(col("last_download_end_ms")).as("last_download_end_ms"))
+      .groupBy("key").agg(sum(col("n")).as("n"))
     section("state merge (O(delta) chain): touched-bucket InSet prune → merge",
       """What to look for:
 - prior state is pruned by a single InSet predicate on the bucket id

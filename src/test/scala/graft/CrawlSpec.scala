@@ -93,13 +93,11 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("politeness: same-IP fetches are spaced by the ip wait") {
-    import spark.implicits._
     val d = tmpdir()
     Crawl.run(spark, d, spec, 4, cfg)
-    // ip_state last_download_end_ms must be monotonically consistent with
-    // the per-iteration clock
-    val ips = spark.read.parquet(s"${Crawl.snapDir(d, 4)}/ip_state")
-      .as[IpState].collect()
+    // the per-IP last_download_end_ms must be monotonically consistent
+    // with the per-iteration clock
+    val ips = Crawl.loadIpState(spark, d, 4).collect()
     assert(ips.nonEmpty)
     assert(ips.forall(_.last_download_end_ms > Crawl.nowMs(cfg, 0)))
   }

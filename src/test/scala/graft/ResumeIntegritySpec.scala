@@ -61,7 +61,7 @@ class ResumeIntegritySpec extends AnyFunSuite {
     // partial-write mix: these tables "never made it" before the crash
     // (the concurrent write batch has no ordering guarantee), the rest
     // (fetch_log, requests_delta, titledb_delta, ...) did
-    Seq("replies_delta", "tag_state", "title_vecs", "seen_uh48", "ip_next")
+    Seq("replies_delta", "tag_state", "title_vecs", "seen_uh48", "ip_table")
       .foreach(n => rmrf(new java.io.File(s"$d3/$n")))
     assert(Crawl.latestSnapshot(b).contains(2), "manifest is the commit point")
     // resume: re-runs iteration 3 over snapshot-2 state, then runs 4
@@ -81,6 +81,12 @@ class ResumeIntegritySpec extends AnyFunSuite {
       sortedRows(Crawl.loadTagState(spark, a, 4).toDF()), "tag_state chain")
     assert(sortedRows(Crawl.loadQuotaState(spark, b, 4)) ==
       sortedRows(Crawl.loadQuotaState(spark, a, 4)), "quota chain")
+    assert(sortedRows(Crawl.loadIpState(spark, b, 4).toDF()) ==
+      sortedRows(Crawl.loadIpState(spark, a, 4).toDF()), "per-IP politeness state")
+    assert(sortedRows(Crawl.loadIpCounts(spark, b, 4)) ==
+      sortedRows(Crawl.loadIpCounts(spark, a, 4)), "per-IP counts")
+    assert(Crawl.loadIpNext(spark, b, 4, cfg).map(sortedRows) ==
+      Crawl.loadIpNext(spark, a, 4, cfg).map(sortedRows), "per-IP waiting tree")
     assert(sortedRows(Crawl.loadTitleVecs(spark, b, 4)) ==
       sortedRows(Crawl.loadTitleVecs(spark, a, 4)), "titledb-derived vectors")
     import org.apache.spark.sql.functions.col
@@ -89,8 +95,7 @@ class ResumeIntegritySpec extends AnyFunSuite {
       Crawl.loadRequests(spark, a, 4).select(col("uh48")).distinct()), "seen set")
     // the two new keyed chains, loaded through their own resolvers
     def chain(w: String, name: String, empty: org.apache.spark.sql.DataFrame) =
-      sortedRows(StateTable.load(spark, w, 4, name,
-        df => Seq(df("uh48")), StateTable.bucketsOf(w, 4, name), empty))
+      sortedRows(StateTable.load(spark, w, 4, name, empty))
     assert(chain(b, "title_vecs", Crawl.emptyVecs(spark)) ==
       chain(a, "title_vecs", Crawl.emptyVecs(spark)), "title_vecs chain")
     assert(chain(b, "seen_uh48", Crawl.emptySeen(spark)) ==

@@ -69,6 +69,12 @@ class RobotsSpec extends AnyFunSuite {
         |""".stripMargin
     val (allowed, delay) = eval("/x", txt)
     assert(!allowed && delay == 500)
+    // an unparseable number leaves the delay unset
+    val bad =
+      """User-agent: *
+        |Crawl-delay: 1.2.3
+        |""".stripMargin
+    assert(eval("/x", bad) == (true, -1))
   }
 
   test("disallow with no leading slash normalizes") {

@@ -146,7 +146,7 @@ class RssEfakeSpec extends AnyFunSuite {
   test("compaction signature keys on hasContent and forceDelete") {
     import spark.implicits._
     val work = tmpdir()
-    val d = Crawl.snapDir(work, 0)
+    Crawl.init(spark, work, Nil, cfg)
     def req(flags: Long, added: Long) = FrontierRequest(
       uh48 = 7L, first_ip = 9, url = "http://sig.test/x", host_hash32 = 1,
       dom_hash32 = 1, site_hash32 = 1, site_num_inlinks = -1, added_time = added,
@@ -157,9 +157,7 @@ class RssEfakeSpec extends AnyFunSuite {
       req(Flags.IsNewOutlink | Flags.HasContent, 200L), // coexists: hasContent differs
       req(Flags.IsNewOutlink | Flags.ForceDelete, 300L), // coexists: forceDelete differs
       req(Flags.IsNewOutlink | Flags.SameDom, 400L) // NOT in the signature -> merges, oldest kept
-    )).write.mode("overwrite").parquet(s"$d/requests")
-    spark.emptyDataset[FrontierReply].write.mode("overwrite").parquet(s"$d/replies")
-    spark.emptyDataset[TitleRow].write.mode("overwrite").parquet(s"$d/titledb")
+    )).write.mode("overwrite").parquet(s"${Crawl.snapDir(work, 0)}/requests")
     Crawl.compact(spark, work, 0, cfg)
     val out = Crawl.loadRequests(spark, work, 0).collect().sortBy(_.added_time)
     assert(out.length == 3, out.mkString("\n"))

@@ -108,7 +108,7 @@ class SourcesSpec extends AnyFunSuite {
     // injected request schedules immediately despite politeness state
     val batch = Crawl.schedule(after,
       Crawl.loadReplies(spark, work, i),
-      spark.read.parquet(s"${Crawl.snapDir(work, i)}/ip_state").as[IpState],
+      Crawl.loadIpState(spark, work, i),
       spark.read.parquet(s"${Crawl.snapDir(work, i)}/dom_state").as[DomState], cfg, i + 1)
     assert(batch.filter(_.url == "http://www.h7.test/injected.html").count() == 1)
   }
@@ -131,7 +131,7 @@ class SourcesSpec extends AnyFunSuite {
     // and schedulable
     val batch = Crawl.schedule(reqs,
       Crawl.loadReplies(spark, work, i),
-      spark.read.parquet(s"${Crawl.snapDir(work, i)}/ip_state").as[IpState],
+      Crawl.loadIpState(spark, work, i),
       spark.read.parquet(s"${Crawl.snapDir(work, i)}/dom_state").as[DomState], cfg, i + 1)
     assert(batch.filter(_.url == "http://www.h6.test/after-compaction.html").count() == 1)
   }

@@ -7,7 +7,7 @@ import graft.frontier.{Crawl, StateTable}
 import java.nio.file.Files
 
 /** O(delta) state chains: bucketed full/delta writes, newest-bucket-wins
-  * loads, path-level pruning, legacy (unbucketed) base compat.
+  * loads, path-level pruning.
   * Delta-merge ≡ full-merge over a real crawl is pinned separately by
   * the committed crawl goldens (CrawlSpec runs the whole loop through
   * the delta path). */
@@ -26,7 +26,7 @@ class StateTableSpec extends AnyFunSuite {
   private def tmpdir(): String = Files.createTempDirectory("statetbl").toString
 
   private def loadAll(dir: String, i: Int): Map[Int, Long] =
-    StateTable.load(spark, dir, i, "t", keys, B, kv())
+    StateTable.load(spark, dir, i, "t", kv())
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
   test("full write then delta writes: newest bucket version wins") {
@@ -36,7 +36,7 @@ class StateTableSpec extends AnyFunSuite {
     // iteration 1 touches key 1's bucket: rewrite it merged
     val d1 = kv(1 -> 11L)
     val touched = StateTable.touchedBuckets(d1, keys, B)
-    val prior = StateTable.loadBuckets(spark, w, 0, "t", keys, B, kv(), Some(touched))
+    val prior = StateTable.loadBuckets(spark, w, 0, "t", kv(), Some(touched))
     // prior must contain key 1 plus any same-bucket keys, nothing outside
     val priorKeys = prior.collect().map(_.getInt(0)).toSet
     assert(priorKeys.contains(1))
@@ -52,7 +52,7 @@ class StateTableSpec extends AnyFunSuite {
       s"${Crawl.snapDir(w, 0)}/t")
     val wanted = StateTable.touchedBuckets(kv(5 -> 0L), keys, B)
     assert(wanted.size == 1)
-    val rows = StateTable.loadBuckets(spark, w, 0, "t", keys, B, kv(), Some(wanted))
+    val rows = StateTable.loadBuckets(spark, w, 0, "t", kv(), Some(wanted))
       .collect().map(_.getInt(0)).toSet
     assert(rows.contains(5))
     // only ~1/8 of the keys live in that bucket
@@ -64,19 +64,6 @@ class StateTableSpec extends AnyFunSuite {
     StateTable.writeFull(kv(1 -> 1L), Seq(col("key")), B, s"${Crawl.snapDir(w, 0)}/t")
     StateTable.writeDelta(kv(), Seq(col("key")), B, s"${Crawl.snapDir(w, 1)}/t")
     assert(loadAll(w, 1) == Map(1 -> 1L))
-  }
-
-  test("legacy unbucketed base: shadowed buckets are row-filtered out") {
-    val w = tmpdir()
-    // legacy layout: plain parquet, no marker, no bucket dirs
-    kv(1 -> 10L, 2 -> 20L, 3 -> 30L).write.parquet(s"${Crawl.snapDir(w, 0)}/t")
-    val d1 = kv(2 -> 22L)
-    val touched = StateTable.touchedBuckets(d1, keys, B)
-    val prior = StateTable.loadBuckets(spark, w, 0, "t", keys, B, kv(), Some(touched))
-    val merged = prior.unionByName(d1).groupBy("key").agg(max("n").as("n"))
-    StateTable.writeDelta(merged, Seq(col("key")), B, s"${Crawl.snapDir(w, 1)}/t")
-    val got = loadAll(w, 1)
-    assert(got(2) == 22L && got(1) == 10L && got(3) == 30L)
   }
 
   test("empty full write (init) loads as empty and terminates the chain") {
@@ -93,6 +80,13 @@ class StateTableSpec extends AnyFunSuite {
     // compaction at snap 2 drops key 9 entirely
     StateTable.writeFull(kv(1 -> 2L), Seq(col("key")), B, s"${Crawl.snapDir(w, 2)}/t")
     assert(loadAll(w, 2) == Map(1 -> 2L), "key 9 must not leak from snap 0")
+  }
+
+  test("a chain with no full write fails with the table's name") {
+    val w = tmpdir()
+    StateTable.writeDelta(kv(1 -> 1L), Seq(col("key")), B, s"${Crawl.snapDir(w, 1)}/t")
+    val e = intercept[RuntimeException](StateTable.bucketsOf(w, 1, "t"))
+    assert(e.getMessage.contains("state table t"), e.getMessage)
   }
 
   test("touchedBucketsMulti ≡ per-table touchedBuckets, in one job") {

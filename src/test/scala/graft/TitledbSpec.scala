@@ -63,7 +63,7 @@ class TitledbSpec extends AnyFunSuite {
     // it schedules immediately on the isreindex rule (priority 80)
     val batch = Crawl.schedule(Crawl.loadRequests(spark, work, i),
       Crawl.loadReplies(spark, work, i),
-      spark.read.parquet(s"${Crawl.snapDir(work, i)}/ip_state").as[IpState],
+      Crawl.loadIpState(spark, work, i),
       spark.read.parquet(s"${Crawl.snapDir(work, i)}/dom_state").as[DomState], cfg, i + 1)
       .collect().filter(_.url == url)
     assert(batch.exists(_.priority == 80), s"expected isreindex priority 80, got ${batch.map(_.priority).toSeq}")
