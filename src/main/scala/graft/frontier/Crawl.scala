@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -1266,38 +1266,6 @@ object Crawl {
     definitelyNew.union(checked)
   }
 
-  private val bloomSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("bloom", org.apache.spark.sql.types.BinaryType)))
-
-  /** Load the seen-bloom table as of snapshot i, resolving its LSM
-    * chain: an iteration writes ONLY the touched buckets' rebuilt blooms
-    * (a `_GRAFT_DELTA`-marked dir), so the loader walks newest-first
-    * taking the newest version of each bucket and stops at the nearest
-    * full table (marker-less: init/compaction/injection rewrites).
-    * Compaction bounds the chain length, exactly like the keyed
-    * StateTable chains. */
-  def loadBloom(spark: SparkSession, workdir: String, i: Int): DataFrame = {
-    val dirs = scala.collection.mutable.ListBuffer[(String, Int)]()
-    var k = i
-    var done = false
-    while (k >= 0 && !done) {
-      val p = s"${snapDir(workdir, k)}/seen_bloom"
-      if (new java.io.File(p).exists) {
-        dirs += ((p, k))
-        done = !new java.io.File(p, "_GRAFT_DELTA").exists
-      }
-      k -= 1
-    }
-    require(dirs.nonEmpty, s"no seen_bloom at or below snapshot $i")
-    if (dirs.size == 1) spark.read.schema(bloomSchema).parquet(dirs.head._1)
-    else dirs.map { case (p, ord) =>
-        spark.read.schema(bloomSchema).parquet(p).withColumn("ord", lit(ord))
-      }
-      .reduce(_ unionByName _)
-      .groupBy("bucket").agg(max_by(col("bloom"), col("ord")).as("bloom"))
-  }
-
   /** Build replies from fetch results, carrying the reply-side analysis
     * bits (getNewSpiderReply, XmlDoc.cpp:27140-27360): isRSS/isPermalink/
     * isIndexed flags and percentChangedPerDay against the previous reply.
@@ -1435,28 +1403,49 @@ object Crawl {
       .agg(max(struct(col("spidered_time"), col("sample_vec"))).as("s"))
       .select(col("uh48"), col("s.sample_vec").as("sample_vec"))
 
-  private[graft] def emptyVecs(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[(Long, Array[Int])].toDF("uh48", "sample_vec")
+  /** A keyed snapshot table on the StateTable bucket chain: its
+    * directory name, the column its rows bucket on, and its schema (as
+    * an empty table). `fromRequests` rebuilds the two seen tables from a
+    * requests table — their ground truth at init and compaction; the
+    * other tables start empty and compact from their own chain. */
+  final case class KeyedTable(name: String, key: String, empty: SparkSession => DataFrame,
+                              fromRequests: Option[(DataFrame, Config) => DataFrame] = None) {
+    /** The table as of snapshot i, optionally only the `wanted` buckets. */
+    def load(spark: SparkSession, workdir: String, i: Int,
+             wanted: Option[Set[Int]] = None): DataFrame =
+      StateTable.loadBuckets(spark, workdir, i, name, empty(spark), wanted)
   }
 
-  private[graft] def emptySeen(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[Long].toDF("uh48")
+  /** The seven keyed snapshot tables. */
+  object Keyed {
+    private def none[T](e: Encoder[T], cols: String*): SparkSession => DataFrame =
+      s => if (cols.isEmpty) s.emptyDataset(e).toDF() else s.emptyDataset(e).toDF(cols: _*)
+    val dom = KeyedTable("dom_state", "dom_hash32", none(Encoders.product[DomState]))
+    val inlinks = KeyedTable("inlink_state", "uh48", none(Encoders.product[InlinkState]))
+    val tags = KeyedTable("tag_state", "site_hash32", none(Encoders.product[TagState]))
+    val quota = KeyedTable("quota_state", "key", none(Encoders.product[(Int, Long)], "key", "n"))
+    val titleVecs = KeyedTable("title_vecs", "uh48",
+      none(Encoders.product[(Long, Array[Int])], "uh48", "sample_vec"))
+    // the J2 exact set: every request uh48
+    val seen = KeyedTable("seen_uh48", "uh48", none(Encoders.scalaLong, "uh48"),
+      Some((reqs, _) => reqs.select("uh48").distinct()))
+    val bloom = KeyedTable("seen_bloom", "bloom_bucket", SeenBloom.empty,
+      Some((reqs, cfg) => SeenBloom.build(reqs.select("uh48").as(Encoders.LONG),
+        cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)))
+    val all: Seq[KeyedTable] = Seq(dom, inlinks, tags, quota, titleVecs, seen, bloom)
   }
 
   /** Inlink c-block state as of snapshot i. O(delta) maintained: only
     * the buckets an iteration touches are written forward (StateTable). */
   def loadInlinkState(spark: SparkSession, workdir: String, i: Int): Dataset[InlinkState] = {
     import spark.implicits._
-    StateTable.load(spark, workdir, i, "inlink_state",
-      spark.emptyDataset[InlinkState].toDF).as[InlinkState]
+    Keyed.inlinks.load(spark, workdir, i).as[InlinkState]
   }
 
   /** Per-domain robots crawl-delay state as of snapshot i. */
   def loadDomState(spark: SparkSession, workdir: String, i: Int): Dataset[DomState] = {
     import spark.implicits._
-    StateTable.load(spark, workdir, i, "dom_state", spark.emptyDataset[DomState].toDF).as[DomState]
+    Keyed.dom.load(spark, workdir, i).as[DomState]
   }
 
   /** A6 quota state (the reference's scan-built m_localTable,
@@ -1466,17 +1455,15 @@ object Crawl {
     * Maintained INCREMENTALLY from each iteration's newly-indexed and
     * revised-manual-add transitions instead of the reference's full
     * spiderdb re-scan. */
-  def loadQuotaState(spark: SparkSession, workdir: String, i: Int): DataFrame = {
-    import spark.implicits._
-    StateTable.load(spark, workdir, i, "quota_state", spark.emptyDataset[(Int, Long)].toDF("key", "n"))
-  }
+  def loadQuotaState(spark: SparkSession, workdir: String, i: Int): DataFrame =
+    Keyed.quota.load(spark, workdir, i)
 
   /** Minimal tagdb (see [[TagState]]): keyed by the SiteGetter site
     * hash, carries the pinned firstip, the "site" tag bit, and the
     * site-level inlinking c-blocks. Cumulative like ip/dom state. */
   def loadTagState(spark: SparkSession, workdir: String, i: Int): Dataset[TagState] = {
     import spark.implicits._
-    StateTable.load(spark, workdir, i, "tag_state", spark.emptyDataset[TagState].toDF).as[TagState]
+    Keyed.tags.load(spark, workdir, i).as[TagState]
   }
 
   /** The per-IP table as of snapshot i: everything the spider keeps per
@@ -1640,7 +1627,7 @@ object Crawl {
       ipNext: Option[DataFrame],
       titleVecs: DataFrame, // (uh48, sample_vec) — loadTitleVecs shape
       seenUh48: DataFrame, // (uh48) — the URL-seen exact set (J2's anti-join right side)
-      bloom: DataFrame,
+      bloom: DataFrame, // (bloom_bucket, bloom) — SeenBloom's table
       buckets: Map[String, Int]) // keyed-state bucket counts (constant between compactions)
 
   /** Root a LoopState on the disk chain as of snapshot i. Lazy — nothing
@@ -1660,15 +1647,13 @@ object Crawl {
       // O(delta) path: the title_vecs StateTable chain already holds
       // latest-per-uh48 vectors (no per-iteration O(crawled) titledb
       // scan + re-aggregate)
-      titleVecs = StateTable.load(spark, workdir, i, "title_vecs", emptyVecs(spark)),
+      titleVecs = Keyed.titleVecs.load(spark, workdir, i),
       // O(delta) path: the seen-uh48 StateTable chain holds every
       // request uh48, bucketed so admission loads only the buckets of
       // this batch's bloom-positive candidates
-      seenUh48 = StateTable.load(spark, workdir, i, "seen_uh48", emptySeen(spark)),
-      bloom = loadBloom(spark, workdir, i),
-      buckets = Seq("dom_state", "inlink_state", "tag_state",
-          "quota_state", "title_vecs", "seen_uh48")
-        .map(n => n -> StateTable.bucketsOf(workdir, i, n)).toMap)
+      seenUh48 = Keyed.seen.load(spark, workdir, i),
+      bloom = Keyed.bloom.load(spark, workdir, i),
+      buckets = Keyed.all.map(t => t.name -> StateTable.bucketsOf(workdir, i, t.name)).toMap)
   }
 
   /** Run one full crawl iteration: read state as of snapshot i-1, write
@@ -1790,8 +1775,8 @@ object Crawl {
     val taggedP = SeenBloom.tagged(candidates, st.bloom, cfg.seenBuckets)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val pos = taggedP.filter(_._2).map(_._1.uh48).toDF("uh48")
-    val seenRight = StateTable.loadBuckets(spark, workdir, i - 1, "seen_uh48", emptySeen(spark),
-      Some(StateTable.touchedBuckets(pos, df => Seq(df("uh48")), st.buckets("seen_uh48"))))
+    val seenRight = Keyed.seen.load(spark, workdir, i - 1,
+      Some(StateTable.touchedBuckets(pos, df => Seq(df("uh48")), st.buckets(Keyed.seen.name))))
     val fresh = dedupBatch(admitTagged(taggedP, seenRight).toDF())
 
     // revised re-adds for this iteration's EFAKEFIRSTIP answers (the
@@ -1868,23 +1853,51 @@ object Crawl {
       .as[FrontierRequest]
   }
 
-  /** One bucketed state table's roll-forward (StateTable): `merge`
-    * combines the prior rows of the buckets `delta` touches with the
-    * delta under the table's own semantics, and only those buckets are
-    * written forward — untouched buckets are never read, shuffled, or
-    * rewritten. */
-  private final case class StateMerge(name: String, key: String, prior: DataFrame,
-                                      delta: DataFrame, buckets: Int,
-                                      merge: DataFrame => DataFrame)
+  /** One keyed table's roll-forward (StateTable): `merge` combines the
+    * prior rows of the buckets `delta` touches with the delta under the
+    * table's own semantics, and only those buckets are written forward
+    * — untouched buckets are never shuffled or rewritten. */
+  private final case class StateMerge(table: KeyedTable, prior: DataFrame, delta: DataFrame,
+                                      buckets: Int, merge: DataFrame => DataFrame)
 
-  /** The six keyed state tables' merges for this iteration. */
+  /** Roll keyed tables forward into snapshot dir `d`: ONE fused job
+    * finds every table's touched buckets (one one-task job per table
+    * costs more than the scans at micro scale), then one concurrent job
+    * per table merges and writes its touched buckets. `dynamic` keeps
+    * the buckets `d` already holds (StateTable.writeDelta). */
+  private def rollForward(merges: Seq[StateMerge], d: String,
+                          dynamic: Boolean = false): Seq[scala.concurrent.Future[Unit]] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val touched = Future(StateTable.touchedBucketsMulti(merges.map(m =>
+      (m.delta, (df: DataFrame) => Seq(df(m.table.key)), m.buckets))))
+    merges.zipWithIndex.map { case (m, k) =>
+      Future {
+        val ids = Await.result(touched, Duration.Inf)(k)
+        val prior =
+          if (ids.isEmpty) m.prior.limit(0)
+          else m.prior.filter(StateTable.bucketCol(Seq(m.prior(m.table.key)), m.buckets).isInCollection(ids))
+        StateTable.writeDelta(m.merge(prior), Seq(col(m.table.key)), m.buckets,
+          s"$d/${m.table.name}", dynamic)
+      }
+    }
+  }
+
+  /** The seen bloom's merge: the uh48s' bits are set in their bloom
+    * buckets (a delta row is the bloom bucket an uh48 lands in). */
+  private def bloomMerge(prior: DataFrame, uh48s: DataFrame, buckets: Int, cfg: Config): StateMerge =
+    StateMerge(Keyed.bloom, prior, uh48s.select(SeenBloom.bucketCol(col("uh48"), cfg.seenBuckets)),
+      buckets, p => SeenBloom.update(p, uh48s.select("uh48").as(Encoders.LONG),
+        cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp))
+
+  /** The seven keyed tables' merges for this iteration. */
   private def stateMerges(spark: SparkSession, st: LoopState, f: Fetched, a: Admitted,
                           cfg: Config, i: Int): Seq[StateMerge] = {
     import spark.implicits._
     val results = f.results
-    def sm(name: String, key: String, prior: DataFrame, delta: DataFrame)(
-        merge: DataFrame => DataFrame) =
-      StateMerge(name, key, prior, delta, st.buckets(name), merge)
+    def sm(t: KeyedTable, prior: DataFrame, delta: DataFrame)(merge: DataFrame => DataFrame) =
+      StateMerge(t, prior, delta, st.buckets(t.name), merge)
 
     // robots crawl delay per dom (the per-IP politeness state is in
     // the per-IP table, ipTableRollForward)
@@ -1951,7 +1964,7 @@ object Crawl {
     val freshUh48 = a.fresh.toDF().select("uh48")
 
     Seq(
-      sm("dom_state", "dom_hash32", st.domState.toDF(), domUpdates) { p =>
+      sm(Keyed.dom, st.domState.toDF(), domUpdates) { p =>
         p.withColumn("stamp", lit(0))
           .unionByName(domUpdates.withColumn("stamp", lit(1)))
           .groupBy("dom_hash32")
@@ -1959,44 +1972,44 @@ object Crawl {
           .select(col("dom_hash32"), col("s.crawl_delay_ms").as("crawl_delay_ms"))
       },
       // A7, merged per (first_ip, uh48) with a 20-cap
-      sm("inlink_state", "uh48", st.inlinks.toDF(), a.newPairs) { p =>
+      sm(Keyed.inlinks, st.inlinks.toDF(), a.newPairs) { p =>
         p.select(col("first_ip"), col("uh48"), explode(col("cblocks")).as("cblock"))
           .unionByName(a.newPairs)
           .groupBy("first_ip", "uh48")
           .agg(slice(sort_array(collect_set(col("cblock"))), 1, 20).as("cblocks"))
       },
-      sm("tag_state", "site_hash32", st.tagState.toDF(), tagDelta.toDF()) { p =>
+      sm(Keyed.tags, st.tagState.toDF(), tagDelta.toDF()) { p =>
         p.as[TagState].union(tagDelta)
           .groupByKey(_.site_hash32)
           .reduceGroups((x, y) => combineTags(x, y, cap))
           .map(_._2).toDF()
       },
-      sm("quota_state", "key", st.quotaState, quotaDelta) { p =>
+      sm(Keyed.quota, st.quotaState, quotaDelta) { p =>
         p.unionByName(quotaDelta).groupBy("key").agg(sum(col("n")).as("n"))
       },
       // fresh uh48s are disjoint from the prior set by the anti-join
       // itself, and revised re-adds keep their url's uh48 (already
       // seen) — so the merge is a bare union, no distinct
-      sm("seen_uh48", "uh48", st.seenUh48, freshUh48) { p =>
+      sm(Keyed.seen, st.seenUh48, freshUh48) { p =>
         p.select("uh48").unionByName(freshUh48)
       },
       // latest vector per uh48 (delta t=now shadows prior t=0)
-      sm("title_vecs", "uh48", st.titleVecs, vecDelta) { p =>
+      sm(Keyed.titleVecs, st.titleVecs, vecDelta) { p =>
         p.withColumn("t", lit(0L))
           .unionByName(vecDelta)
           .groupBy("uh48").agg(max(struct(col("t"), col("sample_vec"))).as("s"))
           .select(col("uh48"), col("s.sample_vec").as("sample_vec"))
-      })
+      },
+      // every admitted uh48 (fresh and revised) sets its bloom bits
+      bloomMerge(st.bloom, a.fresh.toDF().select("uh48").unionByName(a.revised.toDF().select("uh48")),
+        st.buckets(Keyed.bloom.name), cfg))
   }
 
   /** Merge + commit: every snapshot-i write as ONE flat batch of
     * concurrent jobs (results and the admitted rows are cached, so the
     * jobs share partitions instead of recomputing the fetch). Each job
     * builds its own plan on its own thread — driver-side analysis of
-    * the ~12 plans overlaps instead of adding up. The six keyed state
-    * tables first wait for ONE fused job that finds every table's
-    * touched buckets (six one-task jobs cost more than the scans at
-    * micro scale). */
+    * the ~12 plans overlaps instead of adding up. */
   private def commitPhase(spark: SparkSession, workdir: String, i: Int, st: LoopState,
                           doled: Doled, f: Fetched, a: Admitted, cfg: Config): Unit = {
     import spark.implicits._
@@ -2004,21 +2017,8 @@ object Crawl {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val d = snapDir(workdir, i)
-    val merges = stateMerges(spark, st, f, a, cfg, i)
-    val touched = Future {
-      merges.map(_.name).zip(StateTable.touchedBucketsMulti(merges.map(m =>
-        (m.delta, (df: DataFrame) => Seq(df(m.key)), m.buckets)))).toMap
-    }
-    val stateWrites = merges.map(m => Future {
-      val ids = Await.result(touched, Duration.Inf)(m.name)
-      val prior =
-        if (ids.isEmpty) m.prior.limit(0)
-        else m.prior.filter(StateTable.bucketCol(Seq(m.prior(m.key)), m.buckets).isInCollection(ids))
-      StateTable.writeDelta(m.merge(prior), Seq(col(m.key)), m.buckets, s"$d/${m.name}")
-    })
-    val admittedDf = a.fresh.toDF().unionByName(a.revised.toDF())
-    val writes = stateWrites ++ Seq(
-      Future { admittedDf.write.mode("overwrite").parquet(s"$d/requests_delta") },
+    val writes = rollForward(stateMerges(spark, st, f, a, cfg, i), d) ++ Seq(
+      Future { a.fresh.toDF().unionByName(a.revised.toDF()).write.mode("overwrite").parquet(s"$d/requests_delta") },
       Future { repliesOf(f.results, st.replies, cfg, i).write.mode("overwrite").parquet(s"$d/replies_delta") },
       Future {
         ipTableRollForward(st, doled, f, a)
@@ -2026,16 +2026,6 @@ object Crawl {
         // the marker says next_ms was rolled forward under these rules
         if (doled.out.wake) writeIpTableMarker(workdir, i, cfg)
         else Files.deleteIfExists(ipTableMarker(workdir, i).toPath)
-      },
-      Future {
-        // incremental seen-bloom maintenance, O(new urls) I/O: ONLY the
-        // touched buckets' rebuilt blooms are written forward as this
-        // snapshot's chain delta (loadBloom resolves the chain;
-        // compaction resets it)
-        SeenBloom.update(st.bloom, admittedDf.select("uh48").as[java.lang.Long],
-          cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp, deltaOnly = true)
-          .write.mode("overwrite").parquet(s"$d/seen_bloom")
-        Files.write(new java.io.File(s"$d/seen_bloom", "_GRAFT_DELTA").toPath, Array.empty[Byte])
       },
       Future {
         // S7: titledb sink — the crawled-content snapshot (Titledb.cpp
@@ -2091,7 +2081,7 @@ object Crawl {
     * rewrite the delta chain into one full table, one request per
     * (uh48, signature) keeping the OLDEST addedTime (discovery
     * semantics); latest reply per uh48. This is the RdbMerge analogue. */
-  def compact(spark: SparkSession, workdir: String, i: Int, cfg: Config = Config()): Unit = {
+  def compact(spark: SparkSession, workdir: String, i: Int, cfg: Config): Unit = {
     import spark.implicits._
     val d = snapDir(workdir, i)
     val requests = loadRequests(spark, workdir, i)
@@ -2127,77 +2117,53 @@ object Crawl {
       .groupByKey(r => (r.first_ip, r.uh48, r.site_hash32, r.hop_count, r.flags & sigMask))
       .reduceGroups((a, b) => if (a.added_time <= b.added_time) a else b)
       .map(_._2)
-    // the keyed state chains compaction resets: (name, key, table as of i)
-    val states = Seq(
-      ("dom_state", "dom_hash32", loadDomState(spark, workdir, i).toDF()),
-      ("tag_state", "site_hash32", loadTagState(spark, workdir, i).toDF()),
-      ("quota_state", "key", loadQuotaState(spark, workdir, i)),
-      ("inlink_state", "uh48", loadInlinkState(spark, workdir, i).toDF()),
-      ("title_vecs", "uh48", StateTable.load(spark, workdir, i, "title_vecs", emptyVecs(spark))))
-    // the three table rewrites are independent — run them as concurrent
-    // jobs (same shape as the iteration write graph); the bloom, seen
-    // set and per-IP count rebuilds chain off the compacted requests
+    // the table rewrites are independent — run them as concurrent jobs
+    // (same shape as the iteration write graph); the per-IP counts and
+    // the two seen tables rebuild from the compacted requests
     locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val fReq = Future {
         dedupedReq.write.mode("overwrite").parquet(s"$d/requests_full_tmp")
-        // rebuild the partitioned bloom from the compacted table (fpp
-        // hygiene) and the per-IP A8 counts (compaction drops rows; an
-        // IP left with no rows gets a null count)
         val compacted = spark.read.parquet(s"$d/requests_full_tmp")
-        SeenBloom.build(compacted.select("uh48").as[java.lang.Long],
-          cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)
-          .write.mode("overwrite").parquet(s"$d/seen_bloom_full_tmp")
+        // compaction drops rows; an IP left with no rows gets a null count
         mergeIpTable(Seq(priorIpLayer(loadIpTable(spark, workdir, i), n = lit(null)),
             ipLayer(compacted, n = lit(1L))))
           .write.mode("overwrite").parquet(s"$d/ip_table_full_tmp")
-        // seen_uh48 chain reset FROM GROUND TRUTH (the compacted
-        // requests): re-establishes seen == requests-uh48s exactly,
-        // bounding any superset drift to one compaction interval.
-        // Bucket count from the chain's measured bytes, like the other
-        // state tables.
-        StateTable.writeFull(compacted.select("uh48").distinct(), Seq(col("uh48")),
-          StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, "seen_uh48")),
-          s"$d/seen_uh48_full_tmp")
+        compacted
       }
       val fRep = Future { dedupedRep.write.mode("overwrite").parquet(s"$d/replies_full_tmp") }
       val fTitle = Future { loadTitledb(spark, workdir, i).write.mode("overwrite").parquet(s"$d/titledb_full_tmp") }
-      // state-table chain resets (the RdbMerge analogue for the keyed
-      // state LSM chains): one bucketed FULL write per table, so loads
-      // stop walking the delta chain here
-      val fStates = states.map { case (name, key, cur) =>
+      // keyed chain resets (the RdbMerge analogue for the StateTable
+      // chains): one bucketed FULL write per table, so loads stop
+      // walking the delta chain here. The seen tables rebuild FROM
+      // GROUND TRUTH: seen_uh48 == the requests' uh48 set again, and
+      // the bloom sheds the fill of since-compacted rows (fpp hygiene).
+      val fKeyed = Keyed.all.map { t =>
         Future {
+          val rows = t.fromRequests.fold(t.load(spark, workdir, i))(
+            _(Await.result(fReq, Duration.Inf), cfg))
           // re-size the bucket count to the chain's measured bytes: the
           // full write records it, so the next chain's deltas and loads
           // inherit it (a grown table gets more buckets here, a
           // compacted-away one shrinks back toward 1)
-          val nb = StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, name))
-          StateTable.writeFull(cur, Seq(col(key)), nb, s"$d/${name}_full_tmp")
+          val nb = StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, t.name))
+          StateTable.writeFull(rows, Seq(col(t.key)), nb, s"$d/${t.name}_full_tmp")
         }
       }
-      Await.result(Future.sequence(Seq(fReq, fRep, fTitle) ++ fStates), Duration.Inf)
+      Await.result(Future.sequence(Seq(fReq, fRep, fTitle) ++ fKeyed), Duration.Inf)
     }
     // swap in: the full table replaces this snapshot's delta. The full
     // targets are deleted too — hadoop rename(src, existing-dir) would
     // otherwise nest src INSIDE the target (re-compaction of an
     // already-compacted snapshot, e.g. after an inject-appended delta)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/requests_delta"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/replies_delta"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/titledb_delta"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/requests"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/replies"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/titledb"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/seen_bloom"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$d/requests_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/requests"))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$d/replies_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/replies"))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$d/titledb_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/titledb"))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$d/seen_bloom_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/seen_bloom"))
-    (Seq("ip_table", "seen_uh48") ++ states.map(_._1)).foreach { name =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$d/$name"), true)
-      fs.rename(new org.apache.hadoop.fs.Path(s"$d/${name}_full_tmp"), new org.apache.hadoop.fs.Path(s"$d/$name"))
+    def path(name: String) = new org.apache.hadoop.fs.Path(s"$d/$name")
+    Seq("requests_delta", "replies_delta", "titledb_delta").foreach(n => fs.delete(path(n), true))
+    (Seq("requests", "replies", "titledb", "ip_table") ++ Keyed.all.map(_.name)).foreach { name =>
+      fs.delete(path(name), true)
+      fs.rename(path(s"${name}_full_tmp"), path(name))
     }
   }
 
@@ -2206,28 +2172,21 @@ object Crawl {
     import spark.implicits._
     val d = snapDir(workdir, 0)
     seeds(spark, seedUrls, cfg).write.mode("overwrite").parquet(s"$d/requests")
-    SeenBloom.build(spark.read.parquet(s"$d/requests").select("uh48").as[java.lang.Long],
-      cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)
-      .write.mode("overwrite").parquet(s"$d/seen_bloom")
+    val requests = spark.read.parquet(s"$d/requests")
     // per-IP table: seed counts (A8), and all seed IPs are immediately
     // due (A3)
-    mergeIpTable(Seq(ipLayer(spark.read.parquet(s"$d/requests"), n = lit(1L), pri = lit(0),
-        next = lit(0L))))
+    mergeIpTable(Seq(ipLayer(requests, n = lit(1L), pri = lit(0), next = lit(0L))))
       .write.mode("overwrite").parquet(s"$d/ip_table")
     writeIpTableMarker(workdir, 0, cfg)
     spark.emptyDataset[FrontierReply].write.mode("overwrite").parquet(s"$d/replies")
-    // keyed state tables: bucketed full writes (chain terminators for
-    // the StateTable LSM loads; empty → marker-only dirs)
-    // empty chains start at ONE bucket (one file, one task per write);
-    // the first compaction after growth re-sizes from measured bytes
-    StateTable.writeFull(spark.emptyDataset[DomState].toDF(), Seq(col("dom_hash32")), 1, s"$d/dom_state")
-    StateTable.writeFull(spark.emptyDataset[TagState].toDF(), Seq(col("site_hash32")), 1, s"$d/tag_state")
-    StateTable.writeFull(spark.emptyDataset[(Int, Long)].toDF("key", "n"), Seq(col("key")), 1, s"$d/quota_state")
-    StateTable.writeFull(spark.emptyDataset[InlinkState].toDF(), Seq(col("uh48")), 1, s"$d/inlink_state")
-    StateTable.writeFull(emptyVecs(spark), Seq(col("uh48")), 1, s"$d/title_vecs")
-    // J2 exact-set chain: every request uh48 (seeds are unique per url)
-    StateTable.writeFull(spark.read.parquet(s"$d/requests").select("uh48"),
-      Seq(col("uh48")), 1, s"$d/seen_uh48")
+    // keyed tables: each chain's first full write (the StateTable
+    // chain terminator; an empty table is a marker-only dir) at ONE
+    // bucket — one file, one task per write; the first compaction
+    // after growth re-sizes from measured bytes
+    Keyed.all.foreach { t =>
+      StateTable.writeFull(t.fromRequests.fold(t.empty(spark))(_(requests, cfg)),
+        Seq(col(t.key)), 1, s"$d/${t.name}")
+    }
     spark.emptyDataset[TitleRow].write.mode("overwrite").parquet(s"$d/titledb")
     Seq.empty[(Int, Int, Int, String, Int, Int)].toDF("iteration", "first_ip", "seq", "url", "priority", "err_code")
       .write.mode("overwrite").parquet(s"$d/fetch_log")
@@ -2252,7 +2211,7 @@ object Crawl {
   /** Dataset core of S2 injection — also the streaming intake sink
     * (SeedStream, which must NOT collect micro-batches to the driver)
     * and the S3 reindex path. Appends a delta to the latest snapshot and
-    * keeps the seen-bloom a superset; callers set their own flag bits
+    * keeps the seen tables a superset; callers set their own flag bits
     * (IsInjecting / IsPageReindex). */
   def injectRequests(spark: SparkSession, workdir: String,
                      requests: Dataset[FrontierRequest], cfg: Config): Long = {
@@ -2272,26 +2231,22 @@ object Crawl {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = fresh.count()
     val d = snapDir(workdir, i)
-    // the exact seen set must gain the injected uh48s too (J2's
-    // anti-join right side): merge them into the touched buckets of
-    // the seen_uh48 chain — dynamic overwrite leaves this snapshot's
-    // other buckets (and a FULL marker) intact. distinct(): an
-    // injected url may already be seen under another first_ip, and
-    // the (first_ip, uh48) dedup above doesn't collapse that.
-    val seenKeys = (df: DataFrame) => Seq(df("uh48"))
-    val bSeen = StateTable.bucketsOf(workdir, i, "seen_uh48")
-    val ids = StateTable.touchedBuckets(fresh.toDF().select("uh48"), seenKeys, bSeen)
-    val merged = StateTable.loadBuckets(spark, workdir, i, "seen_uh48", emptySeen(spark), Some(ids))
-      .select("uh48")
-      .unionByName(fresh.toDF().select("uh48"))
-      .distinct()
-    StateTable.writeDelta(merged, Seq(col("uh48")), bSeen, s"$d/seen_uh48", dynamic = true)
-    // the seen bloom must remain a SUPERSET of all request uh48s, or a
-    // future bloom-negative would skip the exact anti-join and re-admit
-    SeenBloom.update(loadBloom(spark, workdir, i),
-      reqs.map(r => java.lang.Long.valueOf(r.uh48)),
-      cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)
-      .write.mode("overwrite").parquet(s"$d/seen_bloom_tmp")
+    // the seen tables must gain the injected uh48s too, through the
+    // iteration's touched-bucket merge: the exact set is J2's anti-join
+    // right side, and the bloom must stay a SUPERSET of every request
+    // uh48, or a future bloom-negative would skip the exact anti-join
+    // and re-admit. Dynamic overwrite leaves this snapshot's other
+    // buckets (and a FULL marker) intact. distinct(): an injected url
+    // may already be seen under another first_ip, and the (first_ip,
+    // uh48) dedup above doesn't collapse that.
+    val freshUh48 = fresh.toDF().select("uh48")
+    def prior(t: KeyedTable) = t.load(spark, workdir, i)
+    def buckets(t: KeyedTable) = StateTable.bucketsOf(workdir, i, t.name)
+    rollForward(Seq(
+      StateMerge(Keyed.seen, prior(Keyed.seen), freshUh48, buckets(Keyed.seen),
+        p => p.unionByName(freshUh48).distinct()),
+      bloomMerge(prior(Keyed.bloom), freshUh48, buckets(Keyed.bloom), cfg)), d, dynamic = true)
+      .foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
     // per-IP table: A8 counts for the injected rows, and (when the
     // snapshot maintains the waiting tree) an injected IP must wake the
     // scheduler next iteration, or the due-IP prefilter would never
@@ -2303,10 +2258,8 @@ object Crawl {
         ipLayer(fresh.toDF(), n = lit(1L))) ++ wake)
       .write.mode("overwrite").parquet(s"$d/ip_table_tmp")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    Seq("seen_bloom", "ip_table").foreach { name =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$d/$name"), true)
-      fs.rename(new org.apache.hadoop.fs.Path(s"$d/${name}_tmp"), new org.apache.hadoop.fs.Path(s"$d/$name"))
-    }
+    fs.delete(new org.apache.hadoop.fs.Path(s"$d/ip_table"), true)
+    fs.rename(new org.apache.hadoop.fs.Path(s"$d/ip_table_tmp"), new org.apache.hadoop.fs.Path(s"$d/ip_table"))
     // the requests delta lands LAST: appending to it re-caches every
     // cached plan that reads the path — `fresh` included, whose
     // anti-join would then see its own rows and come back empty for

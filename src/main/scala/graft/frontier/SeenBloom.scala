@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -11,12 +11,15 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   *
   * Layout: `buckets` blooms keyed by `uh48 & (buckets-1)` — uh48 is a
   * tabulation hash, so bucket populations are uniform regardless of
-  * host skew (the salted-hash partitioning). Each snapshot stores the
-  * bloom table `(bucket int, bloom binary)`; per iteration only the
-  * buckets that received fresh uh48s are rewritten (bloom insertion is
-  * monotone — no rebuild), so maintenance is O(new urls), and at
-  * 10^10 urls the table is ~`10^10 * 1.2 bytes` split across buckets
-  * that each fit comfortably in an executor.
+  * host skew (the salted-hash partitioning). The bloom table is
+  * `(bloom_bucket int, bloom binary)`, one row per bloom bucket, and is
+  * stored like every other keyed snapshot table: on the `StateTable`
+  * bucket chain, keyed on `bloom_bucket` (Crawl.Keyed). An iteration
+  * rewrites only the chain buckets holding bloom buckets that received
+  * fresh uh48s (bloom insertion is monotone — no rebuild), so
+  * maintenance is O(new urls), and at 10^10 urls the table is
+  * ~`10^10 * 1.2 bytes` split across buckets that each fit comfortably
+  * in an executor.
   *
   * The bloom is strictly a PREFILTER: positives (including false
   * positives) still pay the exact anti-join, so the seen set stays
@@ -24,6 +27,16 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 object SeenBloom {
 
   def bucketOf(uh48: Long, buckets: Int): Int = (uh48 & (buckets - 1)).toInt
+
+  /** [[bucketOf]] as a column: the bloom bucket an uh48 column lands in. */
+  def bucketCol(uh48: Column, buckets: Int): Column =
+    uh48.bitwiseAND(lit(buckets - 1L)).cast("int").as("bloom_bucket")
+
+  /** The empty bloom table: its schema. */
+  def empty(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    spark.emptyDataset[(Int, Array[Byte])].toDF("bloom_bucket", "bloom")
+  }
 
   private def ser(bf: BloomFilter): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
@@ -33,33 +46,17 @@ object SeenBloom {
   private def deser(b: Array[Byte]): BloomFilter = BloomFilter.readFrom(new ByteArrayInputStream(b))
 
   /** Build the bloom table from scratch (init / compaction). */
-  def build(uh48s: Dataset[java.lang.Long], buckets: Int, expectedPerBucket: Long, fpp: Double): DataFrame = {
-    val spark = uh48s.sparkSession
-    import spark.implicits._
-    uh48s.map(h => (bucketOf(h, buckets), h.longValue()))
-      .toDF("bucket", "uh48")
-      .repartition(col("bucket"))
-      .groupByKey(r => r.getInt(0))(org.apache.spark.sql.Encoders.scalaInt)
-      .mapGroups { (bucket, rows) =>
-        val bf = BloomFilter.create(math.max(expectedPerBucket, 1000L), fpp)
-        rows.foreach(r => bf.putLong(r.getLong(1)))
-        (bucket, ser(bf))
-      }
-      .toDF("bucket", "bloom")
-  }
+  def build(uh48s: Dataset[java.lang.Long], buckets: Int, expectedPerBucket: Long, fpp: Double): DataFrame =
+    update(empty(uh48s.sparkSession), uh48s, buckets, expectedPerBucket, fpp)
 
-  /** Incrementally add fresh uh48s. ONE cogroup on the bucket key (the
-    * r3 shape was distinct + anti-join + semi-join + outer-join +
-    * mapGroups — five shuffling operators whose job/stage fixed costs
-    * dominated the micro loop's write barrier).
-    *
-    * `deltaOnly = true` emits ONLY the touched buckets' rebuilt blooms
-    * (the bloom LSM-delta the iteration writes forward — untouched
-    * buckets are not even copied, making bloom maintenance O(new urls)
-    * I/O like every other state chain); `false` passes untouched
-    * buckets through, returning the complete table. */
+  /** Add fresh uh48s to a bloom table: ONE cogroup on the bloom bucket
+    * (the r3 shape was five shuffling operators whose job/stage fixed
+    * costs dominated the micro loop's write barrier). Buckets that
+    * receive uh48s come back rebuilt, the rest pass
+    * through, so the result holds every bucket of `bloomTable` — the
+    * complete contents of the chain buckets the caller rolls forward. */
   def update(bloomTable: DataFrame, fresh: Dataset[java.lang.Long], buckets: Int,
-             expectedPerBucket: Long, fpp: Double, deltaOnly: Boolean = false): DataFrame = {
+             expectedPerBucket: Long, fpp: Double): DataFrame = {
     val spark = bloomTable.sparkSession
     import spark.implicits._
     val freshKeyed = fresh.map(h => (bucketOf(h, buckets), h.longValue()))
@@ -67,16 +64,14 @@ object SeenBloom {
     freshKeyed.groupByKey(_._1).cogroup(bloomKeyed) { (bucket, hs, blooms) =>
       val pending = hs.map(_._2).toArray
       val existing = blooms.buffered.headOption
-      if (pending.isEmpty) {
-        if (deltaOnly || existing.isEmpty) Iterator.empty
-        else Iterator.single((bucket, existing.get._2)) // untouched pass-through
-      } else {
+      if (pending.isEmpty) existing.iterator // untouched pass-through
+      else {
         val bf = existing.map(b => deser(b._2))
           .getOrElse(BloomFilter.create(math.max(expectedPerBucket, 1000L), fpp))
         pending.foreach(bf.putLong)
         Iterator.single((bucket, ser(bf)))
       }
-    }.toDF("bucket", "bloom")
+    }.toDF("bloom_bucket", "bloom")
   }
 
   /** Tag candidates with bloom membership via cogroup on the bucket key:

@@ -3,9 +3,9 @@ package graft.frontier
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** O(delta) state maintenance: hash-bucketed LSM chain for the small
-  * keyed state tables (inlink/tag/quota/dom state, title vectors and
-  * the exact seen set).
+/** O(delta) state maintenance: hash-bucketed LSM chain for every keyed
+  * snapshot table (inlink/tag/quota/dom state, title vectors, the exact
+  * seen set and the seen bloom — the list is `Crawl.Keyed`).
   *
   * The r3 engine rewrote EVERY state table in full each iteration even
   * though the per-iteration delta is tiny (VERDICT r3 "What's wrong"
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * shuffle + rewrite per iteration. The reference never does this: its
   * Rdb trees absorb deltas in memory and dump/merge them incrementally
   * (Rdb.cpp addRecord / dumpTree; RdbMerge). This is the Spark-native
-  * analogue, generalizing the SeenBloom touched-buckets-only pattern:
+  * analogue:
   *
   *  - rows are hash-bucketed on the table's key (tabulation/xxhash →
   *    uniform buckets regardless of host skew);

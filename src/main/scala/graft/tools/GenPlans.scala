@@ -63,16 +63,15 @@ object GenPlans {
     // J2: admission anti-join with bloom prefilter over the seen_uh48
     // chain (only the positives' touched buckets are even READ)
     val cand = requests.limit(200)
-    val bloom = Crawl.loadBloom(spark, work, i)
+    val st = Crawl.loadLoopState(spark, work, i, cfg)
     val seenKeys = (df: org.apache.spark.sql.DataFrame) => Seq(df("uh48"))
-    val bSeen = StateTable.bucketsOf(work, i, "seen_uh48")
-    val tagged = graft.frontier.SeenBloom.tagged(cand, bloom, cfg.seenBuckets)
+    val tagged = graft.frontier.SeenBloom.tagged(cand, st.bloom, cfg.seenBuckets)
     val posIds = {
       import spark.implicits._
       StateTable.touchedBuckets(
-        tagged.filter(_._2).map(_._1.uh48).toDF("uh48"), seenKeys, bSeen)
+        tagged.filter(_._2).map(_._1.uh48).toDF("uh48"), seenKeys, st.buckets(Crawl.Keyed.seen.name))
     }
-    val seen = StateTable.loadBuckets(spark, work, i, "seen_uh48", Crawl.emptySeen(spark), Some(posIds))
+    val seen = Crawl.Keyed.seen.load(spark, work, i, Some(posIds))
     section("admission (J2): bloom-prefiltered URL-seen anti-join",
       """What to look for:
 - the candidate side probes the per-bucket bloom FIRST; only

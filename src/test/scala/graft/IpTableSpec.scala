@@ -11,7 +11,9 @@ import graft.frontier._
   *  (a) the per-IP table's counts equal the requests grouped by first_ip;
   *  (b) the exact seen set equals the requests' uh48 set;
   *  (c) due-IP pruning is exact (A3): the batch scheduled with the
-  *      waiting tree equals the one scheduled by a full scan. */
+  *      waiting tree equals the one scheduled by a full scan;
+  *  (d) the seen bloom is a superset of the requests: every request
+  *      uh48 is bloom-positive. */
 class IpTableSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -44,6 +46,9 @@ class IpTableSpec extends AnyFunSuite {
       def sched(ipNext: Option[DataFrame]) = batchRows(Crawl.scheduleWake(st.requests,
         st.replies, st.ipState, st.domState, cfg, i + 1, st.inlinks, st.quotaState, ipNext))
       assert(sched(st.ipNext) == sched(None), s"snapshot $i: due-IP pruning is exact")
+
+      val negatives = SeenBloom.tagged(reqs, st.bloom, cfg.seenBuckets).filter(!_._2).count()
+      assert(negatives == 0, s"snapshot $i: $negatives request uh48s are bloom-negative")
     }
   }
 }
