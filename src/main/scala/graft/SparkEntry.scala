@@ -222,7 +222,6 @@ object SparkEntry {
       // future; replies with future spideredTime or status >= 1000 drop
       import s.implicits._
       val now = 1400000000L
-      val cfg = graft.frontier.Crawl.Config()
       val reqs = Seq(
         ("http://ok.test/", 1400000000L),
         ("1234567890", 1400000000L), // docid-form pagereindex survives
@@ -234,9 +233,9 @@ object SparkEntry {
         ("http://late.test/", 1400000002L, 200), // future spideredTime
         ("http://weird.test/", 1399999999L, 1000)) // status >= 1000
         .toDF("url", "spidered_time", "http_status")
-      graft.frontier.Crawl.requestsFiltered(reqs, now, cfg)
+      graft.frontier.Crawl.requestsFiltered(reqs, now)
         .select(col("url"), lit("request").as("side"))
-        .unionByName(graft.frontier.Crawl.repliesFiltered(reps, now, cfg)
+        .unionByName(graft.frontier.Crawl.repliesFiltered(reps, now)
           .select(col("url"), lit("reply").as("side")))
     }),
     "s2_inject" -> ((s, d) => {

@@ -1,9 +1,11 @@
 package graft.core
 
 /** X16: `Url::isSpam` (Url.cpp:1137) and its word test `isAdult`
-  * (Lang.cpp:467) — the url porn/spam classifier, gated by the
-  * `doUrlSpamCheck` collection param (default "0" / OFF, Parms.cpp) and
-  * applied at index time with EDOCURLSPAM (XmlDoc.cpp:4316-4323).
+  * (Lang.cpp:467) — the url porn/spam classifier. The reference
+  * applies it at index time with EDOCURLSPAM (XmlDoc.cpp:4316-4323)
+  * only when the `doUrlSpamCheck` collection param is on (default "0"
+  * / OFF, Parms.cpp); the crawl runs with that default, so here it is
+  * a classifier only (the `x16_classify` oracle).
   *
   * Ported exactly from the ACTIVE reference code paths:
   *  - `isAdult`: the substring word list with all its exception

@@ -13,7 +13,10 @@ import graft.rules._
 /** The crawl engine: URL frontier + fetch scheduler as iterative Spark
   * batch jobs over snapshot tables (SURVEY.md §3.1 Spark mapping).
   *
-  * One iteration is a single Catalyst-planned job:
+  * One iteration (`runIteration`) runs in named phases — load, schedule,
+  * fetch, admit, commit — and is not one job: the phases' actions, the
+  * concurrent snapshot writes and their planning add up to about 28
+  * Spark jobs per iteration on the 256-host corpus. The data flow:
   * {{{
   * requests ⟕ latestReply (J1, sort-merge on uh48)
   *   → merge duplicate requests per uh48 (scanListForWinners dedup,
@@ -27,7 +30,8 @@ import graft.rules._
   *   → fetch = join against the pages table (S6; sandbox "network"),
   *     robots gate (X5) via per-host broadcast join
   *   → parse/extract (X7-X12) → replies + outlink requests
-  *   → admission: bloom-prefiltered anti-join vs the URL-seen set (J2)
+  *   → admission: bloom-prefiltered anti-join vs the URL-seen set, i.e.
+  *     the requests chain's uh48s (J2)
   *   → snapshot append, counters in the snapshot manifest
   * }}}
   *
@@ -50,15 +54,11 @@ object Crawl {
       maxWinnersPerIp: Int = 2000, // MAX_WINNER_NODES, Spider.cpp:60
       clockStepMs: Long = 1000L, // simulated wall-clock advance per iteration
       baseTimeSecs: Long = 1400000000L,
-      userAgent: String = Robots.DefaultUserAgent,
       overflowCap: Long = 10000000L, // A8, Spider.cpp:5185-5265
       bloomFpp: Double = 0.03,
       seenBuckets: Int = 64, // partitioned-bloom buckets (power of 2)
       expectedSeenPerBucket: Long = 200000L,
       rules: IndexedSeq[UrlFilterRule] = UrlFilters.defaultWebRules,
-      // F7: drop corrupt rows at scan time (Spider.cpp:4113-4183 replies,
-      // 4466-4507 requests) so one bad delta row can't poison scheduling
-      corruptionFilters: Boolean = true,
       // A4: per-priority maxSpidersPerRule + global MAX_SPIDERS=300
       // (Spider.cpp:7607-7626, Spider.h:1637). These bound CONCURRENT
       // outstanding downloads on the reference's single node; in this
@@ -75,20 +75,18 @@ object Crawl {
       siteList: Seq[String] = Nil,
       // matchesucp/matchesupp collection patterns (Spider.cpp:11714-11777)
       patterns: CrawlPatterns = CrawlPatterns(),
-      // X16 Url::isSpam gate — the reference's doUrlSpamCheck collection
-      // param, default "0"/off (Parms.cpp:17164)
-      doUrlSpamCheck: Boolean = false,
       // A9: crawl limits driving the SP_* status taxonomy
       // (CollectionRec m_maxToCrawl / m_maxCrawlRounds; the reference
       // stops doling and flips m_spiderStatus when a cap is reached)
       maxToCrawl: Long = -1L, // stop once successful downloads reach this
-      maxRounds: Int = -1, // stop after this many spider rounds (<=0: no limit, like m_maxCrawlRounds)
-      // tagdb: cap on the distinct inlinking c-blocks tracked per SITE
-      // (the Msg25 "good inlinks, 1 per c block" analogue; the reference
-      // bounds work per site via Msg25's inlink limits — LinkInfo.cpp
-      // maxNumInlinks order of magnitude, not a hard constant)
-      siteInlinkCap: Int = 128
+      maxRounds: Int = -1 // stop after this many spider rounds (<=0: no limit, like m_maxCrawlRounds)
   )
+
+  /** tagdb: cap on the distinct inlinking c-blocks tracked per SITE (the
+    * Msg25 "good inlinks, 1 per c block" analogue; the reference bounds
+    * work per site via Msg25's inlink limits — LinkInfo.cpp
+    * maxNumInlinks order of magnitude, not a hard constant). */
+  val SiteInlinkCap = 128
 
   def nowSecs(cfg: Config, iteration: Int): Long = cfg.baseTimeSecs + iteration * (cfg.clockStepMs / 1000L).max(1L)
   def nowMs(cfg: Config, iteration: Int): Long = nowSecs(cfg, iteration) * 1000L
@@ -206,12 +204,12 @@ object Crawl {
                           ipMaxSpiders: Int, ipWaitMs: Int,
                           wasIndexed: Boolean = false)
 
-  /** F7 request-side corruption predicate (Spider.cpp:4466-4507): url
+  /** F7 request-side corruption predicate (Spider.cpp:4466-4507), applied
+    * at scan time so one bad delta row can't poison scheduling: url
     * must start "http" (or a digit — pagereindex docid) and addedTime
     * must not be >1 day in the future. */
-  private[graft] def requestsFiltered(df: DataFrame, now: Long, cfg: Config): DataFrame =
-    if (!cfg.corruptionFilters) df
-    else df.filter(
+  private[graft] def requestsFiltered(df: DataFrame, now: Long): DataFrame =
+    df.filter(
       (col("url").startsWith("http") ||
         (substring(col("url"), 1, 1) >= "0" && substring(col("url"), 1, 1) <= "9")) &&
       (col("added_time") - lit(now)) <= 86400L)
@@ -221,9 +219,8 @@ object Crawl {
     * an older good reply (or none) is used instead. (The reference's
     * langId-byte check has no analogue here: lang is a string column and
     * cannot hold an out-of-enum byte.) */
-  private[graft] def repliesFiltered(df: DataFrame, now: Long, cfg: Config): DataFrame =
-    if (!cfg.corruptionFilters) df
-    else df.filter(col("spidered_time") <= lit(now + 1) && col("http_status") < 1000)
+  private[graft] def repliesFiltered(df: DataFrame, now: Long): DataFrame =
+    df.filter(col("spidered_time") <= lit(now + 1) && col("http_status") < 1000)
 
   /** A4 dole caps (opt-in, see Config.enforceDoleCaps): per-priority cap
     * = max maxSpidersPerRule over rules with that priority
@@ -427,7 +424,7 @@ object Crawl {
       val inlCounts = inl.toDF()
         .select(col("first_ip"), col("uh48"),
           least(size(col("cblocks")), lit(20)).as("pni"))
-      val base = requestsFiltered(requests.toDF(), now, cfg) // F7
+      val base = requestsFiltered(requests.toDF(), now) // F7
       // A3 due-IP pruning: ONLY the due slices of the frontier are
       // scanned/scored — the semi-join sits below the exchange so
       // non-due rows never shuffle
@@ -451,7 +448,7 @@ object Crawl {
       // which covers that IP's requests AND replies in one list
       // (Spider.cpp:3805 readListFromSpiderdb; key layout
       // Spider.h:370-377).
-      val repBase = repliesFiltered(replies.toDF(), now, cfg) // F7
+      val repBase = repliesFiltered(replies.toDF(), now) // F7
       val repPruned = dueIps match {
         case Some(due) => repBase.join(due, Seq("first_ip"), "left_semi")
         case None => repBase
@@ -531,8 +528,8 @@ object Crawl {
       cfg.patterns,
       quotaValid = quotaOn)
 
-    val reqs = mergedRequests(requestsFiltered(requests.toDF(), now, cfg).as[FrontierRequest])
-    val reps = latestReplies(repliesFiltered(replies.toDF(), now, cfg).as[FrontierReply])
+    val reqs = mergedRequests(requestsFiltered(requests.toDF(), now).as[FrontierRequest])
+    val reps = latestReplies(repliesFiltered(replies.toDF(), now).as[FrontierReply])
 
     // J1: request ⟕ latest reply, sort-merge on (first_ip, uh48)
     val joined = reqs.joinWith(reps,
@@ -703,7 +700,7 @@ object Crawl {
         col("header_charset").as("pcs"), col("content_type").as("pct")),
         col("eff_url") === col("purl"), "left_outer")
 
-    val ua = cfg.userAgent
+    val ua = Robots.DefaultUserAgent
 
     // X7 completion: frame/iframe expansion (getExpandedUtf8Content,
     // XmlDoc.cpp:19481-19768). Only frame-BEARING pages (a cheap byte
@@ -849,12 +846,6 @@ object Crawl {
         } else if (u.isLinkLoop) {
           // "url is repeating path components" (XmlDoc.cpp:4300-4306)
           FetchResult(task, found = false, allowed = true, cd, 0, Errs.ELINKLOOP,
-            "", 0, downloadEnd, Nil, "")
-        } else if (cfg.doUrlSpamCheck && graft.core.GbAdult.isSpam(u)) {
-          // X16 isSpam, behind the reference's default-OFF param
-          // (XmlDoc.cpp:4316-4323; ladder position: after the 4300
-          // link-loop check, before 4389 robots / 4507 extension)
-          FetchResult(task, found = false, allowed = true, cd, 0, Errs.EDOCURLSPAM,
             "", 0, downloadEnd, Nil, "")
         } else if (u.isBadExtension()) {
           // bad extension with no vouching link text (XmlDoc.cpp:4507-4513;
@@ -1250,12 +1241,11 @@ object Crawl {
 
   /** The exact half of J2 over pre-tagged candidates: bloom-negatives
     * are definitely new; positives (incl. false positives) pay the
-    * exact left_anti against `seen` (a uh48 table — in the loop, ONLY
-    * the positives' touched buckets of the seen_uh48 chain, which is
-    * what makes admission O(delta) end-to-end). No distinct() on the
-    * seen side: left_anti is set-semantics already, and the distinct
-    * was a full extra shuffle per iteration (uh48 is near-unique by the
-    * write invariant). */
+    * exact left_anti against `seen` (any table with a uh48 column — in
+    * the loop, the requests chain). No distinct() on the seen side:
+    * left_anti is set-semantics already, and the distinct was a full
+    * extra shuffle per iteration (uh48 is near-unique by the write
+    * invariant). */
   def admitTagged(tagged: Dataset[(FrontierRequest, Boolean)],
                   seen: DataFrame): Dataset[FrontierRequest] = {
     val spark = tagged.sparkSession
@@ -1405,18 +1395,19 @@ object Crawl {
 
   /** A keyed snapshot table on the StateTable bucket chain: its
     * directory name, the column its rows bucket on, and its schema (as
-    * an empty table). `fromRequests` rebuilds the two seen tables from a
-    * requests table — their ground truth at init and compaction; the
+    * an empty table). `fromRequests` rebuilds the seen bloom from a
+    * requests table — its ground truth at init and compaction; the
     * other tables start empty and compact from their own chain. */
   final case class KeyedTable(name: String, key: String, empty: SparkSession => DataFrame,
                               fromRequests: Option[(DataFrame, Config) => DataFrame] = None) {
-    /** The table as of snapshot i, optionally only the `wanted` buckets. */
-    def load(spark: SparkSession, workdir: String, i: Int,
-             wanted: Option[Set[Int]] = None): DataFrame =
-      StateTable.loadBuckets(spark, workdir, i, name, empty(spark), wanted)
+    /** The table as of snapshot i. */
+    def load(spark: SparkSession, workdir: String, i: Int): DataFrame =
+      StateTable.load(spark, workdir, i, name, empty(spark))
   }
 
-  /** The seven keyed snapshot tables. */
+  /** The five keyed snapshot tables. The URL-seen set and the old-page
+    * sample vectors are not among them: each is read from the table
+    * that already holds the fact (the requests chain and titledb). */
   object Keyed {
     private def none[T](e: Encoder[T], cols: String*): SparkSession => DataFrame =
       s => if (cols.isEmpty) s.emptyDataset(e).toDF() else s.emptyDataset(e).toDF(cols: _*)
@@ -1424,15 +1415,10 @@ object Crawl {
     val inlinks = KeyedTable("inlink_state", "uh48", none(Encoders.product[InlinkState]))
     val tags = KeyedTable("tag_state", "site_hash32", none(Encoders.product[TagState]))
     val quota = KeyedTable("quota_state", "key", none(Encoders.product[(Int, Long)], "key", "n"))
-    val titleVecs = KeyedTable("title_vecs", "uh48",
-      none(Encoders.product[(Long, Array[Int])], "uh48", "sample_vec"))
-    // the J2 exact set: every request uh48
-    val seen = KeyedTable("seen_uh48", "uh48", none(Encoders.scalaLong, "uh48"),
-      Some((reqs, _) => reqs.select("uh48").distinct()))
     val bloom = KeyedTable("seen_bloom", "bloom_bucket", SeenBloom.empty,
       Some((reqs, cfg) => SeenBloom.build(reqs.select("uh48").as(Encoders.LONG),
         cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)))
-    val all: Seq[KeyedTable] = Seq(dom, inlinks, tags, quota, titleVecs, seen, bloom)
+    val all: Seq[KeyedTable] = Seq(dom, inlinks, tags, quota, bloom)
   }
 
   /** Inlink c-block state as of snapshot i. O(delta) maintained: only
@@ -1625,8 +1611,8 @@ object Crawl {
       quotaState: DataFrame,
       ipCounts: DataFrame,
       ipNext: Option[DataFrame],
-      titleVecs: DataFrame, // (uh48, sample_vec) — loadTitleVecs shape
-      seenUh48: DataFrame, // (uh48) — the URL-seen exact set (J2's anti-join right side)
+      titleVecs: DataFrame, // (uh48, sample_vec) — loadTitleVecs
+      seenUh48: DataFrame, // (uh48) — the URL-seen set: the requests' distinct uh48s
       bloom: DataFrame, // (bloom_bucket, bloom) — SeenBloom's table
       buckets: Map[String, Int]) // keyed-state bucket counts (constant between compactions)
 
@@ -1634,8 +1620,9 @@ object Crawl {
     * executes here. */
   def loadLoopState(spark: SparkSession, workdir: String, i: Int, cfg: Config): LoopState = {
     val ipTable = loadIpTable(spark, workdir, i)
+    val requests = loadRequests(spark, workdir, i)
     LoopState(
-      requests = loadRequests(spark, workdir, i),
+      requests = requests,
       replies = loadReplies(spark, workdir, i),
       ipState = ipStateOf(ipTable),
       domState = loadDomState(spark, workdir, i),
@@ -1644,14 +1631,10 @@ object Crawl {
       quotaState = loadQuotaState(spark, workdir, i),
       ipCounts = ipCountsOf(ipTable),
       ipNext = ipNextOf(workdir, i, cfg, ipTable),
-      // O(delta) path: the title_vecs StateTable chain already holds
-      // latest-per-uh48 vectors (no per-iteration O(crawled) titledb
-      // scan + re-aggregate)
-      titleVecs = Keyed.titleVecs.load(spark, workdir, i),
-      // O(delta) path: the seen-uh48 StateTable chain holds every
-      // request uh48, bucketed so admission loads only the buckets of
-      // this batch's bloom-positive candidates
-      seenUh48 = Keyed.seen.load(spark, workdir, i),
+      titleVecs = loadTitleVecs(spark, workdir, i),
+      // a fake-IP add-url re-added under its real IP is a second
+      // request row for the same uh48
+      seenUh48 = requests.select("uh48").distinct(),
       bloom = Keyed.bloom.load(spark, workdir, i),
       buckets = Keyed.all.map(t => t.name -> StateTable.bucketsOf(workdir, i, t.name)).toMap)
   }
@@ -1670,7 +1653,7 @@ object Crawl {
     val st = loadLoopState(spark, workdir, i - 1, cfg)
     val doled = schedulePhase(st, cfg, i)
     val fetched = fetchPhase(spark, st, doled, pages, robots, cfg, i, redirClosure, snapDir(workdir, i))
-    val admitted = admitPhase(spark, workdir, i, st, fetched, hostMeta, cfg)
+    val admitted = admitPhase(spark, st, fetched, hostMeta, cfg)
     commitPhase(spark, workdir, i, st, doled, fetched, admitted, cfg)
     val r = IterationResult(fetched.scheduled, fetched.fetched, fetched.robotsDenied,
       fetched.errors, admitted.newUrls, fetched.outlinks - admitted.newUrls)
@@ -1750,7 +1733,7 @@ object Crawl {
 
   /** J5 outlink resolution, the A8 overflow guard, J2 admission and J4
     * within-batch dedup, plus the EFAKEFIRSTIP revised re-adds. */
-  private def admitPhase(spark: SparkSession, workdir: String, i: Int, st: LoopState,
+  private def admitPhase(spark: SparkSession, st: LoopState,
                          f: Fetched, hostMeta: Dataset[HostMeta], cfg: Config): Admitted = {
     import spark.implicits._
     // A8 overflow guard: IPs with too many requests stop accepting
@@ -1768,16 +1751,13 @@ object Crawl {
       .join(overflowIps, col("first_ip") === col("of_ip"), "left_anti")
       .as[FrontierRequest]
 
-    // J2's exact side, O(delta) end-to-end: the candidates are tagged
-    // by the bloom ONCE (persisted — three consumers), and the exact
-    // anti-join's right side loads ONLY the seen-chain buckets the
-    // bloom-POSITIVE candidates hash into (path-level pruning).
+    // J2: the candidates are tagged by the bloom ONCE (persisted — three
+    // consumers); the bloom-POSITIVE ones pay the exact anti-join against
+    // the requests chain, the URL-seen set itself (a url is seen exactly
+    // when spiderdb holds a request for it).
     val taggedP = SeenBloom.tagged(candidates, st.bloom, cfg.seenBuckets)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pos = taggedP.filter(_._2).map(_._1.uh48).toDF("uh48")
-    val seenRight = Keyed.seen.load(spark, workdir, i - 1,
-      Some(StateTable.touchedBuckets(pos, df => Seq(df("uh48")), st.buckets(Keyed.seen.name))))
-    val fresh = dedupBatch(admitTagged(taggedP, seenRight).toDF())
+    val fresh = dedupBatch(admitTagged(taggedP, st.requests.toDF()).toDF())
 
     // revised re-adds for this iteration's EFAKEFIRSTIP answers (the
     // reference counts these as re-shards, not new urls —
@@ -1794,8 +1774,8 @@ object Crawl {
       .join(overflowIps, col("first_ip") === col("of_ip"), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // fresh/revised are persisted so the delta, bloom, A8-count and
-    // seen-set writes all derive from the SAME admitted rows. ONE
+    // fresh/revised are persisted so the delta, bloom and A8-count
+    // writes all derive from the SAME admitted rows. ONE
     // shuffle-free job materializes BOTH caches, uncontended, before the
     // concurrent commit writes (otherwise the first write to touch them
     // pays the whole admission chain while its siblings fight it for
@@ -1891,7 +1871,7 @@ object Crawl {
       buckets, p => SeenBloom.update(p, uh48s.select("uh48").as(Encoders.LONG),
         cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp))
 
-  /** The seven keyed tables' merges for this iteration. */
+  /** The five keyed tables' merges for this iteration. */
   private def stateMerges(spark: SparkSession, st: LoopState, f: Fetched, a: Admitted,
                           cfg: Config, i: Int): Seq[StateMerge] = {
     import spark.implicits._
@@ -1931,7 +1911,6 @@ object Crawl {
     val linkTags = a.resolved.map(r =>
       TagState(r.link_site_hash32, r.link_site, 0, has_site_tag = false, Array(r.parent_cblock), i))
     val tagDelta = docTags.union(pinTags).union(linkTags)
-    val cap = cfg.siteInlinkCap
 
     // A6 quota-state roll-forward (m_localTable, Spider.cpp:4355-4421):
     //  - one vote per NEWLY indexed url → firstIp, siteHash32, domHash32
@@ -1955,14 +1934,6 @@ object Crawl {
     val quotaDelta = indexedKeys.unionByName(manualKeys)
       .groupBy("key").agg(count(lit(1)).as("n"))
 
-    // per-url sample vector: latest per uh48 — percentChanged's old-doc
-    // side on the NEXT fetch of the url
-    val vecDelta = results.filter(_.found)
-      .map(r => (r.task.uh48, nowSecs(cfg, i),
-        if (r.sampleVec == null) Array.empty[Int] else r.sampleVec))
-      .toDF("uh48", "t", "sample_vec")
-    val freshUh48 = a.fresh.toDF().select("uh48")
-
     Seq(
       sm(Keyed.dom, st.domState.toDF(), domUpdates) { p =>
         p.withColumn("stamp", lit(0))
@@ -1981,24 +1952,11 @@ object Crawl {
       sm(Keyed.tags, st.tagState.toDF(), tagDelta.toDF()) { p =>
         p.as[TagState].union(tagDelta)
           .groupByKey(_.site_hash32)
-          .reduceGroups((x, y) => combineTags(x, y, cap))
+          .reduceGroups((x, y) => combineTags(x, y, SiteInlinkCap))
           .map(_._2).toDF()
       },
       sm(Keyed.quota, st.quotaState, quotaDelta) { p =>
         p.unionByName(quotaDelta).groupBy("key").agg(sum(col("n")).as("n"))
-      },
-      // fresh uh48s are disjoint from the prior set by the anti-join
-      // itself, and revised re-adds keep their url's uh48 (already
-      // seen) — so the merge is a bare union, no distinct
-      sm(Keyed.seen, st.seenUh48, freshUh48) { p =>
-        p.select("uh48").unionByName(freshUh48)
-      },
-      // latest vector per uh48 (delta t=now shadows prior t=0)
-      sm(Keyed.titleVecs, st.titleVecs, vecDelta) { p =>
-        p.withColumn("t", lit(0L))
-          .unionByName(vecDelta)
-          .groupBy("uh48").agg(max(struct(col("t"), col("sample_vec"))).as("s"))
-          .select(col("uh48"), col("s.sample_vec").as("sample_vec"))
       },
       // every admitted uh48 (fresh and revised) sets its bloom bits
       bloomMerge(st.bloom, a.fresh.toDF().select("uh48").unionByName(a.revised.toDF().select("uh48")),
@@ -2009,7 +1967,7 @@ object Crawl {
     * concurrent jobs (results and the admitted rows are cached, so the
     * jobs share partitions instead of recomputing the fetch). Each job
     * builds its own plan on its own thread — driver-side analysis of
-    * the ~12 plans overlaps instead of adding up. */
+    * the ~10 plans overlaps instead of adding up. */
   private def commitPhase(spark: SparkSession, workdir: String, i: Int, st: LoopState,
                           doled: Doled, f: Fetched, a: Admitted, cfg: Config): Unit = {
     import spark.implicits._
@@ -2119,7 +2077,7 @@ object Crawl {
       .map(_._2)
     // the table rewrites are independent — run them as concurrent jobs
     // (same shape as the iteration write graph); the per-IP counts and
-    // the two seen tables rebuild from the compacted requests
+    // the seen bloom rebuild from the compacted requests
     locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -2137,9 +2095,9 @@ object Crawl {
       val fTitle = Future { loadTitledb(spark, workdir, i).write.mode("overwrite").parquet(s"$d/titledb_full_tmp") }
       // keyed chain resets (the RdbMerge analogue for the StateTable
       // chains): one bucketed FULL write per table, so loads stop
-      // walking the delta chain here. The seen tables rebuild FROM
-      // GROUND TRUTH: seen_uh48 == the requests' uh48 set again, and
-      // the bloom sheds the fill of since-compacted rows (fpp hygiene).
+      // walking the delta chain here. The bloom rebuilds FROM GROUND
+      // TRUTH, the compacted requests, and so sheds the fill of
+      // since-compacted rows (fpp hygiene).
       val fKeyed = Keyed.all.map { t =>
         Future {
           val rows = t.fromRequests.fold(t.load(spark, workdir, i))(
@@ -2211,7 +2169,7 @@ object Crawl {
   /** Dataset core of S2 injection — also the streaming intake sink
     * (SeedStream, which must NOT collect micro-batches to the driver)
     * and the S3 reindex path. Appends a delta to the latest snapshot and
-    * keeps the seen tables a superset; callers set their own flag bits
+    * keeps the seen bloom a superset; callers set their own flag bits
     * (IsInjecting / IsPageReindex). */
   def injectRequests(spark: SparkSession, workdir: String,
                      requests: Dataset[FrontierRequest], cfg: Config): Long = {
@@ -2231,21 +2189,13 @@ object Crawl {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = fresh.count()
     val d = snapDir(workdir, i)
-    // the seen tables must gain the injected uh48s too, through the
-    // iteration's touched-bucket merge: the exact set is J2's anti-join
-    // right side, and the bloom must stay a SUPERSET of every request
+    // the bloom must gain the injected uh48s through the iteration's
+    // touched-bucket merge: it must stay a SUPERSET of every request
     // uh48, or a future bloom-negative would skip the exact anti-join
     // and re-admit. Dynamic overwrite leaves this snapshot's other
-    // buckets (and a FULL marker) intact. distinct(): an injected url
-    // may already be seen under another first_ip, and the (first_ip,
-    // uh48) dedup above doesn't collapse that.
-    val freshUh48 = fresh.toDF().select("uh48")
-    def prior(t: KeyedTable) = t.load(spark, workdir, i)
-    def buckets(t: KeyedTable) = StateTable.bucketsOf(workdir, i, t.name)
-    rollForward(Seq(
-      StateMerge(Keyed.seen, prior(Keyed.seen), freshUh48, buckets(Keyed.seen),
-        p => p.unionByName(freshUh48).distinct()),
-      bloomMerge(prior(Keyed.bloom), freshUh48, buckets(Keyed.bloom), cfg)), d, dynamic = true)
+    // buckets (and a FULL marker) intact.
+    rollForward(Seq(bloomMerge(Keyed.bloom.load(spark, workdir, i), fresh.toDF().select("uh48"),
+      StateTable.bucketsOf(workdir, i, Keyed.bloom.name), cfg)), d, dynamic = true)
       .foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
     // per-IP table: A8 counts for the injected rows, and (when the
     // snapshot maintains the waiting tree) an injected IP must wake the
@@ -2264,7 +2214,7 @@ object Crawl {
     // cached plan that reads the path — `fresh` included, whose
     // anti-join would then see its own rows and come back empty for
     // any write still to run. This order also keeps a crash safe: the
-    // seen set may cover more than the requests, never less.
+    // bloom may cover more than the requests, never less.
     val target = s"$d/requests_delta"
     val mode = if (new java.io.File(target).exists) "append" else "overwrite"
     fresh.write.mode(mode).parquet(target)

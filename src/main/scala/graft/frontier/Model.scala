@@ -147,7 +147,7 @@ final case class InlinkState(first_ip: Int, uh48: Long, cblocks: Array[Int])
   *    `has_site_tag` is set (the reference stores the Msg25 count as a
   *    tag at index time; this engine derives it from the same state,
   *    always fresh — a superset of the reference's ≤45-day-stale cache).
-  *    Capped at the `siteInlinkCap` smallest (deterministic, same
+  *    Capped at the `Crawl.SiteInlinkCap` smallest (deterministic, same
   *    convention as InlinkState).
   *
   * `stamp` = iteration that created the row (pinning order). */
@@ -223,7 +223,6 @@ object Errs {
   val EDOCSIMPLIFIEDREDIR = 32816
   val EDOCBADREDIRECTURL = 32817
   val ELINKLOOP = 32876 // repeating path components (XmlDoc.cpp:4302)
-  val EDOCURLSPAM = 32806 // url porn/spam classifier hit (XmlDoc.cpp:4316; enum value probed from GbErrno.h)
   val EDOCBADCONTENTTYPE = 32811 // bad extension (XmlDoc.cpp:4507-4513)
   // the add-url DNS hop: a fake-firstIp add-url request is never
   // downloaded — indexDoc short-circuits (XmlDoc.cpp:2812-2828), the

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** O(delta) state maintenance: hash-bucketed LSM chain for every keyed
-  * snapshot table (inlink/tag/quota/dom state, title vectors, the exact
-  * seen set and the seen bloom — the list is `Crawl.Keyed`).
+  * snapshot table (inlink/tag/quota/dom state and the seen bloom — the
+  * list is `Crawl.Keyed`).
   *
   * The r3 engine rewrote EVERY state table in full each iteration even
   * though the per-iteration delta is tiny (VERDICT r3 "What's wrong"
@@ -24,16 +24,18 @@ import org.apache.spark.sql.functions._
   *    appear);
   *  - the loader walks the snapshot chain newest-first taking the FIRST
   *    version of each bucket it sees (newer shadows older) and stops at
-  *    a full snapshot — path-level pruning, no read of superseded
-  *    versions;
-  *  - the merge path loads ONLY the touched buckets (driver knows the
-  *    bucket ids — the delta is small by construction), merges prior
-  *    rows of those buckets with the delta under the caller's own
-  *    semantics, and writes just those buckets forward.
+  *    a full snapshot — no read of superseded versions;
+  *  - the merge path (`Crawl.rollForward`) collects the delta's touched
+  *    bucket ids on the driver (the delta is small by construction),
+  *    row-filters the FULL prior table to those buckets, merges them
+  *    with the delta under the caller's own semantics, and writes just
+  *    those buckets forward.
   *
-  * Iteration cost: O(delta + rows-in-touched-buckets) I/O and shuffle,
-  * instead of O(state). Bucket count sizes a bucket to a comfortable
-  * task (state/B rows); the chain is reset by compaction (writeFull).
+  * Iteration cost: the prior is scanned whole, but only the touched
+  * buckets' rows are shuffled and rewritten — O(delta +
+  * rows-in-touched-buckets) write I/O, instead of O(state). Bucket
+  * count sizes a bucket to a comfortable task (state/B rows); the chain
+  * is reset by compaction (writeFull).
   */
 object StateTable {
 
@@ -60,7 +62,7 @@ object StateTable {
   /** Driver-side on-disk size of the table's live chain (file metadata
     * only — no jobs). Sizes the NEXT compaction's bucket count. */
   def chainBytes(workdir: String, i: Int, name: String): Long =
-    resolve(workdir, i, name, None).map { p =>
+    resolve(workdir, i, name).map { p =>
       val fs = new java.io.File(p).listFiles()
       if (fs == null) 0L else fs.filter(_.isFile).map(_.length).sum
     }.sum
@@ -117,12 +119,10 @@ object StateTable {
 
   private def bucketId(f: java.io.File): Int = f.getName.stripPrefix("bucket=").toInt
 
-  /** Per-bucket newest leaf dirs across the chain, optionally
-    * restricted to `wanted` bucket ids: newest-first, stopping at the
-    * nearest full write. An empty delta has no bucket dirs and simply
-    * contributes nothing. */
-  private def resolve(workdir: String, i: Int, name: String,
-                      wanted: Option[Set[Int]]): Seq[String] = {
+  /** Per-bucket newest leaf dirs across the chain: newest-first,
+    * stopping at the nearest full write. An empty delta has no bucket
+    * dirs and simply contributes nothing. */
+  private def resolve(workdir: String, i: Int, name: String): Seq[String] = {
     val seen = scala.collection.mutable.Set[Int]()
     val paths = scala.collection.mutable.ListBuffer[String]()
     var k = i
@@ -134,7 +134,7 @@ object StateTable {
           val id = bucketId(bd)
           if (!seen(id)) {
             seen += id
-            if (wanted.forall(_.contains(id))) paths += bd.getPath
+            paths += bd.getPath
           }
         }
         done = fullMarker(dir.getPath).exists()
@@ -144,45 +144,28 @@ object StateTable {
     paths.toSeq
   }
 
-  /** Load the table as of snapshot i; `empty` supplies the schema. */
-  def load(spark: SparkSession, workdir: String, i: Int, name: String,
-           empty: DataFrame): DataFrame =
-    loadBuckets(spark, workdir, i, name, empty, None)
-
-  /** Load ONLY the given buckets (the merge path's prior side). The
+  /** Load the table as of snapshot i; `empty` supplies the schema. The
     * explicit schema keeps the file listing but drops the footer-reading
     * schema-inference job per load — the chains produce many small leaf
     * dirs by design. */
-  def loadBuckets(spark: SparkSession, workdir: String, i: Int, name: String,
-                  empty: DataFrame, wanted: Option[Set[Int]]): DataFrame = {
-    val paths = resolve(workdir, i, name, wanted)
+  def load(spark: SparkSession, workdir: String, i: Int, name: String,
+           empty: DataFrame): DataFrame = {
+    val paths = resolve(workdir, i, name)
     if (paths.isEmpty) empty
     else spark.read.schema(empty.schema).parquet(paths: _*)
   }
 
-  /** The touched bucket ids of a delta (one tiny job on the — cached —
-    * delta source; the driver needs the ids for path-level pruning).
-    * With a single bucket there is nothing to prune — skip the job
-    * (the merge then rewrites the whole — tiny — table, which is what
-    * a 1-bucket table means). */
-  def touchedBuckets(delta: DataFrame, keys: DataFrame => Seq[Column], buckets: Int): Set[Int] = {
-    if (buckets == 1) return Set(0)
-    import org.apache.spark.sql.Encoders
-    delta.select(bucketCol(keys(delta), buckets).as("b")).distinct()
-      .as[Int](Encoders.scalaInt).collect().toSet
-  }
-
-  /** Touched-bucket ids for SEVERAL tables in ONE Spark job (the
-    * per-iteration loop launches one of these per state table — at
-    * micro scale the job-scheduling fixed cost of seven one-task jobs
-    * outweighs the work itself). The fused query is deliberately
+  /** Touched-bucket ids for SEVERAL tables in ONE Spark job (one
+    * one-task job per keyed table costs more in job scheduling than the
+    * work itself at micro scale). The fused query is deliberately
     * SHUFFLE-FREE: each branch maps its — cached — delta to
     * (table, bucket) pairs deduped per partition (a partition-local
     * Set, bounded by min(rows, buckets)), the union collects once,
     * and the driver groups. No exchange means AQE cannot split the
     * query into per-stage jobs either — exactly one job regardless of
-    * table count. Single-bucket tables skip the scan like
-    * `touchedBuckets` (nothing to prune). */
+    * table count. A single-bucket table skips the scan: its one bucket
+    * is the touched one, and the merge rewrites the whole — tiny —
+    * table, which is what a 1-bucket table means. */
   def touchedBucketsMulti(
       parts: Seq[(DataFrame, DataFrame => Seq[Column], Int)]): Seq[Set[Int]] = {
     import org.apache.spark.sql.Encoders

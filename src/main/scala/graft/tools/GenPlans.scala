@@ -60,31 +60,24 @@ object GenPlans {
   scans as PushedFilters""",
       so.dole)
 
-    // J2: admission anti-join with bloom prefilter over the seen_uh48
-    // chain (only the positives' touched buckets are even READ)
+    // J2: admission anti-join with bloom prefilter; the URL-seen set is
+    // the requests chain itself
     val cand = requests.limit(200)
     val st = Crawl.loadLoopState(spark, work, i, cfg)
-    val seenKeys = (df: org.apache.spark.sql.DataFrame) => Seq(df("uh48"))
     val tagged = graft.frontier.SeenBloom.tagged(cand, st.bloom, cfg.seenBuckets)
-    val posIds = {
-      import spark.implicits._
-      StateTable.touchedBuckets(
-        tagged.filter(_._2).map(_._1.uh48).toDF("uh48"), seenKeys, st.buckets(Crawl.Keyed.seen.name))
-    }
-    val seen = Crawl.Keyed.seen.load(spark, work, i, Some(posIds))
     section("admission (J2): bloom-prefiltered URL-seen anti-join",
       """What to look for:
 - the candidate side probes the per-bucket bloom FIRST; only
   bloom-positive rows pay the exact anti-join (bloom alone cannot
   give byte-equality, fp>0), bloom-negative rows pass straight through
-- the exact side reads ONLY the seen_uh48 chain buckets the positive
-  candidates hash into (path-level pruning — the scan's file list is
-  the touched bucket subdirs, O(batch) not O(frontier))""",
-      Crawl.admitTagged(tagged, seen).toDF)
+- the exact side is the requests chain's uh48 column (column pruning
+  reaches its scans) with no distinct: left_anti is set semantics
+  already""",
+      Crawl.admitTagged(tagged, st.requests.toDF()).toDF)
 
     // state merge with InSet touched-bucket pruning
     val delta = quota.limit(3)
-    val ids = StateTable.touchedBuckets(delta, df => Seq(df("key")), 8)
+    val ids = StateTable.touchedBucketsMulti(Seq((delta, df => Seq(df("key")), 8))).head
     val merged = quota
       .filter(StateTable.bucketCol(Seq(col("key")), 8).isInCollection(ids))
       .unionByName(delta)

@@ -30,6 +30,16 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** One default-config crawl through a compaction (snapshot 4), shared
+    * as the reference side of the tests below. */
+  private lazy val defaultRun: (String, Seq[Crawl.IterationResult]) = {
+    val d = tmpdir()
+    (d, Crawl.run(spark, d, spec, 5, cfg))
+  }
+
   private def seenSet(workdir: String, i: Int): Set[Long] = {
     import spark.implicits._
     Crawl.loadRequests(spark, workdir, i)
@@ -118,6 +128,49 @@ class CrawlSpec extends AnyFunSuite {
       assert(Seq(field("scheduled"), field("fetched"), field("robots_denied"), field("errors"),
         field("new_urls")) == Seq(r.scheduled, r.fetched, r.robotsDenied, r.errors, r.newUrls),
         s"snapshot $i manifest $m vs $r")
+    }
+  }
+
+  test("a degraded bloom keeps admission exact (fetch logs and requests as with the default bloom)") {
+    import spark.implicits._
+    // one 64-bit bloom for every url: the 1000-item floor per bloom
+    // bucket at fpp 0.99 sizes it to one word with one hash
+    val degraded = cfg.copy(bloomFpp = 0.99, seenBuckets = 1, expectedSeenPerBucket = 1L)
+    val d = tmpdir()
+    Crawl.run(spark, d, spec, 5, degraded) // compaction at snapshot 4
+    val requests = Crawl.loadRequests(spark, d, 5)
+    val known = requests.select("uh48").as[Long].collect().toSet
+    val absent = (0 until 2000).iterator
+      .flatMap(k => Crawl.seedRequest(s"http://absent$k.test/", 0L))
+      .filterNot(r => known(r.uh48)).take(1000).toSeq
+    assert(absent.size == 1000)
+    val st = Crawl.loadLoopState(spark, d, 5, degraded)
+    val positives = SeenBloom.tagged(absent.toDS(), st.bloom, degraded.seenBuckets)
+      .filter(_._2).count()
+    assert(positives > 500, s"the bloom must be degraded: $positives of 1000 absent uh48s positive")
+
+    val (ref, _) = defaultRun
+    assert(fetchOrder(d, 5) == fetchOrder(ref, 5), "crawl order")
+    assert(sortedRows(requests.toDF()) == sortedRows(Crawl.loadRequests(spark, ref, 5).toDF()),
+      "requests chain")
+  }
+
+  test("A8 overflow guard: over-cap IPs admit no outlinks") {
+    import spark.implicits._
+    val capped = cfg.copy(overflowCap = 2L)
+    val d = tmpdir()
+    val results = Crawl.run(spark, d, spec, 4, capped, compactEvery = 100)
+    val (_, ref) = defaultRun
+    assert(results.map(_.newUrls).sum < ref.take(4).map(_.newUrls).sum,
+      s"the guard must fire: ${results.map(_.newUrls)} vs uncapped ${ref.take(4).map(_.newUrls)}")
+    for (i <- 1 to 4) {
+      val over = Crawl.loadIpCounts(spark, d, i - 1).filter(col("n") > capped.overflowCap)
+        .select("first_ip").as[Int].collect().toSet
+      val outlinks = spark.read.parquet(s"${Crawl.snapDir(d, i)}/requests_delta")
+        .filter(col("flags").bitwiseAND(lit(Flags.IsAddUrl)) === 0L)
+        .select("first_ip").as[Int].collect()
+      val leaked = outlinks.filter(over)
+      assert(leaked.isEmpty, s"snapshot $i: ${leaked.length} outlinks admitted on over-cap IPs")
     }
   }
 

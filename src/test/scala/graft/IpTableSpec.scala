@@ -9,7 +9,10 @@ import graft.frontier._
   * the requests chain, at every snapshot of a crawl that runs through
   * an injection and a compaction:
   *  (a) the per-IP table's counts equal the requests grouped by first_ip;
-  *  (b) the exact seen set equals the requests' uh48 set;
+  *  (b) the loop state's seen set is the requests' uh48 set with no
+  *      duplicate rows — the requests hold a seed's uh48 twice (under
+  *      its fake and its real IP) until compaction drops the answered
+  *      fake-IP row;
   *  (c) due-IP pruning is exact (A3): the batch scheduled with the
   *      waiting tree equals the one scheduled by a full scan;
   *  (d) the seen bloom is a superset of the requests: every request
@@ -33,6 +36,7 @@ class IpTableSpec extends AnyFunSuite {
       Seq("http://www.h7.test/injected.html", "http://www.h0.test/"), cfg)
     assert(n == 1, "only the new url is injected")
     Crawl.run(spark, work, Corpus.micro, 3, cfg) // compaction at snapshot 4
+    var repeatedUh48s = 0L
     for (i <- 0 to 5) {
       val reqs = Crawl.loadRequests(spark, work, i)
       val counts = Crawl.loadIpCounts(spark, work, i).as[(Int, Long)].collect().toMap
@@ -40,7 +44,11 @@ class IpTableSpec extends AnyFunSuite {
       assert(counts == expected, s"snapshot $i: per-IP counts")
 
       val st = Crawl.loadLoopState(spark, work, i, cfg)
-      assert(uh48s(st.seenUh48) == uh48s(reqs.toDF()), s"snapshot $i: seen set")
+      val seen = st.seenUh48.select("uh48").collect().map(_.getLong(0))
+      assert(seen.length == seen.distinct.length,
+        s"snapshot $i: ${seen.length - seen.distinct.length} duplicate seen-set rows")
+      assert(seen.toSet == uh48s(reqs.toDF()), s"snapshot $i: seen set")
+      repeatedUh48s += reqs.count() - seen.length
 
       assert(st.ipNext.isDefined, s"snapshot $i: waiting tree maintained")
       def sched(ipNext: Option[DataFrame]) = batchRows(Crawl.scheduleWake(st.requests,
@@ -50,5 +58,6 @@ class IpTableSpec extends AnyFunSuite {
       val negatives = SeenBloom.tagged(reqs, st.bloom, cfg.seenBuckets).filter(!_._2).count()
       assert(negatives == 0, s"snapshot $i: $negatives request uh48s are bloom-negative")
     }
+    assert(repeatedUh48s > 0, "some snapshot's requests hold a uh48 twice")
   }
 }

@@ -61,7 +61,7 @@ class ResumeIntegritySpec extends AnyFunSuite {
     // partial-write mix: these tables "never made it" before the crash
     // (the concurrent write batch has no ordering guarantee), the rest
     // (fetch_log, requests_delta, titledb_delta, ...) did
-    Seq("replies_delta", "tag_state", "title_vecs", "seen_uh48", "seen_bloom", "ip_table")
+    Seq("replies_delta", "tag_state", "inlink_state", "seen_bloom", "ip_table")
       .foreach(n => rmrf(new java.io.File(s"$d3/$n")))
     assert(Crawl.latestSnapshot(b).contains(2), "manifest is the commit point")
     // resume: re-runs iteration 3 over snapshot-2 state, then runs 4
@@ -93,14 +93,12 @@ class ResumeIntegritySpec extends AnyFunSuite {
     val seenB = Crawl.loadRequests(spark, b, 4).select(col("uh48")).distinct()
     assert(sortedRows(seenB) == sortedRows(
       Crawl.loadRequests(spark, a, 4).select(col("uh48")).distinct()), "seen set")
-    // keyed chains, loaded through their own resolvers
+    // the keyed chains not compared above, loaded through their own
+    // resolvers
     def chain(w: String, t: Crawl.KeyedTable) = sortedRows(t.load(spark, w, 4))
-    assert(chain(b, Crawl.Keyed.titleVecs) == chain(a, Crawl.Keyed.titleVecs), "title_vecs chain")
-    assert(chain(b, Crawl.Keyed.seen) == chain(a, Crawl.Keyed.seen), "seen_uh48 chain")
-    // and the invariant the admission fast path rests on:
-    // seen_uh48 == the requests chain's uh48 set
-    assert(chain(b, Crawl.Keyed.seen).toSet == sortedRows(seenB).toSet,
-      "seen_uh48 == requests uh48 set")
+    Seq(Crawl.Keyed.dom, Crawl.Keyed.inlinks).foreach { t =>
+      assert(chain(b, t) == chain(a, t), s"${t.name} chain")
+    }
     // the seen bloom, bucket by bucket
     def bloom(w: String) = sortedRows(Crawl.loadLoopState(spark, w, 4, cfg).bloom
       .select(col("bloom_bucket"), org.apache.spark.sql.functions.sha2(col("bloom"), 256)))

@@ -7,7 +7,7 @@ import graft.frontier.{Crawl, StateTable}
 import java.nio.file.Files
 
 /** O(delta) state chains: bucketed full/delta writes, newest-bucket-wins
-  * loads, path-level pruning.
+  * loads, touched-bucket collection.
   * Delta-merge ≡ full-merge over a real crawl is pinned separately by
   * the committed crawl goldens (CrawlSpec runs the whole loop through
   * the delta path). */
@@ -25,6 +25,11 @@ class StateTableSpec extends AnyFunSuite {
 
   private def tmpdir(): String = Files.createTempDirectory("statetbl").toString
 
+  /** A delta's touched bucket ids, one table at a time. */
+  private def touchedBuckets(delta: DataFrame): Set[Int] =
+    delta.select(StateTable.bucketCol(keys(delta), B)).distinct()
+      .collect().map(_.getInt(0)).toSet
+
   private def loadAll(dir: String, i: Int): Map[Int, Long] =
     StateTable.load(spark, dir, i, "t", kv())
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -35,28 +40,16 @@ class StateTableSpec extends AnyFunSuite {
       s"${Crawl.snapDir(w, 0)}/t")
     // iteration 1 touches key 1's bucket: rewrite it merged
     val d1 = kv(1 -> 11L)
-    val touched = StateTable.touchedBuckets(d1, keys, B)
-    val prior = StateTable.loadBuckets(spark, w, 0, "t", kv(), Some(touched))
-    // prior must contain key 1 plus any same-bucket keys, nothing outside
-    val priorKeys = prior.collect().map(_.getInt(0)).toSet
-    assert(priorKeys.contains(1))
+    val touched = StateTable.touchedBucketsMulti(Seq((d1, keys _, B))).head
+    assert(touched == touchedBuckets(d1))
+    // the merge path's prior: the touched buckets' rows of the full table
+    val prior = StateTable.load(spark, w, 0, "t", kv())
+      .filter(StateTable.bucketCol(Seq(col("key")), B).isInCollection(touched))
+    assert(prior.collect().map(_.getInt(0)).toSet.contains(1))
     val merged = prior.unionByName(d1).groupBy("key").agg(max("n").as("n"))
     StateTable.writeDelta(merged, Seq(col("key")), B, s"${Crawl.snapDir(w, 1)}/t")
     val got = loadAll(w, 1)
     assert(got(1) == 11L && got(2) == 20L && got(3) == 30L && got.size == 3)
-  }
-
-  test("untouched buckets are not re-read: loadBuckets path-prunes") {
-    val w = tmpdir()
-    StateTable.writeFull(kv((0 until 64).map(k => k -> k.toLong): _*), Seq(col("key")), B,
-      s"${Crawl.snapDir(w, 0)}/t")
-    val wanted = StateTable.touchedBuckets(kv(5 -> 0L), keys, B)
-    assert(wanted.size == 1)
-    val rows = StateTable.loadBuckets(spark, w, 0, "t", kv(), Some(wanted))
-      .collect().map(_.getInt(0)).toSet
-    assert(rows.contains(5))
-    // only ~1/8 of the keys live in that bucket
-    assert(rows.size < 20, s"expected one bucket's keys, got ${rows.size}")
   }
 
   test("empty delta contributes nothing and does not stop the walk") {
@@ -107,8 +100,8 @@ class StateTableSpec extends AnyFunSuite {
       org.apache.spark.sql.GraftShim.waitListeners(spark)
       r
     } finally spark.sparkContext.removeSparkListener(l)
-    assert(got(0) == StateTable.touchedBuckets(a, keys, B))
-    assert(got(1) == StateTable.touchedBuckets(b, keys, B))
+    assert(got(0) == touchedBuckets(a))
+    assert(got(1) == touchedBuckets(b))
     assert(got(2) == Set.empty[Int])
     assert(got(3) == Set(0), "single-bucket table skips the scan")
     assert(jobs.get == 1, s"fused collection must be ONE job, ran ${jobs.get}")
