@@ -1538,7 +1538,7 @@ object Crawl {
 
   def writeManifest(workdir: String, i: Int, metrics: Seq[MetricsRow]): Unit = {
     val d = snapDir(workdir, i)
-    val m = metrics.map(x => s"""{"scheduled":${x.scheduled},"fetched":${x.fetched},"robots_denied":${x.robots_denied},"errors":${x.errors},"new_urls":${x.new_urls},"dups_dropped":${x.dups_dropped},"wall_ms":${x.wall_ms}}""").mkString("[", ",", "]")
+    val m = metrics.map(x => s"""{"scheduled":${x.scheduled},"fetched":${x.fetched},"robots_denied":${x.robots_denied},"errors":${x.errors},"new_urls":${x.new_urls},"dups_dropped":${x.dups_dropped},"wall_ms":${x.wall_ms},"codegen_compiles":${x.codegen_compiles},"shuffle_partitions":${x.shuffle_partitions},"quiet":${x.quiet}}""").mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$d/MANIFEST.json"),
       s"""{"iteration":$i,"lineage":$m}""")
   }
@@ -1642,7 +1642,7 @@ object Crawl {
   /** Run one full crawl iteration: read state as of snapshot i-1, write
     * snapshot i (request/reply DELTAS — O(new data), not O(frontier)).
     * Phases: load → schedule → fetch → resolve+admit → merge+commit. The
-    * iteration runs entirely on `spark` (Crawl.run passes the AQE-off
+    * iteration runs entirely on `spark` (Crawl.run passes the quiet
     * sibling for small batches) and every write has landed, manifest
     * last, when it returns. */
   def runIteration(spark: SparkSession, workdir: String, i: Int,
@@ -1650,6 +1650,7 @@ object Crawl {
                    hostMeta: Dataset[HostMeta], cfg: Config,
                    redirClosure: DataFrame = null): IterationResult = {
     val t0 = System.currentTimeMillis()
+    val compiles0 = GraftShim.codegenCompiles
     val st = loadLoopState(spark, workdir, i - 1, cfg)
     val doled = schedulePhase(st, cfg, i)
     val fetched = fetchPhase(spark, st, doled, pages, robots, cfg, i, redirClosure, snapDir(workdir, i))
@@ -1659,7 +1660,9 @@ object Crawl {
       fetched.errors, admitted.newUrls, fetched.outlinks - admitted.newUrls)
     // the manifest lands last: a snapshot without one is not resumable
     writeManifest(workdir, i, Seq(MetricsRow(i, r.scheduled, r.fetched, r.robotsDenied,
-      r.errors, r.newUrls, r.dupsDropped, System.currentTimeMillis() - t0)))
+      r.errors, r.newUrls, r.dupsDropped, System.currentTimeMillis() - t0,
+      GraftShim.codegenCompiles - compiles0, spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      GraftShim.isQuiet(spark))))
     (Seq(doled.cached, fetched.cached) ++ admitted.caches).foreach(_.unpersist())
     r
   }
@@ -2128,6 +2131,7 @@ object Crawl {
   /** Bootstrap snapshot 0 from seeds (full tables). */
   def init(spark: SparkSession, workdir: String, seedUrls: Seq[String], cfg: Config): Unit = {
     import spark.implicits._
+    val compiles0 = GraftShim.codegenCompiles
     val d = snapDir(workdir, 0)
     seeds(spark, seedUrls, cfg).write.mode("overwrite").parquet(s"$d/requests")
     val requests = spark.read.parquet(s"$d/requests")
@@ -2148,7 +2152,9 @@ object Crawl {
     spark.emptyDataset[TitleRow].write.mode("overwrite").parquet(s"$d/titledb")
     Seq.empty[(Int, Int, Int, String, Int, Int)].toDF("iteration", "first_ip", "seq", "url", "priority", "err_code")
       .write.mode("overwrite").parquet(s"$d/fetch_log")
-    writeManifest(workdir, 0, Seq(MetricsRow(0, 0, 0, 0, 0, seedUrls.size, 0, 0)))
+    writeManifest(workdir, 0, Seq(MetricsRow(0, 0, 0, 0, 0, seedUrls.size, 0, 0,
+      GraftShim.codegenCompiles - compiles0, spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      GraftShim.isQuiet(spark))))
   }
 
   /** S2: injection — push urls straight into the frontier with the
@@ -2259,24 +2265,26 @@ object Crawl {
     var downloaded = 0L
     var round = 1
     var stopStatus = -1
-    // micro-batch iterations run END-TO-END on an AQE-off sibling
-    // session (GraftShim.quietSession): under AQE every query-stage
-    // materialization is its own Spark job, and at small batches the
-    // loop is bound by job-scheduling fixed cost, not work (80 → 50
-    // jobs/iter measured from AQE alone). Rows are byte-equivalent —
-    // AQE only re-plans execution. Big batches keep AQE: skew-join
-    // splitting and partition coalescing are the 100×-scale story
-    // there. Gated on the PREVIOUS iteration's scheduled count (seeds
-    // for the first; a resume without that signal stays on the AQE
-    // session). Compaction always runs on the caller's session.
-    lazy val quietSpark = GraftShim.quietSession(spark)
+    // micro-batch iterations run END-TO-END on a quiet sibling session
+    // (GraftShim.quietSession), sized from the batch that gates it:
+    // under AQE every query-stage materialization is its own Spark job,
+    // at small batches the loop is bound by fixed cost, not work (80 →
+    // 50 jobs/iter measured from AQE alone), and generated code and
+    // idle shuffle partitions are more of the same fixed cost. AQE,
+    // codegen and partition count change only execution: rows are the
+    // same. Big batches keep the caller's session: skew-join splitting
+    // and partition coalescing are the 100×-scale story there. Gated
+    // on the PREVIOUS iteration's scheduled count (seeds for the first;
+    // a resume without that signal stays on the caller's session).
+    // Compaction always runs on the caller's session.
     var lastSched: Long =
       if (start == 1) (if (seedUrls.nonEmpty) seedUrls else Corpus.seeds(spec)).size.toLong
       else Long.MaxValue
     val out = scala.collection.mutable.ListBuffer[IterationResult]()
     var i = start
     while (i < start + iterations && stopStatus < 0) {
-      val iterSpark = if (lastSched < GraftShim.QuietBatchRows) quietSpark else spark
+      val iterSpark =
+        if (lastSched < GraftShim.QuietBatchRows) GraftShim.quietSession(spark, lastSched) else spark
       val r0 = runIteration(iterSpark, workdir, i, pages, robots, hostMeta, cfg, redirClosure)
       lastSched = r0.scheduled
       downloaded += r0.fetched

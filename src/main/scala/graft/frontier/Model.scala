@@ -209,7 +209,12 @@ final case class MetricsRow(
     errors: Long,
     new_urls: Long,
     dups_dropped: Long,
-    wall_ms: Long
+    wall_ms: Long,
+    // how the iteration ran: Janino compiles in this JVM over it, its
+    // shuffle partitions, and whether it ran on the quiet session
+    codegen_compiles: Long,
+    shuffle_partitions: Int,
+    quiet: Boolean
 )
 
 /** Error codes used by the engine — values probed from the reference's

@@ -49,9 +49,8 @@ object Native {
 
 /** Native Catalyst expressions for the engine's scalar kernel functions
   * (SURVEY §4 "Custom needed"): codegen-friendly, null-safe, registered
-  * as SQL functions `uh48`, `gb_hash32`, `canonicalize_url`, `url_host`,
-  * `url_domain`, `fake_first_ip`, `extract_text` via
-  * [[GraftExtensions]] (spark.sql.extensions) or [[registerAll]]. */
+  * as SQL functions (the one-argument ones in `GraftFunctions.fns`) via
+  * [[GraftExtensions]] (spark.sql.extensions) or `registerAll`. */
 // NOTE: no constructor parameters — Java deserialization requires every
 // non-serializable superclass to expose a no-arg constructor, and these
 // expressions ride inside task-serialized join-key Seqs (an abstract
@@ -196,7 +195,9 @@ object GraftFunctions {
   def planeSig(c: Column, nPlanes: Int, dim: Int): Column = column(PlaneSigExpr(expression(c), nPlanes, dim))
   def vdot(a: Column, b: Column): Column = column(VDotExpr(expression(a), expression(b)))
 
-  private val fns: Seq[(String, Expression => Expression)] = Seq(
+  /** The one list of graft's one-argument SQL functions, read by
+    * [[registerAll]] and [[GraftExtensions]]. */
+  private[graft] val fns: Seq[(String, Expression => Expression)] = Seq(
     "uh48" -> (Uh48Expr(_)),
     "gb_hash32" -> (Hash32Expr(_)),
     "gb_hash64b" -> (Hash64bExpr(_)),
@@ -205,31 +206,25 @@ object GraftFunctions {
     "url_domain" -> (UrlDomainExpr(_)),
     "fake_first_ip" -> (FakeFirstIpExpr(_)),
     "extract_text" -> (ExtractTextExpr(_)),
-    "site_key_hash32" -> (SiteKeyHash32Expr(_)))
+    "site_key_hash32" -> (SiteKeyHash32Expr(_)),
+    "simhash64" -> (Simhash64Expr(_)),
+    "fingerprint64" -> (Fingerprint64Expr(_)),
+    "lang_id" -> (LangIdExpr(_)))
+
+  private[functions] def registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    fns.map { case (name, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo("graft.functions", name),
+        (children: Seq[Expression]) => builder(children.head))
+    }
 
   /** Register as SQL functions on an existing session. */
-  def registerAll(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions", name),
-      (children: Seq[Expression]) => builder(children.head))
+  def registerAll(spark: SparkSession): Unit = registrations.foreach { case (id, info, builder) =>
+    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
   }
 }
 
 /** `--conf spark.sql.extensions=graft.functions.GraftExtensions` */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    Seq[(String, Seq[Expression] => Expression)](
-      "uh48" -> (cs => Uh48Expr(cs.head)),
-      "gb_hash32" -> (cs => Hash32Expr(cs.head)),
-      "canonicalize_url" -> (cs => CanonicalizeUrlExpr(cs.head)),
-      "url_host" -> (cs => UrlHostExpr(cs.head)),
-      "url_domain" -> (cs => UrlDomainExpr(cs.head)),
-      "fake_first_ip" -> (cs => FakeFirstIpExpr(cs.head)),
-      "extract_text" -> (cs => ExtractTextExpr(cs.head)),
-      "site_key_hash32" -> (cs => SiteKeyHash32Expr(cs.head))
-    ).foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft.functions", name), builder))
-    }
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.registrations.foreach(ext.injectFunction)
 }

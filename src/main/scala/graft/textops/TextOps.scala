@@ -152,23 +152,16 @@ object TextOps {
     // a constant — guide §2). A bounded scalar action, like the
     // crawl's per-partition tally.
     val nEdges = edges.count()
-    // micro graphs: run the per-round propagation through an AQE-off
-    // sibling session with edge-count-derived shuffle partitions —
-    // under AQE every query-stage materialization is its own Spark
-    // job, which triples the per-round job count on a graph whose
-    // rounds take milliseconds (the crawl loop's quiet session; same
-    // SparkContext, same cache, byte-equivalent output — AQE only
-    // re-plans). Big edge lists keep AQE: skew-join splitting and
+    // micro graphs: run the per-round propagation through the quiet
+    // sibling session sized from the edge count — under AQE every
+    // query-stage materialization is its own Spark job, which triples
+    // the per-round job count on a graph whose rounds take milliseconds
+    // (the crawl loop's quiet session; same SparkContext, same cache;
+    // AQE, codegen and partition count change only execution). Big
+    // edge lists keep the caller's session: skew-join splitting and
     // partition coalescing are the 100×-scale story there.
     val quiet: SparkSession =
-      if (nEdges >= GraftShim.QuietBatchRows ||
-        spark.conf.get("spark.sql.adaptive.enabled", "true") == "false") spark
-      else {
-        val q = GraftShim.quietSession(spark)
-        q.conf.set("spark.sql.shuffle.partitions",
-          math.max(1L, nEdges / 50000L).toString)
-        q
-      }
+      if (nEdges >= GraftShim.QuietBatchRows) spark else GraftShim.quietSession(spark, nEdges)
     def onQuiet(df: DataFrame): DataFrame =
       if (quiet eq spark) df
       else GraftShim.onSession(quiet, df)

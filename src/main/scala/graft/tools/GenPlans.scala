@@ -38,7 +38,7 @@ object GenPlans {
 
     def section(title: String, audit: String, df: DataFrame): Unit = {
       out ++= s"## $title\n\n$audit\n\n```\n"
-      out ++= GraftShim.explainFormatted(df).trim
+      out ++= normalize(GraftShim.explainFormatted(df).trim, work)
       out ++= "\n```\n\n"
     }
 
@@ -136,5 +136,22 @@ object GenPlans {
     java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), out.toString)
     println(s"PLANS.md written (${out.length} chars)")
     spark.stop()
+  }
+
+  /** Plan text without what changes from run to run: expression ids
+    * (`uh48#12537L`) and `plan_id`s renumbered from 1 in order of first
+    * use, the temp workdir written as `<workdir>`, and JVM object
+    * identities (`Crawl$$$Lambda$5704/0x00007f14655fac20@1288c40a`,
+    * `ReduceAggregator@4e38213`) without their numbers. A regenerated
+    * PLANS.md then differs only where a plan did. */
+  def normalize(plan: String, workdir: String): String = {
+    def renumber(s: String, re: scala.util.matching.Regex, prefix: String): String = {
+      val ids = scala.collection.mutable.HashMap[String, Int]()
+      re.replaceAllIn(s, m => prefix + ids.getOrElseUpdate(m.group(1), ids.size + 1))
+    }
+    val anonymous = plan.replace(workdir, "<workdir>")
+      .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$\\$Lambda")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]+\\b", "@<id>")
+    renumber(renumber(anonymous, "#(\\d+)".r, "#"), "plan_id=(\\d+)".r, "plan_id=")
   }
 }

@@ -23,16 +23,19 @@ object GraftShim {
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
   /** Lineage cut: a new DataFrame whose logical plan is a LogicalRDD
-    * leaf over `df`'s physical RDD (lazy — nothing executes here; the
-    * RDD reads df's cache once df is persisted+materialized). Carried
-    * crawl state chains generations of plans into one tree; Catalyst
-    * stringifies plans eagerly when building InMemoryRelations, and an
+    * leaf over `df`'s physical RDD (lazy — only the plan's broadcasts
+    * start here, as the RDD is prepared, and they run under df's
+    * session conf, as inside an execution; the RDD reads df's cache
+    * once df is persisted+materialized). Carried crawl state chains
+    * generations of plans into one tree; Catalyst stringifies plans
+    * eagerly when building InMemoryRelations, and an
     * exponentially-shared tree OOMs the driver on pure plan TEXT. Same
     * trick as Dataset.checkpoint's internals. */
   def cutLineage(df: DataFrame): DataFrame = {
     val cdf = df.asInstanceOf[classic.Dataset[_]]
     val session = cdf.sparkSession
-    val rdd = cdf.queryExecution.toRdd
+    val rdd = org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(session)(
+      cdf.queryExecution.toRdd)
     classic.Dataset.ofRows(session,
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false))
   }
@@ -44,16 +47,44 @@ object GraftShim {
     * materializations is one more Spark job of pure fixed cost. */
   val QuietBatchRows: Long = 1000000L
 
-  /** The AQE-off sibling of `spark`: same SparkContext, shared state
-    * and cache, and a copy of the parent's SQL conf, registered
-    * functions and planning strategies (cloneSession is private[sql]).
-    * Only the sibling's AQE flag changes; the parent is untouched.
-    * Output is byte-equivalent — AQE only re-plans execution. */
-  def quietSession(spark: SparkSession): SparkSession = {
+  /** Rows one shuffle partition of a quiet query is sized for. */
+  val RowsPerPartition: Long = 50000L
+
+  private val FactoryMode = "spark.sql.codegen.factoryMode"
+
+  /** The sibling of `spark` that runs work of `rows` rows below
+    * [[QuietBatchRows]]: same SparkContext, shared state and cache, and
+    * a copy of the parent's SQL conf, registered functions and planning
+    * strategies (cloneSession is private[sql]). The sibling turns off
+    * AQE, whole-stage codegen and expression codegen — every projection,
+    * predicate and ordering is interpreted (Spark's
+    * CodeGeneratorWithInterpretedFallback reads `factoryMode` outside
+    * tests too), so a micro-batch compiles only what Spark generates
+    * outside those switches (in-memory column accessors, typed-object
+    * deserializers, row joiners) — and runs clamp(ceil(rows / RowsPerPartition), 1, parent's value)
+    * shuffle partitions, so a small batch is a few tasks per stage
+    * rather than the parent's full count. The parent is untouched.
+    * AQE, codegen and partition count change only execution: rows are
+    * the same. */
+  def quietSession(spark: SparkSession, rows: Long): SparkSession = {
+    val parts = math.min(math.max(1L, (rows - 1) / RowsPerPartition + 1),
+      spark.conf.get("spark.sql.shuffle.partitions").toLong)
     val q = spark.asInstanceOf[classic.SparkSession].cloneSession()
     q.conf.set("spark.sql.adaptive.enabled", "false")
+    q.conf.set("spark.sql.codegen.wholeStage", "false")
+    q.conf.set(FactoryMode, "NO_CODEGEN")
+    q.conf.set("spark.sql.shuffle.partitions", parts.toString)
     q
   }
+
+  /** Whether `spark` is a [[quietSession]]. */
+  def isQuiet(spark: SparkSession): Boolean =
+    spark.conf.get(FactoryMode, "FALLBACK") == "NO_CODEGEN"
+
+  /** Janino compiles in this JVM so far (driver and, in local mode,
+    * executors): Spark's CodegenMetrics compilation-time histogram count. */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Re-bind a DataFrame's analyzed plan to another session (same
     * SparkContext/sharedState — caches still resolve), so a query can

@@ -7,17 +7,13 @@ import graft.frontier._
 /** End-to-end crawl correctness: determinism, crawl-order stability,
   * robots gating, media filtering, seen-set exactness, resume equivalence
   * (the reference's deterministic-replay pattern, Test.cpp:67-71). */
-class CrawlSpec extends AnyFunSuite {
+class CrawlSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private val spec = Corpus.micro
   private val cfg = Crawl.Config()
 
-  private def tmpdir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graftcrawl").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmpdir(): String = tmpdir("graftcrawl")
 
   private def fetchOrder(workdir: String, upTo: Int): Seq[(Int, Int, Int, String)] = {
     import spark.implicits._
@@ -128,6 +124,15 @@ class CrawlSpec extends AnyFunSuite {
       assert(Seq(field("scheduled"), field("fetched"), field("robots_denied"), field("errors"),
         field("new_urls")) == Seq(r.scheduled, r.fetched, r.robotsDenied, r.errors, r.newUrls),
         s"snapshot $i manifest $m vs $r")
+      // how the iteration ran: micro batches run on the quiet session,
+      // on one shuffle partition, and compile only the classes Spark
+      // generates outside its codegen switches (the first iteration also
+      // those that init and the previous crawls pushed out of Spark's
+      // 100-entry class cache)
+      assert(m.contains(""""quiet":true"""), s"snapshot $i manifest $m")
+      assert(field("shuffle_partitions") == 1, s"snapshot $i manifest $m")
+      assert(field("codegen_compiles") >= 0 && (i == 1 || field("codegen_compiles") <= 50),
+        s"snapshot $i manifest $m")
     }
   }
 

@@ -6,11 +6,11 @@ import graft.frontier.{Corpus, Crawl}
 /** A9: SP_* crawl-status taxonomy + crawl limits (Spider.h:32-42,
   * getSpiderStatusMsg Spider.cpp:14540+, maxToCrawl stop like
   * spiderDoledUrls' cap check). */
-class CrawlStatusSpec extends AnyFunSuite {
+class CrawlStatusSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("maxToCrawl cap flips status to SP_MAXTOCRAWL and stops the loop") {
-    val work = java.nio.file.Files.createTempDirectory("graft_status1").toString
+    val work = tmpdir("graft_status1")
     val res = Crawl.run(spark, work, Corpus.micro, 8,
       Crawl.Config(maxToCrawl = 5L))
     assert(res.nonEmpty && res.size < 8, "cap must stop the loop early")
@@ -22,7 +22,7 @@ class CrawlStatusSpec extends AnyFunSuite {
   }
 
   test("round exhaustion with maxRounds=1 converts ROUNDDONE to SP_MAXROUNDS") {
-    val work = java.nio.file.Files.createTempDirectory("graft_status2").toString
+    val work = tmpdir("graft_status2")
     val spec = Corpus.Spec(1, 1, 2) // one host, exhausts in a few iterations
     val res = Crawl.run(spark, work, spec, 12,
       Crawl.Config(maxRounds = 1),
@@ -33,7 +33,7 @@ class CrawlStatusSpec extends AnyFunSuite {
   }
 
   test("maxRounds=0 means NO round limit (m_maxCrawlRounds > 0 gate, Spider.cpp:6600-6603)") {
-    val work = java.nio.file.Files.createTempDirectory("graft_status3").toString
+    val work = tmpdir("graft_status3")
     val spec = Corpus.Spec(1, 1, 2)
     val res = Crawl.run(spark, work, spec, 8,
       Crawl.Config(maxRounds = 0),

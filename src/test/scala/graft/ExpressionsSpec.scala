@@ -74,6 +74,54 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("every SQL function and kernel gives the same rows interpreted (quiet session) as generated") {
+    import org.apache.spark.sql.{Column, GraftShim, Row}
+    import org.apache.spark.sql.types._
+    val texts = Seq(null, "",
+      "http://www.example.com/a/../b.html",
+      "HTTPS://News.Site.co.uk:443/x?a=1&&b=2",
+      "http://1.2.3.4/ip",
+      "http://bücher.de/straße?q=日本語",
+      "<p>fish &amp; chips</p><script>no</script><a href=\"/x\">héllo wörld</a>",
+      "the quick brown fox jumps over the lazy dog and the quick brown fox",
+      "der Hund und die Katze sind nicht mit dem Auto gefahren",
+      "Съешь же ещё этих мягких французских булок, да выпей чаю")
+    val vecs = Seq[Seq[Float]](null, Seq.empty, Seq(1f, -2f, 0.5f), Seq(-0.25f), Seq(3f, 0f, -1f, 7f))
+    val rows = texts.zipWithIndex.map { case (t, k) =>
+      Row(k, t, Option(t).map(_.getBytes("UTF-8")).orNull, vecs(k % vecs.size))
+    }
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("s", StringType),
+      StructField("b", BinaryType), StructField("v", ArrayType(FloatType))))
+    // an RDD source, not local rows: the optimizer would evaluate a
+    // projection over local rows on the driver, on both sessions alike
+    val input = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val kernels: Seq[(String, Column)] = GraftFunctions.fns.map { case (name, build) =>
+      name -> GraftShim.toColumn(build(GraftShim.toExpression(col(if (name == "extract_text") "b" else "s"))))
+    } ++ Seq(
+      "minhash_sig" -> GraftFunctions.minhashSig(col("s"), 4),
+      "plane_sig" -> GraftFunctions.planeSig(col("v"), 8, 3),
+      "vdot" -> GraftFunctions.vdot(col("v"), col("v")))
+    val df = input.select(col("id") +: kernels.map { case (n, c) => c.as(n) }: _*)
+    def run(s: org.apache.spark.sql.SparkSession): (String, Long, Seq[Seq[Any]]) = {
+      val d = GraftShim.onSession(s, df)
+      val compiles0 = GraftShim.codegenCompiles
+      val out = d.collect().sortBy(_.getInt(0)).map(_.toSeq).toSeq
+      (GraftShim.explainFormatted(d), GraftShim.codegenCompiles - compiles0, out)
+    }
+    val (genPlan, _, generated) = run(spark)
+    val (quietPlan, quietCompiles, interpreted) = run(GraftShim.quietSession(spark, rows.size))
+    // `[codegen id : n]` marks an operator inside a whole-stage codegen span
+    assert(genPlan.contains("[codegen id"), genPlan)
+    assert(!quietPlan.contains("[codegen id"), quietPlan)
+    assert(quietCompiles == 0, "the quiet session must not generate code")
+    assert(generated.size == texts.size)
+    kernels.map(_._1).zipWithIndex.foreach { case (name, c) =>
+      assert(interpreted.map(_(c + 1)) == generated.map(_(c + 1)), name)
+      assert(generated.exists(_(c + 1) != null), s"$name is null on every row")
+    }
+    assert(generated.head.tail.forall(_ == null), "null input, null output")
+  }
+
   test("null propagation") {
     import spark.implicits._
     val df = Seq[(String)](null.asInstanceOf[String]).toDF("u")

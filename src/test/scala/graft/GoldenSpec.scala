@@ -9,7 +9,7 @@ import graft.rules._
   * crctable.dat pattern, qa.cpp:234-262): any semantic drift in hashing,
   * canonicalization, robots, url-filters, extraction, crawl order, or the
   * seen set fails here even if the dynamic determinism tests still pass. */
-class GoldenSpec extends AnyFunSuite {
+class GoldenSpec extends AnyFunSuite with TempDirs {
 
   private def golden(name: String): Seq[String] = {
     // crawl-pipeline goldens moved to the main classpath (/graft/golden)
@@ -100,7 +100,7 @@ class GoldenSpec extends AnyFunSuite {
   test("crawl order + seen set golden (8 iterations, micro corpus)") {
     val spark = SparkTestSession.spark
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_goldenspec").toString
+    val work = tmpdir("graft_goldenspec")
     Crawl.run(spark, work, Corpus.micro, 8)
     val got = (1 to 8).flatMap { i =>
       spark.read.parquet(s"${Crawl.snapDir(work, i)}/fetch_log")

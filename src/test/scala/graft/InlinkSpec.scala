@@ -10,7 +10,7 @@ import graft.frontier._
   * wiring in round 1 (engine passed literal 0). See InlinkState scaladoc
   * for the documented deviation from the reference's vestigial scan
   * (Spider.cpp:4286-4327; Spider.h:520 m_parentFirstIp commented out). */
-class InlinkSpec extends AnyFunSuite {
+class InlinkSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -57,7 +57,7 @@ class InlinkSpec extends AnyFunSuite {
 
   test("inlink state accumulates distinct parent c-blocks across iterations, cap 20") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graftinlink").toString
+    val work = tmpdir("graftinlink")
     Crawl.run(spark, work, Corpus.micro, 3)
     val st = Crawl.loadInlinkState(spark, work, Crawl.latestSnapshot(work).get).collect()
     assert(st.nonEmpty, "inlink state written")

@@ -17,7 +17,7 @@ import graft.frontier._
   *      waiting tree equals the one scheduled by a full scan;
   *  (d) the seen bloom is a superset of the requests: every request
   *      uh48 is bloom-positive. */
-class IpTableSpec extends AnyFunSuite {
+class IpTableSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private val cfg = Crawl.Config()
@@ -30,7 +30,7 @@ class IpTableSpec extends AnyFunSuite {
 
   test("per-IP counts, seen set and due-IP pruning follow the requests chain") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_iptable").toString
+    val work = tmpdir("graft_iptable")
     Crawl.run(spark, work, Corpus.micro, 2, cfg)
     val n = Crawl.inject(spark, work,
       Seq("http://www.h7.test/injected.html", "http://www.h0.test/"), cfg)

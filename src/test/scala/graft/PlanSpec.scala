@@ -93,4 +93,23 @@ class PlanSpec extends AnyFunSuite {
     assert(exAt >= 0 && semiAt > exAt,
       s"semi-join must be under the exchange (appear after it in the tree):\n$p")
   }
+
+  test("GenPlans.normalize: the same query planned twice gives the same text") {
+    val work = "/tmp/graft_plans0123"
+    def build() = {
+      val t = spark.range(100).select(col("id"), (col("id") % 7).as("k"))
+      org.apache.spark.sql.GraftShim.explainFormatted(
+        t.join(broadcast(t.groupBy("k").count()), "k"))
+    }
+    val (a, b) = (build(), build())
+    assert(a != b, "fresh expression ids must differ before normalising")
+    assert(graft.tools.GenPlans.normalize(a, work) == graft.tools.GenPlans.normalize(b, work))
+    assert(graft.tools.GenPlans.normalize(
+      s"Output [2]: [uh48#12537L, url#12539]\nInput [1]: [uh48#12537L]\n" +
+        s"Location: InMemoryFileIndex [file:$work/snap_00000/requests]\n[plan_id=9027]\n" +
+        "Arguments: graft.frontier.Crawl$$$Lambda$5704/0x00007f14655fac20@1288c40a, ReduceAggregator@4e38213", work) ==
+      "Output [2]: [uh48#1L, url#2]\nInput [1]: [uh48#1L]\n" +
+        "Location: InMemoryFileIndex [file:<workdir>/snap_00000/requests]\n[plan_id=1]\n" +
+        "Arguments: graft.frontier.Crawl$$$Lambda@<id>, ReduceAggregator@<id>")
+  }
 }

@@ -8,7 +8,7 @@ import graft.frontier._
   * simplified redirects re-queue the target keeping the hop count; plain
   * redirects are followed through to the final content; loops and
   * over-long chains error with the reference's codes. */
-class RedirectSpec extends AnyFunSuite {
+class RedirectSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -44,7 +44,7 @@ class RedirectSpec extends AnyFunSuite {
   }
 
   test("crawl through redirects: simplified re-queued with hop kept; plain followed") {
-    val work = java.nio.file.Files.createTempDirectory("graft_redir").toString
+    val work = tmpdir("graft_redir")
     Crawl.run(spark, work, Corpus.micro, 7)
     import spark.implicits._
     val reps = Crawl.loadReplies(spark, work, 7).collect().map(r => r.uh48 -> r).toMap

@@ -7,7 +7,7 @@ import graft.frontier._
 /** Reply-side analysis truth (getNewSpiderReply inputs): isRSS from the
   * parse, isPermalink, percentChangedPerDay against the previous reply,
   * and the ParentIsRSS propagation to outlinks. */
-class ReplyTruthSpec extends AnyFunSuite {
+class ReplyTruthSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -40,7 +40,7 @@ class ReplyTruthSpec extends AnyFunSuite {
   }
 
   test("RSS feed reply carries RepIsRSS; its outlinks carry ParentIsRSS") {
-    val work = java.nio.file.Files.createTempDirectory("graft_rss").toString
+    val work = tmpdir("graft_rss")
     Crawl.run(spark, work, Corpus.micro, 7)
     import spark.implicits._
     val reps = Crawl.loadReplies(spark, work, 7)

@@ -17,22 +17,13 @@ import graft.frontier._
   * The reference's analogue: spiderdb adds are Msg4-logged and replayed
   * after a crash; doledb is rebuilt from spiderdb (Spider.cpp doledb
   * rebuild on startup), so a partially-doled batch is re-doled. */
-class ResumeIntegritySpec extends AnyFunSuite {
+class ResumeIntegritySpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private val spec = Corpus.micro
   private val cfg = Crawl.Config()
 
-  private def tmpdir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graftresume").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
-
-  private def rmrf(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).getOrElse(Array.empty).foreach(rmrf)
-    p.delete(); ()
-  }
+  private def tmpdir(): String = tmpdir("graftresume")
 
   private def fetchOrder(workdir: String, upTo: Int): Seq[(Int, Int, Int, String, Int)] = {
     import spark.implicits._
@@ -62,7 +53,7 @@ class ResumeIntegritySpec extends AnyFunSuite {
     // (the concurrent write batch has no ordering guarantee), the rest
     // (fetch_log, requests_delta, titledb_delta, ...) did
     Seq("replies_delta", "tag_state", "inlink_state", "seen_bloom", "ip_table")
-      .foreach(n => rmrf(new java.io.File(s"$d3/$n")))
+      .foreach(n => TempDirs.deleteTree(java.nio.file.Paths.get(s"$d3/$n")))
     assert(Crawl.latestSnapshot(b).contains(2), "manifest is the commit point")
     // resume: re-runs iteration 3 over snapshot-2 state, then runs 4
     Crawl.run(spark, b, spec, 2, cfg)

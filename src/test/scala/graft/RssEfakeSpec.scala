@@ -16,13 +16,12 @@ import graft.frontier._
   *  - compaction drops answered one-hit requests (reindex/fake,
   *    Spider.cpp:13721-13729) and keys the coexistence signature on
   *    hasContent/forceDelete too (Spider.cpp:13779-13789) */
-class RssEfakeSpec extends AnyFunSuite {
+class RssEfakeSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private val cfg = Crawl.Config()
 
-  private def tmpdir(): String =
-    java.nio.file.Files.createTempDirectory("graft_rssefake").toString
+  private def tmpdir(): String = tmpdir("graft_rssefake")
 
   private def fetchOne(url: String, html: String, hop: Int): Crawl.FetchResult = {
     import spark.implicits._

@@ -6,7 +6,7 @@ import graft.frontier._
 import graft.sources.Warc
 import graft.streaming.SeedStream
 
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -17,7 +17,7 @@ class SourcesSpec extends AnyFunSuite {
       val url = Corpus.pageUrl(k, 0, spec)
       (url, "2014-01-01T00:00:00Z", Corpus.pageHtml(k, 0, spec).getBytes("UTF-8"))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graftwarc")
+    val dir = java.nio.file.Paths.get(tmpdir("graftwarc"))
     java.nio.file.Files.write(dir.resolve("fixture.warc"), Warc.buildWarc(recs))
     val pages = Warc.readPages(spark, dir.toString).collect().sortBy(_.url)
     assert(pages.length == 3)
@@ -34,7 +34,7 @@ class SourcesSpec extends AnyFunSuite {
       val url = Corpus.pageUrl(k, 0, spec)
       (url, "2014-01-01T00:00:00Z", Corpus.pageHtml(k, 0, spec).getBytes("UTF-8"), enc)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graftwarcgz")
+    val dir = java.nio.file.Paths.get(tmpdir("graftwarcgz"))
     java.nio.file.Files.write(dir.resolve("fixture.warc"),
       Warc.buildWarcEnc(Seq(rec(0, "gzip"), rec(1, "deflate"), rec(3, ""))))
     // a corrupt gzip member: valid mime advertising gzip, garbage body
@@ -65,7 +65,7 @@ class SourcesSpec extends AnyFunSuite {
       .getBytes("ISO-8859-1")
     val html = "<html><body>plain member</body></html>".getBytes("UTF-8")
     val gif = Array[Byte]('G', 'I', 'F', '8', '9', 'a', 0, 0)
-    val dir = java.nio.file.Files.createTempDirectory("graftwarcpdf")
+    val dir = java.nio.file.Paths.get(tmpdir("graftwarcpdf"))
     java.nio.file.Files.write(dir.resolve("fixture.warc"), Warc.buildWarcCt(Seq(
       ("http://www.hp.test/doc.pdf", "2014-01-01T00:00:00Z", pdf, "", "application/pdf"),
       ("http://www.hp.test/", "2014-01-01T00:00:00Z", html, "", "text/html"),
@@ -93,7 +93,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("injection appends frontier delta and bypasses politeness") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graftinject").toString
+    val work = tmpdir("graftinject")
     val cfg = Crawl.Config()
     Crawl.run(spark, work, Corpus.micro, 2, cfg)
     val before = Crawl.loadRequests(spark, work, Crawl.latestSnapshot(work).get).count()
@@ -115,7 +115,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("injection right after compaction is not lost (full table + delta in one snapshot)") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graftinject2").toString
+    val work = tmpdir("graftinject2")
     val cfg = Crawl.Config()
     // 4 iterations with compactEvery=4 → snap_4 holds FULL tables
     Crawl.run(spark, work, Corpus.micro, 4, cfg, compactEvery = 4)

@@ -4,14 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.frontier.{Crawl, StateTable}
-import java.nio.file.Files
 
 /** O(delta) state chains: bucketed full/delta writes, newest-bucket-wins
   * loads, touched-bucket collection.
   * Delta-merge ≡ full-merge over a real crawl is pinned separately by
   * the committed crawl goldens (CrawlSpec runs the whole loop through
   * the delta path). */
-class StateTableSpec extends AnyFunSuite {
+class StateTableSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private val B = 8
@@ -23,7 +22,7 @@ class StateTableSpec extends AnyFunSuite {
 
   private def keys(df: DataFrame) = Seq(df("key"))
 
-  private def tmpdir(): String = Files.createTempDirectory("statetbl").toString
+  private def tmpdir(): String = tmpdir("statetbl")
 
   /** A delta's touched bucket ids, one table at a time. */
   private def touchedBuckets(delta: DataFrame): Set[Int] =

@@ -5,12 +5,12 @@ import graft.core.{GbUrl, GbXml}
 import graft.frontier._
 
 /** S7 titledb sink (crawled-content snapshot) + S3 query reindex. */
-class TitledbSpec extends AnyFunSuite {
+class TitledbSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
   test("titledb accumulates fetched pages, byte-exact, compaction keeps latest") {
-    val work = java.nio.file.Files.createTempDirectory("graft_titledb").toString
+    val work = tmpdir("graft_titledb")
     Crawl.run(spark, work, Corpus.micro, 5) // compaction at 4
     val i = Crawl.latestSnapshot(work).get
     val rows = Crawl.loadTitledb(spark, work, i).collect()
@@ -46,7 +46,7 @@ class TitledbSpec extends AnyFunSuite {
   }
 
   test("reindex (S3): re-queues a crawled url immediately, refetch updates titledb") {
-    val work = java.nio.file.Files.createTempDirectory("graft_reindex").toString
+    val work = tmpdir("graft_reindex")
     val cfg = Crawl.Config()
     Crawl.run(spark, work, Corpus.micro, 4, cfg)
     val url = "http://www.h0.test/s1/" // crawled at iteration 3 (seeds take the
