@@ -1339,6 +1339,16 @@ object Crawl {
     * pruning keeps the seen-set scan (uh48 only) cheap. */
   private def loadTable(spark: SparkSession, workdir: String, i: Int, name: String,
       schema: org.apache.spark.sql.types.StructType = null): DataFrame = {
+    // explicit schema when the caller knows it: the footer-reading
+    // schema-inference job per chain part goes away (the LSM chain is
+    // many small dirs by design — at 5 iters that was ~7 jobs/iter)
+    val reader = if (schema != null) spark.read.schema(schema) else spark.read
+    chainParts(workdir, i, name).map(reader.parquet(_)).reduce(_ unionByName _)
+  }
+
+  /** The directories of table `name`'s chain as of snapshot i: its
+    * deltas back to the last full table, oldest first. */
+  private def chainParts(workdir: String, i: Int, name: String): List[String] = {
     var parts = List.empty[String]
     var k = i
     var done = false
@@ -1352,12 +1362,29 @@ object Crawl {
       if (new java.io.File(full).exists) { parts ::= full; done = true }
       else k -= 1
     }
-    // explicit schema when the caller knows it: the footer-reading
-    // schema-inference job per chain part goes away (the LSM chain is
-    // many small dirs by design — at 5 iters that was ~7 jobs/iter)
-    val reader = if (schema != null) spark.read.schema(schema) else spark.read
-    parts.map(reader.parquet(_)).reduce(_ unionByName _)
+    parts
   }
+
+  /** Rows in table `name`'s chain as of snapshot i, summed from the
+    * parquet footers: driver-side file reads, no job. */
+  def chainRows(spark: SparkSession, workdir: String, i: Int, name: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    chainParts(workdir, i, name).iterator
+      .flatMap(d => Option(new java.io.File(d).listFiles()).getOrElse(Array.empty[java.io.File]))
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toURI), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+  }
+
+  /** Rows in the largest table an iteration on snapshot i shuffles
+    * whole, whatever its batch: the requests chain (the seen set, J2's
+    * anti-join, the due slices), replies and titledb (the latest
+    * vector per url). */
+  def stateRows(spark: SparkSession, workdir: String, i: Int): Long =
+    Seq("requests", "replies", "titledb").map(chainRows(spark, workdir, i, _)).max
 
   def loadRequests(spark: SparkSession, workdir: String, i: Int): Dataset[FrontierRequest] = {
     import spark.implicits._
@@ -2266,17 +2293,19 @@ object Crawl {
     var round = 1
     var stopStatus = -1
     // micro-batch iterations run END-TO-END on a quiet sibling session
-    // (GraftShim.quietSession), sized from the batch that gates it:
-    // under AQE every query-stage materialization is its own Spark job,
-    // at small batches the loop is bound by fixed cost, not work (80 →
-    // 50 jobs/iter measured from AQE alone), and generated code and
-    // idle shuffle partitions are more of the same fixed cost. AQE,
-    // codegen and partition count change only execution: rows are the
-    // same. Big batches keep the caller's session: skew-join splitting
-    // and partition coalescing are the 100×-scale story there. Gated
-    // on the PREVIOUS iteration's scheduled count (seeds for the first;
-    // a resume without that signal stays on the caller's session).
-    // Compaction always runs on the caller's session.
+    // (GraftShim.quietSession): under AQE every query-stage
+    // materialization is its own Spark job, at small batches the loop
+    // is bound by fixed cost, not work (80 → 50 jobs/iter measured from
+    // AQE alone), and generated code and idle shuffle partitions are
+    // more of the same fixed cost. AQE, codegen and partition count
+    // change only execution: rows are the same. Big batches keep the
+    // caller's session: skew-join splitting and partition coalescing
+    // are the 100×-scale story there. Gated on the PREVIOUS iteration's
+    // scheduled count (seeds for the first; a resume without that
+    // signal stays on the caller's session). The partitions are sized
+    // from the larger of that batch and the state tables the iteration
+    // shuffles whole, so a big frontier behind small batches keeps its
+    // parallelism. Compaction always runs on the caller's session.
     var lastSched: Long =
       if (start == 1) (if (seedUrls.nonEmpty) seedUrls else Corpus.seeds(spec)).size.toLong
       else Long.MaxValue
@@ -2284,7 +2313,9 @@ object Crawl {
     var i = start
     while (i < start + iterations && stopStatus < 0) {
       val iterSpark =
-        if (lastSched < GraftShim.QuietBatchRows) GraftShim.quietSession(spark, lastSched) else spark
+        if (lastSched < GraftShim.QuietBatchRows)
+          GraftShim.quietSession(spark, math.max(lastSched, stateRows(spark, workdir, i - 1)))
+        else spark
       val r0 = runIteration(iterSpark, workdir, i, pages, robots, hostMeta, cfg, redirClosure)
       lastSched = r0.scheduled
       downloaded += r0.fetched

@@ -206,10 +206,7 @@ object GraftFunctions {
     "url_domain" -> (UrlDomainExpr(_)),
     "fake_first_ip" -> (FakeFirstIpExpr(_)),
     "extract_text" -> (ExtractTextExpr(_)),
-    "site_key_hash32" -> (SiteKeyHash32Expr(_)),
-    "simhash64" -> (Simhash64Expr(_)),
-    "fingerprint64" -> (Fingerprint64Expr(_)),
-    "lang_id" -> (LangIdExpr(_)))
+    "site_key_hash32" -> (SiteKeyHash32Expr(_)))
 
   private[functions] def registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     fns.map { case (name, builder) =>

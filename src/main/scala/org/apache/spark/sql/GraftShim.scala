@@ -52,8 +52,10 @@ object GraftShim {
 
   private val FactoryMode = "spark.sql.codegen.factoryMode"
 
-  /** The sibling of `spark` that runs work of `rows` rows below
-    * [[QuietBatchRows]]: same SparkContext, shared state and cache, and
+  /** The sibling of `spark` that runs work whose batch is below
+    * [[QuietBatchRows]] and whose largest shuffle moves `rows` rows
+    * (the batch itself, or a bigger table it joins or groups whole):
+    * same SparkContext, shared state and cache, and
     * a copy of the parent's SQL conf, registered functions and planning
     * strategies (cloneSession is private[sql]). The sibling turns off
     * AQE, whole-stage codegen and expression codegen — every projection,
@@ -61,9 +63,10 @@ object GraftShim {
     * CodeGeneratorWithInterpretedFallback reads `factoryMode` outside
     * tests too), so a micro-batch compiles only what Spark generates
     * outside those switches (in-memory column accessors, typed-object
-    * deserializers, row joiners) — and runs clamp(ceil(rows / RowsPerPartition), 1, parent's value)
-    * shuffle partitions, so a small batch is a few tasks per stage
-    * rather than the parent's full count. The parent is untouched.
+    * deserializers, row joiners) — and runs
+    * clamp(ceil(rows / RowsPerPartition), 1, parent's value) shuffle
+    * partitions, so small work is a few tasks per stage rather than the
+    * parent's full count. The parent is untouched.
     * AQE, codegen and partition count change only execution: rows are
     * the same. */
   def quietSession(spark: SparkSession, rows: Long): SparkSession = {

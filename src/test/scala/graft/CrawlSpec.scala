@@ -125,15 +125,43 @@ class CrawlSpec extends AnyFunSuite with TempDirs {
         field("new_urls")) == Seq(r.scheduled, r.fetched, r.robotsDenied, r.errors, r.newUrls),
         s"snapshot $i manifest $m vs $r")
       // how the iteration ran: micro batches run on the quiet session,
-      // on one shuffle partition, and compile only the classes Spark
-      // generates outside its codegen switches (the first iteration also
-      // those that init and the previous crawls pushed out of Spark's
+      // on one shuffle partition (batch and state are both far below
+      // RowsPerPartition), and compile only the classes Spark generates
+      // outside its codegen switches (the first iteration also those
+      // that init and the previous crawls pushed out of Spark's
       // 100-entry class cache)
       assert(m.contains(""""quiet":true"""), s"snapshot $i manifest $m")
       assert(field("shuffle_partitions") == 1, s"snapshot $i manifest $m")
+      // the state rows that size the partitions are the chains' rows,
+      // read from the footers of deltas and compacted tables alike
+      assert(Crawl.chainRows(spark, d, i - 1, "requests") == Crawl.loadRequests(spark, d, i - 1).count())
+      assert(Crawl.chainRows(spark, d, i - 1, "replies") == Crawl.loadReplies(spark, d, i - 1).count())
+      assert(Crawl.chainRows(spark, d, i - 1, "titledb") >= Crawl.loadTitledb(spark, d, i - 1).count())
+      assert(Crawl.stateRows(spark, d, i - 1) == Seq("requests", "replies", "titledb")
+        .map(Crawl.chainRows(spark, d, i - 1, _)).max)
       assert(field("codegen_compiles") >= 0 && (i == 1 || field("codegen_compiles") <= 50),
         s"snapshot $i manifest $m")
     }
+  }
+
+  test("a big frontier behind small batches keeps its quiet shuffle partitions") {
+    import org.apache.spark.sql.GraftShim
+    // one seed row more than a partition's worth: iteration 1 doles the
+    // seeds, later iterations only a politeness-capped batch, yet their
+    // joins against the requests chain still move every frontier row
+    val per = GraftShim.RowsPerPartition
+    val seeds = (0L to per).map(j => s"http://${Corpus.host((j % spec.nHosts).toInt)}/x/$j.html")
+    val d = tmpdir()
+    val results = Crawl.run(spark, d, spec, 3, cfg, compactEvery = 100, seedUrls = seeds)
+    assert(results(1).scheduled < per, s"batches after the first must be small: $results")
+    val m = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"${Crawl.snapDir(d, 3)}/MANIFEST.json")), "UTF-8")
+    assert(m.contains(""""quiet":true"""), m)
+    // the chain holds the seeds and iteration 1's rewrite of them
+    val state = Crawl.stateRows(spark, d, 2)
+    val parts = math.min((state - 1) / per + 1, spark.conf.get("spark.sql.shuffle.partitions").toLong)
+    assert(parts > 1, s"state rows $state")
+    assert(m.contains(s""""shuffle_partitions":$parts"""), m)
   }
 
   test("a degraded bloom keeps admission exact (fetch logs and requests as with the default bloom)") {

@@ -98,6 +98,9 @@ class ExpressionsSpec extends AnyFunSuite {
     val kernels: Seq[(String, Column)] = GraftFunctions.fns.map { case (name, build) =>
       name -> GraftShim.toColumn(build(GraftShim.toExpression(col(if (name == "extract_text") "b" else "s"))))
     } ++ Seq(
+      "simhash64" -> GraftFunctions.simhash64(col("s")),
+      "fingerprint64" -> GraftFunctions.fingerprint64(col("s")),
+      "lang_id" -> GraftFunctions.langId(col("s")),
       "minhash_sig" -> GraftFunctions.minhashSig(col("s"), 4),
       "plane_sig" -> GraftFunctions.planeSig(col("v"), 8, 3),
       "vdot" -> GraftFunctions.vdot(col("v"), col("v")))

@@ -13,12 +13,14 @@ class QuietSessionSpec extends AnyFunSuite {
   private val WholeStage = "spark.sql.codegen.wholeStage"
   private val FactoryMode = "spark.sql.codegen.factoryMode"
   private val Partitions = "spark.sql.shuffle.partitions"
+  private val TimeZone = "spark.sql.session.timeZone"
 
   /** A private parent, so the conf changes below stay out of other specs. */
   private def parent() = {
     val p = SparkTestSession.spark.newSession()
     p.conf.set(Aqe, "true")
     p.conf.set(Partitions, "7")
+    p.conf.set(TimeZone, "Pacific/Chatham")
     p
   }
 
@@ -34,6 +36,8 @@ class QuietSessionSpec extends AnyFunSuite {
       assert(q.conf.get(Aqe) == "false")
       assert(q.conf.get(WholeStage) == "false")
       assert(q.conf.get(FactoryMode) == "NO_CODEGEN")
+      // the rest of the parent's runtime conf is copied
+      assert(q.conf.get(TimeZone) == "Pacific/Chatham")
       assert(GraftShim.isQuiet(q) && !GraftShim.isQuiet(p))
       assert(p.conf.getAll == before, "the parent's conf must not change")
       // the parent's cached data serves the same plan run on the sibling
