@@ -197,7 +197,7 @@ object Bench {
         jobs.incrementAndGet(); ()
       }
     })
-    val work = Files.createTempDirectory(s"graft_bench_$cpus").toString
+    val work = Dirs.temp(s"graft_bench_$cpus")
     // bloom sizing matched to the corpus (64 buckets x 200k-expected is
     // the 10^10 default; writing 11MB of bloom per tiny iteration would
     // measure nothing but bloom I/O)

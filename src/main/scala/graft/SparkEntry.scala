@@ -62,7 +62,7 @@ object SparkEntry {
   @volatile private var crawlMemo: String = null
   private def crawlDir(s: SparkSession): String = synchronized {
     if (crawlMemo == null) {
-      val w = java.nio.file.Files.createTempDirectory("graft_q_crawl").toString
+      val w = Dirs.temp("graft_q_crawl")
       Crawl.run(s, w, Corpus.micro, 8)
       crawlMemo = w
     }
@@ -244,11 +244,13 @@ object SparkEntry {
       // invariant), new urls land with IsInjecting set and IsAddUrl
       // cleared at hop 0 — PageInject.cpp flags, Spider.h:604-605
       import s.implicits._
-      val w = java.nio.file.Files.createTempDirectory("graft_q_s2").toString
+      val w = Dirs.temp("graft_q_s2")
       val cfg = graft.frontier.Crawl.Config()
       Crawl.init(s, w, Corpus.seeds(Corpus.micro), cfg)
       Crawl.inject(s, w, Seq("http://www.h0.test/", "http://www.x9.test/page.html"), cfg)
-      s.read.parquet(s"${Crawl.snapDir(w, 0)}/requests_delta")
+      // the injected rows joined snapshot 0's seeds: pick them by flag
+      Crawl.loadRequests(s, w, 0).toDF()
+        .filter(col("flags").bitwiseAND(lit(graft.frontier.Flags.IsInjecting)) =!= 0L)
         .select(col("url"), col("hop_count"),
           (col("flags").bitwiseAND(lit(graft.frontier.Flags.IsInjecting)) =!= 0L).as("injecting"),
           (col("flags").bitwiseAND(lit(graft.frontier.Flags.IsAddUrl)) =!= 0L).as("addurl"))
@@ -266,7 +268,7 @@ object SparkEntry {
           "<html><body>gzip body</body></html>".getBytes("UTF-8"), "gzip"),
         ("http://w3.test/c", "2020-01-03T00:00:00Z",
           "<html><body>deflate body</body></html>".getBytes("UTF-8"), "deflate")))
-      val dir = java.nio.file.Files.createTempDirectory("graft_s4").toFile
+      val dir = new java.io.File(Dirs.temp("graft_s4"))
       val f = new java.io.File(dir, "fix.warc")
       java.nio.file.Files.write(f.toPath, blob)
       Warc.readPages(s, f.getAbsolutePath).toDF().select(col("url"), col("text"))
@@ -450,7 +452,7 @@ object SparkEntry {
     "j2_seen_frontier" -> ((s, d) =>
       Crawl.loadRequests(s, crawlDir(s), 8).select("uh48").distinct()),
     "a7_inlinks_frontier" -> ((s, d) =>
-      Crawl.loadInlinkState(s, crawlDir(s), 8).toDF()
+      Crawl.loadLoopState(s, crawlDir(s), 8, Crawl.Config()).inlinks.toDF()
         .select(col("first_ip"), col("uh48"), size(col("cblocks")).as("n_cblocks"))),
     "s7_titledb" -> ((s, d) =>
       Crawl.loadTitledb(s, crawlDir(s), 8).toDF()
@@ -458,7 +460,7 @@ object SparkEntry {
     // minimal tagdb after the micro crawl: site tags (SiteGetter sites,
     // www-prepend + /~user dirs), pinned firstips, site inlink c-blocks
     "t1_tagdb_sites" -> ((s, d) =>
-      Crawl.loadTagState(s, crawlDir(s), 8).toDF()
+      Crawl.loadLoopState(s, crawlDir(s), 8, Crawl.Config()).tagState.toDF()
         .select(col("site"), col("first_ip"),
           col("has_site_tag").cast("int").as("has_site_tag"),
           size(col("cblocks")).as("n_cblocks"))),
@@ -466,7 +468,7 @@ object SparkEntry {
     // firstIp/site/dom key + the ^0x123456 manual-add seed counts
     // (m_localTable, Spider.cpp:4355-4421), incrementally maintained
     "a6_quota_frontier" -> ((s, d) =>
-      Crawl.loadQuotaState(s, crawlDir(s), 8)
+      Crawl.loadLoopState(s, crawlDir(s), 8, Crawl.Config()).quotaState
         .select(col("key"), col("n"))),
     // percentChangedPerDay on a REAL mutating re-fetch (reindex → rev-1
     // corpus): values strictly inside (0, 100/dt) — the term-level
@@ -475,8 +477,9 @@ object SparkEntry {
     "x18_pcd" -> ((s, d) => {
       val w = pcdDir(s)
       val uhs = Corpus.pcdReindexUrls.map(u => graft.core.GbUrl.parse(u).uh48)
-      s.read.parquet(s"${Crawl.snapDir(w, 9)}/replies_delta")
-        .filter(col("uh48").isin(uhs: _*))
+      // iteration 9's replies: the ones spidered at its clock
+      Crawl.loadReplies(s, w, 9).toDF()
+        .filter(col("spidered_time") === Crawl.nowSecs(Crawl.Config(), 9) && col("uh48").isin(uhs: _*))
         .select(col("uh48"),
           (col("percent_changed_per_day") * lit(1000000f)).cast("long").as("pcd_micros"))
     }),

@@ -3,6 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -1327,56 +1328,97 @@ object Crawl {
 
   // ------------------------------------------------------------ snapshots
 
-  final case class Snapshot(dir: String, iteration: Int)
-
   def snapDir(workdir: String, i: Int): String = f"$workdir/snap_$i%05d"
 
-  /** LSM-style snapshot reads: a snapshot holds either a full table
-    * (`requests`, written at init/compaction — the memtable-dump/merge
-    * analogue, Rdb.cpp) or an append-only delta (`requests_delta`).
-    * Readers union deltas back to the last full snapshot, so an
-    * iteration writes O(new urls), not O(frontier). Parquet column
-    * pruning keeps the seen-set scan (uh48 only) cheap. */
-  private def loadTable(spark: SparkSession, workdir: String, i: Int, name: String,
-      schema: org.apache.spark.sql.types.StructType = null): DataFrame = {
-    // explicit schema when the caller knows it: the footer-reading
-    // schema-inference job per chain part goes away (the LSM chain is
-    // many small dirs by design — at 5 iters that was ~7 jobs/iter)
-    val reader = if (schema != null) spark.read.schema(schema) else spark.read
-    chainParts(workdir, i, name).map(reader.parquet(_)).reduce(_ unionByName _)
+  /** What a chained table's initial or compacted rows are built from:
+    * snapshot i of `workdir` (the chain a compaction rewrites), the seed
+    * urls (init), and `requests()`, the requests table as the same full
+    * write put it on disk — the ground truth of the per-IP counts and
+    * the seen bloom. */
+  final case class Basis(spark: SparkSession, workdir: String, i: Int, cfg: Config,
+                         seedUrls: Seq[String], requests: () => DataFrame)
+
+  /** A chained snapshot table, stored by [[StateTable]]: its directory
+    * name, its kind (append, or keyed on a bucket column), its schema,
+    * and its rows at init and at compaction. `wholeEachSnapshot` tables
+    * get a full write every snapshot, so a load reads that snapshot
+    * alone. */
+  final case class ChainedTable(name: String, kind: StateTable.Kind, schema: StructType,
+                                initial: Basis => DataFrame, compacted: Basis => DataFrame,
+                                wholeEachSnapshot: Boolean = false) {
+    /** The table as of snapshot i. */
+    def load(spark: SparkSession, workdir: String, i: Int): DataFrame =
+      StateTable.load(spark, workdir, i, name, kind, schema)
+
+    /** Rows of the table as of snapshot i, from the parquet footers (no job). */
+    def chainRows(spark: SparkSession, workdir: String, i: Int): Long =
+      StateTable.chainRows(spark, workdir, i, name, kind)
+
+    /** The bucket column of a keyed table. */
+    def key: String = kind.asInstanceOf[StateTable.Keyed].key
+
+    /** Snapshot dir `d`'s part of an append table: this snapshot's rows. */
+    def writePart(rows: DataFrame, d: String): Unit =
+      if (wholeEachSnapshot) StateTable.writeFull(rows, kind, 1, s"$d/$name")
+      else StateTable.append(rows, s"$d/$name")
   }
 
-  /** The directories of table `name`'s chain as of snapshot i: its
-    * deltas back to the last full table, oldest first. */
-  private def chainParts(workdir: String, i: Int, name: String): List[String] = {
-    var parts = List.empty[String]
-    var k = i
-    var done = false
-    while (k >= 0 && !done) {
-      val full = s"${snapDir(workdir, k)}/$name"
-      val delta = s"${snapDir(workdir, k)}/${name}_delta"
-      // a snapshot can hold BOTH a full table and a delta: inject()
-      // appends its delta into the latest snapshot, which has a full
-      // table right after init or compaction — read both, then stop
-      if (new java.io.File(delta).exists) parts ::= delta
-      if (new java.io.File(full).exists) { parts ::= full; done = true }
-      else k -= 1
-    }
-    parts
-  }
+  /** Every chained snapshot table, each listed once. The URL-seen set
+    * and the old-page sample vectors are not among them: each is read
+    * from the table that already holds the fact (the requests chain and
+    * titledb). `fetch_log` is per snapshot, not a chain. */
+  object Tables {
+    import StateTable.{Append, Keyed}
+    private def none(schema: StructType): Basis => DataFrame = b => StateTable.empty(b.spark, schema)
+    /** A table that starts empty and compacts to its own rows. */
+    private def kept(name: String, kind: StateTable.Kind, schema: StructType) =
+      ChainedTable(name, kind, schema, none(schema), b => StateTable.load(b.spark, b.workdir, b.i, name, kind, schema))
+    private def bloomOf(b: Basis): DataFrame =
+      SeenBloom.build(b.requests().select("uh48").as(Encoders.LONG),
+        b.cfg.seenBuckets, b.cfg.expectedSeenPerBucket, b.cfg.bloomFpp)
 
-  /** Rows in table `name`'s chain as of snapshot i, summed from the
-    * parquet footers: driver-side file reads, no job. */
-  def chainRows(spark: SparkSession, workdir: String, i: Int, name: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    chainParts(workdir, i, name).iterator
-      .flatMap(d => Option(new java.io.File(d).listFiles()).getOrElse(Array.empty[java.io.File]))
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toURI), conf))
-        try r.getRecordCount finally r.close()
-      }.sum
+    val requests = ChainedTable("requests", Append, Encoders.product[FrontierRequest].schema,
+      b => seeds(b.spark, b.seedUrls, b.cfg).toDF(), b => compactedRequests(b.spark, b.workdir, b.i))
+    val replies = ChainedTable("replies", Append, Encoders.product[FrontierReply].schema,
+      none(Encoders.product[FrontierReply].schema),
+      b => latestReplies(loadReplies(b.spark, b.workdir, b.i)).toDF())
+    /** S7: the crawled-content table (Titledb.cpp titleRec analogue),
+      * compacted to the latest record per uh48. */
+    val titledb = ChainedTable("titledb", Append, Encoders.product[TitleRow].schema,
+      none(Encoders.product[TitleRow].schema), b => loadTitledb(b.spark, b.workdir, b.i).toDF())
+    /** The per-IP table: everything the spider keeps per firstIp (the
+      * SpiderColl's waiting-tree time, m_lastDownloadCache and per-IP
+      * counts, Spider.h:1225-1482) in one row per first_ip —
+      * `last_download_end_ms` (politeness), `n` (A8: exact request
+      * count) and `next_ms` (A3: waiting-tree lower bound), each null
+      * where the IP has no such state. O(#IPs), rewritten whole every
+      * snapshot. At init every seed IP is counted and due; compaction
+      * drops rows, so it recounts `n` from the compacted requests (an
+      * IP left with no rows gets a null count). */
+    val ipTable: ChainedTable = ChainedTable("ip_table", Append,
+      StructType.fromDDL("first_ip INT, last_download_end_ms BIGINT, n BIGINT, next_ms BIGINT"),
+      b => mergeIpTable(Seq(ipLayer(b.requests(), n = lit(1L), pri = lit(0), next = lit(0L)))),
+      b => mergeIpTable(Seq(priorIpLayer(ipTable.load(b.spark, b.workdir, b.i), n = lit(null)),
+        ipLayer(b.requests(), n = lit(1L)))),
+      wholeEachSnapshot = true)
+    /** Per-domain robots crawl-delay state. */
+    val dom = kept("dom_state", Keyed("dom_hash32"), Encoders.product[DomState].schema)
+    /** A7 inlink c-block state. */
+    val inlinks = kept("inlink_state", Keyed("uh48"), Encoders.product[InlinkState].schema)
+    /** Minimal tagdb (see [[TagState]]), keyed by the SiteGetter site hash. */
+    val tags = kept("tag_state", Keyed("site_hash32"), Encoders.product[TagState].schema)
+    /** A6 quota state (the reference's scan-built m_localTable,
+      * Spider.cpp:4355-4421): counts keyed by firstIp / siteHash32 /
+      * domHash32 (indexed pages, one vote per url) and by
+      * siteHash32^0x123456 / domHash32^0x123456 (manual-add seed
+      * counts), maintained INCREMENTALLY instead of re-scanned. */
+    val quota = kept("quota_state", Keyed("key"),
+      StructType(Seq(StructField("key", IntegerType, false), StructField("n", LongType, false))))
+    /** The seen bloom (SeenBloom): rebuilt FROM GROUND TRUTH, the
+      * requests, at init and compaction — so it sheds the fill of
+      * since-compacted rows (fpp hygiene). */
+    val bloom = ChainedTable("seen_bloom", Keyed("bloom_bucket"), SeenBloom.schema, bloomOf, bloomOf)
+    val all: Seq[ChainedTable] = Seq(requests, replies, titledb, ipTable, dom, inlinks, tags, quota, bloom)
   }
 
   /** Rows in the largest table an iteration on snapshot i shuffles
@@ -1384,27 +1426,24 @@ object Crawl {
     * anti-join, the due slices), replies and titledb (the latest
     * vector per url). */
   def stateRows(spark: SparkSession, workdir: String, i: Int): Long =
-    Seq("requests", "replies", "titledb").map(chainRows(spark, workdir, i, _)).max
+    Seq(Tables.requests, Tables.replies, Tables.titledb).map(_.chainRows(spark, workdir, i)).max
 
   def loadRequests(spark: SparkSession, workdir: String, i: Int): Dataset[FrontierRequest] = {
     import spark.implicits._
-    loadTable(spark, workdir, i, "requests",
-      implicitly[org.apache.spark.sql.Encoder[FrontierRequest]].schema).as[FrontierRequest]
+    Tables.requests.load(spark, workdir, i).as[FrontierRequest]
   }
 
   def loadReplies(spark: SparkSession, workdir: String, i: Int): Dataset[FrontierReply] = {
     import spark.implicits._
-    loadTable(spark, workdir, i, "replies",
-      implicitly[org.apache.spark.sql.Encoder[FrontierReply]].schema).as[FrontierReply]
+    Tables.replies.load(spark, workdir, i).as[FrontierReply]
   }
 
-  /** S7: the crawled-content table as of snapshot i (delta chain back
-    * to the last compaction, latest record per uh48). */
+  /** S7: the crawled-content table as of snapshot i (chain back to the
+    * last compaction, latest record per uh48). */
   def loadTitledb(spark: SparkSession, workdir: String, i: Int): Dataset[TitleRow] = {
     import spark.implicits._
-    val df = loadTable(spark, workdir, i, "titledb",
-      implicitly[org.apache.spark.sql.Encoder[TitleRow]].schema).as[TitleRow]
-    df.groupByKey(_.uh48).reduceGroups((a, b) => if (a.spidered_time >= b.spidered_time) a else b)
+    Tables.titledb.load(spark, workdir, i).as[TitleRow]
+      .groupByKey(_.uh48).reduceGroups((a, b) => if (a.spidered_time >= b.spidered_time) a else b)
       .map(_._2)
   }
 
@@ -1412,83 +1451,11 @@ object Crawl {
     * sample_vec). Column pruning reaches the parquet scan, so the
     * html/text payload columns are never read, and the latest-per-url
     * reduction shuffles 124-byte vectors, not page bodies. */
-  def loadTitleVecs(spark: SparkSession, workdir: String, i: Int): DataFrame =
-    loadTable(spark, workdir, i, "titledb",
-        org.apache.spark.sql.Encoders.product[TitleRow].schema)
-      .select(col("uh48"), col("spidered_time"), col("sample_vec"))
+  private def titleVecsOf(titledb: DataFrame): DataFrame =
+    titledb.select(col("uh48"), col("spidered_time"), col("sample_vec"))
       .groupBy("uh48")
       .agg(max(struct(col("spidered_time"), col("sample_vec"))).as("s"))
       .select(col("uh48"), col("s.sample_vec").as("sample_vec"))
-
-  /** A keyed snapshot table on the StateTable bucket chain: its
-    * directory name, the column its rows bucket on, and its schema (as
-    * an empty table). `fromRequests` rebuilds the seen bloom from a
-    * requests table — its ground truth at init and compaction; the
-    * other tables start empty and compact from their own chain. */
-  final case class KeyedTable(name: String, key: String, empty: SparkSession => DataFrame,
-                              fromRequests: Option[(DataFrame, Config) => DataFrame] = None) {
-    /** The table as of snapshot i. */
-    def load(spark: SparkSession, workdir: String, i: Int): DataFrame =
-      StateTable.load(spark, workdir, i, name, empty(spark))
-  }
-
-  /** The five keyed snapshot tables. The URL-seen set and the old-page
-    * sample vectors are not among them: each is read from the table
-    * that already holds the fact (the requests chain and titledb). */
-  object Keyed {
-    private def none[T](e: Encoder[T], cols: String*): SparkSession => DataFrame =
-      s => if (cols.isEmpty) s.emptyDataset(e).toDF() else s.emptyDataset(e).toDF(cols: _*)
-    val dom = KeyedTable("dom_state", "dom_hash32", none(Encoders.product[DomState]))
-    val inlinks = KeyedTable("inlink_state", "uh48", none(Encoders.product[InlinkState]))
-    val tags = KeyedTable("tag_state", "site_hash32", none(Encoders.product[TagState]))
-    val quota = KeyedTable("quota_state", "key", none(Encoders.product[(Int, Long)], "key", "n"))
-    val bloom = KeyedTable("seen_bloom", "bloom_bucket", SeenBloom.empty,
-      Some((reqs, cfg) => SeenBloom.build(reqs.select("uh48").as(Encoders.LONG),
-        cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp)))
-    val all: Seq[KeyedTable] = Seq(dom, inlinks, tags, quota, bloom)
-  }
-
-  /** Inlink c-block state as of snapshot i. O(delta) maintained: only
-    * the buckets an iteration touches are written forward (StateTable). */
-  def loadInlinkState(spark: SparkSession, workdir: String, i: Int): Dataset[InlinkState] = {
-    import spark.implicits._
-    Keyed.inlinks.load(spark, workdir, i).as[InlinkState]
-  }
-
-  /** Per-domain robots crawl-delay state as of snapshot i. */
-  def loadDomState(spark: SparkSession, workdir: String, i: Int): Dataset[DomState] = {
-    import spark.implicits._
-    Keyed.dom.load(spark, workdir, i).as[DomState]
-  }
-
-  /** A6 quota state (the reference's scan-built m_localTable,
-    * Spider.cpp:4355-4421): counts keyed by firstIp / siteHash32 /
-    * domHash32 (indexed pages, one vote per url) and by
-    * siteHash32^0x123456 / domHash32^0x123456 (manual-add seed counts).
-    * Maintained INCREMENTALLY from each iteration's newly-indexed and
-    * revised-manual-add transitions instead of the reference's full
-    * spiderdb re-scan. */
-  def loadQuotaState(spark: SparkSession, workdir: String, i: Int): DataFrame =
-    Keyed.quota.load(spark, workdir, i)
-
-  /** Minimal tagdb (see [[TagState]]): keyed by the SiteGetter site
-    * hash, carries the pinned firstip, the "site" tag bit, and the
-    * site-level inlinking c-blocks. Cumulative like ip/dom state. */
-  def loadTagState(spark: SparkSession, workdir: String, i: Int): Dataset[TagState] = {
-    import spark.implicits._
-    Keyed.tags.load(spark, workdir, i).as[TagState]
-  }
-
-  /** The per-IP table as of snapshot i: everything the spider keeps per
-    * firstIp (the SpiderColl's waiting-tree time, m_lastDownloadCache
-    * and per-IP counts, Spider.h:1225-1482) in one row per first_ip —
-    * `last_download_end_ms` (politeness), `n` (A8: exact request count)
-    * and `next_ms` (A3: waiting-tree lower bound), each null where the
-    * IP has no such state. Every snapshot rewrites it whole (O(#IPs)),
-    * so it is read from snapshot i alone. */
-  def loadIpTable(spark: SparkSession, workdir: String, i: Int): DataFrame =
-    spark.read.schema("first_ip INT, last_download_end_ms BIGINT, n BIGINT, next_ms BIGINT")
-      .parquet(s"${snapDir(workdir, i)}/ip_table")
 
   private def ipStateOf(t: DataFrame): Dataset[IpState] = {
     import t.sparkSession.implicits._
@@ -1507,17 +1474,6 @@ object Crawl {
     else None
   }
 
-  /** Politeness state (per-IP last download end) as of snapshot i. */
-  def loadIpState(spark: SparkSession, workdir: String, i: Int): Dataset[IpState] =
-    ipStateOf(loadIpTable(spark, workdir, i))
-
-  /** A8 state: exact per-IP request counts as of snapshot i, maintained
-    * INCREMENTALLY from each delta (+ recounted at compaction, which
-    * drops rows) so the overflow guard no longer pays an O(frontier)
-    * groupBy every iteration. */
-  def loadIpCounts(spark: SparkSession, workdir: String, i: Int): DataFrame =
-    ipCountsOf(loadIpTable(spark, workdir, i))
-
   /** A fingerprint of everything the waiting-tree lower bounds depend
     * on: if the rule table / site list / patterns change between runs,
     * stored next_ms entries may no longer be lower bounds → discard. */
@@ -1526,15 +1482,8 @@ object Crawl {
     java.lang.Long.toHexString(graft.core.GbHash.hash64b(s))
   }
 
-  /** A3 waiting-tree state as of snapshot i: first_ip → next_ms (a lower
-    * bound on the IP's earliest eligible spider time, valid until the IP
-    * is touched). None when the snapshot's schedule ran without wake
-    * maintenance or under a different rule config (`ip_table.rules`
-    * missing or different) — the next iteration then runs a full
-    * bootstrap scan and rebuilds it. */
-  def loadIpNext(spark: SparkSession, workdir: String, i: Int, cfg: Config): Option[DataFrame] =
-    ipNextOf(workdir, i, cfg, loadIpTable(spark, workdir, i))
-
+  /** The marker beside the per-IP table that says its `next_ms` values
+    * were rolled forward under these rules. */
   private def ipTableMarker(workdir: String, i: Int): java.io.File =
     new java.io.File(s"${snapDir(workdir, i)}/ip_table.rules")
 
@@ -1627,43 +1576,47 @@ object Crawl {
                                    status: Int = SpiderStatus.InProgress)
 
   /** Every state input an iteration needs, as lazy plans over the
-    * snapshot chain as of one snapshot ([[loadLoopState]]). */
+    * snapshot chains as of one snapshot ([[loadLoopState]]). */
   final case class LoopState(
       requests: Dataset[FrontierRequest],
       replies: Dataset[FrontierReply],
-      ipState: Dataset[IpState],
+      ipState: Dataset[IpState], // politeness: per-IP last download end
       domState: Dataset[DomState],
       inlinks: Dataset[InlinkState],
       tagState: Dataset[TagState],
       quotaState: DataFrame,
-      ipCounts: DataFrame,
+      ipCounts: DataFrame, // (first_ip, n) — A8: exact per-IP request counts
+      // A3 waiting tree (first_ip, next_ms); None when `ip_table.rules` is
+      // missing or names other rules (the next schedule then scans all)
       ipNext: Option[DataFrame],
-      titleVecs: DataFrame, // (uh48, sample_vec) — loadTitleVecs
+      titleVecs: DataFrame, // (uh48, sample_vec) — the latest titledb vector per url
       seenUh48: DataFrame, // (uh48) — the URL-seen set: the requests' distinct uh48s
       bloom: DataFrame, // (bloom_bucket, bloom) — SeenBloom's table
       buckets: Map[String, Int]) // keyed-state bucket counts (constant between compactions)
 
-  /** Root a LoopState on the disk chain as of snapshot i. Lazy — nothing
+  /** Root a LoopState on the disk chains as of snapshot i. Lazy — nothing
     * executes here. */
   def loadLoopState(spark: SparkSession, workdir: String, i: Int, cfg: Config): LoopState = {
-    val ipTable = loadIpTable(spark, workdir, i)
-    val requests = loadRequests(spark, workdir, i)
+    import spark.implicits._
+    val t = Tables.all.map(table => table -> table.load(spark, workdir, i)).toMap
+    val requests = t(Tables.requests).as[FrontierRequest]
     LoopState(
       requests = requests,
-      replies = loadReplies(spark, workdir, i),
-      ipState = ipStateOf(ipTable),
-      domState = loadDomState(spark, workdir, i),
-      inlinks = loadInlinkState(spark, workdir, i),
-      tagState = loadTagState(spark, workdir, i),
-      quotaState = loadQuotaState(spark, workdir, i),
-      ipCounts = ipCountsOf(ipTable),
-      ipNext = ipNextOf(workdir, i, cfg, ipTable),
-      titleVecs = loadTitleVecs(spark, workdir, i),
+      replies = t(Tables.replies).as[FrontierReply],
+      ipState = ipStateOf(t(Tables.ipTable)),
+      domState = t(Tables.dom).as[DomState],
+      inlinks = t(Tables.inlinks).as[InlinkState],
+      tagState = t(Tables.tags).as[TagState],
+      quotaState = t(Tables.quota),
+      ipCounts = ipCountsOf(t(Tables.ipTable)),
+      ipNext = ipNextOf(workdir, i, cfg, t(Tables.ipTable)),
+      titleVecs = titleVecsOf(t(Tables.titledb)),
       // a fake-IP add-url re-added under its real IP is a second
       // request row for the same uh48
       seenUh48 = requests.select("uh48").distinct(),
-      bloom = Keyed.bloom.load(spark, workdir, i),
-      buckets = Keyed.all.map(t => t.name -> StateTable.bucketsOf(workdir, i, t.name)).toMap)
+      bloom = t(Tables.bloom),
+      buckets = Tables.all.filter(_.kind != StateTable.Append)
+        .map(k => k.name -> StateTable.bucketsOf(workdir, i, k.name)).toMap)
   }
 
   /** Run one full crawl iteration: read state as of snapshot i-1, write
@@ -1678,6 +1631,9 @@ object Crawl {
                    redirClosure: DataFrame = null): IterationResult = {
     val t0 = System.currentTimeMillis()
     val compiles0 = GraftShim.codegenCompiles
+    // whatever an uncommitted try at snapshot i left behind (a crash
+    // before its manifest, or inside its compaction's swap) goes first
+    graft.Dirs.deleteTree(Paths.get(snapDir(workdir, i)))
     val st = loadLoopState(spark, workdir, i - 1, cfg)
     val doled = schedulePhase(st, cfg, i)
     val fetched = fetchPhase(spark, st, doled, pages, robots, cfg, i, redirClosure, snapDir(workdir, i))
@@ -1867,7 +1823,7 @@ object Crawl {
     * prior rows of the buckets `delta` touches with the delta under the
     * table's own semantics, and only those buckets are written forward
     * — untouched buckets are never shuffled or rewritten. */
-  private final case class StateMerge(table: KeyedTable, prior: DataFrame, delta: DataFrame,
+  private final case class StateMerge(table: ChainedTable, prior: DataFrame, delta: DataFrame,
                                       buckets: Int, merge: DataFrame => DataFrame)
 
   /** Roll keyed tables forward into snapshot dir `d`: ONE fused job
@@ -1888,7 +1844,7 @@ object Crawl {
         val prior =
           if (ids.isEmpty) m.prior.limit(0)
           else m.prior.filter(StateTable.bucketCol(Seq(m.prior(m.table.key)), m.buckets).isInCollection(ids))
-        StateTable.writeDelta(m.merge(prior), Seq(col(m.table.key)), m.buckets,
+        StateTable.writeDelta(m.merge(prior), m.table.key, m.buckets,
           s"$d/${m.table.name}", dynamic)
       }
     }
@@ -1897,7 +1853,7 @@ object Crawl {
   /** The seen bloom's merge: the uh48s' bits are set in their bloom
     * buckets (a delta row is the bloom bucket an uh48 lands in). */
   private def bloomMerge(prior: DataFrame, uh48s: DataFrame, buckets: Int, cfg: Config): StateMerge =
-    StateMerge(Keyed.bloom, prior, uh48s.select(SeenBloom.bucketCol(col("uh48"), cfg.seenBuckets)),
+    StateMerge(Tables.bloom, prior, uh48s.select(SeenBloom.bucketCol(col("uh48"), cfg.seenBuckets)),
       buckets, p => SeenBloom.update(p, uh48s.select("uh48").as(Encoders.LONG),
         cfg.seenBuckets, cfg.expectedSeenPerBucket, cfg.bloomFpp))
 
@@ -1906,7 +1862,7 @@ object Crawl {
                           cfg: Config, i: Int): Seq[StateMerge] = {
     import spark.implicits._
     val results = f.results
-    def sm(t: KeyedTable, prior: DataFrame, delta: DataFrame)(merge: DataFrame => DataFrame) =
+    def sm(t: ChainedTable, prior: DataFrame, delta: DataFrame)(merge: DataFrame => DataFrame) =
       StateMerge(t, prior, delta, st.buckets(t.name), merge)
 
     // robots crawl delay per dom (the per-IP politeness state is in
@@ -1965,7 +1921,7 @@ object Crawl {
       .groupBy("key").agg(count(lit(1)).as("n"))
 
     Seq(
-      sm(Keyed.dom, st.domState.toDF(), domUpdates) { p =>
+      sm(Tables.dom, st.domState.toDF(), domUpdates) { p =>
         p.withColumn("stamp", lit(0))
           .unionByName(domUpdates.withColumn("stamp", lit(1)))
           .groupBy("dom_hash32")
@@ -1973,31 +1929,33 @@ object Crawl {
           .select(col("dom_hash32"), col("s.crawl_delay_ms").as("crawl_delay_ms"))
       },
       // A7, merged per (first_ip, uh48) with a 20-cap
-      sm(Keyed.inlinks, st.inlinks.toDF(), a.newPairs) { p =>
+      sm(Tables.inlinks, st.inlinks.toDF(), a.newPairs) { p =>
         p.select(col("first_ip"), col("uh48"), explode(col("cblocks")).as("cblock"))
           .unionByName(a.newPairs)
           .groupBy("first_ip", "uh48")
           .agg(slice(sort_array(collect_set(col("cblock"))), 1, 20).as("cblocks"))
       },
-      sm(Keyed.tags, st.tagState.toDF(), tagDelta.toDF()) { p =>
+      sm(Tables.tags, st.tagState.toDF(), tagDelta.toDF()) { p =>
         p.as[TagState].union(tagDelta)
           .groupByKey(_.site_hash32)
           .reduceGroups((x, y) => combineTags(x, y, SiteInlinkCap))
           .map(_._2).toDF()
       },
-      sm(Keyed.quota, st.quotaState, quotaDelta) { p =>
+      sm(Tables.quota, st.quotaState, quotaDelta) { p =>
         p.unionByName(quotaDelta).groupBy("key").agg(sum(col("n")).as("n"))
       },
       // every admitted uh48 (fresh and revised) sets its bloom bits
       bloomMerge(st.bloom, a.fresh.toDF().select("uh48").unionByName(a.revised.toDF().select("uh48")),
-        st.buckets(Keyed.bloom.name), cfg))
+        st.buckets(Tables.bloom.name), cfg))
   }
 
   /** Merge + commit: every snapshot-i write as ONE flat batch of
     * concurrent jobs (results and the admitted rows are cached, so the
     * jobs share partitions instead of recomputing the fetch). Each job
     * builds its own plan on its own thread — driver-side analysis of
-    * the ~10 plans overlaps instead of adding up. */
+    * the ~10 plans overlaps instead of adding up. The keyed tables roll
+    * their touched buckets forward; each append table gets this
+    * snapshot's part. */
   private def commitPhase(spark: SparkSession, workdir: String, i: Int, st: LoopState,
                           doled: Doled, f: Fetched, a: Admitted, cfg: Config): Unit = {
     import spark.implicits._
@@ -2005,27 +1963,20 @@ object Crawl {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val d = snapDir(workdir, i)
-    val writes = rollForward(stateMerges(spark, st, f, a, cfg, i), d) ++ Seq(
-      Future { a.fresh.toDF().unionByName(a.revised.toDF()).write.mode("overwrite").parquet(s"$d/requests_delta") },
-      Future { repliesOf(f.results, st.replies, cfg, i).write.mode("overwrite").parquet(s"$d/replies_delta") },
-      Future {
-        ipTableRollForward(st, doled, f, a)
-          .write.mode("overwrite").parquet(s"$d/ip_table")
-        // the marker says next_ms was rolled forward under these rules
-        if (doled.out.wake) writeIpTableMarker(workdir, i, cfg)
-        else Files.deleteIfExists(ipTableMarker(workdir, i).toPath)
-      },
-      Future {
-        // S7: titledb sink — the crawled-content snapshot (Titledb.cpp
-        // titleRec analogue): raw bytes + extracted text per fetched
-        // url, appended as a delta; compaction keeps latest per uh48
-        f.results.filter(_.found)
-          .map(r => TitleRow(r.task.uh48, r.task.url, nowSecs(cfg, i),
-            r.httpStatus, r.lang, r.contentHash32, r.html, r.extractedText,
-            if (r.sampleVec == null) Array.empty[Int] else r.sampleVec))
-          .write.mode("overwrite").parquet(s"$d/titledb_delta")
-      })
+    val parts = Seq(
+      Tables.requests -> a.fresh.toDF().unionByName(a.revised.toDF()),
+      Tables.replies -> repliesOf(f.results, st.replies, cfg, i).toDF(),
+      // S7: titledb sink — raw bytes + extracted text per fetched url
+      Tables.titledb -> f.results.filter(_.found)
+        .map(r => TitleRow(r.task.uh48, r.task.url, nowSecs(cfg, i),
+          r.httpStatus, r.lang, r.contentHash32, r.html, r.extractedText,
+          if (r.sampleVec == null) Array.empty[Int] else r.sampleVec)).toDF(),
+      Tables.ipTable -> ipTableRollForward(st, doled, f, a))
+    val writes = rollForward(stateMerges(spark, st, f, a, cfg, i), d) ++
+      parts.map { case (t, rows) => Future(t.writePart(rows, d)) }
     Await.result(Future.sequence(writes), Duration.Inf)
+    // the marker says next_ms was rolled forward under these rules
+    if (doled.out.wake) writeIpTableMarker(workdir, i, cfg)
   }
 
   private def writeIpTableMarker(workdir: String, i: Int, cfg: Config): Unit =
@@ -2066,25 +2017,77 @@ object Crawl {
   }
 
   /** J3: frontier compaction — dedupSpiderdbList (Spider.cpp:13609-13823):
-    * rewrite the delta chain into one full table, one request per
-    * (uh48, signature) keeping the OLDEST addedTime (discovery
-    * semantics); latest reply per uh48. This is the RdbMerge analogue. */
+    * rewrite every chain of snapshot i into one full table (the RdbMerge
+    * analogue): one request per (uh48, signature) keeping the OLDEST
+    * addedTime (discovery semantics), the latest reply per uh48 and
+    * titledb record per uh48, the per-IP counts and the seen bloom
+    * rebuilt from the compacted requests, and each keyed table's own
+    * rows re-bucketed. The full writes land beside the live tables
+    * ([[compactWrite]]), then [[compactSwap]] puts them in place. */
   def compact(spark: SparkSession, workdir: String, i: Int, cfg: Config): Unit = {
-    import spark.implicits._
+    compactWrite(spark, workdir, i, cfg)
+    compactSwap(workdir, i)
+  }
+
+  /** Compaction's full writes, at `<name>_tmp` in snapshot i. Each keyed
+    * table's bucket count is re-sized to its chain's measured bytes: the
+    * full write records it, so the next chain's deltas and loads
+    * inherit it (a grown table gets more buckets here, a compacted-away
+    * one shrinks back toward 1). */
+  private[graft] def compactWrite(spark: SparkSession, workdir: String, i: Int, cfg: Config): Unit =
+    writeFulls(spark, workdir, i, cfg, Nil, _.compacted,
+      t => StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, t.name, t.kind)), "_tmp")
+
+  /** Compaction's commit: swap every full write in for its table. The
+    * swap deletes parts the committed snapshot i is made of, so i is
+    * uncommitted while it runs: its MANIFEST goes first and comes back,
+    * byte for byte, after the last rename. A crash in between leaves
+    * snapshot i-1 the latest, and the resume re-runs iteration i and
+    * compacts again. */
+  private[graft] def compactSwap(workdir: String, i: Int): Unit = {
+    val manifest = Paths.get(snapDir(workdir, i), "MANIFEST.json")
+    val committed = Files.readAllBytes(manifest)
+    Files.delete(manifest)
+    Tables.all.foreach(t => StateTable.swap(snapDir(workdir, i), t.name))
+    Files.write(manifest, committed)
+  }
+
+  /** Full writes of every chained table's `rows` into snapshot i at
+    * `<name><suffix>`, as concurrent jobs. The per-IP table and the seen
+    * bloom derive from the requests table as written, so they wait for
+    * that write. */
+  private def writeFulls(spark: SparkSession, workdir: String, i: Int, cfg: Config,
+                         seedUrls: Seq[String], rows: ChainedTable => Basis => DataFrame,
+                         buckets: ChainedTable => Int, suffix: String): Unit = {
+    import scala.concurrent.{Await, Future, Promise}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
     val d = snapDir(workdir, i)
-    val requests = loadRequests(spark, workdir, i)
-    val replies = loadReplies(spark, workdir, i)
-    val dedupedRep = latestReplies(replies)
+    val requests = Promise[DataFrame]()
+    val basis = Basis(spark, workdir, i, cfg, seedUrls, () => Await.result(requests.future, Duration.Inf))
+    def full(t: ChainedTable): Unit =
+      StateTable.writeFull(rows(t)(basis), t.kind, buckets(t), s"$d/${t.name}$suffix")
+    requests.completeWith(Future {
+      full(Tables.requests)
+      spark.read.parquet(s"$d/${Tables.requests.name}$suffix")
+    })
+    val rest = Tables.all.filter(_ != Tables.requests).map(t => Future(full(t)))
+    Await.result(Future.sequence(requests.future +: rest), Duration.Inf)
+  }
+
+  /** The requests chain of snapshot i, deduplicated (J3, see [[compact]]). */
+  private def compactedRequests(spark: SparkSession, workdir: String, i: Int): DataFrame = {
+    import spark.implicits._
     // one-hit wonders (Spider.cpp:13721-13729): a page-reindex or
     // fake-firstIp request whose url has since been spidered (a reply
     // under the same (firstIp, uh48) newer than its addedTime) is
     // dropped — the reindex was served; the fake request was re-added
     // under the real ip by resolveRevised
-    val answered = dedupedRep.toDF()
+    val answered = latestReplies(loadReplies(spark, workdir, i)).toDF()
       .select(col("first_ip").as("r_ip"), col("uh48").as("r_uh48"),
         col("spidered_time").as("r_time"))
     val oneHitMask = Flags.IsPageReindex | Flags.FakeFirstIp
-    val liveReq = requests.toDF()
+    val liveReq = loadRequests(spark, workdir, i).toDF()
       .join(answered, col("first_ip") === col("r_ip") && col("uh48") === col("r_uh48"), "left_outer")
       .filter(!(col("flags").bitwiseAND(lit(oneHitMask)) =!= 0L &&
         col("r_time").isNotNull && col("r_time") > col("added_time")))
@@ -2101,82 +2104,22 @@ object Crawl {
     // with every other frontier exchange.
     val sigMask = Flags.IsNewOutlink | Flags.IsInjecting | Flags.IsAddUrl |
       Flags.IsPageReindex | Flags.HasContent | Flags.ForceDelete
-    val dedupedReq = liveReq
+    liveReq
       .groupByKey(r => (r.first_ip, r.uh48, r.site_hash32, r.hop_count, r.flags & sigMask))
       .reduceGroups((a, b) => if (a.added_time <= b.added_time) a else b)
-      .map(_._2)
-    // the table rewrites are independent — run them as concurrent jobs
-    // (same shape as the iteration write graph); the per-IP counts and
-    // the seen bloom rebuild from the compacted requests
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fReq = Future {
-        dedupedReq.write.mode("overwrite").parquet(s"$d/requests_full_tmp")
-        val compacted = spark.read.parquet(s"$d/requests_full_tmp")
-        // compaction drops rows; an IP left with no rows gets a null count
-        mergeIpTable(Seq(priorIpLayer(loadIpTable(spark, workdir, i), n = lit(null)),
-            ipLayer(compacted, n = lit(1L))))
-          .write.mode("overwrite").parquet(s"$d/ip_table_full_tmp")
-        compacted
-      }
-      val fRep = Future { dedupedRep.write.mode("overwrite").parquet(s"$d/replies_full_tmp") }
-      val fTitle = Future { loadTitledb(spark, workdir, i).write.mode("overwrite").parquet(s"$d/titledb_full_tmp") }
-      // keyed chain resets (the RdbMerge analogue for the StateTable
-      // chains): one bucketed FULL write per table, so loads stop
-      // walking the delta chain here. The bloom rebuilds FROM GROUND
-      // TRUTH, the compacted requests, and so sheds the fill of
-      // since-compacted rows (fpp hygiene).
-      val fKeyed = Keyed.all.map { t =>
-        Future {
-          val rows = t.fromRequests.fold(t.load(spark, workdir, i))(
-            _(Await.result(fReq, Duration.Inf), cfg))
-          // re-size the bucket count to the chain's measured bytes: the
-          // full write records it, so the next chain's deltas and loads
-          // inherit it (a grown table gets more buckets here, a
-          // compacted-away one shrinks back toward 1)
-          val nb = StateTable.bucketsForBytes(StateTable.chainBytes(workdir, i, t.name))
-          StateTable.writeFull(rows, Seq(col(t.key)), nb, s"$d/${t.name}_full_tmp")
-        }
-      }
-      Await.result(Future.sequence(Seq(fReq, fRep, fTitle) ++ fKeyed), Duration.Inf)
-    }
-    // swap in: the full table replaces this snapshot's delta. The full
-    // targets are deleted too — hadoop rename(src, existing-dir) would
-    // otherwise nest src INSIDE the target (re-compaction of an
-    // already-compacted snapshot, e.g. after an inject-appended delta)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def path(name: String) = new org.apache.hadoop.fs.Path(s"$d/$name")
-    Seq("requests_delta", "replies_delta", "titledb_delta").foreach(n => fs.delete(path(n), true))
-    (Seq("requests", "replies", "titledb", "ip_table") ++ Keyed.all.map(_.name)).foreach { name =>
-      fs.delete(path(name), true)
-      fs.rename(path(s"${name}_full_tmp"), path(name))
-    }
+      .map(_._2).toDF()
   }
 
-  /** Bootstrap snapshot 0 from seeds (full tables). */
+  /** Bootstrap snapshot 0 from seeds: every chained table's first full
+    * write (keyed ones at ONE bucket — one file, one task per write; the
+    * first compaction after growth re-sizes from measured bytes). The
+    * per-IP table counts every seed and makes every seed IP due (A3). */
   def init(spark: SparkSession, workdir: String, seedUrls: Seq[String], cfg: Config): Unit = {
     import spark.implicits._
     val compiles0 = GraftShim.codegenCompiles
     val d = snapDir(workdir, 0)
-    seeds(spark, seedUrls, cfg).write.mode("overwrite").parquet(s"$d/requests")
-    val requests = spark.read.parquet(s"$d/requests")
-    // per-IP table: seed counts (A8), and all seed IPs are immediately
-    // due (A3)
-    mergeIpTable(Seq(ipLayer(requests, n = lit(1L), pri = lit(0), next = lit(0L))))
-      .write.mode("overwrite").parquet(s"$d/ip_table")
+    writeFulls(spark, workdir, 0, cfg, seedUrls, _.initial, _ => 1, "")
     writeIpTableMarker(workdir, 0, cfg)
-    spark.emptyDataset[FrontierReply].write.mode("overwrite").parquet(s"$d/replies")
-    // keyed tables: each chain's first full write (the StateTable
-    // chain terminator; an empty table is a marker-only dir) at ONE
-    // bucket — one file, one task per write; the first compaction
-    // after growth re-sizes from measured bytes
-    Keyed.all.foreach { t =>
-      StateTable.writeFull(t.fromRequests.fold(t.empty(spark))(_(requests, cfg)),
-        Seq(col(t.key)), 1, s"$d/${t.name}")
-    }
-    spark.emptyDataset[TitleRow].write.mode("overwrite").parquet(s"$d/titledb")
     Seq.empty[(Int, Int, Int, String, Int, Int)].toDF("iteration", "first_ip", "seq", "url", "priority", "err_code")
       .write.mode("overwrite").parquet(s"$d/fetch_log")
     writeManifest(workdir, 0, Seq(MetricsRow(0, 0, 0, 0, 0, seedUrls.size, 0, 0,
@@ -2227,30 +2170,28 @@ object Crawl {
     // uh48, or a future bloom-negative would skip the exact anti-join
     // and re-admit. Dynamic overwrite leaves this snapshot's other
     // buckets (and a FULL marker) intact.
-    rollForward(Seq(bloomMerge(Keyed.bloom.load(spark, workdir, i), fresh.toDF().select("uh48"),
-      StateTable.bucketsOf(workdir, i, Keyed.bloom.name), cfg)), d, dynamic = true)
+    rollForward(Seq(bloomMerge(Tables.bloom.load(spark, workdir, i), fresh.toDF().select("uh48"),
+      StateTable.bucketsOf(workdir, i, Tables.bloom.name), cfg)), d, dynamic = true)
       .foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
     // per-IP table: A8 counts for the injected rows, and (when the
     // snapshot maintains the waiting tree) an injected IP must wake the
     // scheduler next iteration, or the due-IP prefilter would never
-    // scan its new rows
+    // scan its new rows. It is read while rewritten: the full write
+    // lands beside it and is swapped in.
     val wake =
       if (!ipTableMarker(workdir, i).exists) Nil
       else Seq(ipLayer(reqs.toDF(), pri = lit(1), next = lit(0L)))
-    mergeIpTable(Seq(priorIpLayer(loadIpTable(spark, workdir, i)),
-        ipLayer(fresh.toDF(), n = lit(1L))) ++ wake)
-      .write.mode("overwrite").parquet(s"$d/ip_table_tmp")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/ip_table"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$d/ip_table_tmp"), new org.apache.hadoop.fs.Path(s"$d/ip_table"))
-    // the requests delta lands LAST: appending to it re-caches every
+    val ipTable = Tables.ipTable
+    StateTable.writeFull(mergeIpTable(Seq(priorIpLayer(ipTable.load(spark, workdir, i)),
+        ipLayer(fresh.toDF(), n = lit(1L))) ++ wake), ipTable.kind, 1, s"$d/${ipTable.name}_tmp")
+    StateTable.swap(d, ipTable.name)
+    // the requests land LAST: appending to the chain re-caches every
     // cached plan that reads the path — `fresh` included, whose
     // anti-join would then see its own rows and come back empty for
     // any write still to run. This order also keeps a crash safe: the
-    // bloom may cover more than the requests, never less.
-    val target = s"$d/requests_delta"
-    val mode = if (new java.io.File(target).exists) "append" else "overwrite"
-    fresh.write.mode(mode).parquet(target)
+    // bloom may cover more than the requests, never less. Appended to a
+    // full write (right after init or compaction), the rows join it.
+    StateTable.append(fresh.toDF(), s"$d/${Tables.requests.name}")
     fresh.unpersist()
     reqs.unpersist()
     n

@@ -1,6 +1,7 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -14,7 +15,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   * host skew (the salted-hash partitioning). The bloom table is
   * `(bloom_bucket int, bloom binary)`, one row per bloom bucket, and is
   * stored like every other keyed snapshot table: on the `StateTable`
-  * bucket chain, keyed on `bloom_bucket` (Crawl.Keyed). An iteration
+  * bucket chain, keyed on `bloom_bucket` (Crawl.Tables). An iteration
   * rewrites only the chain buckets holding bloom buckets that received
   * fresh uh48s (bloom insertion is monotone — no rebuild), so
   * maintenance is O(new urls), and at 10^10 urls the table is
@@ -32,11 +33,9 @@ object SeenBloom {
   def bucketCol(uh48: Column, buckets: Int): Column =
     uh48.bitwiseAND(lit(buckets - 1L)).cast("int").as("bloom_bucket")
 
-  /** The empty bloom table: its schema. */
-  def empty(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[(Int, Array[Byte])].toDF("bloom_bucket", "bloom")
-  }
+  /** The bloom table's schema. */
+  val schema: StructType =
+    StructType(Seq(StructField("bloom_bucket", IntegerType, false), StructField("bloom", BinaryType)))
 
   private def ser(bf: BloomFilter): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
@@ -47,7 +46,7 @@ object SeenBloom {
 
   /** Build the bloom table from scratch (init / compaction). */
   def build(uh48s: Dataset[java.lang.Long], buckets: Int, expectedPerBucket: Long, fpp: Double): DataFrame =
-    update(empty(uh48s.sparkSession), uh48s, buckets, expectedPerBucket, fpp)
+    update(StateTable.empty(uh48s.sparkSession, schema), uh48s, buckets, expectedPerBucket, fpp)
 
   /** Add fresh uh48s to a bloom table: ONE cogroup on the bloom bucket
     * (the r3 shape was five shuffling operators whose job/stage fixed
@@ -57,6 +56,7 @@ object SeenBloom {
     * complete contents of the chain buckets the caller rolls forward. */
   def update(bloomTable: DataFrame, fresh: Dataset[java.lang.Long], buckets: Int,
              expectedPerBucket: Long, fpp: Double): DataFrame = {
+    require(expectedPerBucket >= 1, s"a bloom bucket must expect at least one item, not $expectedPerBucket")
     val spark = bloomTable.sparkSession
     import spark.implicits._
     val freshKeyed = fresh.map(h => (bucketOf(h, buckets), h.longValue()))
@@ -66,8 +66,11 @@ object SeenBloom {
       val existing = blooms.buffered.headOption
       if (pending.isEmpty) existing.iterator // untouched pass-through
       else {
+        // Spark's optimal bit count (BloomFilter.create(n, fpp)), but at
+        // least one bit: a tiny bloom at a high fpp rounds to none
+        val bits = -expectedPerBucket * math.log(fpp) / (math.log(2) * math.log(2))
         val bf = existing.map(b => deser(b._2))
-          .getOrElse(BloomFilter.create(math.max(expectedPerBucket, 1000L), fpp))
+          .getOrElse(BloomFilter.create(expectedPerBucket, math.max(1L, bits.toLong)))
         pending.foreach(bf.putLong)
         Iterator.single((bucket, ser(bf)))
       }

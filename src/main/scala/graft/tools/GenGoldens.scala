@@ -98,7 +98,7 @@ object GenGoldens {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_golden").toString
+    val work = graft.Dirs.temp("graft_golden")
     Crawl.run(spark, work, spec, 8)
     val order = (1 to 8).flatMap { i =>
       spark.read.parquet(s"${Crawl.snapDir(work, i)}/fetch_log")
@@ -112,15 +112,16 @@ object GenGoldens {
     val tdb = Crawl.loadTitledb(spark, work, 8).collect()
       .map(t => (t.uh48, t.url, t.http_status, t.content_hash32)).sortBy(_._1)
     writeMain("titledb.tsv", tdb.map(t => s"${t._1}\t${t._2}\t${t._3}\t${t._4}"))
-    val inl = Crawl.loadInlinkState(spark, work, 8).collect()
+    val st = Crawl.loadLoopState(spark, work, 8, Crawl.Config())
+    val inl = st.inlinks.collect()
       .map(s => (s.first_ip.toLong & 0xffffffffL, s.uh48, s.cblocks.length)).sortBy(x => (x._1, x._2))
     writeMain("inlink_counts.tsv", inl.map(x => s"${x._1.toInt}\t${x._2}\t${x._3}"))
-    val tags = Crawl.loadTagState(spark, work, 8).collect()
+    val tags = st.tagState.collect()
       .map(t => (t.site, t.first_ip, if (t.has_site_tag) 1 else 0, t.cblocks.length))
       .sortBy(t => (t._1, t._2))
     writeMain("site_tags.tsv", tags.map(t => s"${t._1}\t${t._2}\t${t._3}\t${t._4}"))
 
-    val quo = Crawl.loadQuotaState(spark, work, 8)
+    val quo = st.quotaState
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     writeMain("quota_state.tsv", quo.map(x => s"${x._1}\t${x._2}"))
 
@@ -132,8 +133,8 @@ object GenGoldens {
       Corpus.robots(spark, spec), Corpus.hostMeta(spark, spec), Crawl.Config(),
       Crawl.redirectClosure(Corpus.redirects(spark, spec)))
     val pcdUhs = Corpus.pcdReindexUrls.map(u => GbUrl.parse(u).uh48).toSet
-    val pcd = spark.read.parquet(s"${Crawl.snapDir(work, 9)}/replies_delta")
-      .as[FrontierReply].collect().filter(r => pcdUhs(r.uh48))
+    val pcd = Crawl.loadReplies(spark, work, 9).collect()
+      .filter(r => r.spidered_time == Crawl.nowSecs(Crawl.Config(), 9) && pcdUhs(r.uh48))
       .map(r => (r.uh48, (r.percent_changed_per_day * 1000000f).toLong)).sortBy(_._1)
     writeMain("pcd.tsv", pcd.map(x => s"${x._1}\t${x._2}"))
     spark.stop()

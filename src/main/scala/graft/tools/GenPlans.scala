@@ -16,20 +16,14 @@ object GenPlans {
     import spark.implicits._
 
     // a real micro-crawl so every plan reads actual chain tables
-    val work = java.nio.file.Files.createTempDirectory("graft_plans").toString
+    val work = graft.Dirs.temp("graft_plans")
     val cfg = Crawl.Config()
     val spec = Corpus.micro
     Crawl.run(spark, work, spec, 2, cfg,
       seedUrls = (0 until spec.nHosts).map(k => s"http://${Corpus.host(k)}/"))
 
     val i = 2
-    val requests = Crawl.loadRequests(spark, work, i)
-    val replies = Crawl.loadReplies(spark, work, i)
-    val ipState = Crawl.loadIpState(spark, work, i)
-    val domState = Crawl.loadDomState(spark, work, i)
-    val inlinks = Crawl.loadInlinkState(spark, work, i)
-    val quota = Crawl.loadQuotaState(spark, work, i)
-    val ipNext = Crawl.loadIpNext(spark, work, i, cfg)
+    val st = Crawl.loadLoopState(spark, work, i, cfg)
 
     val out = new StringBuilder
     out ++= "# PLANS — formatted physical plans of the key operators\n\n"
@@ -42,8 +36,8 @@ object GenPlans {
       out ++= "\n```\n\n"
     }
 
-    val so = Crawl.scheduleWake(requests, replies, ipState, domState, cfg, i + 1,
-      inlinks, quota, ipNext)
+    val so = Crawl.scheduleWake(st.requests, st.replies, st.ipState, st.domState, cfg, i + 1,
+      st.inlinks, st.quotaState, st.ipNext)
     section("schedule (F1+A1+A2+A3): due-IP prune → scan → score → streamed-heap dole",
       """What to look for:
 - the A3 waiting-tree prune: BOTH the frontier scan AND the reply
@@ -62,8 +56,7 @@ object GenPlans {
 
     // J2: admission anti-join with bloom prefilter; the URL-seen set is
     // the requests chain itself
-    val cand = requests.limit(200)
-    val st = Crawl.loadLoopState(spark, work, i, cfg)
+    val cand = st.requests.limit(200)
     val tagged = graft.frontier.SeenBloom.tagged(cand, st.bloom, cfg.seenBuckets)
     section("admission (J2): bloom-prefiltered URL-seen anti-join",
       """What to look for:
@@ -76,9 +69,9 @@ object GenPlans {
       Crawl.admitTagged(tagged, st.requests.toDF()).toDF)
 
     // state merge with InSet touched-bucket pruning
-    val delta = quota.limit(3)
+    val delta = st.quotaState.orderBy("key").limit(3)
     val ids = StateTable.touchedBucketsMulti(Seq((delta, df => Seq(df("key")), 8))).head
-    val merged = quota
+    val merged = st.quotaState
       .filter(StateTable.bucketCol(Seq(col("key")), 8).isInCollection(ids))
       .unionByName(delta)
       .groupBy("key").agg(sum(col("n")).as("n"))

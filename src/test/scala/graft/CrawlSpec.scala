@@ -103,7 +103,7 @@ class CrawlSpec extends AnyFunSuite with TempDirs {
     Crawl.run(spark, d, spec, 4, cfg)
     // the per-IP last_download_end_ms must be monotonically consistent
     // with the per-iteration clock
-    val ips = Crawl.loadIpState(spark, d, 4).collect()
+    val ips = Crawl.loadLoopState(spark, d, 4, cfg).ipState.collect()
     assert(ips.nonEmpty)
     assert(ips.forall(_.last_download_end_ms > Crawl.nowMs(cfg, 0)))
   }
@@ -134,11 +134,12 @@ class CrawlSpec extends AnyFunSuite with TempDirs {
       assert(field("shuffle_partitions") == 1, s"snapshot $i manifest $m")
       // the state rows that size the partitions are the chains' rows,
       // read from the footers of deltas and compacted tables alike
-      assert(Crawl.chainRows(spark, d, i - 1, "requests") == Crawl.loadRequests(spark, d, i - 1).count())
-      assert(Crawl.chainRows(spark, d, i - 1, "replies") == Crawl.loadReplies(spark, d, i - 1).count())
-      assert(Crawl.chainRows(spark, d, i - 1, "titledb") >= Crawl.loadTitledb(spark, d, i - 1).count())
-      assert(Crawl.stateRows(spark, d, i - 1) == Seq("requests", "replies", "titledb")
-        .map(Crawl.chainRows(spark, d, i - 1, _)).max)
+      import Crawl.Tables
+      assert(Tables.requests.chainRows(spark, d, i - 1) == Crawl.loadRequests(spark, d, i - 1).count())
+      assert(Tables.replies.chainRows(spark, d, i - 1) == Crawl.loadReplies(spark, d, i - 1).count())
+      assert(Tables.titledb.chainRows(spark, d, i - 1) >= Crawl.loadTitledb(spark, d, i - 1).count())
+      assert(Crawl.stateRows(spark, d, i - 1) == Seq(Tables.requests, Tables.replies, Tables.titledb)
+        .map(_.chainRows(spark, d, i - 1)).max)
       assert(field("codegen_compiles") >= 0 && (i == 1 || field("codegen_compiles") <= 50),
         s"snapshot $i manifest $m")
     }
@@ -166,8 +167,8 @@ class CrawlSpec extends AnyFunSuite with TempDirs {
 
   test("a degraded bloom keeps admission exact (fetch logs and requests as with the default bloom)") {
     import spark.implicits._
-    // one 64-bit bloom for every url: the 1000-item floor per bloom
-    // bucket at fpp 0.99 sizes it to one word with one hash
+    // one 64-bit bloom for every url: a bloom bucket sized for one
+    // item at fpp 0.99 is one word with one hash
     val degraded = cfg.copy(bloomFpp = 0.99, seenBuckets = 1, expectedSeenPerBucket = 1L)
     val d = tmpdir()
     Crawl.run(spark, d, spec, 5, degraded) // compaction at snapshot 4
@@ -197,9 +198,10 @@ class CrawlSpec extends AnyFunSuite with TempDirs {
     assert(results.map(_.newUrls).sum < ref.take(4).map(_.newUrls).sum,
       s"the guard must fire: ${results.map(_.newUrls)} vs uncapped ${ref.take(4).map(_.newUrls)}")
     for (i <- 1 to 4) {
-      val over = Crawl.loadIpCounts(spark, d, i - 1).filter(col("n") > capped.overflowCap)
+      val over = Crawl.loadLoopState(spark, d, i - 1, capped).ipCounts.filter(col("n") > capped.overflowCap)
         .select("first_ip").as[Int].collect().toSet
-      val outlinks = spark.read.parquet(s"${Crawl.snapDir(d, i)}/requests_delta")
+      // iteration i's admitted rows: the requests chain's growth
+      val outlinks = Crawl.loadRequests(spark, d, i).toDF().except(Crawl.loadRequests(spark, d, i - 1).toDF())
         .filter(col("flags").bitwiseAND(lit(Flags.IsAddUrl)) === 0L)
         .select("first_ip").as[Int].collect()
       val leaked = outlinks.filter(over)

@@ -59,7 +59,8 @@ class InlinkSpec extends AnyFunSuite with TempDirs {
     import spark.implicits._
     val work = tmpdir("graftinlink")
     Crawl.run(spark, work, Corpus.micro, 3)
-    val st = Crawl.loadInlinkState(spark, work, Crawl.latestSnapshot(work).get).collect()
+    val st = Crawl.loadLoopState(spark, work, Crawl.latestSnapshot(work).get, Crawl.Config())
+      .inlinks.collect()
     assert(st.nonEmpty, "inlink state written")
     assert(st.forall(_.cblocks.length <= 20))
     assert(st.forall(s => s.cblocks.toSeq == s.cblocks.toSeq.distinct.sorted), "deterministic sorted distinct")

@@ -39,11 +39,11 @@ class IpTableSpec extends AnyFunSuite with TempDirs {
     var repeatedUh48s = 0L
     for (i <- 0 to 5) {
       val reqs = Crawl.loadRequests(spark, work, i)
-      val counts = Crawl.loadIpCounts(spark, work, i).as[(Int, Long)].collect().toMap
+      val st = Crawl.loadLoopState(spark, work, i, cfg)
+      val counts = st.ipCounts.as[(Int, Long)].collect().toMap
       val expected = reqs.groupBy("first_ip").count().as[(Int, Long)].collect().toMap
       assert(counts == expected, s"snapshot $i: per-IP counts")
 
-      val st = Crawl.loadLoopState(spark, work, i, cfg)
       val seen = st.seenUh48.select("uh48").collect().map(_.getLong(0))
       assert(seen.length == seen.distinct.length,
         s"snapshot $i: ${seen.length - seen.distinct.length} duplicate seen-set rows")

@@ -9,10 +9,12 @@ import graft.frontier._
   * manifested snapshots — so a crash anywhere between the fetch_log
   * write and the manifest leaves a PARTIAL snapshot that the resume
   * simply re-runs from snapshot i-1 state. Because the iteration is
-  * deterministic and every write is whole-directory overwrite, the
-  * re-run must reproduce the crashed iteration byte-identically; no
+  * deterministic and the re-run first deletes the crashed try's
+  * leftovers, it must reproduce the iteration byte-identically; no
   * reader ever resolves chains through an unmanifested snapshot's
-  * leftovers (loads are keyed at i-1).
+  * leftovers (loads are keyed at i-1). Compaction's swap takes the
+  * manifest away while it deletes committed parts, so a crash inside
+  * it is the same case.
   *
   * The reference's analogue: spiderdb adds are Msg4-logged and replayed
   * after a crash; doledb is rebuilt from spiderdb (Spider.cpp doledb
@@ -39,6 +41,33 @@ class ResumeIntegritySpec extends AnyFunSuite with TempDirs {
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** Every table of snapshot i, as sorted rows, named. */
+  private def tables(w: String, i: Int): Seq[(String, Seq[String])] = {
+    import org.apache.spark.sql.functions.{col, sha2}
+    val st = Crawl.loadLoopState(spark, w, i, cfg)
+    Seq(
+      "requests chain" -> sortedRows(st.requests.toDF()),
+      "replies chain" -> sortedRows(st.replies.toDF()),
+      "titledb" -> sortedRows(Crawl.loadTitledb(spark, w, i).toDF()
+        .select("uh48", "url", "http_status", "content_hash32")),
+      "tag_state chain" -> sortedRows(st.tagState.toDF()),
+      "quota chain" -> sortedRows(st.quotaState),
+      "per-IP politeness state" -> sortedRows(st.ipState.toDF()),
+      "per-IP counts" -> sortedRows(st.ipCounts),
+      "per-IP waiting tree" -> st.ipNext.map(sortedRows).getOrElse(Seq("<not maintained>")),
+      "titledb-derived vectors" -> sortedRows(st.titleVecs),
+      "seen set" -> sortedRows(st.seenUh48),
+      "dom_state chain" -> sortedRows(st.domState.toDF()),
+      "inlink_state chain" -> sortedRows(st.inlinks.toDF()),
+      // the seen bloom, bucket by bucket
+      "seen bloom" -> sortedRows(st.bloom.select(col("bloom_bucket"), sha2(col("bloom"), 256))))
+  }
+
+  private def assertSameTables(got: String, want: String, i: Int): Unit =
+    tables(got, i).zip(tables(want, i)).foreach { case ((name, g), (_, w)) =>
+      assert(g == w, s"snapshot $i: $name")
+    }
+
   test("crash between fetch_log and manifest: the re-run continuation is byte-identical") {
     val a = tmpdir(); val b = tmpdir()
     // reference run: 4 iterations straight through (compaction at 4)
@@ -51,48 +80,36 @@ class ResumeIntegritySpec extends AnyFunSuite with TempDirs {
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$d3/MANIFEST.json"))
     // partial-write mix: these tables "never made it" before the crash
     // (the concurrent write batch has no ordering guarantee), the rest
-    // (fetch_log, requests_delta, titledb_delta, ...) did
-    Seq("replies_delta", "tag_state", "inlink_state", "seen_bloom", "ip_table")
-      .foreach(n => TempDirs.deleteTree(java.nio.file.Paths.get(s"$d3/$n")))
+    // (fetch_log, requests, titledb, ...) did
+    Seq("replies", "tag_state", "inlink_state", "seen_bloom", "ip_table")
+      .foreach(n => Dirs.deleteTree(java.nio.file.Paths.get(s"$d3/$n")))
     assert(Crawl.latestSnapshot(b).contains(2), "manifest is the commit point")
     // resume: re-runs iteration 3 over snapshot-2 state, then runs 4
     Crawl.run(spark, b, spec, 2, cfg)
 
     assert(fetchOrder(b, 4) == fetchOrder(a, 4),
       "re-run crawl order (incl. the crashed iteration's fetch_log) must be byte-identical")
-    assert(sortedRows(Crawl.loadRequests(spark, b, 4).toDF()) ==
-      sortedRows(Crawl.loadRequests(spark, a, 4).toDF()), "requests chain")
-    assert(sortedRows(Crawl.loadReplies(spark, b, 4).toDF()) ==
-      sortedRows(Crawl.loadReplies(spark, a, 4).toDF()), "replies chain")
-    assert(sortedRows(Crawl.loadTitledb(spark, b, 4).toDF()
-        .select("uh48", "url", "http_status", "content_hash32")) ==
-      sortedRows(Crawl.loadTitledb(spark, a, 4).toDF()
-        .select("uh48", "url", "http_status", "content_hash32")), "titledb")
-    assert(sortedRows(Crawl.loadTagState(spark, b, 4).toDF()) ==
-      sortedRows(Crawl.loadTagState(spark, a, 4).toDF()), "tag_state chain")
-    assert(sortedRows(Crawl.loadQuotaState(spark, b, 4)) ==
-      sortedRows(Crawl.loadQuotaState(spark, a, 4)), "quota chain")
-    assert(sortedRows(Crawl.loadIpState(spark, b, 4).toDF()) ==
-      sortedRows(Crawl.loadIpState(spark, a, 4).toDF()), "per-IP politeness state")
-    assert(sortedRows(Crawl.loadIpCounts(spark, b, 4)) ==
-      sortedRows(Crawl.loadIpCounts(spark, a, 4)), "per-IP counts")
-    assert(Crawl.loadIpNext(spark, b, 4, cfg).map(sortedRows) ==
-      Crawl.loadIpNext(spark, a, 4, cfg).map(sortedRows), "per-IP waiting tree")
-    assert(sortedRows(Crawl.loadTitleVecs(spark, b, 4)) ==
-      sortedRows(Crawl.loadTitleVecs(spark, a, 4)), "titledb-derived vectors")
-    import org.apache.spark.sql.functions.col
-    val seenB = Crawl.loadRequests(spark, b, 4).select(col("uh48")).distinct()
-    assert(sortedRows(seenB) == sortedRows(
-      Crawl.loadRequests(spark, a, 4).select(col("uh48")).distinct()), "seen set")
-    // the keyed chains not compared above, loaded through their own
-    // resolvers
-    def chain(w: String, t: Crawl.KeyedTable) = sortedRows(t.load(spark, w, 4))
-    Seq(Crawl.Keyed.dom, Crawl.Keyed.inlinks).foreach { t =>
-      assert(chain(b, t) == chain(a, t), s"${t.name} chain")
-    }
-    // the seen bloom, bucket by bucket
-    def bloom(w: String) = sortedRows(Crawl.loadLoopState(spark, w, 4, cfg).bloom
-      .select(col("bloom_bucket"), org.apache.spark.sql.functions.sha2(col("bloom"), 256)))
-    assert(bloom(b) == bloom(a), "seen bloom")
+    assertSameTables(b, a, 4)
+  }
+
+  test("crash inside compaction's swap: the resume re-runs the iteration and compacts it again") {
+    val a = tmpdir(); val b = tmpdir()
+    // reference run: 5 iterations straight through (compaction at 4)
+    Crawl.run(spark, a, spec, 5, cfg)
+    // crash run: snapshot 4 committed, then its compaction wrote every
+    // full table and crashed after swapping in the first two
+    Crawl.run(spark, b, spec, 4, cfg, compactEvery = 100)
+    Crawl.compactWrite(spark, b, 4, cfg)
+    val d4 = Crawl.snapDir(b, 4)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$d4/MANIFEST.json"))
+    Crawl.Tables.all.take(2).foreach(t => StateTable.swap(d4, t.name))
+    assert(Crawl.latestSnapshot(b).contains(3), "a snapshot inside its swap is not committed")
+    // resume: re-runs iteration 4 over snapshot-3 state, compacts it,
+    // then runs 5
+    Crawl.run(spark, b, spec, 2, cfg)
+
+    assert(fetchOrder(b, 5) == fetchOrder(a, 5), "crawl order after the resume")
+    assertSameTables(b, a, 4)
+    assertSameTables(b, a, 5)
   }
 }

@@ -30,4 +30,12 @@ class SeenBloomSpec extends AnyFunSuite {
     val fpCount = SeenBloom.tagged(unseen, updated, buckets).collect().count(_._2)
     assert(fpCount < 300, s"fp rate too high: $fpCount/2000")
   }
+
+  test("a bloom is sized for its expected items, however few") {
+    import spark.implicits._
+    def bytes(expected: Long): Long = SeenBloom.build(spark.createDataset(Seq(java.lang.Long.valueOf(1L))),
+      1, expected, 0.03).select(org.apache.spark.sql.functions.length($"bloom")).as[Int].head().toLong
+    assert(bytes(10L) < bytes(1000L), s"${bytes(10L)} vs ${bytes(1000L)} bytes")
+    intercept[IllegalArgumentException](SeenBloom.build(spark.emptyDataset[java.lang.Long], 1, 0L, 0.03))
+  }
 }

@@ -106,10 +106,8 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
     assert(injected.head.url == "http://www.h7.test/injected.html")
     assert(after.count() == before + 1)
     // injected request schedules immediately despite politeness state
-    val batch = Crawl.schedule(after,
-      Crawl.loadReplies(spark, work, i),
-      Crawl.loadIpState(spark, work, i),
-      spark.read.parquet(s"${Crawl.snapDir(work, i)}/dom_state").as[DomState], cfg, i + 1)
+    val st = Crawl.loadLoopState(spark, work, i, cfg)
+    val batch = Crawl.schedule(after, st.replies, st.ipState, st.domState, cfg, i + 1)
     assert(batch.filter(_.url == "http://www.h7.test/injected.html").count() == 1)
   }
 
@@ -120,19 +118,16 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
     // 4 iterations with compactEvery=4 → snap_4 holds FULL tables
     Crawl.run(spark, work, Corpus.micro, 4, cfg, compactEvery = 4)
     val i = Crawl.latestSnapshot(work).get
-    assert(new java.io.File(s"${Crawl.snapDir(work, i)}/requests").exists,
+    assert(new java.io.File(s"${Crawl.snapDir(work, i)}/requests/_GRAFT_FULL").exists,
       "precondition: latest snapshot is compacted (full requests table)")
     val n = Crawl.inject(spark, work, Seq("http://www.h6.test/after-compaction.html"), cfg)
     assert(n == 1)
-    // the injected url must be loadable (delta unioned with the full table)
-    val reqs = Crawl.loadRequests(spark, work, i)
-    assert(reqs.filter(_.url == "http://www.h6.test/after-compaction.html").count() == 1,
-      "injected url dropped: loadTable ignored the same-snapshot delta")
+    // the injected url must be loadable (appended into the full table)
+    val st = Crawl.loadLoopState(spark, work, i, cfg)
+    assert(st.requests.filter(_.url == "http://www.h6.test/after-compaction.html").count() == 1,
+      "injected url dropped: the load ignored rows appended to a full write")
     // and schedulable
-    val batch = Crawl.schedule(reqs,
-      Crawl.loadReplies(spark, work, i),
-      Crawl.loadIpState(spark, work, i),
-      spark.read.parquet(s"${Crawl.snapDir(work, i)}/dom_state").as[DomState], cfg, i + 1)
+    val batch = Crawl.schedule(st.requests, st.replies, st.ipState, st.domState, cfg, i + 1)
     assert(batch.filter(_.url == "http://www.h6.test/after-compaction.html").count() == 1)
   }
 

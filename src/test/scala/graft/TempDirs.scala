@@ -16,14 +16,5 @@ trait TempDirs extends BeforeAndAfterAll { self: Suite =>
   }
 
   override protected def afterAll(): Unit =
-    try super.afterAll() finally made.forEach(d => TempDirs.deleteTree(d))
-}
-
-object TempDirs {
-  /** Delete `root` and everything below it, children first. */
-  def deleteTree(root: Path): Unit = if (Files.exists(root)) {
-    val walk = Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
-  }
+    try super.afterAll() finally made.forEach(d => Dirs.deleteTree(d))
 }

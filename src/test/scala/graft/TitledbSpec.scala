@@ -61,10 +61,8 @@ class TitledbSpec extends AnyFunSuite with TempDirs {
       .collect().filter(r => Flags.has(r.flags, Flags.IsPageReindex))
     assert(req.nonEmpty, "reindex request carries IsPageReindex")
     // it schedules immediately on the isreindex rule (priority 80)
-    val batch = Crawl.schedule(Crawl.loadRequests(spark, work, i),
-      Crawl.loadReplies(spark, work, i),
-      Crawl.loadIpState(spark, work, i),
-      spark.read.parquet(s"${Crawl.snapDir(work, i)}/dom_state").as[DomState], cfg, i + 1)
+    val st = Crawl.loadLoopState(spark, work, i, cfg)
+    val batch = Crawl.schedule(st.requests, st.replies, st.ipState, st.domState, cfg, i + 1)
       .collect().filter(_.url == url)
     assert(batch.exists(_.priority == 80), s"expected isreindex priority 80, got ${batch.map(_.priority).toSeq}")
     // run one more iteration: the refetch lands in titledb with a newer time
