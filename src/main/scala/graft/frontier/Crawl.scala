@@ -130,7 +130,7 @@ object Crawl {
   // --------------------------------------------------------- scheduling
 
   /** The evaluation context bridge: FrontierRequest(+reply) → UfnRequest. */
-  private def toUfn(r: FrontierRequest): UfnRequest = UfnRequest(
+  private[graft] def toUfn(r: FrontierRequest): UfnRequest = UfnRequest(
     url = r.url,
     hopCount = r.hop_count,
     hopCountValid = true,
@@ -159,7 +159,7 @@ object Crawl {
     siteHash32 = r.site_hash32
   )
 
-  private def toUfnReply(r: FrontierReply): UfnReply = UfnReply(
+  private[graft] def toUfnReply(r: FrontierReply): UfnReply = UfnReply(
     spideredTime = r.spidered_time,
     errCode = r.err_code,
     errCount = r.err_count,
@@ -272,10 +272,13 @@ object Crawl {
       r.expr.contains("siteadds") || r.expr.contains("domainadds"))
 
   /** Schedule: produce this iteration's fetch batch (doledb analogue).
-    * Fully native Catalyst pipeline — rule table compiled to
-    * when/otherwise columns (whole-stage codegen, no per-row objects);
-    * falls back to the reference-exact interpreter if the rule table has
-    * tokens the compiler doesn't support. */
+    * Fully native Catalyst pipeline — rule table compiled to one
+    * when/otherwise chain, evaluated once per row into the `ufn` column,
+    * whose per-rule lookups read that column (whole-stage codegen, no
+    * per-row objects). Ineligible rows are not filtered out first: the
+    * dole skips them by the `eligible` column, so no predicate pushdown
+    * copies the chain. Falls back to the reference-exact interpreter if
+    * the rule table has tokens the compiler doesn't support. */
   def schedule(requests: Dataset[FrontierRequest],
                replies: Dataset[FrontierReply],
                ipState: Dataset[IpState],
@@ -286,14 +289,11 @@ object Crawl {
                quota: DataFrame = null): Dataset[FetchTask] = {
     import requests.sparkSession.implicits._
     val nowMillis = nowMs(cfg, iteration)
-    compiledScored(requests, replies, ipState, domState, cfg, iteration, inlinks, None,
-      wantLb = false) match {
+    compiledScored(requests, replies, ipState, domState, cfg, iteration, inlinks, None) match {
       case None => scheduleInterpreted(requests, replies, ipState, domState, cfg, iteration,
         Option(inlinks).getOrElse(requests.sparkSession.emptyDataset[InlinkState]), quota)
       case Some(scored) =>
-        val eligible = scored.filter(!col("force_delete") && col("spider_time_ms") <= nowMillis)
-        val batch = graft.plans.WinnerDole(
-          doleInput(eligible).drop("force_delete", "next_lb"),
+        val batch = graft.plans.WinnerDole(doleInput(scored, nowMillis).drop("next_lb"),
           kEff(cfg), cfg.maxWinnersPerIp).as[FetchTask]
         if (cfg.enforceDoleCaps) applyDoleCaps(batch, cfg) else batch
     }
@@ -339,26 +339,20 @@ object Crawl {
         schedule(requests, replies, ipState, domState, cfg, iteration, inlinks, quota).toDF(),
         wake = false, dueIps = None)
     val dueIps = ipNext.map(_.filter(col("next_ms") <= nowMillis).select("first_ip"))
-    compiledScored(requests, replies, ipState, domState, cfg, iteration, inlinks, dueIps,
-      wantLb = true) match {
+    compiledScored(requests, replies, ipState, domState, cfg, iteration, inlinks, dueIps) match {
       case None => // interpreter needed after all → no wake maintenance
         ScheduleOut(
           scheduleInterpreted(requests, replies, ipState, domState, cfg, iteration,
             Option(inlinks).getOrElse(requests.sparkSession.emptyDataset[InlinkState]), quota).toDF(),
           wake = false, dueIps = None)
       case Some(scored) =>
-        val in = doleInput(scored)
-          .withColumn("eligible", !col("force_delete") && col("spider_time_ms") <= nowMillis)
-          // a force-deleted row never schedules, so it must not hold its
-          // IP awake either (it only leaves via compaction)
-          .withColumn("next_lb", when(col("force_delete"), Long.MaxValue).otherwise(col("next_lb")))
-          .drop("force_delete")
-        ScheduleOut(graft.plans.WinnerDole.wake(in, kEff(cfg), cfg.maxWinnersPerIp), wake = true, dueIps)
+        ScheduleOut(graft.plans.WinnerDole.wake(doleInput(scored, nowMillis), kEff(cfg),
+          cfg.maxWinnersPerIp), wake = true, dueIps)
     }
   }
 
   /** Heap truncation: ip_max is element_at(<static rule table>, ufn)
-    * (RuleCompiler:186), so no row survives the dole cap at
+    * (`RuleCompiler.attrs`), so no row survives the dole cap at
     * pos >= max(ipMaxSpiders over the table). Keeping more than that in
     * the heap only to throw it away cost the r3 kernel ~5x state volume
     * (default table: max ipms = 7, not MAX_WINNER_NODES=2000). */
@@ -371,18 +365,23 @@ object Crawl {
   def wakeSafeRules(cfg: Config): Boolean =
     !cfg.rules.exists(r => r.expr.contains("spiderwaited") || r.expr.contains("urlage"))
 
-  /** The 12 dole-input columns (+ next_lb in the wake path). */
-  private def doleInput(scored: DataFrame): DataFrame = scored
-    .withColumn("was_indexed_in", col("rep_exists") && col("rep_err_code") === 0)
+  /** The 12 dole-input columns, `eligible` (the one eligibility rule of
+    * both schedule paths: not force-deleted and due by `nowMillis`) and
+    * the wake pass's `next_lb`. */
+  private def doleInput(scored: DataFrame, nowMillis: Long): DataFrame = scored
     .select(col("first_ip"), col("uh48"), col("url"), col("priority"),
       col("ufn"), col("spider_time_ms"), col("hop_count"), col("ip_max"),
-      col("was_indexed_in"), col("flags"), col("site_hash32"), col("dom_hash32"),
-      col("force_delete"), col("next_lb"))
+      (col("rep_exists") && col("rep_err_code") === 0).as("was_indexed_in"),
+      col("flags"), col("site_hash32"), col("dom_hash32"),
+      (!col("force_delete") && col("spider_time_ms") <= nowMillis).as("eligible"),
+      // a force-deleted row never schedules, so it must not hold its
+      // IP awake either (it only leaves via compaction)
+      when(col("force_delete"), Long.MaxValue).otherwise(col("next_lb")).as("next_lb"))
 
-  /** Compiled scoring pipeline up to the PRE-eligibility-filter `scored`
-    * DataFrame (None → rule table needs the interpreter). With `dueIps`,
-    * the frontier scan is semi-joined on the due set BEFORE the exchange
-    * (A3 waiting-tree pruning). */
+  /** Compiled scoring pipeline: every frontier row with its `ufn`, rule
+    * lookups, `spider_time_ms` and `next_lb` (None → rule table needs the
+    * interpreter). With `dueIps`, the frontier scan is semi-joined on the
+    * due set BEFORE the exchange (A3 waiting-tree pruning). */
   private def compiledScored(requests: Dataset[FrontierRequest],
                              replies: Dataset[FrontierReply],
                              ipState: Dataset[IpState],
@@ -390,8 +389,7 @@ object Crawl {
                              cfg: Config,
                              iteration: Int,
                              inlinks: Dataset[InlinkState],
-                             dueIps: Option[DataFrame],
-                             wantLb: Boolean): Option[DataFrame] = {
+                             dueIps: Option[DataFrame]): Option[DataFrame] = {
     val spark = requests.sparkSession
     import spark.implicits._
     val now = nowSecs(cfg, iteration)
@@ -407,7 +405,7 @@ object Crawl {
       repErrCode = col("rep_err_code"), repErrCount = col("rep_err_count"),
       repHttpStatus = col("rep_http_status"), now = lit(now))
 
-    RuleCompiler.compile(cfg.rules, c, siteListEmpty = sl.isEmpty, patterns = cfg.patterns).map { compiled =>
+    RuleCompiler.compile(cfg.rules, c, siteListEmpty = sl.isEmpty, patterns = cfg.patterns).map { ufn =>
       // merge duplicate requests per uh48 with native aggregates
       // (Spider.cpp:4799-4836: min hop, min discovery, freshest rest)
       // spiderdb is keyed (firstIp, uh48) — Spider.h:370-377 — and this
@@ -480,14 +478,10 @@ object Crawl {
 
       val lastMs = coalesce(col("last_download_end_ms"), lit(-1L))
       val domCd = coalesce(col("crawl_delay_ms"), lit(-1))
-      val spiderTime = RuleCompiler.spiderTimeCol(c, compiled, lastMs, domCd)
-      // the waiting-tree lower bound: same formula MINUS the dom-crawl-
-      // delay max() term (see scheduleWake scaladoc)
-      // Catalyst does NOT prune this second full rule-table expression
-      // in the non-wake path (measured: schedule kernel 1.6M -> 3.1M
-      // urls/sec at local[8] with it gone) — only build it when the
-      // wake pass will actually consume it
-      val nextLb = if (wantLb) RuleCompiler.spiderTimeCol(c, compiled, lastMs, lit(-1)) else lit(0L)
+      // the chain is evaluated once, into the ufn column; every lookup
+      // below reads that column (a lookup built over the chain itself
+      // would copy the whole rule table into each derived column)
+      val a = RuleCompiler.attrs(cfg.rules, col("ufn"))
 
       // A2: winner selection runs downstream as the BOUNDED-heap custom
       // operator (plans.WinnerDole — the winner-tree analogue,
@@ -495,12 +489,15 @@ object Crawl {
       // instead of the window's per-IP full sort, which buffers an
       // entire skewed IP in one task at 100 TB.
       joined
-        .withColumn("ufn", compiled.ufn)
-        .withColumn("priority", compiled.priority)
-        .withColumn("force_delete", compiled.forceDelete)
-        .withColumn("ip_max", compiled.ipMaxSpiders)
-        .withColumn("spider_time_ms", spiderTime)
-        .withColumn("next_lb", nextLb)
+        .withColumn("ufn", ufn)
+        .withColumn("priority", a.priority)
+        .withColumn("force_delete", a.forceDelete)
+        .withColumn("ip_max", a.ipMaxSpiders)
+        .withColumn("spider_time_ms", RuleCompiler.spiderTimeCol(c, a, lastMs, domCd))
+        // the waiting-tree lower bound: the spider-time formula MINUS the
+        // dom-crawl-delay max() term (see scheduleWake scaladoc); the
+        // non-wake path drops the column and Catalyst prunes it
+        .withColumn("next_lb", RuleCompiler.spiderTimeCol(c, a, lastMs, lit(-1)))
     }
   }
 
@@ -1659,10 +1656,10 @@ object Crawl {
     * recompute the frontier scan, and lineage-cut: the cut view's plan
     * is a LogicalRDD leaf reading the cache, so downstream operator
     * construction (Catalyst analyzes EAGERLY per transformation) stops
-    * re-walking the schedule tree, whose compiled rule table is a very
-    * large expression — measured ~5 s/iteration of driver-side analysis
-    * before the cut. Blocks evicted under pressure recompute through
-    * the InMemoryRelation as usual. */
+    * re-walking the schedule tree: the frontier joins, the rule chain
+    * (evaluated once, into the `ufn` column) and the lookups that read
+    * it. Blocks evicted under pressure recompute through the
+    * InMemoryRelation as usual. */
   private def schedulePhase(st: LoopState, cfg: Config, i: Int): Doled = {
     val so = scheduleWake(st.requests, st.replies, st.ipState, st.domState, cfg, i,
       st.inlinks, st.quotaState, st.ipNext)

@@ -122,6 +122,10 @@ final class WinnerHeap(val k: Int) {
   * Child must provide columns: first_ip:int, uh48:long, url:string,
   * priority:int, ufn:int, spider_time_ms:long, hop_count:int, ip_max:int,
   * was_indexed_in:boolean, flags:long, site_hash32:int, dom_hash32:int.
+  * If it also has `eligible:boolean`, only eligible rows compete for the
+  * dole (an IP with none emits no winner): the same rows as the window
+  * over the input filtered on `eligible`, without a Filter that Catalyst
+  * would push down into the scoring projections.
   */
 case class WinnerDolePlan(k: Int, maxWinners: Int, emitWake: Boolean,
                           override val output: Seq[Attribute],
@@ -143,14 +147,15 @@ object WinnerDole {
     "req_flags" -> LongType, "site_hash32" -> IntegerType,
     "dom_hash32" -> IntegerType)
 
-  /** Wrap `scored` (must carry the 12 input columns) in the dole
-    * operator; registers the planning strategy on the session once. */
+  /** Wrap `scored` (must carry the 12 input columns, and may carry
+    * `eligible`) in the dole operator; registers the planning strategy
+    * on the session once. */
   def apply(scored: DataFrame, k: Int, maxWinners: Int): DataFrame =
     build(scored, k, maxWinners, emitWake = false)
 
   /** Wake-emitting variant (the waiting-tree maintenance pass, A3):
-    * the child additionally carries `eligible:boolean` (row may be doled
-    * NOW) and `next_lb:long` (a lower bound on the row's next spider
+    * the child must carry `eligible:boolean` (row may be doled NOW) and
+    * `next_lb:long` (a lower bound on the row's next spider
     * time that stays valid until the IP is touched). Besides the winner
     * rows, each scanned IP emits ONE sentinel row with seq_in_ip = -1
     * and spider_time_ms = min(next_lb) over ALL its rows — the per-IP
@@ -203,7 +208,7 @@ case class WinnerDoleExec(k: Int, maxWinners: Int, emitWake: Boolean,
     val timeI = idx("spider_time_ms"); val hopI = idx("hop_count")
     val ipMaxI = idx("ip_max"); val wasI = idx("was_indexed_in")
     val flagsI = idx("flags"); val siteI = idx("site_hash32"); val domI = idx("dom_hash32")
-    val eligI = if (emitWake) idx("eligible") else -1
+    val eligI = idx("eligible") // -1: every row competes
     val lbI = if (emitWake) idx("next_lb") else -1
     val kLoc = k; val maxW = maxWinners; val wake = emitWake
     val outTypes = output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) }
@@ -257,7 +262,7 @@ case class WinnerDoleExec(k: Int, maxWinners: Int, emitWake: Boolean,
           true
         }
 
-        /** In wake mode only ELIGIBLE rows compete for the dole, but
+        /** Only ELIGIBLE rows compete for the dole, but in wake mode
           * every row's next_lb feeds the group's next-eligible minimum
           * (an ineligible row is exactly what determines when the IP
           * wakes up). */
@@ -265,8 +270,8 @@ case class WinnerDoleExec(k: Int, maxWinners: Int, emitWake: Boolean,
           if (wake) {
             val lb = row.getLong(lbI)
             if (lb < groupMinLb) groupMinLb = lb
-            if (row.getBoolean(eligI)) insert(row)
-          } else insert(row)
+          }
+          if (eligI < 0 || row.getBoolean(eligI)) insert(row)
         }
 
         /** Stage the next output row: winners best-first with the

@@ -7,9 +7,12 @@ import graft.frontier.Flags
 /** Compiles a URL-filter rule table into native Catalyst Column
   * expressions so the scheduler's scoring runs inside whole-stage codegen
   * with zero per-row object allocation (SURVEY §2.2 F1: "a compiled
-  * when/otherwise Column chain"). Semantics are cross-validated against
-  * the reference-exact interpreter (`UrlFilters.urlFilterNum`) by
-  * property tests.
+  * when/otherwise Column chain"). The chain (`compile`) yields a row's
+  * `ufn`, the first matching rule; the caller projects it once as a
+  * column, and the per-rule lookups (`attrs`, `spiderTimeCol`) read that
+  * column, so the table is evaluated once per row. Semantics are
+  * cross-validated against the reference-exact interpreter
+  * (`UrlFilters.urlFilterNum`) by property tests.
   *
   * Input columns (the scheduler's joined row):
   *  - request: url, hop_count, flags, added_time, discovery_time,
@@ -18,8 +21,8 @@ import graft.frontier.Flags
   *    rep_err_count, rep_http_status
   *  - politeness: last_download_end_ms (−1 none), dom_crawl_delay_ms (−1)
   *
-  * Returns None if any rule uses a token this compiler does not support
-  * (caller falls back to the interpreter). */
+  * `compile` returns None if any rule uses a token this compiler does
+  * not support (caller falls back to the interpreter). */
 object RuleCompiler {
 
   final case class Cols(
@@ -30,9 +33,9 @@ object RuleCompiler {
       repErrCount: Column, repHttpStatus: Column,
       now: Column)
 
-  final case class Compiled(ufn: Column, priority: Column, forceDelete: Column,
-                            ipMaxSpiders: Column, ipWaitMs: Column, spiderFreqDays: Column,
-                            harvestLinks: Column)
+  /** A rule's scheduling attributes, looked up by a row's `ufn`. */
+  final case class Attrs(priority: Column, forceDelete: Column, ipMaxSpiders: Column,
+                         ipWaitMs: Column, spiderFreqDays: Column)
 
   @inline private def bit(flags: Column, b: Long): Column = (flags.bitwiseAND(lit(b)) =!= lit(0L))
 
@@ -72,11 +75,11 @@ object RuleCompiler {
       return fin(when(!c.repExists, lit(true)).otherwise(c.addedTime > c.repSpideredTime))
     if (tok.startsWith("isnew")) return fin(!hadReply)
     if (tok.startsWith("iswww")) {
-      // Spider.cpp:12554-12582 char scan
-      val www = when(substring(c.url, 5, 1) === ":", substring(c.url, 8, 3))
-        .when(substring(c.url, 6, 1) === ":", substring(c.url, 9, 3))
-        .otherwise(substring(c.url, 1, 3)) === "www"
-      return fin(www)
+      // Spider.cpp:12554-12582 char scan: "www" after "xxxx://" or
+      // "xxxxx://", else at the start
+      val from = when(substring(c.url, 5, 1) === ":", lit(8))
+        .when(substring(c.url, 6, 1) === ":", lit(9)).otherwise(lit(1))
+      return fin(c.url.substr(from, lit(3)) === "www")
     }
     if (tok.startsWith("isrssext")) return fin(bit(c.flags, Flags.IsRSSExt))
     if (tok.startsWith("ispermalinkformat")) return fin(bit(c.flags, Flags.IsUrlPermalinkFormat))
@@ -168,42 +171,48 @@ object RuleCompiler {
     (name, sign, tok.substring(i))
   }
 
-  /** Compile the whole table; None if any token is unsupported. */
+  /** Compile the whole table into the `ufn` chain: the index of the
+    * first matching rule, −1 if none matches. None if any token is
+    * unsupported. */
   def compile(rules: IndexedSeq[UrlFilterRule], c: Cols, siteListEmpty: Boolean = true,
-              patterns: CrawlPatterns = CrawlPatterns()): Option[Compiled] = {
+              patterns: CrawlPatterns = CrawlPatterns()): Option[Column] = {
     val ruleCols: Seq[Column] = rules.map { r =>
       val toks = r.expr.split("&&").map(_.trim)
       val parts = toks.map(t => compileToken(t, c, siteListEmpty, patterns))
       if (parts.exists(_.isEmpty)) return None
       parts.flatten.reduce(_ && _)
     }
-    var ufn: Column = lit(-1)
-    // build from the last rule backwards so the FIRST match wins
-    for (i <- rules.indices.reverse) ufn = when(ruleCols(i), lit(i)).otherwise(ufn)
-    val idx = ufn + 1
-    val priority = when(ufn >= 0, element_at(array(rules.map(r => lit(r.priority)): _*), idx)).otherwise(lit(-1))
-    val forceDelete = when(ufn >= 0, element_at(array(rules.map(r => lit(r.forceDelete)): _*), idx)).otherwise(lit(true))
-    val ipMax = when(ufn >= 0, element_at(array(rules.map(r => lit(r.ipMaxSpiders)): _*), idx)).otherwise(lit(0))
-    val ipWait = when(ufn >= 0, element_at(array(rules.map(r => lit(r.ipWaitMs)): _*), idx)).otherwise(lit(0))
-    val freq = when(ufn >= 0, element_at(array(rules.map(r => lit(r.spiderFreqDays)): _*), idx)).otherwise(lit(0.0))
-    val harvest = when(ufn >= 0, element_at(array(rules.map(r => lit(r.harvestLinks)): _*), idx)).otherwise(lit(false))
-    Some(Compiled(ufn, priority, forceDelete, ipMax, ipWait, freq, harvest))
+    // one CASE whose branches are tried in rule order: the FIRST match wins
+    if (ruleCols.isEmpty) Some(lit(-1))
+    else Some(ruleCols.indices.tail.foldLeft(when(ruleCols.head, lit(0))) { (chain, i) =>
+      chain.when(ruleCols(i), lit(i))
+    }.otherwise(lit(-1)))
   }
 
-  /** getSpiderTimeMS as native columns (Spider.cpp:5966-6063). */
-  def spiderTimeCol(c: Cols, compiled: Compiled,
+  /** The per-rule lookups over `ufn`, a reference to the column that
+    * holds the chain's value: element `ufn + 2` (1-based) of a constant
+    * array whose first element is the no-match value (ufn = −1). */
+  def attrs(rules: IndexedSeq[UrlFilterRule], ufn: Column): Attrs = {
+    def lookup(noMatch: Any)(f: UrlFilterRule => Any): Column =
+      element_at(array((noMatch +: rules.map(f)).map(lit): _*), ufn + 2)
+    Attrs(lookup(-1)(_.priority), lookup(true)(_.forceDelete), lookup(0)(_.ipMaxSpiders),
+      lookup(0)(_.ipWaitMs), lookup(0.0)(_.spiderFreqDays))
+  }
+
+  /** getSpiderTimeMS as native columns (Spider.cpp:5966-6063). Each
+    * term appears once: greatest() skips the reply term's null when
+    * there is no reply or it has no spidered time. */
+  def spiderTimeCol(c: Cols, a: Attrs,
                     lastDownloadMs: Column, domCrawlDelayMs: Column): Column = {
     val base = c.addedTime * 1000L
-    val lastMs = when(lastDownloadMs < 0, 0L).otherwise(lastDownloadMs)
-    val min1 = lastMs + compiled.ipWaitMs
+    val lastMs = greatest(lastDownloadMs, lit(0L))
+    val min1 = lastMs + a.ipWaitMs
     val cd = least(domCrawlDelayMs, lit(UrlFilters.MaxCrawlDelayMs))
     val min2 = when(domCrawlDelayMs >= 0, lastMs + cd).otherwise(lit(0L))
-    val noRep = greatest(base, min1, min2)
     val waitMs = when(bit(c.flags, Flags.IsPageReindex), lit(0L))
-      .otherwise((compiled.spiderFreqDays * 3600 * 24.0).cast("long") * 1000L)
-    val min3 = c.repSpideredTime * 1000L + waitMs
-    val withRep = when(c.repSpideredTime <= 0, noRep).otherwise(greatest(noRep, min3))
+      .otherwise((a.spiderFreqDays * 3600 * 24.0).cast("long") * 1000L)
+    val min3 = when(c.repExists && c.repSpideredTime > 0, c.repSpideredTime * 1000L + waitMs)
     when(!c.repExists && (bit(c.flags, Flags.IsInjecting) || bit(c.flags, Flags.IsPageReindex)), base)
-      .otherwise(when(c.repExists, withRep).otherwise(noRep))
+      .otherwise(greatest(base, min1, min2, min3))
   }
 }

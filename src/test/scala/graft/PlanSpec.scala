@@ -94,6 +94,73 @@ class PlanSpec extends AnyFunSuite {
       s"semi-join must be under the exchange (appear after it in the tree):\n$p")
   }
 
+  /** A sibling of the test session that generates whole-stage code and
+    * plans statically (AQE off), so `executedPlan` is the plan that runs. */
+  private lazy val codegenSession = {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.codegen.wholeStage", "true")
+    session.conf.set("spark.sql.adaptive.enabled", "false")
+    session
+  }
+
+  /** HotSpot's `HugeMethodLimit`: a larger method always runs interpreted. */
+  private val JitMethodBytes = 8000
+
+  /** CASE branches in the optimized plan besides the rule chain's (one
+    * per rule at most; the optimizer drops a rule that cannot match):
+    * `iswww`'s scheme test (2 per rule that uses it, 2 rules),
+    * the `HadReply` flag fix (1), the spider-time formula (4: crawl
+    * delay, revisit wait, reply term, injected/reindex start) and, in
+    * the wake pass, `next_lb`'s copy of it without the crawl-delay term
+    * (3) and its force-delete override (1). */
+  private val ScheduleFixedBranches = 13
+
+  private def caseBranches(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case n =>
+      n.expressions.map(_.collect {
+        case c: org.apache.spark.sql.catalyst.expressions.CaseWhen => c.branches.size
+      }.sum).sum
+    }.sum
+
+  private def maxMethodBytes(df: org.apache.spark.sql.DataFrame): Int =
+    org.apache.spark.sql.execution.debug.codegenStringSeq(df.queryExecution.executedPlan)
+      .map(_._3.maxMethodCodeSize).max
+
+  test("schedule and scheduleWake: the rule table is evaluated once per row, every generated method JITs") {
+    import graft.frontier._
+    val session = codegenSession
+    import session.implicits._
+    val reqSeq = (0 until 100).map { k =>
+      val u = graft.core.GbUrl.parse(s"http://www.h$k.test/p$k.html")
+      FrontierRequest(u.uh48, k % 10 + 1, u.url, u.hostHash32, u.domHash32,
+        u.hostHash32, 3, 1400000000L, 1400000000L, k % 4, "", 0L, 0, 0L)
+    }
+    val reqs = session.createDataset(reqSeq)
+    val reps = session.createDataset(reqSeq.filter(_.uh48 % 3 == 0).map(r =>
+      FrontierReply(r.uh48, r.first_ip, 1399990000L, 0, 200, -1, 1399990000000L, "en", 7, 0f, 0L, 0)))
+    val ips = session.createDataset((1 to 10).map(ip => IpState(ip, 1400000000000L)))
+    val doms = session.createDataset(reqSeq.take(20).map(r => DomState(r.dom_hash32, 500)))
+    val inlinks = session.createDataset(reqSeq.take(30).map(r => InlinkState(r.first_ip, r.uh48, Array(1, 2, 3))))
+    val cfg = Crawl.Config()
+    val so = Crawl.scheduleWake(reqs, reps, ips, doms, cfg, 1, inlinks, null,
+      Some(Seq(1, 2, 3).toDF("first_ip").withColumn("next_ms", lit(0L))))
+    assert(so.wake, "default rules must be wake-safe")
+    val plans = Seq(
+      "schedule" -> Crawl.schedule(reqs, reps, ips, doms, cfg, 1, inlinks).toDF(),
+      "scheduleWake" -> so.dole)
+    val shapes = plans.map { case (name, df) => (name, caseBranches(df), maxMethodBytes(df)) }
+    val report = shapes.map { case (n, c, b) => s"$n: $c CASE branches, largest method $b bytes" }
+      .mkString("; ")
+    info(report)
+    for ((name, cases, bytes) <- shapes) {
+      assert(cases <= cfg.rules.size + ScheduleFixedBranches,
+        s"$name repeats the ${cfg.rules.size}-rule chain ($report):\n" +
+          plans.toMap.apply(name).queryExecution.optimizedPlan)
+      assert(bytes <= JitMethodBytes, s"$name generates a method above HotSpot's " +
+        s"$JitMethodBytes-byte JIT limit ($report)")
+    }
+  }
+
   test("GenPlans.normalize: the same query planned twice gives the same text") {
     val work = "/tmp/graft_plans0123"
     def build() = {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{GraftShim, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.frontier._
 import graft.rules._
@@ -55,25 +57,68 @@ class RuleCompilerSpec extends AnyFunSuite {
     (reqs, reps)
   }
 
-  test("compiled schedule == interpreted schedule on random frontiers") {
-    import spark.implicits._
-    for (seed <- Seq(1L, 7L, 42L)) {
-      val (reqs, reps) = randomFrontier(800, seed)
-      val reqDs = spark.createDataset(reqs)
-      val repDs = spark.createDataset(reps)
-      val ips = spark.createDataset(reqs.map(_.first_ip).distinct.filter(_ % 3 == 0)
-        .map(ip => IpState(ip, 1400000000000L - 500)))
-      val doms = spark.createDataset(reqs.map(_.dom_hash32).distinct.filter(_ % 2 == 0)
-        .map(d => DomState(d, 500)))
-      val cfg = Crawl.Config()
-      val a = Crawl.schedule(reqDs, repDs, ips, doms, cfg, 1).collect()
-        .map(t => (t.uh48, t.first_ip, t.priority, t.ufn, t.spider_time_ms, t.seq_in_ip)).sortBy(x => (x._1, x._2))
-      val b = Crawl.scheduleInterpreted(reqDs, repDs, ips, doms, cfg, 1).collect()
-        .map(t => (t.uh48, t.first_ip, t.priority, t.ufn, t.spider_time_ms, t.seq_in_ip)).sortBy(x => (x._1, x._2))
-      assert(a.length == b.length, s"seed=$seed sizes ${a.length} vs ${b.length}")
-      a.zip(b).foreach { case (x, y) => assert(x == y, s"seed=$seed $x vs $y") }
-      assert(a.nonEmpty)
+  /** Rows of a frontier that the reference-exact interpreter keeps out of
+    * the dole: (force-deleted, not yet due). Counted over the requests
+    * whose (first_ip, uh48) key is unique, which scheduling never merges. */
+  private def excluded(reqs: Seq[FrontierRequest], reps: Seq[FrontierReply], ips: Seq[IpState],
+                       doms: Seq[DomState], cfg: Crawl.Config): (Int, Int) = {
+    val now = Crawl.nowSecs(cfg, 1)
+    val latest = reps.groupBy(r => (r.first_ip, r.uh48)).map { case (k, rs) =>
+      k -> rs.maxBy(r => (r.spidered_time, r.download_end_time)) }
+    val lastMs = ips.map(s => s.first_ip -> s.last_download_end_ms).toMap
+    val crawlDelay = doms.map(d => d.dom_hash32 -> d.crawl_delay_ms).toMap
+    val outcomes = reqs.groupBy(r => (r.first_ip, r.uh48)).values.filter(_.size == 1).map(_.head).toSeq.map { r =>
+      val rep = latest.get((r.first_ip, r.uh48)).map(Crawl.toUfnReply)
+      val req = Crawl.toUfn(if (rep.isDefined) r.copy(flags = r.flags | Flags.HadReply) else r)
+      val ufn = UrlFilters.urlFilterNum(req, rep, now, cfg.rules)
+      if (ufn < 0 || cfg.rules(ufn).forceDelete) (1, 0)
+      else if (UrlFilters.spiderTimeMs(req, ufn, rep, cfg.rules, lastMs.getOrElse(r.first_ip, -1L),
+          crawlDelay.getOrElse(r.dom_hash32, -1)) > Crawl.nowMs(cfg, 1)) (0, 1)
+      else (0, 0)
     }
+    (outcomes.map(_._1).sum, outcomes.map(_._2).sum)
+  }
+
+  /** `schedule` and the winners of `scheduleWake` (no due set) against
+    * `scheduleInterpreted`, on `session`'s execution mode. */
+  private def crossCheck(session: SparkSession, seeds: Seq[Long]): Unit = {
+    import session.implicits._
+    def key(ts: Array[FetchTask]) = ts
+      .map(t => (t.uh48, t.first_ip, t.priority, t.ufn, t.spider_time_ms, t.seq_in_ip))
+      .sortBy(x => (x._1, x._2)).toSeq
+    for (seed <- seeds) {
+      val (reqs, reps) = randomFrontier(800, seed)
+      val ipRows = reqs.map(_.first_ip).distinct.filter(_ % 3 == 0).map(ip => IpState(ip, 1400000000000L - 500))
+      val domRows = reqs.map(_.dom_hash32).distinct.filter(_ % 2 == 0).map(d => DomState(d, 500))
+      val cfg = Crawl.Config()
+      val (deleted, notDue) = excluded(reqs, reps, ipRows, domRows, cfg)
+      assert(deleted > 0 && notDue > 0,
+        s"seed=$seed: $deleted force-deleted and $notDue not-yet-due rows; the eligibility check is vacuous")
+      val reqDs = session.createDataset(reqs)
+      val repDs = session.createDataset(reps)
+      val ips = session.createDataset(ipRows)
+      val doms = session.createDataset(domRows)
+      val interp = key(Crawl.scheduleInterpreted(reqDs, repDs, ips, doms, cfg, 1).collect())
+      assert(interp.nonEmpty)
+      val compiled = key(Crawl.schedule(reqDs, repDs, ips, doms, cfg, 1).collect())
+      assert(compiled.length == interp.length, s"seed=$seed sizes ${compiled.length} vs ${interp.length}")
+      compiled.zip(interp).foreach { case (x, y) => assert(x == y, s"seed=$seed $x vs $y") }
+      val so = Crawl.scheduleWake(reqDs, repDs, ips, doms, cfg, 1,
+        session.emptyDataset[InlinkState], null, ipNext = None)
+      assert(so.wake)
+      val wake = key(so.dole.filter(col("seq_in_ip") >= 0).as[FetchTask].collect())
+      assert(wake == interp, s"seed=$seed: scheduleWake winners differ from the interpreter")
+    }
+  }
+
+  test("compiled schedule == interpreted schedule on random frontiers") {
+    crossCheck(spark, Seq(1L, 7L, 42L))
+  }
+
+  test("compiled schedule == interpreted schedule on the quiet session (interpreted expressions)") {
+    val quiet = GraftShim.quietSession(spark, 800)
+    assert(GraftShim.isQuiet(quiet))
+    crossCheck(quiet, Seq(5L, 42L))
   }
 
   test("negated reply-gated tokens match the interpreter (rep_exists outside '!')") {

@@ -64,6 +64,18 @@ class WinnerDoleSpec extends AnyFunSuite {
     assert(graft.plans.WinnerDole(synth(10, 1).filter(lit(false)), 5, 5).count() == 0)
   }
 
+  test("dole with `eligible` == window over the eligible rows; an all-ineligible IP emits nothing") {
+    // every row of ip 2 is ineligible, and about a third of the others
+    val df = synth(20000, 11)
+      .withColumn("eligible", col("first_ip") =!= 2 && pmod(hash(col("uh48") * 5), lit(3)) =!= 0)
+    assert(df.filter(col("first_ip") === 2).count() > 0)
+    val dole = graft.plans.WinnerDole(df, 6, 2000).collect()
+    val a = dole.map(_.toString).sorted
+    val b = windowRef(df.filter(col("eligible")), 6, 2000).collect().map(_.toString).sorted
+    assert(a.nonEmpty && a.sameElements(b), s"row content mismatch: ${a.length} vs ${b.length} rows")
+    assert(!dole.exists(_.getAs[Int]("first_ip") == 2), "an IP with no eligible row got a winner")
+  }
+
   test("plan: no partial+final aggregate, single-key sort, exchange reuse") {
     val df = synth(1000, 5).repartition(col("first_ip"))
     val p = graft.plans.WinnerDole(df, 5, 5).queryExecution.executedPlan.toString
