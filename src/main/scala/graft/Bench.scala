@@ -397,9 +397,7 @@ object Bench {
 
   /** jdk17 module opens + memory for child JVMs (mirrors build.sbt's
     * forked-run javaOptions). */
-  private def childJvmArgs: Seq[String] = childJvmArgsHeap(sectionHeapMb)
-
-  private def childJvmArgsHeap(heapMb: Long): Seq[String] = Seq(
+  private def childJvmArgs(heapMb: Long): Seq[String] = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
     "java.base/java.net", "java.base/java.nio",
@@ -411,57 +409,38 @@ object Bench {
     "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
     s"-Xmx${heapMb}m")
 
-  /** Run a section in a fresh child JVM; falls back to in-process if the
-    * spawn fails (e.g. no usable java.class.path). */
-  private def section(name: String): Map[String, String] = {
-    val cp = System.getProperty("java.class.path", "")
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val inProcess = cp.isEmpty || !new java.io.File(javaBin).exists
-    val lines: Seq[String] =
-      if (inProcess) {
-        System.err.println(s"[bench] section $name IN-PROCESS (no forkable classpath)")
-        val bos = new java.io.ByteArrayOutputStream()
-        Console.withOut(new java.io.PrintStream(bos)) { runSection(name) }
-        new String(bos.toByteArray, "UTF-8").linesIterator.toSeq
-      } else {
-        val cmd = Seq(javaBin) ++ childJvmArgs ++ Seq("-cp", cp, "graft.Bench", "--section", name)
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val proc = pb.start()
-        val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").getLines().toList
-        val code = proc.waitFor()
-        if (code != 0) System.err.println(s"[bench] section $name exited $code")
-        out
-      }
-    lines.filter(_.startsWith("#B ")).map { l =>
-      val rest = l.drop(3)
-      val sp = rest.indexOf(' ')
-      rest.take(sp) -> rest.drop(sp + 1)
-    }.toMap
-  }
+  /** Run a section in a fresh child JVM (see [[child]]). */
+  private def section(name: String): Map[String, String] =
+    child(s"section $name", sectionHeapMb, Seq("--section", name), runSection(name))
 
   /** One KERNEL measurement in its own fresh child JVM with an explicit
     * heap — every anchor of a scaling pair gets an identical-shape JVM
     * (fresh JIT/codegen, heap sized by the caller, nothing inherited
-    * from whatever ran before). Falls back in-process (shared heap)
+    * from whatever ran before). */
+  private def kernelChild(heapMb: Long, kargs: Seq[String]): Map[String, String] =
+    child(s"kernel ${kargs.mkString(" ")}", heapMb, "--kernel" +: kargs, runKernel(kargs))
+
+  /** `graft.Bench <args>` in a fresh child JVM with `heapMb` of heap, and
+    * the `#B` results it prints. Falls back to `inProcess` (shared heap)
     * when there's no forkable classpath. */
-  private def kernelChild(heapMb: Long, kargs: Seq[String]): Map[String, String] = {
+  private def child(label: String, heapMb: Long, args: Seq[String],
+                    inProcess: => Unit): Map[String, String] = {
     val cp = System.getProperty("java.class.path", "")
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val lines: Seq[String] =
       if (cp.isEmpty || !new java.io.File(javaBin).exists) {
+        System.err.println(s"[bench] $label IN-PROCESS (no forkable classpath)")
         val bos = new java.io.ByteArrayOutputStream()
-        Console.withOut(new java.io.PrintStream(bos)) { runKernel(kargs) }
+        Console.withOut(new java.io.PrintStream(bos)) { inProcess }
         new String(bos.toByteArray, "UTF-8").linesIterator.toSeq
       } else {
-        val cmd = Seq(javaBin) ++ childJvmArgsHeap(heapMb) ++
-          Seq("-cp", cp, "graft.Bench", "--kernel") ++ kargs
+        val cmd = Seq(javaBin) ++ childJvmArgs(heapMb) ++ Seq("-cp", cp, "graft.Bench") ++ args
         val pb = new ProcessBuilder(cmd: _*)
         pb.redirectError(ProcessBuilder.Redirect.INHERIT)
         val proc = pb.start()
         val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").getLines().toList
         val code = proc.waitFor()
-        if (code != 0) System.err.println(s"[bench] kernel ${kargs.mkString(" ")} exited $code")
+        if (code != 0) System.err.println(s"[bench] $label exited $code")
         out
       }
     lines.filter(_.startsWith("#B ")).map { l =>

@@ -95,9 +95,6 @@ object Corpus {
   def isCharsetPage(k: Int, p: Int, spec: Spec): Boolean =
     k % 8 == 6 && p > spec.sectionsPerHost && p != spec.feedPage && p != spec.feed2Page
 
-  def isLatin1Page(k: Int, p: Int, spec: Spec): Boolean =
-    isCharsetPage(k, p, spec) && pageCharset(k) == "iso-8859-1"
-
   private val rotCharsets = Array("koi8-r", "iso-8859-2", "shift_jis")
 
   /** The charset a k≡6 (mod 8) host serves its leaves in. */

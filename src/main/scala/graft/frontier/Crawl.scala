@@ -52,9 +52,7 @@ import graft.rules._
 object Crawl {
 
   final case class Config(
-      maxWinnersPerIp: Int = 2000, // MAX_WINNER_NODES, Spider.cpp:60
       clockStepMs: Long = 1000L, // simulated wall-clock advance per iteration
-      baseTimeSecs: Long = 1400000000L,
       overflowCap: Long = 10000000L, // A8, Spider.cpp:5185-5265
       bloomFpp: Double = 0.03,
       seenBuckets: Int = 64, // partitioned-bloom buckets (power of 2)
@@ -81,7 +79,12 @@ object Crawl {
       // stops doling and flips m_spiderStatus when a cap is reached)
       maxToCrawl: Long = -1L, // stop once successful downloads reach this
       maxRounds: Int = -1 // stop after this many spider rounds (<=0: no limit, like m_maxCrawlRounds)
-  )
+  ) {
+    /** The winner tree's per-IP cap: MAX_WINNER_NODES, Spider.cpp:60. */
+    def maxWinnersPerIp: Int = 2000
+    /** The simulated clock at iteration 0, in seconds. */
+    def baseTimeSecs: Long = 1400000000L
+  }
 
   /** tagdb: cap on the distinct inlinking c-blocks tracked per SITE (the
     * Msg25 "good inlinks, 1 per c block" analogue; the reference bounds
@@ -227,10 +230,9 @@ object Crawl {
     * = max maxSpidersPerRule over rules with that priority
     * (Spider.cpp:7607-7626), then the global MAX_SPIDERS bound. Dropped
     * rows leave gaps in seq_in_ip, which only widens hammer spacing. */
-  private def applyDoleCaps(batch: Dataset[FetchTask], cfg: Config): Dataset[FetchTask] = {
-    import batch.sparkSession.implicits._
+  private def applyDoleCaps(batch: DataFrame, cfg: Config): DataFrame = {
     val priCap = cfg.rules.groupBy(_.priority).map { case (p, rs) => p -> rs.map(_.maxSpidersPerRule).max }
-    doleCapsDF(batch.toDF(), priCap, cfg.maxSpidersGlobal).as[FetchTask]
+    doleCapsDF(batch, priCap, cfg.maxSpidersGlobal)
   }
 
   /** The A4 cap kernel on any frame with (priority, first_ip,
@@ -271,14 +273,9 @@ object Crawl {
     rules.exists(r => r.expr.contains("sitepages") || r.expr.contains("domainpages") ||
       r.expr.contains("siteadds") || r.expr.contains("domainadds"))
 
-  /** Schedule: produce this iteration's fetch batch (doledb analogue).
-    * Fully native Catalyst pipeline — rule table compiled to one
-    * when/otherwise chain, evaluated once per row into the `ufn` column,
-    * whose per-rule lookups read that column (whole-stage codegen, no
-    * per-row objects). Ineligible rows are not filtered out first: the
-    * dole skips them by the `eligible` column, so no predicate pushdown
-    * copies the chain. Falls back to the reference-exact interpreter if
-    * the rule table has tokens the compiler doesn't support. */
+  /** Schedule: produce this iteration's fetch batch (doledb analogue),
+    * scanning the whole frontier; [[route]] with no waiting-tree
+    * upkeep. */
   def schedule(requests: Dataset[FrontierRequest],
                replies: Dataset[FrontierReply],
                ipState: Dataset[IpState],
@@ -288,15 +285,8 @@ object Crawl {
                inlinks: Dataset[InlinkState] = null,
                quota: DataFrame = null): Dataset[FetchTask] = {
     import requests.sparkSession.implicits._
-    val nowMillis = nowMs(cfg, iteration)
-    compiledScored(requests, replies, ipState, domState, cfg, iteration, inlinks, None) match {
-      case None => scheduleInterpreted(requests, replies, ipState, domState, cfg, iteration,
-        Option(inlinks).getOrElse(requests.sparkSession.emptyDataset[InlinkState]), quota)
-      case Some(scored) =>
-        val batch = graft.plans.WinnerDole(doleInput(scored, nowMillis).drop("next_lb"),
-          kEff(cfg), cfg.maxWinnersPerIp).as[FetchTask]
-        if (cfg.enforceDoleCaps) applyDoleCaps(batch, cfg) else batch
-    }
+    route(requests, replies, ipState, domState, cfg, iteration, inlinks, quota,
+      ipNext = None, wake = false).dole.as[FetchTask]
   }
 
   /** Result of [[scheduleWake]]: `dole` holds the fetch batch rows
@@ -318,11 +308,11 @@ object Crawl {
     * touching this IP — dropping a max() term keeps it a LOWER bound, so
     * pruning stays EXACT: a pruned IP provably has no eligible row).
     *
-    * Pruning is gated off (full scan, sentinels still emitted so the
-    * table bootstraps) when the rule table leaves the compiled path, or
-    * uses clock-dependent tokens (spiderwaited/urlage: a row's ufn can
-    * then change with no state transition touching its IP), or when dole
-    * caps are on (they cut across IPs). */
+    * The upkeep is off (a plain [[schedule]]: full scan, no sentinels)
+    * when dole caps are on (they cut across IPs) or the rules use
+    * clock-dependent tokens (spiderwaited/urlage: a row's ufn can then
+    * change with no state transition touching its IP), and [[route]]
+    * turns it off when the rule table leaves the compiled path. */
   def scheduleWake(requests: Dataset[FrontierRequest],
                    replies: Dataset[FrontierReply],
                    ipState: Dataset[IpState],
@@ -331,23 +321,44 @@ object Crawl {
                    iteration: Int,
                    inlinks: Dataset[InlinkState],
                    quota: DataFrame,
-                   ipNext: Option[DataFrame]): ScheduleOut = {
-    import requests.sparkSession.implicits._
+                   ipNext: Option[DataFrame]): ScheduleOut =
+    route(requests, replies, ipState, domState, cfg, iteration, inlinks, quota,
+      ipNext, wake = !cfg.enforceDoleCaps && wakeSafeRules(cfg))
+
+  /** The one schedule route. A rule table the compiler takes is scored
+    * natively ([[compiledScored]]: the chain evaluated once per row,
+    * into the `ufn` column) and doled by `plans.WinnerDole`, which skips
+    * ineligible rows by the `eligible` column, so no predicate pushdown
+    * copies the chain. With `wake`, the scan is pruned to the IPs
+    * `ipNext` says are due and the dole emits their sentinels; without
+    * it, the A4 caps apply when enabled. Any other rule table goes to
+    * the reference-exact [[scheduleInterpreted]], which applies its own
+    * caps and keeps no waiting tree. */
+  private def route(requests: Dataset[FrontierRequest],
+                    replies: Dataset[FrontierReply],
+                    ipState: Dataset[IpState],
+                    domState: Dataset[DomState],
+                    cfg: Config,
+                    iteration: Int,
+                    inlinks: Dataset[InlinkState],
+                    quota: DataFrame,
+                    ipNext: Option[DataFrame],
+                    wake: Boolean): ScheduleOut = {
     val nowMillis = nowMs(cfg, iteration)
-    if (cfg.enforceDoleCaps || !wakeSafeRules(cfg))
-      return ScheduleOut(
-        schedule(requests, replies, ipState, domState, cfg, iteration, inlinks, quota).toDF(),
-        wake = false, dueIps = None)
-    val dueIps = ipNext.map(_.filter(col("next_ms") <= nowMillis).select("first_ip"))
+    val dueIps =
+      if (wake) ipNext.map(_.filter(col("next_ms") <= nowMillis).select("first_ip")) else None
     compiledScored(requests, replies, ipState, domState, cfg, iteration, inlinks, dueIps) match {
-      case None => // interpreter needed after all → no wake maintenance
-        ScheduleOut(
-          scheduleInterpreted(requests, replies, ipState, domState, cfg, iteration,
-            Option(inlinks).getOrElse(requests.sparkSession.emptyDataset[InlinkState]), quota).toDF(),
-          wake = false, dueIps = None)
-      case Some(scored) =>
+      case None =>
+        ScheduleOut(scheduleInterpreted(requests, replies, ipState, domState, cfg, iteration,
+          inlinks, quota).toDF(), wake = false, dueIps = None)
+      case Some(scored) if wake =>
         ScheduleOut(graft.plans.WinnerDole.wake(doleInput(scored, nowMillis), kEff(cfg),
           cfg.maxWinnersPerIp), wake = true, dueIps)
+      case Some(scored) =>
+        val batch = graft.plans.WinnerDole(doleInput(scored, nowMillis).drop("next_lb"),
+          kEff(cfg), cfg.maxWinnersPerIp)
+        ScheduleOut(if (cfg.enforceDoleCaps) applyDoleCaps(batch, cfg) else batch,
+          wake = false, dueIps = None)
     }
   }
 
@@ -501,8 +512,10 @@ object Crawl {
     }
   }
 
-  /** Reference-exact interpreted path (kept as compiler fallback and as
-    * the cross-validation baseline). */
+  /** Reference-exact interpreted path: [[route]]'s fallback for rule
+    * tables the compiler does not take, and the baseline the compiled
+    * path is cross-checked against. It scans the whole frontier, applies
+    * the A4 caps itself and keeps no waiting tree. */
   def scheduleInterpreted(requests: Dataset[FrontierRequest],
                replies: Dataset[FrontierReply],
                ipState: Dataset[IpState],
@@ -614,8 +627,7 @@ object Crawl {
       .select(col("uh48"), col("first_ip"), col("url"), col("priority"), col("ufn"),
         col("spider_time_ms"), col("hop_count"), col("seq_in_ip").cast("int"), col("was_indexed"),
         col("req_flags"), col("site_hash32"), col("dom_hash32"))
-      .as[FetchTask]
-    if (cfg.enforceDoleCaps) applyDoleCaps(batch, cfg) else batch
+    (if (cfg.enforceDoleCaps) applyDoleCaps(batch, cfg) else batch).as[FetchTask]
   }
 
   // -------------------------------------------------------------- fetch
@@ -644,6 +656,22 @@ object Crawl {
       percentChanged: Float = 0f,
       sampleVec: Array[Int] = null  // TitleRec m_pageSampleVec analogue
   )
+
+  /** The flags a new link's own url sets, wherever the link comes from
+    * (a harvested outlink or a simplified-redirect requeue): an
+    * rss/xml/atom extension, a media extension, a ping server, a simple
+    * subdomain and the url-format permalink guess
+    * (XmlDoc.cpp:27801-27804). */
+  private def linkFlags(lu: GbUrl): Long = {
+    val ext = lu.extension.toLowerCase
+    var fl = Flags.IsNewOutlink
+    if (ext == "rss" || ext == "xml" || ext == "atom") fl |= Flags.IsRSSExt
+    if (lu.hasMediaExtension) fl |= Flags.HasMediaExtension
+    if (lu.isPingServer) fl |= Flags.IsPingServer
+    if (lu.isSimpleSubdomain) fl |= Flags.IsWWWSubdomain
+    if (graft.core.GbPermalink.isUrlPermalinkFormat(lu)) fl |= Flags.IsUrlPermalinkFormat
+    fl
+  }
 
   /** S6+X5+X7-X12: fetch batch against the pages table, robots-gated,
     * parse and harvest outlinks. The fetch is repartitioned by first_ip so
@@ -825,16 +853,9 @@ object Crawl {
           val requeue =
             if (!lu.isValid || lu.uh48 == task.uh48) Nil
             else {
-              val ext = lu.extension.toLowerCase
-              var fl = Flags.IsNewOutlink
-              if (ext == "rss" || ext == "xml" || ext == "atom") fl |= Flags.IsRSSExt
-              if (lu.hasMediaExtension) fl |= Flags.HasMediaExtension
-              if (lu.isPingServer) fl |= Flags.IsPingServer
-              if (lu.isSimpleSubdomain) fl |= Flags.IsWWWSubdomain
-              if (graft.core.GbPermalink.isUrlPermalinkFormat(lu)) fl |= Flags.IsUrlPermalinkFormat
               Seq(FrontierRequest(lu.uh48, 0, lu.url, lu.hostHash32, lu.domHash32,
                 lu.hostHash32, -1, now, now, task.hop_count, // hop KEPT
-                if (plang == null) "" else plang, fl, 0, task.uh48 & GbHash.DocIdMask))
+                if (plang == null) "" else plang, linkFlags(lu), 0, task.uh48 & GbHash.DocIdMask))
             }
           FetchResult(task, found = false, allowed = allowed, cd, 301, redirErr,
             "", 0, downloadEnd, requeue, "")
@@ -892,7 +913,7 @@ object Crawl {
           // voting + script fallback + window smoothing over the doc's
           // words; langUnknown keeps the reference's "xx" abbr. Feeds
           // the reply AND the outlinks' parent_lang (`parentlang` rules)
-          val docLang = graft.core.GbLang.abbr(graft.core.GbLang.docLangId(text))
+          val docLang = graft.core.GbLang.docLangAbbr(text)
 
           // reply-side truth (getNewSpiderReply inputs, XmlDoc.h:773):
           // isRSS from the parse, isPermalink via the links-free
@@ -938,24 +959,16 @@ object Crawl {
                   // issiteroot/pingserver hop-0 (XmlDoc.cpp:27766-27769)
                   // applied in resolveOutlinks — site-root-ness depends
                   // on the tagdb warm/cold site hash
-                  val ext = lu.extension.toLowerCase
-                  val isRSSExt = ext == "rss" || ext == "xml" || ext == "atom"
-                  var fl = Flags.IsNewOutlink
-                  if (isRSSExt) fl |= Flags.IsRSSExt
-                  if (lu.hasMediaExtension) fl |= Flags.HasMediaExtension
-                  if (lu.isPingServer) fl |= Flags.IsPingServer
-                  if (lu.isSimpleSubdomain) fl |= Flags.IsWWWSubdomain
+                  var fl = linkFlags(lu)
                   if (lu.domHash32 == u.domHash32) fl |= Flags.SameDom
                   if (lu.hostHash32 == u.hostHash32) fl |= Flags.SameHost
                   // SameSite set in resolveOutlinks (needs the tagdb
                   // warm/cold linkee site, XmlDoc.cpp:27890)
-                  // parent-truth flags (XmlDoc.cpp:27469-27472, 27891) and
-                  // the url-format permalink guess (XmlDoc.cpp:27801-27804)
+                  // parent-truth flags (XmlDoc.cpp:27469-27472, 27891)
                   if (pageIsRSS) fl |= Flags.ParentIsRSS
                   if (pageIsSiteMap) fl |= Flags.ParentIsSiteMap
                   if (pageIsPermalink) fl |= Flags.ParentIsPermalink
                   if (task.was_indexed) fl |= Flags.WasParentIndexed
-                  if (graft.core.GbPermalink.isUrlPermalinkFormat(lu)) fl |= Flags.IsUrlPermalinkFormat
                   Some(FrontierRequest(
                     uh48 = lu.uh48,
                     first_ip = 0, // resolved by the host_meta join (resolveOutlinks)
@@ -1073,6 +1086,18 @@ object Crawl {
     st.select(col("start").as("redir_url"), col("cur").as("redir_final"), col("err").as("redir_err"))
   }
 
+  /** getFirstIp's order, into column `out`: the tagdb pinned firstip
+    * tag (`tag_ip`, XmlDoc.cpp:14157-14176), then DNS (host_meta's
+    * `hm_ip`), then the deterministic hash32(`host`) pseudo-IP that
+    * stands in for DNS in the sandbox (`fb_ip`; 0 and -1 map to 1). */
+  private def withFirstIp(out: String)(df: DataFrame): DataFrame = {
+    import graft.functions.GraftFunctions.gbHash32
+    df.withColumn("fb_ip", gbHash32(col("host")))
+      .withColumn(out, coalesce(
+        when(col("tag_ip") =!= 0, col("tag_ip")), col("hm_ip"),
+        when(col("fb_ip") === 0 || col("fb_ip") === -1, lit(1)).otherwise(col("fb_ip"))))
+  }
+
   /** The revised-request re-add (getRevisedSpiderRequest,
     * XmlDoc.cpp:2330-2367 via the EFAKEFIRSTIP path :2617-2691): for
     * every fake-firstIp add-url request answered this iteration, re-add
@@ -1088,8 +1113,7 @@ object Crawl {
                      tagState: Dataset[TagState]): Dataset[FrontierRequest] = {
     val spark = efakeResults.sparkSession
     import spark.implicits._
-    import graft.functions.GraftFunctions.{urlHost, gbHash32}
-    import graft.functions.GraftFunctions.siteKeyHash32
+    import graft.functions.GraftFunctions.{siteKeyHash32, urlHost}
     val keys = efakeResults.map(r => (r.task.first_ip, r.task.uh48)).toDF("e_ip", "e_uh48")
     requests.toDF()
       .join(keys, col("first_ip") === col("e_ip") && col("uh48") === col("e_uh48"), "left_semi")
@@ -1100,10 +1124,7 @@ object Crawl {
         siteKeyHash32(col("url")) === col("tag_key"), "left_outer")
       .join(hostMeta.toDF().select(col("host").as("hm_host"), col("first_ip").as("hm_ip")),
         col("host") === col("hm_host"), "left_outer")
-      .withColumn("fb_ip", gbHash32(col("host")))
-      .withColumn("first_ip", coalesce(
-        when(col("tag_ip") =!= 0, col("tag_ip")), col("hm_ip"),
-        when(col("fb_ip") === 0 || col("fb_ip") === -1, lit(1)).otherwise(col("fb_ip"))))
+      .transform(withFirstIp("first_ip"))
       .withColumn("flags", col("flags").bitwiseAND(lit(~Flags.FakeFirstIp)))
       .drop("host", "hm_host", "hm_ip", "fb_ip", "tag_key", "tag_ip")
       .as[FrontierRequest]
@@ -1167,7 +1188,6 @@ object Crawl {
                       tagState: Dataset[TagState]): Dataset[ResolvedOutlink] = {
     val spark = results.sparkSession
     import spark.implicits._
-    import graft.functions.GraftFunctions.gbHash32
     val raw = results.flatMap { r =>
       val parentSiteHash = GbHash.hash32(graft.core.SiteGetter.site(r.task.url))
       r.outlinks.map { o =>
@@ -1186,10 +1206,7 @@ object Crawl {
           col("first_ip").as("tag_ip"), col("has_site_tag"),
           size(col("cblocks")).as("tag_sni")),
         col("guess_hash32") === col("tag_key"), "left_outer")
-      .withColumn("fb_ip", gbHash32(col("host")))
-      .withColumn("res_ip", coalesce(
-        when(col("tag_ip") =!= 0, col("tag_ip")), col("hm_ip"),
-        when(col("fb_ip") === 0 || col("fb_ip") === -1, lit(1)).otherwise(col("fb_ip"))))
+      .transform(withFirstIp("res_ip"))
       // warm: tagdb site; cold: raw host (o.site_hash32 carries
       // hash32(host) from the harvest)
       .withColumn("warm", coalesce(col("has_site_tag"), lit(false)))
@@ -1515,6 +1532,13 @@ object Crawl {
     Files.writeString(Paths.get(s"$d/MANIFEST.json"),
       s"""{"iteration":$i,"lineage":$m}""")
   }
+
+  /** Counter `key` of snapshot i's manifest. */
+  private def manifestCount(workdir: String, i: Int, key: String): Long =
+    s""""$key":(\\d+)""".r
+      .findFirstMatchIn(Files.readString(Paths.get(snapDir(workdir, i), "MANIFEST.json")))
+      .map(_.group(1).toLong)
+      .getOrElse(sys.error(s"snapshot $i's manifest has no $key"))
 
   def latestSnapshot(workdir: String): Option[Int] = {
     val d = new java.io.File(workdir)
@@ -2208,7 +2232,10 @@ object Crawl {
     injectRequests(spark, workdir, spark.createDataset(reqs), cfg)
   }
 
-  /** Run (or resume) a crawl for `iterations` steps. */
+  /** Run (or resume) a crawl for `iterations` steps. A resume goes on
+    * with the same crawl: it first does the compaction a crash may have
+    * cut off, and it replays the crawl-status counters and the quiet
+    * gate's batch size from the committed snapshots' manifests. */
   def run(spark: SparkSession, workdir: String, spec: Corpus.Spec, iterations: Int,
           cfg: Config = Config(), compactEvery: Int = 4,
           seedUrls: Seq[String] = Nil): Seq[IterationResult] = {
@@ -2223,6 +2250,11 @@ object Crawl {
         init(spark, workdir, if (seedUrls.nonEmpty) seedUrls else Corpus.seeds(spec), cfg); 1
       case Some(n) => n + 1
     }
+    // compaction runs after its snapshot's manifest: a crash in between
+    // leaves the latest snapshot committed but uncompacted
+    if (start > 1 && (start - 1) % compactEvery == 0 &&
+        !StateTable.isFull(new java.io.File(snapDir(workdir, start - 1), Tables.requests.name)))
+      compact(spark, workdir, start - 1, cfg)
     // A9: collection-level crawl status (CollectionRec::m_spiderStatus).
     // Rounds increment at exhaustion boundaries (spiderRoundIncremented,
     // Spider.cpp:14296: ROUNDDONE when a dole cycle schedules nothing);
@@ -2230,6 +2262,20 @@ object Crawl {
     var downloaded = 0L
     var round = 1
     var stopStatus = -1
+    def advance(scheduled: Long, fetched: Long): Int = {
+      downloaded += fetched
+      val status = SpiderStatus.convert(cfg.maxToCrawl, downloaded, cfg.maxRounds, round, scheduled)
+      if (status == SpiderStatus.RoundDone || status == SpiderStatus.MaxRounds)
+        round += 1
+      if (status == SpiderStatus.MaxToCrawl || status == SpiderStatus.MaxRounds)
+        stopStatus = status
+      status
+    }
+    // the manifests are the commit points: STATUS.json, written after
+    // one, can lag it by an iteration (a crash before the write) or lead
+    // it (a crash inside compaction's swap re-runs the iteration)
+    (1 until start).foreach(j =>
+      advance(manifestCount(workdir, j, "scheduled"), manifestCount(workdir, j, "fetched")))
     // micro-batch iterations run END-TO-END on a quiet sibling session
     // (GraftShim.quietSession): under AQE every query-stage
     // materialization is its own Spark job, at small batches the loop
@@ -2239,14 +2285,12 @@ object Crawl {
     // change only execution: rows are the same. Big batches keep the
     // caller's session: skew-join splitting and partition coalescing
     // are the 100×-scale story there. Gated on the PREVIOUS iteration's
-    // scheduled count (seeds for the first; a resume without that
-    // signal stays on the caller's session). The partitions are sized
-    // from the larger of that batch and the state tables the iteration
-    // shuffles whole, so a big frontier behind small batches keeps its
-    // parallelism. Compaction always runs on the caller's session.
-    var lastSched: Long =
-      if (start == 1) (if (seedUrls.nonEmpty) seedUrls else Corpus.seeds(spec)).size.toLong
-      else Long.MaxValue
+    // scheduled count (snapshot 0's seeds for the first). The
+    // partitions are sized from the larger of that batch and the state
+    // tables the iteration shuffles whole, so a big frontier behind
+    // small batches keeps its parallelism. Compaction always runs on
+    // the caller's session.
+    var lastSched = manifestCount(workdir, start - 1, if (start == 1) "new_urls" else "scheduled")
     val out = scala.collection.mutable.ListBuffer[IterationResult]()
     var i = start
     while (i < start + iterations && stopStatus < 0) {
@@ -2256,13 +2300,7 @@ object Crawl {
         else spark
       val r0 = runIteration(iterSpark, workdir, i, pages, robots, hostMeta, cfg, redirClosure)
       lastSched = r0.scheduled
-      downloaded += r0.fetched
-      val status = SpiderStatus.convert(cfg.maxToCrawl, downloaded,
-        cfg.maxRounds, round, r0.scheduled)
-      if (status == SpiderStatus.RoundDone || status == SpiderStatus.MaxRounds)
-        round += 1
-      if (status == SpiderStatus.MaxToCrawl || status == SpiderStatus.MaxRounds)
-        stopStatus = status
+      val status = advance(r0.scheduled, r0.fetched)
       writeStatus(workdir, i, status, downloaded, round)
       if (i % compactEvery == 0) compact(spark, workdir, i, cfg)
       out += r0.copy(status = status)

@@ -39,7 +39,8 @@ object StateTable {
 
   private val FullMarker = "_GRAFT_FULL"
 
-  private def isFull(dir: File): Boolean = new File(dir, FullMarker).exists()
+  /** Does the chain's walk end at this part? */
+  private[frontier] def isFull(dir: File): Boolean = new File(dir, FullMarker).exists()
 
   /** Uniform bucket id for a key column. uh48/site hashes are already
     * tabulation-hashed; xxhash64 re-mixes arbitrary key tuples. */

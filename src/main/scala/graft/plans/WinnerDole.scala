@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, GenericInternalRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
@@ -85,7 +85,7 @@ final class WinnerHeap(val k: Int) {
     } // ties keep the incumbent ("all tied, keep it the same", :4887)
   }
 
-  /** Reset for reuse across groups (WinnerDoleExec streams one heap). */
+  /** Reset for reuse across groups (WinnerDoleExec loops one heap over them). */
   def clear(): Unit = {
     java.util.Arrays.fill(arr.asInstanceOf[Array[AnyRef]], 0, size, null)
     size = 0
@@ -110,10 +110,11 @@ final class WinnerHeap(val k: Int) {
   * serialize/deserialize even when the child is already
   * hash-partitioned by first_ip. This exec instead requires
   * ClusteredDistribution(first_ip) + child sorted by first_ip (a
-  * single-key RADIX sort), streams each IP group through ONE reused
-  * bounded heap (O(k) state — skew-safe: a 10^7-row IP never buffers,
-  * unlike the window's per-IP full sort), and writes winners straight
-  * to UnsafeRows. No object codec, no per-group allocation.
+  * single-key RADIX sort) and runs one loop per first_ip group of the
+  * sorted partition: the group's rows go through ONE reused bounded
+  * heap (O(k) state, skew-safe: a 10^7-row IP never buffers, unlike
+  * the window's per-IP full sort), then its winners are written
+  * best-first straight to UnsafeRows. No object codec.
   *
   * Output is byte-identical to the `row_number()` window top-k with the
   * per-row ip_max cap (proven by WinnerDoleSpec's window cross-check and
@@ -215,115 +216,57 @@ case class WinnerDoleExec(k: Int, maxWinners: Int, emitWake: Boolean,
 
     child.execute().mapPartitions({ iter =>
       val proj = UnsafeProjection.create(outTypes)
-      val outRow = new GenericInternalRow(12)
       val heap = new WinnerHeap(kLoc)
+      val rows = iter.buffered
 
-      new Iterator[InternalRow] {
-        private var nextRow: InternalRow = null  // staged output
-        private var pending: InternalRow = null  // first row of the NEXT group (copied)
-        private var groupIp = 0                  // ip of the group held in `winners`
-        private var winners: Array[WinnerItem] = null
-        private var pos = 0
-        private var exhausted = false
-        private var groupMinLb = Long.MaxValue
-        private var sentinelPending = false
+      // `proj` reuses its output row, so each row is projected as it
+      // is pulled, never ahead of the one before it
+      def emit(ip: Int, w: WinnerItem, seq: Int): InternalRow =
+        proj(InternalRow(w.uh48, ip, w.url, w.priority, w.ufn, w.timeMs, w.hop, seq,
+          w.wasIndexed, w.reqFlags, w.siteHash32, w.domHash32))
 
-        private def insert(row: InternalRow): Unit = {
-          val pri = row.getInt(priI)
-          val hp = row.getInt(hopI)
-          val t = row.getLong(timeI)
-          val uh = row.getLong(uhI)
-          if (heap.size < kLoc || heap.rootStrictlyWorse(pri, hp, t, uh)) {
-            heap.insert(new WinnerItem(
-              uh, row.getUTF8String(urlI).clone(), // sorter reuses row buffers
-              pri, row.getInt(ufnI), t, hp, row.getInt(ipMaxI),
-              row.getBoolean(wasI), row.getLong(flagsI),
-              row.getInt(siteI), row.getInt(domI)))
+      // one first_ip group: every row through the heap, then the
+      // winners best-first under each winner's OWN cap (`seq <
+      // least(ip_max, maxWinners)`, the window's `rank` filter), then
+      // in wake mode the IP's sentinel
+      def group(): Iterator[InternalRow] = {
+        val ip = rows.head.getInt(ipI)
+        var minLb = Long.MaxValue
+        while (rows.hasNext && rows.head.getInt(ipI) == ip) {
+          val row = rows.next()
+          // an ineligible row still counts toward the IP's wake time:
+          // it is exactly what decides when the IP wakes up
+          if (wake) minLb = math.min(minLb, row.getLong(lbI))
+          if (eligI < 0 || row.getBoolean(eligI)) {
+            val pri = row.getInt(priI)
+            val hop = row.getInt(hopI)
+            val t = row.getLong(timeI)
+            val uh = row.getLong(uhI)
+            if (heap.size < kLoc || heap.rootStrictlyWorse(pri, hop, t, uh))
+              heap.insert(new WinnerItem(
+                uh, row.getUTF8String(urlI).clone(), // the sorter reuses row buffers
+                pri, row.getInt(ufnI), t, hop, row.getInt(ipMaxI),
+                row.getBoolean(wasI), row.getLong(flagsI),
+                row.getInt(siteI), row.getInt(domI)))
           }
         }
-
-        /** Consume the next contiguous first_ip group into `winners`.
-          * Returns false when the input is exhausted. */
-        private def fillGroup(): Boolean = {
-          if (pending == null && !iter.hasNext) return false
-          val first = if (pending != null) pending else iter.next()
-          pending = null
-          groupIp = first.getInt(ipI)
-          groupMinLb = Long.MaxValue
-          consume(first)
-          var more = true
-          while (more && iter.hasNext) {
-            val row = iter.next()
-            if (row.getInt(ipI) != groupIp) { pending = row.copy(); more = false }
-            else consume(row)
-          }
-          winners = heap.sorted; pos = 0; heap.clear()
-          sentinelPending = wake
-          true
-        }
-
-        /** Only ELIGIBLE rows compete for the dole, but in wake mode
-          * every row's next_lb feeds the group's next-eligible minimum
-          * (an ineligible row is exactly what determines when the IP
-          * wakes up). */
-        private def consume(row: InternalRow): Unit = {
-          if (wake) {
-            val lb = row.getLong(lbI)
-            if (lb < groupMinLb) groupMinLb = lb
-          }
-          if (eligI < 0 || row.getBoolean(eligI)) insert(row)
-        }
-
-        /** Stage the next output row: winners best-first with the
-          * per-row ipMaxSpiders cap (`pos < least(ip_max, maxWinners)`)
-          * applied to each winner's OWN ip_max, exactly like the
-          * window's `rank <= least(ip_max, maxWinners)` filter. */
-        private def stage(): Unit = {
-          while (nextRow == null && !exhausted) {
-            if (winners == null) {
-              if (!fillGroup()) { exhausted = true; return }
-            }
-            while (nextRow == null && pos < winners.length) {
-              val it = winners(pos)
-              val p = pos
-              pos += 1
-              if (p < math.min(it.ipMax, maxW)) {
-                outRow.update(0, it.uh48); outRow.update(1, groupIp)
-                outRow.update(2, it.url); outRow.update(3, it.priority)
-                outRow.update(4, it.ufn); outRow.update(5, it.timeMs)
-                outRow.update(6, it.hop); outRow.update(7, p)
-                outRow.update(8, it.wasIndexed); outRow.update(9, it.reqFlags)
-                outRow.update(10, it.siteHash32); outRow.update(11, it.domHash32)
-                nextRow = proj(outRow)
-              }
-            }
-            if (nextRow == null && pos >= winners.length) {
-              if (sentinelPending) {
-                // the per-IP waiting-tree entry: seq_in_ip = -1,
-                // spider_time_ms = min(next_lb) over the whole group
-                sentinelPending = false
-                outRow.update(0, 0L); outRow.update(1, groupIp)
-                outRow.update(2, UTF8String.EMPTY_UTF8)
-                outRow.update(3, 0); outRow.update(4, 0)
-                outRow.update(5, groupMinLb); outRow.update(6, 0)
-                outRow.update(7, -1); outRow.update(8, false)
-                outRow.update(9, 0L); outRow.update(10, 0); outRow.update(11, 0)
-                nextRow = proj(outRow)
-              }
-              winners = null
-            }
-          }
-        }
-
-        override def hasNext: Boolean = { stage(); nextRow != null }
-        override def next(): InternalRow = {
-          stage()
-          if (nextRow == null) throw new NoSuchElementException
-          val r = nextRow
-          nextRow = null
-          r
-        }
+        val winners = heap.sorted
+        heap.clear()
+        val doled = winners.indices.iterator
+          .filter(p => p < math.min(winners(p).ipMax, maxW))
+          .map(p => emit(ip, winners(p), p))
+        if (!wake) doled
+        // the per-IP waiting-tree entry: seq_in_ip = -1, spider_time_ms
+        // = min(next_lb) over the whole group (`++` builds it only once
+        // the winners are consumed)
+        else doled ++ Iterator.single(emit(ip, new WinnerItem(0L, UTF8String.EMPTY_UTF8,
+          0, 0, minLb, 0, 0, false, 0L, 0, 0), -1))
       }
+
+      new Iterator[Iterator[InternalRow]] {
+        override def hasNext: Boolean = rows.hasNext
+        override def next(): Iterator[InternalRow] = group()
+      }.flatten
     }, preservesPartitioning = true)
   }
 

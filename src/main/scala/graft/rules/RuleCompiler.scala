@@ -100,15 +100,16 @@ object RuleCompiler {
     if (tok == "default") return Some(lit(true))
 
     // numeric comparisons
-    val (name, sign, value) = parseCmpPublic(tok)
+    val (name, sign, value) = UrlFilters.parseCmp(tok)
     if (sign != 0) {
+      import UrlFilters.{EQ, GE, GT, LE, LT, NE}
       def cmp(a: Column, b: Long): Column = sign match {
-        case 1 => a === b
-        case 2 => a =!= b
-        case 3 => a > b
-        case 4 => a < b
-        case 5 => a >= b
-        case 6 => a <= b
+        case EQ => a === b
+        case NE => a =!= b
+        case GT => a > b
+        case LT => a < b
+        case GE => a >= b
+        case LE => a <= b
       }
       val v = try value.toDouble.toLong catch { case _: NumberFormatException => return None }
       name match {
@@ -150,25 +151,6 @@ object RuleCompiler {
       return fin(c.url.contains(pat))
     }
     None
-  }
-
-  // reuse UrlFilters' comparator parse (duplicated here to keep it private there)
-  private def parseCmpPublic(tok: String): (String, Int, String) = {
-    var i = 0
-    while (i < tok.length && tok.charAt(i).isLetter) i += 1
-    val name = tok.substring(0, i)
-    while (i < tok.length && tok.charAt(i).isWhitespace) i += 1
-    if (i >= tok.length) return (name, 0, "")
-    var sign = 0
-    tok.charAt(i) match {
-      case '=' => i += 1; if (i < tok.length && tok.charAt(i) == '=') i += 1; sign = 1
-      case '!' if i + 1 < tok.length && tok.charAt(i + 1) == '=' => i += 2; sign = 2
-      case '<' => i += 1; if (i < tok.length && tok.charAt(i) == '=') { sign = 6; i += 1 } else sign = 4
-      case '>' => i += 1; if (i < tok.length && tok.charAt(i) == '=') { sign = 5; i += 1 } else sign = 3
-      case _ => return (name, 0, "")
-    }
-    while (i < tok.length && tok.charAt(i).isWhitespace) i += 1
-    (name, sign, tok.substring(i))
   }
 
   /** Compile the whole table into the `ufn` chain: the index of the

@@ -147,8 +147,8 @@ object UrlFilters {
   )
 
   // comparison signs
-  private final val EQ = 1; private final val NE = 2; private final val GT = 3
-  private final val LT = 4; private final val GE = 5; private final val LE = 6
+  private[rules] final val EQ = 1; private[rules] final val NE = 2; private[rules] final val GT = 3
+  private[rules] final val LT = 4; private[rules] final val GE = 5; private[rules] final val LE = 6
 
   private sealed trait Tok
   private case object RowSkip extends Tok // predicate unevaluable → skip row
@@ -424,7 +424,7 @@ object UrlFilters {
   }
 
   /** `name op value` parse (Spider.cpp:12623-12655). sign==0 → not a cmp. */
-  private def parseCmp(tok: String): (String, Int, String) = {
+  private[rules] def parseCmp(tok: String): (String, Int, String) = {
     var i = 0
     while (i < tok.length && tok.charAt(i).isLetter) i += 1
     val name = tok.substring(0, i)

@@ -44,6 +44,24 @@ class CrawlStatusSpec extends AnyFunSuite with TempDirs {
     assert(!res.exists(_.status == Crawl.SpiderStatus.MaxRounds))
   }
 
+  test("a resumed crawl keeps its counters: the maxToCrawl stop lands on the same iteration") {
+    val a = tmpdir("graft_status4"); val b = tmpdir("graft_status5")
+    val capped = Crawl.Config(maxToCrawl = 5L)
+    val straight = Crawl.run(spark, a, Corpus.micro, 8, capped)
+    // split after iteration 2: iteration 1 downloads nothing (its
+    // add-url seeds are answered EFAKEFIRSTIP), so the counters the
+    // resume must carry are first nonzero there
+    Crawl.run(spark, b, Corpus.micro, 2, capped)
+    Crawl.run(spark, b, Corpus.micro, 6, capped)
+    def status(w: String) = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$w/STATUS.json"))
+    assert(straight.last.status == Crawl.SpiderStatus.MaxToCrawl)
+    assert(Crawl.latestSnapshot(b) == Crawl.latestSnapshot(a), "the resumed crawl stops on another iteration")
+    assert(status(b) == status(a))
+    // a crawl stopped at SP_MAXTOCRAWL does not crawl again when resumed
+    assert(Crawl.run(spark, b, Corpus.micro, 3, capped).isEmpty)
+    assert(Crawl.latestSnapshot(b) == Crawl.latestSnapshot(a))
+  }
+
   test("status messages match the reference's taxonomy") {
     import Crawl.SpiderStatus._
     assert(msg(MaxRounds).contains("maxRounds"))

@@ -68,6 +68,11 @@ class ResumeIntegritySpec extends AnyFunSuite with TempDirs {
       assert(g == w, s"snapshot $i: $name")
     }
 
+  private def manifestField(w: String, i: Int, key: String): String = {
+    val m = java.nio.file.Files.readString(java.nio.file.Paths.get(Crawl.snapDir(w, i), "MANIFEST.json"))
+    s""""$key":([^,}]*)""".r.findFirstMatchIn(m).map(_.group(1)).getOrElse(s"<no $key>")
+  }
+
   test("crash between fetch_log and manifest: the re-run continuation is byte-identical") {
     val a = tmpdir(); val b = tmpdir()
     // reference run: 4 iterations straight through (compaction at 4)
@@ -111,5 +116,24 @@ class ResumeIntegritySpec extends AnyFunSuite with TempDirs {
     assert(fetchOrder(b, 5) == fetchOrder(a, 5), "crawl order after the resume")
     assertSameTables(b, a, 4)
     assertSameTables(b, a, 5)
+  }
+
+  test("crash after commit, before compaction: the resume compacts the snapshot first") {
+    val a = tmpdir(); val b = tmpdir()
+    // reference run: 6 iterations straight through (compaction at 4)
+    Crawl.run(spark, a, spec, 6, cfg, compactEvery = 4)
+    // crash run: snapshot 4 committed, its compaction never ran
+    Crawl.run(spark, b, spec, 4, cfg, compactEvery = 100)
+    val full4 = new java.io.File(s"${Crawl.snapDir(b, 4)}/${Crawl.Tables.requests.name}/_GRAFT_FULL")
+    assert(!full4.exists, "snapshot 4 is not compacted")
+    Crawl.run(spark, b, spec, 2, cfg, compactEvery = 4)
+
+    assert(full4.exists, "the resume compacts snapshot 4")
+    assert(fetchOrder(b, 6) == fetchOrder(a, 6), "crawl order after the resume")
+    (4 to 6).foreach(i => assertSameTables(b, a, i))
+    // the first resumed iteration runs on the session the straight run
+    // chose for it, from snapshot 4's scheduled count
+    Seq("quiet", "shuffle_partitions").foreach(k =>
+      assert(manifestField(b, 5, k) == manifestField(a, 5, k), s"snapshot 5's $k"))
   }
 }

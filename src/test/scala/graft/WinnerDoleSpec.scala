@@ -76,6 +76,31 @@ class WinnerDoleSpec extends AnyFunSuite {
     assert(!dole.exists(_.getAs[Int]("first_ip") == 2), "an IP with no eligible row got a winner")
   }
 
+  test("wake: winners == window over the eligible rows; one sentinel per IP at min(next_lb) over all its rows") {
+    // every row of ip 2 is ineligible, and about a third of the others;
+    // next_lb is drawn independently of eligibility
+    val df = synth(20000, 13)
+      .withColumn("eligible", col("first_ip") =!= 2 && pmod(hash(col("uh48") * 5), lit(3)) =!= 0)
+      .withColumn("next_lb", pmod(hash(col("uh48") * 11), lit(1000000)).cast("long"))
+    val out = graft.plans.WinnerDole.wake(df, 6, 2000).collect()
+    val (sentinels, winners) = out.partition(_.getAs[Int]("seq_in_ip") == -1)
+
+    val a = winners.map(_.toString).sorted
+    val b = windowRef(df.filter(col("eligible")), 6, 2000).collect().map(_.toString).sorted
+    assert(a.nonEmpty && a.sameElements(b), s"winner mismatch: ${a.length} vs ${b.length} rows")
+
+    def minLb(rows: org.apache.spark.sql.DataFrame): Map[Int, Long] =
+      rows.groupBy("first_ip").agg(min("next_lb")).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val want = minLb(df)
+    val got = sentinels.map(r => r.getAs[Int]("first_ip") -> r.getAs[Long]("spider_time_ms"))
+    assert(got.length == want.size && got.toMap.size == want.size, "exactly one sentinel per input IP")
+    assert(got.toMap == want, "a sentinel's time is min(next_lb) over all the IP's rows")
+    assert(want.contains(2), "the all-ineligible IP has its sentinel")
+    // the ineligible rows decide some IP's wake time
+    val eligibleOnly = minLb(df.filter(col("eligible")))
+    assert(want.exists { case (ip, lb) => !eligibleOnly.get(ip).contains(lb) })
+  }
+
   test("plan: no partial+final aggregate, single-key sort, exchange reuse") {
     val df = synth(1000, 5).repartition(col("first_ip"))
     val p = graft.plans.WinnerDole(df, 5, 5).queryExecution.executedPlan.toString
