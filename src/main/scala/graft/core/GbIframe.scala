@@ -9,9 +9,10 @@ package graft.core
   * the child is javascript), capping at 5 expansions.
   *
   * In the Spark engine the "download" is a join against the pages
-  * table: [[frameSrcs]] runs the reference's scan to list candidate
+  * table: [[candidates]] runs the reference's scan to list candidate
   * frame urls, the crawl joins those against pages+robots, and
-  * [[expand]] re-runs the scan splicing in the fetched contents.
+  * [[expand]], in the crawl's per-page map, re-runs the scan splicing
+  * in the fetched contents.
   * Quirks preserved:
   *  - the tag match is a PREFIX check, so `<frameset` matches "frame"
   *    (XmlDoc.cpp:19597-19609)

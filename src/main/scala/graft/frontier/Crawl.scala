@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.core.{GbHash, GbLinks, GbUrl, GbXml, Robots}
+import graft.core.{GbCharset, GbHash, GbHttpMime, GbIframe, GbLinks, GbUrl, GbXml, Robots}
 import graft.rules._
 
 /** The crawl engine: URL frontier + fetch scheduler as iterative Spark
@@ -80,6 +80,10 @@ object Crawl {
       maxToCrawl: Long = -1L, // stop once successful downloads reach this
       maxRounds: Int = -1 // stop after this many spider rounds (<=0: no limit, like m_maxCrawlRounds)
   ) {
+    // SeenBloom.bucketOf masks uh48 with seenBuckets - 1: any other count
+    // leaves buckets empty and overfills the rest past bloomFpp
+    require(seenBuckets > 0 && (seenBuckets & (seenBuckets - 1)) == 0,
+      s"seenBuckets must be a positive power of two, not $seenBuckets")
     /** The winner tree's per-IP cap: MAX_WINNER_NODES, Spider.cpp:60. */
     def maxWinnersPerIp: Int = 2000
     /** The simulated clock at iteration 0, in seconds. */
@@ -673,9 +677,15 @@ object Crawl {
     fl
   }
 
-  /** S6+X5+X7-X12: fetch batch against the pages table, robots-gated,
-    * parse and harvest outlinks. The fetch is repartitioned by first_ip so
-    * one task owns an IP (Msg13 per-IP consistency, Msg13.cpp:249).
+  /** S6+X5+X7-X12: fetch one batch, one result per batch row. The batch
+    * rows (at their redirect targets) join the pages table once, the
+    * sandbox download; the frames of frame-bearing pages join it once
+    * more, robots-gated, and come back as one list per uh48. The rows
+    * then join robots, are repartitioned by first_ip so one task owns an
+    * IP (Msg13 per-IP consistency, Msg13.cpp:249), and one map per page
+    * runs the reference's per-document chain: robots gate, error
+    * short-circuits, content-type gate, charset → UTF-8, frame splice
+    * (X7), extraction and outlink harvest.
     *
     * Outlinks leave this stage with `first_ip = 0` / `site_num_inlinks
     * = -1`; host→firstIp resolution is a JOIN against host_meta in
@@ -717,45 +727,32 @@ object Crawl {
     // old-doc page sample vector (getOldXmlDoc → getPageSampleVector):
     // a SLIM titledb projection (uh48 + the ≤31-int vector) — parquet
     // column pruning keeps this join tiny even when titledb holds bodies
-    val ov = Option(oldVecs).getOrElse {
-      spark.emptyDataset[(Long, Array[Int])].toDF("uh48", "sample_vec")
-    }
-    val base = withHost
-      .join(robots.toDF().withColumnRenamed("host", "rhost"), col("host") === col("rhost"), "left_outer")
+    val ov = Option(oldVecs).getOrElse(spark.emptyDataset[(Long, Array[Int])].toDF("uh48", "sample_vec"))
+    // the batch rows with their page (the S6 "download"), joined once
+    val paged = withHost
       .join(pages.toDF().select(col("url").as("purl"), col("html"), col("lang").as("plang"),
         col("header_charset").as("pcs"), col("content_type").as("pct")),
         col("eff_url") === col("purl"), "left_outer")
 
     val ua = Robots.DefaultUserAgent
 
-    // X7 completion: frame/iframe expansion (getExpandedUtf8Content,
-    // XmlDoc.cpp:19481-19768). Only frame-BEARING pages (a cheap byte
-    // prefilter) take the detour: their candidate frame urls join the
-    // pages table (the getExtraDoc "download"), robots-gated like the
-    // reference's extra doc, and the spliced raw-utf8 parent comes back
-    // as one column keyed by uh48. Everything else pays nothing.
-    // slim frame-parent projection: (uh48, eff_url) ⋈ pages only —
-    // branching off `base` would recompute the full robots+pages join
-    // once per frame subtree; pages is persisted by the caller, so this
-    // extra slim join is a cache read
-    val parentSlim = withHost.select(col("uh48"), col("eff_url"))
-      .join(pages.toDF().select(col("url").as("pp_url"), col("html"),
-          col("header_charset").as("pp_cs")),
-        col("eff_url") === col("pp_url"), "inner")
-      .select(col("uh48"), col("eff_url"), col("html"), col("pp_cs"))
-    val frameCands = parentSlim
-      .as[(Long, String, Array[Byte], String)]
-      .flatMap { case (uh, eu, html, cs) =>
-        if (!graft.core.GbIframe.mayHaveFrames(html)) Nil
-        else {
-          val raw = graft.core.GbCharset.toUtf8(html, graft.core.GbCharset.fromHttpHeader(cs))
-          graft.core.GbIframe.candidates(raw, GbUrl.parse(eu)).map(c => (uh, c.url))
-        }
-      }.toDF("f_uh48", "f_src")
-    // no dropDuplicates: expand() keys fetched contents by url, so
+    // X7 frame expansion (getExpandedUtf8Content, XmlDoc.cpp:19481-19768)
+    // is a step of the per-page map below; here the frame urls of
+    // frame-bearing pages (a cheap byte prefilter) join the pages table
+    // (the getExtraDoc "download") and robots, like the reference's extra
+    // doc. The contents come back as ONE list per uh48, so joining them
+    // never adds a row, even when the batch holds a url under two
+    // first_ips. No dropDuplicates: expand() keys the contents by url, so
     // duplicate (uh48, src) pairs collapse in the map — a distinct here
-    // was one more shuffle per iteration for nothing
-    val frameContents = frameCands
+    // was one more shuffle per iteration for nothing.
+    val frames = paged
+      .select(col("uh48").as[Long], col("eff_url").as[String], col("html").as[Array[Byte]],
+        col("pcs").as[String])
+      .flatMap { case (uh, eu, html, cs) =>
+        if (html == null || !GbIframe.mayHaveFrames(html)) Nil
+        else GbIframe.candidates(GbCharset.toUtf8(html, GbCharset.fromHttpHeader(cs)), GbUrl.parse(eu))
+          .map(c => (uh, c.url))
+      }.toDF("f_uh48", "f_src")
       .join(pages.toDF().select(col("url").as("fp_url"), col("html").as("fp_html"),
           col("header_charset").as("fp_cs")),
         col("f_src") === col("fp_url"), "inner") // 404 frames drop out (nukeDoc-continue)
@@ -770,42 +767,28 @@ object Crawl {
         val pathCgi = if (fu.isValid) fu.url.substring(fu.pathOff) else "/"
         val allowed = fRobots == null || Robots.evaluate(pathCgi, fRobots, ua)._1
         if (!allowed) None // robots-denied frame → no content (XmlDoc.cpp:19747)
-        else Some((uh, graft.core.GbIframe.FrameContent(src,
-          graft.core.GbCharset.toUtf8(fhtml, graft.core.GbCharset.fromHttpHeader(fcs)),
-          fu.extension.equalsIgnoreCase("js"))))
-      }.toDF("e_uh48", "fc")
-    val expansions = frameContents
-      .groupBy("e_uh48").agg(collect_list(col("fc")).as("fcs"))
-      .join(parentSlim.select(col("uh48").as("b_uh48"), col("eff_url").as("b_eff"),
-          col("html").as("b_html"), col("pp_cs").as("b_cs")),
-        col("e_uh48") === col("b_uh48"), "inner")
-      .select(col("e_uh48").as[Long], struct(col("b_eff").as("eu"), col("b_cs").as("cs")).as[(String, String)],
-        col("b_html").as[Array[Byte]], col("fcs").as[Seq[graft.core.GbIframe.FrameContent]])
-      .map { case (uh, (eu, cs), html, fcs) =>
-        val raw = graft.core.GbCharset.toUtf8(html, graft.core.GbCharset.fromHttpHeader(cs))
-        val m = fcs.map(f => f.url -> f).toMap
-        (uh, graft.core.GbIframe.expand(raw, GbUrl.parse(eu), m))
-      }.toDF("x_uh48", "expanded")
+        else Some((uh, GbIframe.FrameContent(src,
+          GbCharset.toUtf8(fhtml, GbCharset.fromHttpHeader(fcs)), fu.extension.equalsIgnoreCase("js"))))
+      }.toDF("f_uh48", "fc")
+      .groupBy("f_uh48").agg(collect_list(col("fc")).as("frames"))
 
-    val joined = base
+    val joined = paged
+      .join(robots.toDF().withColumnRenamed("host", "rhost"), col("host") === col("rhost"), "left_outer")
       .join(ov.select(col("uh48").as("ov_uh48"), col("sample_vec").as("old_vec")),
         col("uh48") === col("ov_uh48"), "left_outer")
-      .join(expansions, col("uh48") === col("x_uh48"), "left_outer")
+      .join(frames, col("uh48") === col("f_uh48"), "left_outer")
       .select(
-        struct(col("uh48"), col("first_ip"), col("url"), col("priority"), col("ufn"),
-          col("spider_time_ms"), col("hop_count"), col("seq_in_ip"), col("was_indexed"),
-          col("req_flags"), col("site_hash32"), col("dom_hash32"))
-          .as("task").as[FetchTask],
+        struct(Encoders.product[FetchTask].schema.fieldNames.map(col): _*).as("task").as[FetchTask],
         col("body").as[Array[Byte]],
         col("html").as[Array[Byte]],
         col("plang").as[String],
-        struct(col("redir_err"), col("redir_final"), col("old_vec"), col("expanded"), col("pcs"), col("pct"))
-          .as[(Int, String, Array[Int], Array[Byte], String, String)]
+        struct(col("redir_err"), col("redir_final"), col("old_vec"), col("frames"), col("pcs"), col("pct"))
+          .as[(Int, String, Array[Int], Seq[GbIframe.FrameContent], String, String)]
       )
 
     joined
       .repartition(col("task.first_ip"))
-      .map { case (task, robotsBody, html, plang, (redirErr, redirFinal, oldVec, expanded, pcs, pct)) =>
+      .map { case (task, robotsBody, html, plang, (redirErr, redirFinal, oldVec, frames, pcs, pct)) =>
         // parse the EFFECTIVE url: content/links/robots are evaluated at
         // the redirect target (the reference's current url after follows)
         val effUrl = if (redirErr == 0 && redirFinal != null) redirFinal else task.url
@@ -820,15 +803,13 @@ object Crawl {
         val spacing = math.max(cd.toLong, ipWait.toLong)
         val downloadEnd = nowMillis + (task.seq_in_ip + 1).toLong * spacing
 
+        // the downloaded mime, absent header → CT_HTML like HttpMime::parse;
         // CT_PDF → HTML conversion (the reference's pdftohtml pipe;
-        // GbPdf scaladoc). Lazy: only PDF rows pay, computed once for
-        // both the CT gate and the extraction chain.
-        lazy val pdfHtml =
-          if (html != null && graft.core.GbHttpMime.contentTypeFromStr(
-              if (pct == null || pct.isEmpty) "text/html" else pct) ==
-              graft.core.GbHttpMime.CtPdf)
-            graft.core.GbPdf.toHtml(html)
-          else null
+        // GbPdf scaladoc). Lazy: only fetched rows parse the type and
+        // only PDF rows convert, once for both the CT gate and the
+        // extraction chain.
+        lazy val ct = GbHttpMime.contentTypeFromStr(if (pct == null || pct.isEmpty) "text/html" else pct)
+        lazy val pdfHtml = if (html != null && ct == GbHttpMime.CtPdf) graft.core.GbPdf.toHtml(html) else null
 
         // the add-url DNS hop (XmlDoc.cpp:2812-2828): a fake-firstIp
         // ADD-URL request is never downloaded — indexDoc short-circuits
@@ -877,10 +858,7 @@ object Crawl {
         } else if (html == null) {
           FetchResult(task, found = false, allowed = true, cd, 404, Errs.EDOCBADHTTPSTATUS,
             "", 0, downloadEnd, Nil, "")
-        } else if (!graft.core.GbHttpMime.isIndexable(
-            graft.core.GbHttpMime.contentTypeFromStr(
-              if (pct == null || pct.isEmpty) "text/html" else pct)) &&
-            pdfHtml == null) {
+        } else if (!GbHttpMime.isIndexable(ct) && pdfHtml == null) {
           // X17 CT classification of the DOWNLOADED mime: non-text
           // types index as EDOCBADCONTENTTYPE — except CT_PDF, which
           // the reference pipes through pdftohtml (XmlDoc.cpp:18989
@@ -888,20 +866,19 @@ object Crawl {
           // GbPdf is the native converter (no binaries in sandbox).
           // A PDF the converter gets no text from lands here, like the
           // reference freeing empty filter output (XmlDoc.cpp:19073).
-          // Absent CT header pre-seeds CT_HTML like HttpMime::parse.
           FetchResult(task, found = false, allowed = true, cd, 200, Errs.EDOCBADCONTENTTYPE,
             "", 0, downloadEnd, Nil, "")
         } else {
-          // X7-X10: the byte-exact extraction pipeline (charset → UTF-8
-          // first: getRawUtf8Content, then iframe expansion
-          // (getExpandedUtf8Content — precomputed via the frame-content
-          // join when the page bears frame tags), then the
-          // getUtf8Content chain). CT_PDF arrives converted to HTML
-          // (GbPdf — the pdftohtml stand-in), already UTF-8.
-          val work = if (pdfHtml != null)
-              pdfHtml.getBytes(StandardCharsets.UTF_8)
-            else if (expanded != null) expanded
-            else graft.core.GbCharset.toUtf8(html, graft.core.GbCharset.fromHttpHeader(pcs))
+          // X7-X10: the byte-exact extraction pipeline: charset → UTF-8
+          // (getRawUtf8Content), the page's fetched frames spliced in
+          // (getExpandedUtf8Content), then the getUtf8Content chain.
+          // CT_PDF arrives converted to HTML (GbPdf — the pdftohtml
+          // stand-in), already UTF-8.
+          val work = if (pdfHtml != null) pdfHtml.getBytes(StandardCharsets.UTF_8)
+            else {
+              val raw = GbCharset.toUtf8(html, GbCharset.fromHttpHeader(pcs))
+              if (frames == null) raw else GbIframe.expand(raw, u, frames.map(f => f.url -> f).toMap)
+            }
           GbXml.sanitizeUtf8(work)
           val decoded = GbXml.htmlDecode(work, doSpecial = true)
           val norm = GbXml.normalizeAfterDecode(decoded)
@@ -1106,7 +1083,9 @@ object Crawl {
     * real ip comes from the host_meta join (the getFirstIp DNS step);
     * unknown hosts use the same deterministic pseudo-ip fallback as
     * resolveOutlinks. Bypasses seen-set admission by design: the url IS
-    * seen — this is a keyed re-shard, not a discovery. */
+    * seen — this is a keyed re-shard, not a discovery. It keeps (first_ip,
+    * uh48) unique: a url already held under its real ip (say, a fake
+    * request answered again before compaction) gets no second row. */
   def resolveRevised(efakeResults: Dataset[FetchResult],
                      requests: Dataset[FrontierRequest],
                      hostMeta: Dataset[HostMeta],
@@ -1115,8 +1094,16 @@ object Crawl {
     import spark.implicits._
     import graft.functions.GraftFunctions.{siteKeyHash32, urlHost}
     val keys = efakeResults.map(r => (r.task.first_ip, r.task.uh48)).toDF("e_ip", "e_uh48")
+    val revisedRow = struct(requests.columns.map {
+      case "first_ip" => col("real_ip").as("first_ip")
+      case "flags" => col("flags").bitwiseAND(lit(~Flags.FakeFirstIp)).as("flags")
+      case c => col(c)
+    }: _*)
+    // every row of the answered urls, in one scan: the fake row and any
+    // under the real ip. A merge join leaves them partitioned for the
+    // groupBy; a broadcast of the small requests chain was one more job
     requests.toDF()
-      .join(keys, col("first_ip") === col("e_ip") && col("uh48") === col("e_uh48"), "left_semi")
+      .join(keys.hint("merge"), col("uh48") === col("e_uh48"))
       .withColumn("host", urlHost(col("url")))
       // getRevisedSpiderRequest takes the ip from getFirstIp — the tagdb
       // pinned firstip tag first (XmlDoc.cpp:14157-14176), then DNS
@@ -1124,9 +1111,12 @@ object Crawl {
         siteKeyHash32(col("url")) === col("tag_key"), "left_outer")
       .join(hostMeta.toDF().select(col("host").as("hm_host"), col("first_ip").as("hm_ip")),
         col("host") === col("hm_host"), "left_outer")
-      .transform(withFirstIp("first_ip"))
-      .withColumn("flags", col("flags").bitwiseAND(lit(~Flags.FakeFirstIp)))
-      .drop("host", "hm_host", "hm_ip", "fb_ip", "tag_key", "tag_ip")
+      .transform(withFirstIp("real_ip"))
+      .groupBy("uh48")
+      .agg(max(when(col("first_ip") === col("e_ip"), revisedRow)).as("r"),
+        max(col("first_ip") === col("real_ip")).as("held"))
+      .filter(col("r").isNotNull && !col("held"))
+      .select("r.*")
       .as[FrontierRequest]
   }
 
@@ -1471,23 +1461,6 @@ object Crawl {
       .agg(max(struct(col("spidered_time"), col("sample_vec"))).as("s"))
       .select(col("uh48"), col("s.sample_vec").as("sample_vec"))
 
-  private def ipStateOf(t: DataFrame): Dataset[IpState] = {
-    import t.sparkSession.implicits._
-    t.filter(col("last_download_end_ms").isNotNull)
-      .select("first_ip", "last_download_end_ms").as[IpState]
-  }
-
-  private def ipCountsOf(t: DataFrame): DataFrame =
-    t.filter(col("n").isNotNull).select("first_ip", "n")
-
-  private def ipNextOf(workdir: String, i: Int, cfg: Config, t: DataFrame): Option[DataFrame] = {
-    val marker = ipTableMarker(workdir, i)
-    if (marker.exists &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)).trim == rulesFingerprint(cfg))
-      Some(t.filter(col("next_ms").isNotNull).select("first_ip", "next_ms"))
-    else None
-  }
-
   /** A fingerprint of everything the waiting-tree lower bounds depend
     * on: if the rule table / site list / patterns change between runs,
     * stored next_ms entries may no longer be lower bounds → discard. */
@@ -1495,11 +1468,6 @@ object Crawl {
     val s = cfg.rules.mkString("|") + "#" + cfg.siteList + "#" + cfg.patterns.toString
     java.lang.Long.toHexString(graft.core.GbHash.hash64b(s))
   }
-
-  /** The marker beside the per-IP table that says its `next_ms` values
-    * were rolled forward under these rules. */
-  private def ipTableMarker(workdir: String, i: Int): java.io.File =
-    new java.io.File(s"${snapDir(workdir, i)}/ip_table.rules")
 
   /** One per-IP table roll-forward. Every layer carries (first_ip,
     * last_download_end_ms, n, pri, next_ms); the single groupBy keeps
@@ -1526,18 +1494,25 @@ object Crawl {
     ipLayer(t, last = col("last_download_end_ms"), n = n,
       pri = when(col("next_ms").isNotNull, lit(0)), next = col("next_ms"))
 
-  def writeManifest(workdir: String, i: Int, metrics: Seq[MetricsRow]): Unit = {
-    val d = snapDir(workdir, i)
-    val m = metrics.map(x => s"""{"scheduled":${x.scheduled},"fetched":${x.fetched},"robots_denied":${x.robots_denied},"errors":${x.errors},"new_urls":${x.new_urls},"dups_dropped":${x.dups_dropped},"wall_ms":${x.wall_ms},"codegen_compiles":${x.codegen_compiles},"shuffle_partitions":${x.shuffle_partitions},"quiet":${x.quiet}}""").mkString("[", ",", "]")
-    Files.writeString(Paths.get(s"$d/MANIFEST.json"),
-      s"""{"iteration":$i,"lineage":$m}""")
+  /** Snapshot i's commit record, one flat JSON object: the iteration's
+    * counters and, when its per-IP table's `next_ms` values were rolled
+    * forward, the fingerprint of the rules they were rolled under
+    * (`rules`, see [[rulesFingerprint]]). */
+  def writeManifest(workdir: String, i: Int, m: MetricsRow, rules: Option[String]): Unit =
+    Files.writeString(Paths.get(snapDir(workdir, i), "MANIFEST.json"),
+      s"""{"iteration":$i,"scheduled":${m.scheduled},"fetched":${m.fetched},"robots_denied":${m.robots_denied},"errors":${m.errors},"new_urls":${m.new_urls},"dups_dropped":${m.dups_dropped},"wall_ms":${m.wall_ms},"codegen_compiles":${m.codegen_compiles},"shuffle_partitions":${m.shuffle_partitions},"quiet":${m.quiet}""" +
+        rules.fold("")(r => s""","rules":"$r"""") + "}")
+
+  /** Field `key` of snapshot i's manifest; None without one. */
+  private def manifestField(workdir: String, i: Int, key: String): Option[String] = {
+    val f = Paths.get(snapDir(workdir, i), "MANIFEST.json")
+    if (!Files.exists(f)) None
+    else s""""$key":"?([^",}]*)""".r.findFirstMatchIn(Files.readString(f)).map(_.group(1))
   }
 
   /** Counter `key` of snapshot i's manifest. */
   private def manifestCount(workdir: String, i: Int, key: String): Long =
-    s""""$key":(\\d+)""".r
-      .findFirstMatchIn(Files.readString(Paths.get(snapDir(workdir, i), "MANIFEST.json")))
-      .map(_.group(1).toLong)
+    manifestField(workdir, i, key).map(_.toLong)
       .getOrElse(sys.error(s"snapshot $i's manifest has no $key"))
 
   def latestSnapshot(workdir: String): Option[Int] = {
@@ -1607,8 +1582,8 @@ object Crawl {
       tagState: Dataset[TagState],
       quotaState: DataFrame,
       ipCounts: DataFrame, // (first_ip, n) — A8: exact per-IP request counts
-      // A3 waiting tree (first_ip, next_ms); None when `ip_table.rules` is
-      // missing or names other rules (the next schedule then scans all)
+      // A3 waiting tree (first_ip, next_ms); None when the manifest names
+      // no rules or other rules (the next schedule then scans all)
       ipNext: Option[DataFrame],
       titleVecs: DataFrame, // (uh48, sample_vec) — the latest titledb vector per url
       seenUh48: DataFrame, // (uh48) — the URL-seen set: the requests' distinct uh48s
@@ -1621,16 +1596,18 @@ object Crawl {
     import spark.implicits._
     val t = Tables.all.map(table => table -> table.load(spark, workdir, i)).toMap
     val requests = t(Tables.requests).as[FrontierRequest]
+    // the per-IP table's three views: the IPs that have a value for `c`
+    def ipView(c: String) = t(Tables.ipTable).filter(col(c).isNotNull).select("first_ip", c)
     LoopState(
       requests = requests,
       replies = t(Tables.replies).as[FrontierReply],
-      ipState = ipStateOf(t(Tables.ipTable)),
+      ipState = ipView("last_download_end_ms").as[IpState],
       domState = t(Tables.dom).as[DomState],
       inlinks = t(Tables.inlinks).as[InlinkState],
       tagState = t(Tables.tags).as[TagState],
       quotaState = t(Tables.quota),
-      ipCounts = ipCountsOf(t(Tables.ipTable)),
-      ipNext = ipNextOf(workdir, i, cfg, t(Tables.ipTable)),
+      ipCounts = ipView("n"),
+      ipNext = Option.when(manifestField(workdir, i, "rules").contains(rulesFingerprint(cfg)))(ipView("next_ms")),
       titleVecs = titleVecsOf(t(Tables.titledb)),
       // a fake-IP add-url re-added under its real IP is a second
       // request row for the same uh48
@@ -1663,10 +1640,12 @@ object Crawl {
     val r = IterationResult(fetched.scheduled, fetched.fetched, fetched.robotsDenied,
       fetched.errors, admitted.newUrls, fetched.outlinks - admitted.newUrls)
     // the manifest lands last: a snapshot without one is not resumable
-    writeManifest(workdir, i, Seq(MetricsRow(i, r.scheduled, r.fetched, r.robotsDenied,
+    writeManifest(workdir, i, MetricsRow(r.scheduled, r.fetched, r.robotsDenied,
       r.errors, r.newUrls, r.dupsDropped, System.currentTimeMillis() - t0,
       GraftShim.codegenCompiles - compiles0, spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      GraftShim.isQuiet(spark))))
+      GraftShim.isQuiet(spark)),
+      // next_ms was rolled forward under these rules
+      if (doled.out.wake) Some(rulesFingerprint(cfg)) else None)
     (Seq(doled.cached, fetched.cached) ++ admitted.caches).foreach(_.unpersist())
     r
   }
@@ -1996,12 +1975,7 @@ object Crawl {
     val writes = rollForward(stateMerges(spark, st, f, a, cfg, i), d) ++
       parts.map { case (t, rows) => Future(t.writePart(rows, d)) }
     Await.result(Future.sequence(writes), Duration.Inf)
-    // the marker says next_ms was rolled forward under these rules
-    if (doled.out.wake) writeIpTableMarker(workdir, i, cfg)
   }
-
-  private def writeIpTableMarker(workdir: String, i: Int, cfg: Config): Unit =
-    Files.write(ipTableMarker(workdir, i).toPath, rulesFingerprint(cfg).getBytes("UTF-8"))
 
   /** The per-IP table's roll-forward, one groupBy (mergeIpTable) over:
     *  - the prior table's politeness and A8 state;
@@ -2140,12 +2114,11 @@ object Crawl {
     val compiles0 = GraftShim.codegenCompiles
     val d = snapDir(workdir, 0)
     writeFulls(spark, workdir, 0, cfg, seedUrls, _.initial, _ => 1, "")
-    writeIpTableMarker(workdir, 0, cfg)
     Seq.empty[(Int, Int, Int, String, Int, Int)].toDF("iteration", "first_ip", "seq", "url", "priority", "err_code")
       .write.mode("overwrite").parquet(s"$d/fetch_log")
-    writeManifest(workdir, 0, Seq(MetricsRow(0, 0, 0, 0, 0, seedUrls.size, 0, 0,
+    writeManifest(workdir, 0, MetricsRow(0, 0, 0, 0, seedUrls.size, 0, 0,
       GraftShim.codegenCompiles - compiles0, spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      GraftShim.isQuiet(spark))))
+      GraftShim.isQuiet(spark)), Some(rulesFingerprint(cfg)))
   }
 
   /** S2: injection — push urls straight into the frontier with the
@@ -2200,7 +2173,7 @@ object Crawl {
     // scan its new rows. It is read while rewritten: the full write
     // lands beside it and is swapped in.
     val wake =
-      if (!ipTableMarker(workdir, i).exists) Nil
+      if (manifestField(workdir, i, "rules").isEmpty) Nil
       else Seq(ipLayer(reqs.toDF(), pri = lit(1), next = lit(0L)))
     val ipTable = Tables.ipTable
     StateTable.writeFull(mergeIpTable(Seq(priorIpLayer(ipTable.load(spark, workdir, i)),

@@ -202,7 +202,6 @@ final case class TitleRow(
 
 /** Per-iteration counters, recorded in the snapshot's MANIFEST.json. */
 final case class MetricsRow(
-    iteration: Int,
     scheduled: Long,
     fetched: Long,
     robots_denied: Long,

@@ -54,6 +54,21 @@ object GenPlans {
   scans as PushedFilters""",
       so.dole)
 
+    // the fetch of that dole, on the inputs Crawl.run gives it; the
+    // redirect closure as a cut leaf (its own plan is an unrolled loop)
+    val batch = GraftShim.cutLineage(so.dole.persist()).filter(col("seq_in_ip") >= 0).as[FetchTask]
+    section("fetch (S6+X5+X7): pages join → frames, one list per uh48 → robots → per-page map",
+      """What to look for:
+- pages joins twice: the batch rows on `eff_url`, and their frame urls
+  on `f_src`; the first join feeds both the frame candidates and the
+  rows the map reads, so the plan computes it in each of those branches
+- the frames reach the rows as ONE `collect_list` per `f_uh48`
+  (ObjectHashAggregate), joined left outer on uh48: a url held under
+  two first_ips stays two rows
+- ONE Exchange on `task.first_ip` feeds ONE per-page typed map""",
+      Crawl.fetch(batch, Corpus.pages(spark, spec).persist(), Corpus.robots(spark, spec), cfg, i + 1,
+        GraftShim.cutLineage(Crawl.redirectClosure(Corpus.redirects(spark, spec))), st.titleVecs).toDF)
+
     // J2: admission anti-join with bloom prefilter; the URL-seen set is
     // the requests chain itself
     val cand = st.requests.limit(200)

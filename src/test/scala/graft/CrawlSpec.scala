@@ -189,6 +189,27 @@ class CrawlSpec extends AnyFunSuite with TempDirs {
       "requests chain")
   }
 
+  test("a batch holding a frame-bearing url under two first_ips fetches and answers each task once") {
+    import spark.implicits._
+    // a 40-day clock step makes the crawled roots due again, so the
+    // reindex of host 2's root (the iframe fixture, under a fake IP
+    // from its docid) shares iteration 5's batch with its own request
+    val stepped = cfg.copy(clockStepMs = 40L * 86400L * 1000L)
+    val d = tmpdir()
+    Crawl.run(spark, d, spec, 4, stepped, compactEvery = 100)
+    val root = s"http://${Corpus.host(2)}/"
+    assert(Crawl.reindex(spark, d, Seq(root), stepped) == 1)
+    val r5 = Crawl.run(spark, d, spec, 1, stepped, compactEvery = 100).head
+    val log = spark.read.parquet(s"${Crawl.snapDir(d, 5)}/fetch_log")
+      .select("first_ip", "url").as[(Int, String)].collect().toSeq
+    assert(log.filter(_._2 == root).map(_._1).distinct.size == 2, s"the root's tasks: $log")
+    assert(log.distinct.size == log.size, s"one fetch_log row per task: ${log.diff(log.distinct)}")
+    assert(r5.scheduled == log.size, s"scheduled ${r5.scheduled} vs ${log.size} fetch_log rows")
+    val replies = Crawl.loadReplies(spark, d, 5)
+      .select("first_ip", "uh48", "spidered_time").as[(Int, Long, Long)].collect().toSeq
+    assert(replies.distinct.size == replies.size, s"one reply per task: ${replies.diff(replies.distinct)}")
+  }
+
   test("A8 overflow guard: over-cap IPs admit no outlinks") {
     import spark.implicits._
     val capped = cfg.copy(overflowCap = 2L)

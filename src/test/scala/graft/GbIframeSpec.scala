@@ -81,14 +81,19 @@ class GbIframeSpec extends AnyFunSuite {
     val robots = Corpus.robots(spark, spec)
     // host 2 root carries the iframe fixtures (Corpus k%8==2)
     val url = s"http://${Corpus.host(2)}/"
-    val batch = spark.createDataset(Seq(
-      FetchTask(GbUrl.parse(url).uh48, 99, url, 50, 0, 0L, 0, 0)))
-    val res = Crawl.fetch(batch, pages, robots, Crawl.Config(), 1).collect().head
-    assert(res.errCode == frontier.Errs.OK)
-    // the same-host /s1/leaf0.html frame expanded into the root's text
-    assert(res.extractedText.contains("Host 2 page 3"), res.extractedText.take(400))
-    // the cross-host frame target (host 5, /s1 robots-disallowed) did NOT
-    assert(!res.extractedText.contains("Host 5 page"))
+    // the url twice, under two first_ips (a reindex's fake IP beside
+    // the url's own request): one result per task, both expanded
+    val batch = spark.createDataset(Seq(99, 100).map(ip =>
+      FetchTask(GbUrl.parse(url).uh48, ip, url, 50, 0, 0L, 0, 0)))
+    val results = Crawl.fetch(batch, pages, robots, Crawl.Config(), 1).collect()
+    assert(results.map(_.task.first_ip).sorted.toSeq == Seq(99, 100))
+    results.foreach { res =>
+      assert(res.errCode == frontier.Errs.OK)
+      // the same-host /s1/leaf0.html frame expanded into the root's text
+      assert(res.extractedText.contains("Host 2 page 3"), res.extractedText.take(400))
+      // the cross-host frame target (host 5, /s1 robots-disallowed) did NOT
+      assert(!res.extractedText.contains("Host 5 page"))
+    }
   }
 
   test("extraction of an expanded doc includes the frame text") {

@@ -31,6 +31,14 @@ class SeenBloomSpec extends AnyFunSuite {
     assert(fpCount < 300, s"fp rate too high: $fpCount/2000")
   }
 
+  test("Config.seenBuckets must be a positive power of two") {
+    Seq(1, 8, 64).foreach(n => assert(Crawl.Config(seenBuckets = n).seenBuckets == n))
+    Seq(0, -8, 10, 12).foreach(n => intercept[IllegalArgumentException](Crawl.Config(seenBuckets = n)))
+    // why: bucketOf masks uh48 with buckets - 1, so 10 buckets would fill
+    // only 0, 1, 8 and 9
+    assert((0L until 1024L).map(SeenBloom.bucketOf(_, 10)).toSet == Set(0, 1, 8, 9))
+  }
+
   test("a bloom is sized for its expected items, however few") {
     import spark.implicits._
     def bytes(expected: Long): Long = SeenBloom.build(spark.createDataset(Seq(java.lang.Long.valueOf(1L))),
