@@ -69,8 +69,8 @@ object Crawl {
       enforceDoleCaps: Boolean = false,
       maxSpidersGlobal: Int = 300, // MAX_SPIDERS, Spider.h:1637
       // F6: site-list lines (PageBasic.cpp grammar; empty → insitelist
-      // always matches). Non-empty lists route scheduling through the
-      // reference-exact interpreter (pattern matching isn't compiled).
+      // always matches). A non-empty list's `insitelist` compiles to
+      // native columns; its `tag:` tokens take RuleCompiler's bridge.
       siteList: Seq[String] = Nil,
       // matchesucp/matchesupp collection patterns (Spider.cpp:11714-11777)
       patterns: CrawlPatterns = CrawlPatterns(),
@@ -165,6 +165,51 @@ object Crawl {
     wasParentIndexed = Flags.has(r.flags, Flags.WasParentIndexed),
     siteHash32 = r.site_hash32
   )
+
+  /** The interpreter's inputs for one joined row, built the same way on
+    * both schedule paths: the request (its HadReply bit set when a reply
+    * exists) with the inlink count `pni` and the A6 quota counts (site
+    * pages, domain pages, site adds, domain adds); and the reply. */
+  private[graft] def ufnInputs(req: FrontierRequest, rep: Option[FrontierReply], pni: Int,
+                               quota: (Int, Int, Int, Int)): (UfnRequest, Option[UfnReply]) =
+    (toUfn(req).copy(pageNumInlinks = pni, sitePages = quota._1, domainPages = quota._2,
+      siteAdds = quota._3, domainAdds = quota._4), rep.map(toUfnReply))
+
+  /** The rule context of a crawl: its site list `sl` and crawl patterns,
+    * and whether the A6 quota counts were joined (`quotaValid`). */
+  private def ruleCtx(sl: SiteList, cfg: Config, quotaValid: Boolean): RuleCtx =
+    RuleCtx(sl.isEmpty, u => sl.matchingPattern(GbUrl.parse(u)),
+      (u, t) => sl.matchingPattern(GbUrl.parse(u), t), cfg.patterns, quotaValid)
+
+  /** One-hit wonders: a page-reindex or fake-firstIp request that a
+    * same-key reply newer than its addedTime answered is spent (the
+    * reindex was served; the fake request was re-added under its real
+    * ip by resolveRevised). The reference skips it at scan time
+    * (Spider.cpp:4268-4277, 4431-4437) and drops it at merge
+    * (13721-13729); both schedule paths fold this into force-delete and
+    * compaction drops the row. `replyTime`: the latest same-key reply's
+    * spidered time, null when there is none. */
+  private[graft] def oneHitAnswered(flags: Column, addedTime: Column, replyTime: Column): Column =
+    flags.bitwiseAND(lit(Flags.IsPageReindex | Flags.FakeFirstIp)) =!= 0L &&
+      coalesce(replyTime > addedTime, lit(false))
+
+  /** The A6 quota counts of each row (`q_sp`, `q_dp`, `q_sa`, `q_da`:
+    * site pages, domain pages, site adds, domain adds), looked up by the
+    * row's `site`/`dom` hash in `quota` (the small quota_state dimension,
+    * auto-broadcast; the reference keeps the same table in shard RAM,
+    * Spider.cpp m_localTable/quotaTable); a missing key counts 0. All 0
+    * when `quota` is None. */
+  private def withQuotaCounts(df: DataFrame, quota: Option[DataFrame], site: Column, dom: Column): DataFrame =
+    Seq("q_sp" -> site, "q_dp" -> dom, "q_sa" -> site.bitwiseXOR(lit(0x123456)),
+      "q_da" -> dom.bitwiseXOR(lit(0x123456))).foldLeft(df) { case (d, (out, key)) =>
+      quota match {
+        case None => d.withColumn(out, lit(0))
+        case Some(q) =>
+          d.join(q.select(col("key").as(s"k_$out"), col("n").as(s"n_$out")), key === col(s"k_$out"), "left_outer")
+            .withColumn(out, coalesce(col(s"n_$out").cast("int"), lit(0)))
+            .drop(s"k_$out", s"n_$out")
+      }
+    }
 
   private[graft] def toUfnReply(r: FrontierReply): UfnReply = UfnReply(
     spideredTime = r.spidered_time,
@@ -279,7 +324,8 @@ object Crawl {
 
   /** Schedule: produce this iteration's fetch batch (doledb analogue),
     * scanning the whole frontier; [[route]] with no waiting-tree
-    * upkeep. */
+    * upkeep. `quota`: the A6 quota_state counts a quota rule table reads
+    * (null: no quota table). */
   def schedule(requests: Dataset[FrontierRequest],
                replies: Dataset[FrontierReply],
                ipState: Dataset[IpState],
@@ -313,10 +359,8 @@ object Crawl {
     * pruning stays EXACT: a pruned IP provably has no eligible row).
     *
     * The upkeep is off (a plain [[schedule]]: full scan, no sentinels)
-    * when dole caps are on (they cut across IPs) or the rules use
-    * clock-dependent tokens (spiderwaited/urlage: a row's ufn can then
-    * change with no state transition touching its IP), and [[route]]
-    * turns it off when the rule table leaves the compiled path. */
+    * when dole caps are on (they cut across IPs) or the rules are not
+    * [[wakeSafeRules]]. */
   def scheduleWake(requests: Dataset[FrontierRequest],
                    replies: Dataset[FrontierReply],
                    ipState: Dataset[IpState],
@@ -329,15 +373,13 @@ object Crawl {
     route(requests, replies, ipState, domState, cfg, iteration, inlinks, quota,
       ipNext, wake = !cfg.enforceDoleCaps && wakeSafeRules(cfg))
 
-  /** The one schedule route. A rule table the compiler takes is scored
-    * natively ([[compiledScored]]: the chain evaluated once per row,
-    * into the `ufn` column) and doled by `plans.WinnerDole`, which skips
+  /** The one schedule route: every rule table is scored by
+    * [[compiledScored]] (the chain evaluated once per row, into the
+    * `ufn` column) and doled by `plans.WinnerDole`, which skips
     * ineligible rows by the `eligible` column, so no predicate pushdown
     * copies the chain. With `wake`, the scan is pruned to the IPs
     * `ipNext` says are due and the dole emits their sentinels; without
-    * it, the A4 caps apply when enabled. Any other rule table goes to
-    * the reference-exact [[scheduleInterpreted]], which applies its own
-    * caps and keeps no waiting tree. */
+    * it, the A4 caps apply when enabled. */
   private def route(requests: Dataset[FrontierRequest],
                     replies: Dataset[FrontierReply],
                     ipState: Dataset[IpState],
@@ -351,18 +393,15 @@ object Crawl {
     val nowMillis = nowMs(cfg, iteration)
     val dueIps =
       if (wake) ipNext.map(_.filter(col("next_ms") <= nowMillis).select("first_ip")) else None
-    compiledScored(requests, replies, ipState, domState, cfg, iteration, inlinks, dueIps) match {
-      case None =>
-        ScheduleOut(scheduleInterpreted(requests, replies, ipState, domState, cfg, iteration,
-          inlinks, quota).toDF(), wake = false, dueIps = None)
-      case Some(scored) if wake =>
-        ScheduleOut(graft.plans.WinnerDole.wake(doleInput(scored, nowMillis), kEff(cfg),
-          cfg.maxWinnersPerIp), wake = true, dueIps)
-      case Some(scored) =>
-        val batch = graft.plans.WinnerDole(doleInput(scored, nowMillis).drop("next_lb"),
-          kEff(cfg), cfg.maxWinnersPerIp)
-        ScheduleOut(if (cfg.enforceDoleCaps) applyDoleCaps(batch, cfg) else batch,
-          wake = false, dueIps = None)
+    val scored = compiledScored(requests, replies, ipState, domState, cfg, iteration, inlinks, quota, dueIps)
+    if (wake)
+      ScheduleOut(graft.plans.WinnerDole.wake(doleInput(scored, nowMillis), kEff(cfg),
+        cfg.maxWinnersPerIp), wake = true, dueIps)
+    else {
+      val batch = graft.plans.WinnerDole(doleInput(scored, nowMillis).drop("next_lb"),
+        kEff(cfg), cfg.maxWinnersPerIp)
+      ScheduleOut(if (cfg.enforceDoleCaps) applyDoleCaps(batch, cfg) else batch,
+        wake = false, dueIps = None)
     }
   }
 
@@ -375,10 +414,18 @@ object Crawl {
     math.max(1, cfg.rules.map(_.ipMaxSpiders).max))
 
   /** Due-IP pruning is only exact when a row's (ufn, spider time) cannot
-    * change without a state transition that touches its IP. The compiled
-    * token set guarantees that except for the clock-relative tokens. */
+    * change without a state transition that touches its IP. Every token
+    * guarantees that except the comparisons on the clock (`spiderwaited`,
+    * `urlage`, `age`) and on the A6 quota counts, which a fetch under
+    * another IP of the same site or domain moves. */
   def wakeSafeRules(cfg: Config): Boolean =
-    !cfg.rules.exists(r => r.expr.contains("spiderwaited") || r.expr.contains("urlage"))
+    !cfg.rules.exists(_.expr.split("&&").exists { t =>
+      val (name, sign, _) = UrlFilters.parseCmp(RuleCompiler.unNegated(t.trim))
+      sign != 0 && WakeUnsafeTokens(name)
+    })
+
+  private val WakeUnsafeTokens =
+    Set("spiderwaited", "urlage", "age", "sitepages", "domainpages", "siteadds", "domainadds")
 
   /** The 12 dole-input columns, `eligible` (the one eligibility rule of
     * both schedule paths: not force-deleted and due by `nowMillis`) and
@@ -394,9 +441,9 @@ object Crawl {
       when(col("force_delete"), Long.MaxValue).otherwise(col("next_lb")).as("next_lb"))
 
   /** Compiled scoring pipeline: every frontier row with its `ufn`, rule
-    * lookups, `spider_time_ms` and `next_lb` (None → rule table needs the
-    * interpreter). With `dueIps`, the frontier scan is semi-joined on the
-    * due set BEFORE the exchange (A3 waiting-tree pruning). */
+    * lookups, `spider_time_ms` and `next_lb`. With `dueIps`, the frontier
+    * scan is semi-joined on the due set BEFORE the exchange (A3
+    * waiting-tree pruning). */
   private def compiledScored(requests: Dataset[FrontierRequest],
                              replies: Dataset[FrontierReply],
                              ipState: Dataset[IpState],
@@ -404,12 +451,17 @@ object Crawl {
                              cfg: Config,
                              iteration: Int,
                              inlinks: Dataset[InlinkState],
-                             dueIps: Option[DataFrame]): Option[DataFrame] = {
+                             quota: DataFrame,
+                             dueIps: Option[DataFrame]): DataFrame = {
     val spark = requests.sparkSession
     import spark.implicits._
     val now = nowSecs(cfg, iteration)
     val inl = Option(inlinks).getOrElse(spark.emptyDataset[InlinkState])
+    val quotaOn = quota != null && quotasEnabled(cfg.rules)
     val sl = new SiteList(cfg.siteList)
+    val ctx = ruleCtx(sl, cfg, quotaOn)
+    val reqFields = Encoders.product[FrontierRequest].schema.fieldNames
+    val repFields = Encoders.product[FrontierReply].schema.fieldNames
 
     val c = RuleCompiler.Cols(
       url = col("url"), hopCount = col("hop_count"), flags = col("flags"),
@@ -418,108 +470,117 @@ object Crawl {
       pageNumInlinks = col("page_num_inlinks"),
       repExists = col("rep_exists"), repSpideredTime = col("rep_spidered_time"),
       repErrCode = col("rep_err_code"), repErrCount = col("rep_err_count"),
-      repHttpStatus = col("rep_http_status"), now = lit(now))
+      repHttpStatus = col("rep_http_status"), now = now,
+      request = struct(reqFields.map(col): _*), reply = col("rep"),
+      quota = struct(col("q_sp"), col("q_dp"), col("q_sa"), col("q_da")))
+    // the full latest reply rides along only when a token takes the bridge
+    val fullReply = RuleCompiler.bridged(cfg.rules, c, ctx, sl)
+    val ufn = RuleCompiler.compile(cfg.rules, c, ctx, sl)
 
-    RuleCompiler.compile(cfg.rules, c, siteListEmpty = sl.isEmpty, patterns = cfg.patterns).map { ufn =>
-      // merge duplicate requests per uh48 with native aggregates
-      // (Spider.cpp:4799-4836: min hop, min discovery, freshest rest)
-      // spiderdb is keyed (firstIp, uh48) — Spider.h:370-377 — and this
-      // engine maintains UNIQUENESS on that key at write time: fresh
-      // candidates are deduped per uh48 within a batch (J4) and
-      // anti-joined against every prior uh48 (J2), and compaction (J3)
-      // re-establishes the invariant after any out-of-band append. So
-      // the reference's scan-time duplicate merge (Spider.cpp:4799-4836,
-      // done lazily there because its writes are blind LSM appends) is
-      // a no-op here and the hot path skips it — one exchange total:
-      // repartition by first_ip satisfies the reply join and the winner
-      // dole. scheduleInterpreted keeps the merge for generality.
-      // inlink_state is keyed (first_ip, uh48) — co-partitioned with
-      // the frontier, so only the small inlink side shuffles here.
-      val inlCounts = inl.toDF()
-        .select(col("first_ip"), col("uh48"),
-          least(size(col("cblocks")), lit(20)).as("pni"))
-      val base = requestsFiltered(requests.toDF(), now) // F7
-      // A3 due-IP pruning: ONLY the due slices of the frontier are
-      // scanned/scored — the semi-join sits below the exchange so
-      // non-due rows never shuffle
-      val pruned = dueIps match {
-        case Some(due) => base.join(due, Seq("first_ip"), "left_semi")
-        case None => base
-      }
-      val merged = pruned
-        .repartition(col("first_ip"))
-        .join(inlCounts, Seq("first_ip", "uh48"), "left_outer")
-        .withColumn("page_num_inlinks", coalesce(col("pni"), lit(0)))
-
-      // latest reply per uh48: lexicographic struct max on
-      // (spidered_time, download_end_time) — no object shuffle.
-      // A3 due-IP pruning on the REPLY side too: J1 joins on
-      // (first_ip, uh48) and non-due requests are discarded above, so
-      // a non-due IP's replies can never reach the output — the
-      // semi-join below the aggregate is exact, and the reply scan +
-      // latest-reply shuffle become O(due slices) instead of
-      // O(crawled), matching the reference's per-IP spiderdb read
-      // which covers that IP's requests AND replies in one list
-      // (Spider.cpp:3805 readListFromSpiderdb; key layout
-      // Spider.h:370-377).
-      val repBase = repliesFiltered(replies.toDF(), now) // F7
-      val repPruned = dueIps match {
-        case Some(due) => repBase.join(due, Seq("first_ip"), "left_semi")
-        case None => repBase
-      }
-      val latestRep = repPruned
-        .groupBy("first_ip", "uh48").agg(
-        max(struct(col("spidered_time"), col("download_end_time"),
-          col("err_code"), col("err_count"), col("http_status"))).as("r"))
-        .select(col("first_ip").as("rep_ip"), col("uh48").as("rep_uh48"),
-          col("r.spidered_time").as("rep_spidered_time"),
-          col("r.err_code").as("rep_err_code"),
-          col("r.err_count").as("rep_err_count"),
-          col("r.http_status").as("rep_http_status"))
-
-      val joined = merged
-        .join(latestRep, col("uh48") === col("rep_uh48") && col("first_ip") === col("rep_ip"), "left_outer")
-        .withColumn("rep_exists", col("rep_uh48").isNotNull)
-        .withColumn("rep_spidered_time", coalesce(col("rep_spidered_time"), lit(0L)))
-        .withColumn("rep_err_code", coalesce(col("rep_err_code"), lit(0)))
-        .withColumn("rep_err_count", coalesce(col("rep_err_count"), lit(0)))
-        .withColumn("rep_http_status", coalesce(col("rep_http_status"), lit(0)))
-        .withColumn("flags",
-          when(col("rep_exists"), col("flags").bitwiseOR(lit(Flags.HadReply))).otherwise(col("flags")))
-        .join(ipState.toDF().withColumnRenamed("first_ip", "ip_key"),
-          col("first_ip") === col("ip_key"), "left_outer")
-        .join(domState.toDF().withColumnRenamed("dom_hash32", "dom_key"),
-          col("dom_hash32") === col("dom_key"), "left_outer")
-
-      val lastMs = coalesce(col("last_download_end_ms"), lit(-1L))
-      val domCd = coalesce(col("crawl_delay_ms"), lit(-1))
-      // the chain is evaluated once, into the ufn column; every lookup
-      // below reads that column (a lookup built over the chain itself
-      // would copy the whole rule table into each derived column)
-      val a = RuleCompiler.attrs(cfg.rules, col("ufn"))
-
-      // A2: winner selection runs downstream as the BOUNDED-heap custom
-      // operator (plans.WinnerDole — the winner-tree analogue,
-      // MAX_WINNER_NODES): O(k) state per IP in one streamed pass,
-      // instead of the window's per-IP full sort, which buffers an
-      // entire skewed IP in one task at 100 TB.
-      joined
-        .withColumn("ufn", ufn)
-        .withColumn("priority", a.priority)
-        .withColumn("force_delete", a.forceDelete)
-        .withColumn("ip_max", a.ipMaxSpiders)
-        .withColumn("spider_time_ms", RuleCompiler.spiderTimeCol(c, a, lastMs, domCd))
-        // the waiting-tree lower bound: the spider-time formula MINUS the
-        // dom-crawl-delay max() term (see scheduleWake scaladoc); the
-        // non-wake path drops the column and Catalyst prunes it
-        .withColumn("next_lb", RuleCompiler.spiderTimeCol(c, a, lastMs, lit(-1)))
+    // merge duplicate requests per uh48 with native aggregates
+    // (Spider.cpp:4799-4836: min hop, min discovery, freshest rest)
+    // spiderdb is keyed (firstIp, uh48) — Spider.h:370-377 — and this
+    // engine maintains UNIQUENESS on that key at write time: fresh
+    // candidates are deduped per uh48 within a batch (J4) and
+    // anti-joined against every prior uh48 (J2), and compaction (J3)
+    // re-establishes the invariant after any out-of-band append. So
+    // the reference's scan-time duplicate merge (Spider.cpp:4799-4836,
+    // done lazily there because its writes are blind LSM appends) is
+    // a no-op here and the hot path skips it — one exchange total:
+    // repartition by first_ip satisfies the reply join and the winner
+    // dole. scheduleInterpreted keeps the merge for generality.
+    // inlink_state is keyed (first_ip, uh48) — co-partitioned with
+    // the frontier, so only the small inlink side shuffles here.
+    val inlCounts = inl.toDF()
+      .select(col("first_ip"), col("uh48"),
+        least(size(col("cblocks")), lit(20)).as("pni"))
+    val base = requestsFiltered(requests.toDF(), now) // F7
+    // A3 due-IP pruning: ONLY the due slices of the frontier are
+    // scanned/scored — the semi-join sits below the exchange so
+    // non-due rows never shuffle
+    val pruned = dueIps match {
+      case Some(due) => base.join(due, Seq("first_ip"), "left_semi")
+      case None => base
     }
+    val merged = pruned
+      .repartition(col("first_ip"))
+      .join(inlCounts, Seq("first_ip", "uh48"), "left_outer")
+      .withColumn("page_num_inlinks", coalesce(col("pni"), lit(0)))
+
+    // latest reply per uh48: lexicographic struct max on
+    // (spidered_time, download_end_time) — no object shuffle.
+    // A3 due-IP pruning on the REPLY side too: J1 joins on
+    // (first_ip, uh48) and non-due requests are discarded above, so
+    // a non-due IP's replies can never reach the output — the
+    // semi-join below the aggregate is exact, and the reply scan +
+    // latest-reply shuffle become O(due slices) instead of
+    // O(crawled), matching the reference's per-IP spiderdb read
+    // which covers that IP's requests AND replies in one list
+    // (Spider.cpp:3805 readListFromSpiderdb; key layout
+    // Spider.h:370-377).
+    val repBase = repliesFiltered(replies.toDF(), now) // F7
+    val repPruned = dueIps match {
+      case Some(due) => repBase.join(due, Seq("first_ip"), "left_semi")
+      case None => repBase
+    }
+    val latestKeys = Seq("spidered_time", "download_end_time", "err_code", "err_count", "http_status")
+    val latestRep = repPruned
+      .groupBy("first_ip", "uh48").agg(
+        max(struct((latestKeys ++ (if (fullReply) repFields.diff(latestKeys) else Nil)).map(col): _*)).as("r"))
+      .select(Seq(col("first_ip").as("rep_ip"), col("uh48").as("rep_uh48"),
+        col("r.spidered_time").as("rep_spidered_time"),
+        col("r.err_code").as("rep_err_code"),
+        col("r.err_count").as("rep_err_count"),
+        col("r.http_status").as("rep_http_status")) ++
+        Option.when(fullReply)(struct(repFields.map(f => col(s"r.$f")): _*).as("rep")): _*)
+
+    val joined = merged
+      .join(latestRep, col("uh48") === col("rep_uh48") && col("first_ip") === col("rep_ip"), "left_outer")
+      .withColumn("one_hit", oneHitAnswered(col("flags"), col("added_time"), col("rep_spidered_time")))
+      .withColumn("rep_exists", col("rep_uh48").isNotNull)
+      .withColumn("rep_spidered_time", coalesce(col("rep_spidered_time"), lit(0L)))
+      .withColumn("rep_err_code", coalesce(col("rep_err_code"), lit(0)))
+      .withColumn("rep_err_count", coalesce(col("rep_err_count"), lit(0)))
+      .withColumn("rep_http_status", coalesce(col("rep_http_status"), lit(0)))
+      .withColumn("flags",
+        when(col("rep_exists"), col("flags").bitwiseOR(lit(Flags.HadReply))).otherwise(col("flags")))
+      .join(ipState.toDF().withColumnRenamed("first_ip", "ip_key"),
+        col("first_ip") === col("ip_key"), "left_outer")
+      .join(domState.toDF().withColumnRenamed("dom_hash32", "dom_key"),
+        col("dom_hash32") === col("dom_key"), "left_outer")
+    val withReply = if (fullReply) joined else joined.withColumn("rep",
+      lit(null).cast(Encoders.product[FrontierReply].schema))
+    val scoredIn = withQuotaCounts(withReply, Option.when(quotaOn)(quota), col("site_hash32"), col("dom_hash32"))
+
+    val lastMs = coalesce(col("last_download_end_ms"), lit(-1L))
+    val domCd = coalesce(col("crawl_delay_ms"), lit(-1))
+    // the chain is evaluated once, into the ufn column; every lookup
+    // below reads that column (a lookup built over the chain itself
+    // would copy the whole rule table into each derived column)
+    val a = RuleCompiler.attrs(cfg.rules, col("ufn"))
+
+    // A2: winner selection runs downstream as the BOUNDED-heap custom
+    // operator (plans.WinnerDole — the winner-tree analogue,
+    // MAX_WINNER_NODES): O(k) state per IP in one streamed pass,
+    // instead of the window's per-IP full sort, which buffers an
+    // entire skewed IP in one task at 100 TB.
+    scoredIn
+      .withColumn("ufn", ufn)
+      .withColumn("priority", a.priority)
+      .withColumn("force_delete", a.forceDelete || col("one_hit"))
+      .withColumn("ip_max", a.ipMaxSpiders)
+      .withColumn("spider_time_ms", RuleCompiler.spiderTimeCol(c, a, lastMs, domCd))
+      // the waiting-tree lower bound: the spider-time formula MINUS the
+      // dom-crawl-delay max() term (see scheduleWake scaladoc); the
+      // non-wake path drops the column and Catalyst prunes it
+      .withColumn("next_lb", RuleCompiler.spiderTimeCol(c, a, lastMs, lit(-1)))
   }
 
-  /** Reference-exact interpreted path: [[route]]'s fallback for rule
-    * tables the compiler does not take, and the baseline the compiled
-    * path is cross-checked against. It scans the whole frontier, applies
-    * the A4 caps itself and keeps no waiting tree. */
+  /** Reference-exact interpreted schedule: the oracle the production
+    * path ([[route]]) is cross-checked against, by the specs and by
+    * perfbench's slice check. It scores rows with the typed interpreter,
+    * picks winners with a window, scans the whole frontier, applies the
+    * A4 caps itself and keeps no waiting tree. */
   def scheduleInterpreted(requests: Dataset[FrontierRequest],
                replies: Dataset[FrontierReply],
                ipState: Dataset[IpState],
@@ -534,14 +595,8 @@ object Crawl {
     val nowMillis = nowMs(cfg, iteration)
     val rules = cfg.rules
     val inl = Option(inlinks).getOrElse(spark.emptyDataset[InlinkState])
-    // collection context: site list + crawl patterns (F6/F4)
-    val sl = new SiteList(cfg.siteList)
     val quotaOn = quota != null && quotasEnabled(rules)
-    val ctx = RuleCtx(sl.isEmpty,
-      u => sl.matchingPattern(GbUrl.parse(u)),
-      (u, t) => sl.matchingPattern(GbUrl.parse(u), t),
-      cfg.patterns,
-      quotaValid = quotaOn)
+    val ctx = ruleCtx(new SiteList(cfg.siteList), cfg, quotaOn)
 
     val reqs = mergedRequests(requestsFiltered(requests.toDF(), now).as[FrontierRequest])
     val reps = latestReplies(repliesFiltered(replies.toDF(), now).as[FrontierReply])
@@ -562,28 +617,8 @@ object Crawl {
       .join(domState.toDF().withColumnRenamed("dom_hash32", "dom_key"),
         col("req.dom_hash32") === col("dom_key"), "left_outer")
 
-    // A6 quota lookups (4 keys per request against the small quota_state
-    // dimension — auto-broadcast; the reference keeps the same table in
-    // shard RAM, Spider.cpp m_localTable/quotaTable). Missing key → 0.
-    val withQuota =
-      if (!quotaOn)
-        withIp.withColumn("q_sp", lit(0)).withColumn("q_da", lit(0))
-          .withColumn("q_dp", lit(0)).withColumn("q_sa", lit(0))
-      else {
-        def qj(df: DataFrame, keyCol: org.apache.spark.sql.Column, out: String) =
-          df.join(quota.select(col("key").as(s"k_$out"), col("n").as(s"n_$out")),
-            keyCol === col(s"k_$out"), "left_outer")
-            .withColumn(out, coalesce(col(s"n_$out").cast("int"), lit(0)))
-            .drop(s"k_$out", s"n_$out")
-        var df = withIp
-        df = qj(df, col("req.site_hash32"), "q_sp")
-        df = qj(df, col("req.dom_hash32"), "q_dp")
-        df = qj(df, col("req.site_hash32").bitwiseXOR(lit(0x123456)), "q_sa")
-        df = qj(df, col("req.dom_hash32").bitwiseXOR(lit(0x123456)), "q_da")
-        df
-      }
-
-    val selected = withQuota
+    val selected = withQuotaCounts(withIp, Option.when(quotaOn)(quota), col("req.site_hash32"),
+        col("req.dom_hash32"))
       .select(
         col("req").as[FrontierRequest],
         col("rep").as[FrontierReply],
@@ -591,25 +626,21 @@ object Crawl {
           coalesce(col("last_download_end_ms"), lit(-1L)).as("last_ms"),
           coalesce(col("crawl_delay_ms"), lit(-1)).as("dom_cd"),
           coalesce(col("pni"), lit(0)).as("pni")).as[(Long, Int, Int)],
-        struct(col("q_sp"), col("q_dp"), col("q_sa"), col("q_da")).as[(Int, Int, Int, Int)]
+        struct(col("q_sp"), col("q_dp"), col("q_sa"), col("q_da")).as[(Int, Int, Int, Int)],
+        oneHitAnswered(col("req.flags"), col("req.added_time"), col("rep.spidered_time")).as[Boolean]
       )
 
-    val scored = selected.map { case (req, repOrNull, (lastMs, domCd, pni), (qsp, qdp, qsa, qda)) =>
+    val scored = selected.map { case (req, repOrNull, (lastMs, domCd, pni), q, oneHit) =>
       val rep = Option(repOrNull)
       // hadReply must reflect reality even before compaction set the bit
-      val reqFixed =
-        if (rep.isDefined && !Flags.has(req.flags, Flags.HadReply))
-          req.copy(flags = req.flags | Flags.HadReply)
-        else req
-      val ur = toUfn(reqFixed).copy(pageNumInlinks = pni,
-        sitePages = qsp, domainPages = qdp, siteAdds = qsa, domainAdds = qda)
-      val urep = rep.map(toUfnReply)
+      val reqFixed = if (rep.isDefined) req.copy(flags = req.flags | Flags.HadReply) else req
+      val (ur, urep) = ufnInputs(reqFixed, rep, pni, q)
       val ufn = UrlFilters.urlFilterNumCtx(ur, urep, now, rules, ctx)
       if (ufn < 0) Scored(reqFixed, -1, -1, Long.MaxValue, forceDelete = true, 0, 0, wasIndexed = false)
       else {
         val rule = rules(ufn)
         val t = UrlFilters.spiderTimeMs(ur, ufn, urep, rules, lastMs, domCd)
-        Scored(reqFixed, ufn, rule.priority, t, rule.forceDelete, rule.ipMaxSpiders, rule.ipWaitMs,
+        Scored(reqFixed, ufn, rule.priority, t, rule.forceDelete || oneHit, rule.ipMaxSpiders, rule.ipWaitMs,
           wasIndexed = rep.exists(_.err_code == 0))
       }
     }
@@ -679,10 +710,11 @@ object Crawl {
 
   /** S6+X5+X7-X12: fetch one batch, one result per batch row. The batch
     * rows (at their redirect targets) join the pages table once, the
-    * sandbox download; the frames of frame-bearing pages join it once
-    * more, robots-gated, and come back as one list per uh48. The rows
-    * then join robots, are repartitioned by first_ip so one task owns an
-    * IP (Msg13 per-IP consistency, Msg13.cpp:249), and one map per page
+    * sandbox download, and robots. Each row's frame urls join the pages
+    * table once more, robots-gated; the rows are repartitioned by
+    * first_ip so one task owns an IP (Msg13 per-IP consistency,
+    * Msg13.cpp:249) and fold back to one per task with the frame
+    * contents as one list, and one map per page
     * runs the reference's per-document chain: robots gate, error
     * short-circuits, content-type gate, charset → UTF-8, frame splice
     * (X7), extraction and outlink harvest.
@@ -737,57 +769,63 @@ object Crawl {
     val ua = Robots.DefaultUserAgent
 
     // X7 frame expansion (getExpandedUtf8Content, XmlDoc.cpp:19481-19768)
-    // is a step of the per-page map below; here the frame urls of
-    // frame-bearing pages (a cheap byte prefilter) join the pages table
-    // (the getExtraDoc "download") and robots, like the reference's extra
-    // doc. The contents come back as ONE list per uh48, so joining them
-    // never adds a row, even when the batch holds a url under two
-    // first_ips. No dropDuplicates: expand() keys the contents by url, so
-    // duplicate (uh48, src) pairs collapse in the map — a distinct here
-    // was one more shuffle per iteration for nothing.
-    val frames = paged
-      .select(col("uh48").as[Long], col("eff_url").as[String], col("html").as[Array[Byte]],
-        col("pcs").as[String])
-      .flatMap { case (uh, eu, html, cs) =>
-        if (html == null || !GbIframe.mayHaveFrames(html)) Nil
-        else GbIframe.candidates(GbCharset.toUtf8(html, GbCharset.fromHttpHeader(cs)), GbUrl.parse(eu))
-          .map(c => (uh, c.url))
-      }.toDF("f_uh48", "f_src")
-      .join(pages.toDF().select(col("url").as("fp_url"), col("html").as("fp_html"),
-          col("header_charset").as("fp_cs")),
-        col("f_src") === col("fp_url"), "inner") // 404 frames drop out (nukeDoc-continue)
-      .withColumn("f_host", graft.functions.GraftFunctions.urlHost(col("f_src")))
-      .join(robots.toDF().select(col("host").as("fr_host"), col("body").as("fr_body")),
-        col("f_host") === col("fr_host"), "left_outer")
-      .select(col("f_uh48").as[Long], col("f_src").as[String],
-        col("fp_html").as[Array[Byte]],
-        struct(col("fr_body").as("rb"), col("fp_cs").as("cs")).as[(Array[Byte], String)])
-      .flatMap { case (uh, src, fhtml, (fRobots, fcs)) =>
+    // is a step of the per-page map below. Here each batch row fans out
+    // to one row per frame url of its page (a cheap byte prefilter
+    // first; a row without frames stays one row), the frame urls join
+    // the pages table (the getExtraDoc "download") and robots, like the
+    // reference's extra doc, and the rows fold back to one per task
+    // (first_ip, uh48, seq_in_ip: the dole's key) with the frame
+    // contents as ONE list — so the rows above are computed once, and a
+    // url held under two first_ips stays two rows. No dropDuplicates:
+    // expand() keys the contents by url, so duplicate frame urls
+    // collapse in the map.
+    val frameUrls = udf { (eu: String, html: Array[Byte], cs: String) =>
+      if (html == null || !GbIframe.mayHaveFrames(html)) Seq.empty[String]
+      else GbIframe.candidates(GbCharset.toUtf8(html, GbCharset.fromHttpHeader(cs)), GbUrl.parse(eu)).map(_.url)
+    }
+    val frameContent = udf { (src: String, fhtml: Array[Byte], fcs: String, fRobots: Array[Byte]) =>
+      // no frame, a 404 frame (nukeDoc-continue) or a robots-denied one
+      // (XmlDoc.cpp:19747): no content
+      if (fhtml == null) null
+      else {
         val fu = GbUrl.parse(src)
         val pathCgi = if (fu.isValid) fu.url.substring(fu.pathOff) else "/"
-        val allowed = fRobots == null || Robots.evaluate(pathCgi, fRobots, ua)._1
-        if (!allowed) None // robots-denied frame → no content (XmlDoc.cpp:19747)
-        else Some((uh, GbIframe.FrameContent(src,
-          GbCharset.toUtf8(fhtml, GbCharset.fromHttpHeader(fcs)), fu.extension.equalsIgnoreCase("js"))))
-      }.toDF("f_uh48", "fc")
-      .groupBy("f_uh48").agg(collect_list(col("fc")).as("frames"))
-
-    val joined = paged
+        if (fRobots != null && !Robots.evaluate(pathCgi, fRobots, ua)._1) null
+        else GbIframe.FrameContent(src, GbCharset.toUtf8(fhtml, GbCharset.fromHttpHeader(fcs)),
+          fu.extension.equalsIgnoreCase("js"))
+      }
+    }
+    val rows = paged
       .join(robots.toDF().withColumnRenamed("host", "rhost"), col("host") === col("rhost"), "left_outer")
       .join(ov.select(col("uh48").as("ov_uh48"), col("sample_vec").as("old_vec")),
         col("uh48") === col("ov_uh48"), "left_outer")
-      .join(frames, col("uh48") === col("f_uh48"), "left_outer")
+    val key = Seq("first_ip", "uh48", "seq_in_ip")
+    // a row without frame urls joins on a key no page url or host has,
+    // spread by its uh48: a null key would send every such row to one
+    // reducer when pages or robots is too big to broadcast
+    val noFrame = concat(lit("\u0001"), col("uh48").cast("string"))
+    val joined = rows
+      .withColumn("f_src", explode_outer(frameUrls(col("eff_url"), col("html"), col("pcs"))))
+      .join(pages.toDF().select(col("url").as("fp_url"), col("html").as("fp_html"),
+          col("header_charset").as("fp_cs")), coalesce(col("f_src"), noFrame) === col("fp_url"), "left_outer")
+      .join(robots.toDF().select(col("host").as("fr_host"), col("body").as("fr_body")),
+        coalesce(graft.functions.GraftFunctions.urlHost(col("f_src")), noFrame) === col("fr_host"), "left_outer")
+      .repartition(col("first_ip"))
+      .groupBy(key.map(col): _*)
+      .agg(first(struct(rows.columns.diff(key).map(col): _*)).as("row"),
+        collect_list(frameContent(col("f_src"), col("fp_html"), col("fp_cs"), col("fr_body"))).as("frames"))
       .select(
-        struct(Encoders.product[FetchTask].schema.fieldNames.map(col): _*).as("task").as[FetchTask],
-        col("body").as[Array[Byte]],
-        col("html").as[Array[Byte]],
-        col("plang").as[String],
-        struct(col("redir_err"), col("redir_final"), col("old_vec"), col("frames"), col("pcs"), col("pct"))
+        struct(Encoders.product[FetchTask].schema.fieldNames.map(f =>
+          if (key.contains(f)) col(f) else col(s"row.$f")): _*).as("task").as[FetchTask],
+        col("row.body").as[Array[Byte]],
+        col("row.html").as[Array[Byte]],
+        col("row.plang").as[String],
+        struct(col("row.redir_err"), col("row.redir_final"), col("row.old_vec"), col("frames"),
+          col("row.pcs"), col("row.pct"))
           .as[(Int, String, Array[Int], Seq[GbIframe.FrameContent], String, String)]
       )
 
     joined
-      .repartition(col("task.first_ip"))
       .map { case (task, robotsBody, html, plang, (redirErr, redirFinal, oldVec, frames, pcs, pct)) =>
         // parse the EFFECTIVE url: content/links/robots are evaluated at
         // the redirect target (the reference's current url after follows)
@@ -877,7 +915,7 @@ object Crawl {
           val work = if (pdfHtml != null) pdfHtml.getBytes(StandardCharsets.UTF_8)
             else {
               val raw = GbCharset.toUtf8(html, GbCharset.fromHttpHeader(pcs))
-              if (frames == null) raw else GbIframe.expand(raw, u, frames.map(f => f.url -> f).toMap)
+              if (frames.isEmpty) raw else GbIframe.expand(raw, u, frames.map(f => f.url -> f).toMap)
             }
           GbXml.sanitizeUtf8(work)
           val decoded = GbXml.htmlDecode(work, doSpecial = true)
@@ -2073,19 +2111,13 @@ object Crawl {
   /** The requests chain of snapshot i, deduplicated (J3, see [[compact]]). */
   private def compactedRequests(spark: SparkSession, workdir: String, i: Int): DataFrame = {
     import spark.implicits._
-    // one-hit wonders (Spider.cpp:13721-13729): a page-reindex or
-    // fake-firstIp request whose url has since been spidered (a reply
-    // under the same (firstIp, uh48) newer than its addedTime) is
-    // dropped — the reindex was served; the fake request was re-added
-    // under the real ip by resolveRevised
+    // answered one-hit wonders are dropped (see oneHitAnswered)
     val answered = latestReplies(loadReplies(spark, workdir, i)).toDF()
       .select(col("first_ip").as("r_ip"), col("uh48").as("r_uh48"),
         col("spidered_time").as("r_time"))
-    val oneHitMask = Flags.IsPageReindex | Flags.FakeFirstIp
     val liveReq = loadRequests(spark, workdir, i).toDF()
       .join(answered, col("first_ip") === col("r_ip") && col("uh48") === col("r_uh48"), "left_outer")
-      .filter(!(col("flags").bitwiseAND(lit(oneHitMask)) =!= 0L &&
-        col("r_time").isNotNull && col("r_time") > col("added_time")))
+      .filter(!oneHitAnswered(col("flags"), col("added_time"), col("r_time")))
       .drop("r_ip", "r_uh48", "r_time")
       .as[FrontierRequest]
     // coexistence signature (Spider.cpp:13779-13789): siteHash32,

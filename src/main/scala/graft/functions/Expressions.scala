@@ -19,6 +19,7 @@ object Native {
   def canonicalizeUrl(s: UTF8String): UTF8String = UTF8String.fromString(GbUrl.parse(s.toString).url)
   def hostOf(s: UTF8String): UTF8String = UTF8String.fromString(GbUrl.parse(s.toString).host)
   def domainOf(s: UTF8String): UTF8String = UTF8String.fromString(GbUrl.parse(s.toString).domain)
+  def pathOf(s: UTF8String): UTF8String = UTF8String.fromString(GbUrl.parse(s.toString).path)
   def firstIpOf(s: UTF8String): Int = { val u = GbUrl.parse(s.toString); u.fakeFirstIp }
   def extractText(html: Array[Byte]): UTF8String = UTF8String.fromBytes(GbXml.extractTextBytes(html))
   /** hash32 of the url's tagdb key (SiteGetter site; Tagdb.cpp:2597-2623). */
@@ -93,6 +94,11 @@ case class UrlHostExpr(child: Expression) extends GraftUnary {
 case class UrlDomainExpr(child: Expression) extends GraftUnary {
   protected def fnName = "url_domain"; protected def javaCall = "domainOf"; protected def dt = StringType
   override protected def nullSafeEval(in: Any): Any = Native.domainOf(in.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
+}
+case class UrlPathExpr(child: Expression) extends GraftUnary {
+  protected def fnName = "url_path"; protected def javaCall = "pathOf"; protected def dt = StringType
+  override protected def nullSafeEval(in: Any): Any = Native.pathOf(in.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }
 case class FakeFirstIpExpr(child: Expression) extends GraftUnary {
@@ -185,6 +191,7 @@ object GraftFunctions {
   def canonicalizeUrl(c: Column): Column = column(CanonicalizeUrlExpr(expression(c)))
   def urlHost(c: Column): Column = column(UrlHostExpr(expression(c)))
   def urlDomain(c: Column): Column = column(UrlDomainExpr(expression(c)))
+  def urlPath(c: Column): Column = column(UrlPathExpr(expression(c)))
   def fakeFirstIp(c: Column): Column = column(FakeFirstIpExpr(expression(c)))
   def extractText(c: Column): Column = column(ExtractTextExpr(expression(c)))
   def siteKeyHash32(c: Column): Column = column(SiteKeyHash32Expr(expression(c)))
@@ -204,6 +211,7 @@ object GraftFunctions {
     "canonicalize_url" -> (CanonicalizeUrlExpr(_)),
     "url_host" -> (UrlHostExpr(_)),
     "url_domain" -> (UrlDomainExpr(_)),
+    "url_path" -> (UrlPathExpr(_)),
     "fake_first_ip" -> (FakeFirstIpExpr(_)),
     "extract_text" -> (ExtractTextExpr(_)),
     "site_key_hash32" -> (SiteKeyHash32Expr(_)))

@@ -2,7 +2,7 @@ package graft.rules
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.frontier.Flags
+import graft.frontier.{Crawl, Flags, FrontierReply, FrontierRequest}
 
 /** Compiles a URL-filter rule table into native Catalyst Column
   * expressions so the scheduler's scoring runs inside whole-stage codegen
@@ -10,28 +10,38 @@ import graft.frontier.Flags
   * when/otherwise Column chain"). The chain (`compile`) yields a row's
   * `ufn`, the first matching rule; the caller projects it once as a
   * column, and the per-rule lookups (`attrs`, `spiderTimeCol`) read that
-  * column, so the table is evaluated once per row. Semantics are
+  * column, so the table is evaluated once per row.
+  *
+  * `compile` takes every rule table. A token with a native form compiles
+  * to it (`insitelist` too: [[SiteList.matchColumn]]); any other token
+  * (`tag:`, configured ucp/upp patterns, `lang`, `tld`, `parentlang`,
+  * `age`, the quota counts, ...) compiles to the generic bridge, a UDF
+  * that runs the interpreter's own `UrlFilters.evalToken` on the row,
+  * whose context `ctx` is built from the same site list `sl`. Semantics are
   * cross-validated against the reference-exact interpreter
-  * (`UrlFilters.urlFilterNum`) by property tests.
+  * (`UrlFilters.urlFilterNum`) by generated rule tables.
   *
   * Input columns (the scheduler's joined row):
   *  - request: url, hop_count, flags, added_time, discovery_time,
   *    site_num_inlinks, err_count, page_num_inlinks (0 today)
   *  - reply (nullable): rep_exists, rep_spidered_time, rep_err_code,
   *    rep_err_count, rep_http_status
-  *  - politeness: last_download_end_ms (−1 none), dom_crawl_delay_ms (−1)
-  *
-  * `compile` returns None if any rule uses a token this compiler does
-  * not support (caller falls back to the interpreter). */
+  *  - politeness: last_download_end_ms (−1 none), dom_crawl_delay_ms (−1) */
 object RuleCompiler {
 
+  /** `now` is the scan's clock in seconds. The bridge reads `request` (a
+    * FrontierRequest struct, HadReply set when a reply exists), `reply`
+    * (the latest FrontierReply struct, null if none; the caller carries
+    * it only when [[bridged]]) and `quota`, the four A6 counts
+    * (site pages, domain pages, site adds, domain adds). */
   final case class Cols(
       url: Column, hopCount: Column, flags: Column,
       addedTime: Column, discoveryTime: Column,
       siteNumInlinks: Column, pageNumInlinks: Column,
       repExists: Column, repSpideredTime: Column, repErrCode: Column,
       repErrCount: Column, repHttpStatus: Column,
-      now: Column)
+      now: Long,
+      request: Column, reply: Column, quota: Column)
 
   /** A rule's scheduling attributes, looked up by a row's `ufn`. */
   final case class Attrs(priority: Column, forceDelete: Column, ipMaxSpiders: Column,
@@ -39,9 +49,49 @@ object RuleCompiler {
 
   @inline private def bit(flags: Column, b: Long): Column = (flags.bitwiseAND(lit(b)) =!= lit(0L))
 
-  /** One token → Some(predicate Column), or None if unsupported. */
-  private def compileToken(tokIn: String, c: Cols, siteListEmpty: Boolean,
-                           patterns: CrawlPatterns): Option[Column] = {
+  private def tokens(r: UrlFilterRule): Seq[String] = r.expr.split("&&").map(_.trim).toSeq
+
+  private[graft] def unNegated(tok: String): String =
+    if (tok.startsWith("!") && !tok.startsWith("!=")) tok.substring(1).trim else tok
+
+  /** A token as a predicate Column: its native form, or the bridge. */
+  private def compileToken(tok: String, c: Cols, ctx: RuleCtx, sl: SiteList): Column =
+    nativeToken(tok, c, ctx, sl).getOrElse(bridge(tok, c, ctx))
+
+  /** The bridge: `tok`, raw (`!` included), evaluated per row by the
+    * interpreter's own `evalToken` on the row's UfnRequest/UfnReply,
+    * built as `Crawl.scheduleInterpreted` builds them. A row-skip fails
+    * the token like false; an abort never reaches here (see [[aborts]]). */
+  private def bridge(tok: String, c: Cols, ctx: RuleCtx): Column = {
+    val now = c.now
+    val eval = udf { (req: FrontierRequest, rep: FrontierReply, hasRep: Boolean, pni: Int, q: (Int, Int, Int, Int)) =>
+      val (ur, urep) = Crawl.ufnInputs(req, Option.when(hasRep)(rep), pni, q)
+      UrlFilters.evalToken(tok, ur, urep, now, ctx) == UrlFilters.Bool(true)
+    }
+    // a null struct does not decode to a case class: no reply is a flag
+    eval(c.request, coalesce(c.reply, NoReply), c.reply.isNotNull, c.pageNumInlinks, c.quota)
+  }
+
+  private val NoReply = typedLit(FrontierReply(0L, 0, 0L, 0, 0, 0, 0L, "", 0, 0f, 0L, 0))
+
+  /** Does `tok` abort the whole filter run? The interpreter's one abort
+    * (`domainpages` with no quota table, Spider.cpp:12797) depends on the
+    * token and the context alone, never on the row, so one probe row
+    * answers for every row. A token whose comparison value does not
+    * parse throws on the rows that reach it, here and in the interpreter
+    * alike, so it is not an abort. */
+  private def aborts(tok: String, ctx: RuleCtx): Boolean =
+    try UrlFilters.evalToken(tok, UfnRequest("", 0), None, 0L, ctx) == UrlFilters.Abort
+    catch { case _: NumberFormatException => false }
+
+  /** Whether any token of `rules` compiles to the bridge: only then
+    * does the caller carry the full latest reply in `Cols.reply` (the
+    * native reply tokens read the rep_* columns). */
+  def bridged(rules: IndexedSeq[UrlFilterRule], c: Cols, ctx: RuleCtx, sl: SiteList): Boolean =
+    rules.exists(tokens(_).exists(nativeToken(_, c, ctx, sl).isEmpty))
+
+  /** A token's native form, or None: the token then takes the bridge. */
+  private def nativeToken(tokIn: String, c: Cols, ctx: RuleCtx, sl: SiteList): Option[Column] = {
     var tok = tokIn
     var neg = false
     if (tok.startsWith("!") && !tok.startsWith("!=")) { neg = true; tok = tok.substring(1).trim }
@@ -52,19 +102,12 @@ object RuleCompiler {
     if (tok.startsWith("isreindex")) return fin(bit(c.flags, Flags.IsPageReindex))
     if (tok.startsWith("ismanualadd"))
       return fin(bit(c.flags, Flags.IsAddUrl) || bit(c.flags, Flags.IsInjecting) || bit(c.flags, Flags.IsPageReindex))
-    if (tok.startsWith("insitelist")) {
-      // non-empty site list → interpreter fallback (pattern matching)
-      if (!siteListEmpty) return None
-      return fin(lit(true))
-    }
-    if (tok.startsWith("matchesucp")) {
-      if (patterns.ucpConfigured) return None // interpreter fallback
-      return Some(lit(true)) // unconfigured → always passes, '!' ignored
-    }
-    if (tok.startsWith("matchesupp")) {
-      if (patterns.uppConfigured) return None
-      return Some(lit(true))
-    }
+    // an empty site list always matches (Spider.cpp:12031-12038)
+    if (tok.startsWith("insitelist")) return fin(if (sl.isEmpty) lit(true) else sl.matchColumn(c.url))
+    // unconfigured → always passes, '!' ignored; configured patterns
+    // match through the bridge
+    if (tok.startsWith("matchesucp")) return Option.when(!ctx.patterns.ucpConfigured)(lit(true))
+    if (tok.startsWith("matchesupp")) return Option.when(!ctx.patterns.uppConfigured)(lit(true))
     if (tok.startsWith("isaddurl")) return fin(bit(c.flags, Flags.IsAddUrl))
     if (tok.startsWith("isinjected")) return fin(bit(c.flags, Flags.IsInjecting))
     if (tok.startsWith("ismedia"))
@@ -119,10 +162,10 @@ object RuleCompiler {
         case "numinlinks" => return Some(cmp(c.pageNumInlinks, v))
         case "sitenuminlinks" => return Some(c.siteNumInlinks =!= -1 && cmp(c.siteNumInlinks, v))
         case "lastspidertime" => return Some(c.repExists && cmp(c.repSpideredTime, v))
-        case "spiderwaited" => return Some(c.repExists && cmp(c.now - c.repSpideredTime, v))
+        case "spiderwaited" => return Some(c.repExists && cmp(lit(c.now) - c.repSpideredTime, v))
         case "httpstatus" => return Some(c.repExists && cmp(c.repHttpStatus, v))
         case "urlage" =>
-          val age = when(c.discoveryTime =!= 0, c.now - c.discoveryTime).otherwise(c.now - c.addedTime)
+          val age = when(c.discoveryTime =!= 0, lit(c.now) - c.discoveryTime).otherwise(lit(c.now) - c.addedTime)
           return Some(cmp(age, v))
         case _ => // fall through to patterns
       }
@@ -142,11 +185,9 @@ object RuleCompiler {
       return fin(c.url.endsWith(pat))
     }
     if (tok.nonEmpty && tok.head.isLetter && !tok.contains("==") && !tok.contains("<") &&
-        !tok.contains(">") && !tok.contains("!=")) {
-      // bare substring; only safe when it's not an unrecognized is*/has* token
-      if (tok.startsWith("is") || tok.startsWith("has") || tok.startsWith("in") ||
-          tok.startsWith("tag:") || tok.startsWith("lang") || tok.startsWith("tld") ||
-          tok.startsWith("parentlang") || tok.startsWith("matches")) return None
+        !tok.contains(">") && !tok.contains("!=") && !Seq("is", "has", "in", "tag:", "matches").exists(tok.startsWith)) {
+      // bare substring; an is*/has*/in*/tag:/matches* token the chain
+      // above does not know is the interpreter's to evaluate
       val pat = tok.takeWhile(ch => !ch.isWhitespace)
       return fin(c.url.contains(pat))
     }
@@ -154,21 +195,22 @@ object RuleCompiler {
   }
 
   /** Compile the whole table into the `ufn` chain: the index of the
-    * first matching rule, −1 if none matches. None if any token is
-    * unsupported. */
-  def compile(rules: IndexedSeq[UrlFilterRule], c: Cols, siteListEmpty: Boolean = true,
-              patterns: CrawlPatterns = CrawlPatterns()): Option[Column] = {
-    val ruleCols: Seq[Column] = rules.map { r =>
-      val toks = r.expr.split("&&").map(_.trim)
-      val parts = toks.map(t => compileToken(t, c, siteListEmpty, patterns))
-      if (parts.exists(_.isEmpty)) return None
-      parts.flatten.reduce(_ && _)
+    * first matching rule, −1 if none matches. A rule whose token aborts
+    * the run gives −1 once the tokens before that one hold. */
+  def compile(rules: IndexedSeq[UrlFilterRule], c: Cols, ctx: RuleCtx, sl: SiteList): Column = {
+    val branches = rules.indices.map { i =>
+      val toks = tokens(rules(i))
+      val abortAt = toks.indexWhere(aborts(_, ctx))
+      val held = if (abortAt < 0) toks else toks.take(abortAt)
+      // an expression of no tokens ("&&") never matches
+      (held.map(compileToken(_, c, ctx, sl)).reduceOption(_ && _).getOrElse(lit(toks.nonEmpty)),
+        if (abortAt < 0) i else -1)
     }
     // one CASE whose branches are tried in rule order: the FIRST match wins
-    if (ruleCols.isEmpty) Some(lit(-1))
-    else Some(ruleCols.indices.tail.foldLeft(when(ruleCols.head, lit(0))) { (chain, i) =>
-      chain.when(ruleCols(i), lit(i))
-    }.otherwise(lit(-1)))
+    if (branches.isEmpty) lit(-1)
+    else branches.tail.foldLeft(when(branches.head._1, lit(branches.head._2))) {
+      case (chain, (cond, ufn)) => chain.when(cond, lit(ufn))
+    }.otherwise(lit(-1))
   }
 
   /** The per-rule lookups over `ufn`, a reference to the column that

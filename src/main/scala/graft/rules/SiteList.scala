@@ -1,6 +1,9 @@
 package graft.rules
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 import graft.core.GbUrl
+import graft.functions.GraftFunctions
 
 /** F6: the site-list engine — a from-scratch port of the reference's
   * site-list pattern matching (`/root/reference/src/PageBasic.cpp`:
@@ -96,6 +99,27 @@ final class SiteList(lines: Seq[String]) extends Serializable {
   }
 
   def contains(url: String): Boolean = matchingPattern(GbUrl.parse(url))
+
+  /** [[matchingPattern]] with no tag as a native Column over `url`, a
+    * canonical url (the frontier stores `GbUrl.url`): a negative
+    * substring vetoes; then the patterns of the url's domain, looked up
+    * in a constant map, match by url prefix, or by path prefix and host
+    * or domain; then a positive substring matches. */
+  def matchColumn(url: Column): Column = {
+    def anyOf(subs: Seq[String]) = subs.map(url.contains(_)).reduceOption(_ || _).getOrElse(lit(false))
+    val byDomain = pats.groupBy(_.domain.toLowerCase).map { case (d, ps) =>
+      d -> ps.map(p => (p.host.toLowerCase, p.path, p.urlPrefix))
+    }
+    val dom = lower(GraftFunctions.urlDomain(url))
+    val patterned = if (pats.isEmpty) lit(false) else
+      coalesce(exists(element_at(typedLit(byDomain), dom), { p =>
+        val (host, path, prefix) = (p.getField("_1"), p.getField("_2"), p.getField("_3"))
+        (path === "" || GraftFunctions.urlPath(url).startsWith(path)) &&
+          when(prefix =!= "", url.startsWith(prefix))
+            .otherwise(lower(GraftFunctions.urlHost(url)) === host || dom === host)
+      }), lit(false))
+    !anyOf(negSubs) && (patterned || anyOf(posSubs))
+  }
 }
 
 /** Collection-level crawl/process patterns for `matchesucp` /

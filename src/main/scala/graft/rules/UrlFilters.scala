@@ -150,13 +150,13 @@ object UrlFilters {
   private[rules] final val EQ = 1; private[rules] final val NE = 2; private[rules] final val GT = 3
   private[rules] final val LT = 4; private[rules] final val GE = 5; private[rules] final val LE = 6
 
-  private sealed trait Tok
-  private case object RowSkip extends Tok // predicate unevaluable → skip row
+  private[graft] sealed trait Tok
+  private[graft] case object RowSkip extends Tok // predicate unevaluable → skip row
   // `domainpages` with no quota table aborts the WHOLE filter run with
   // -1 (Spider.cpp:12797 `return -1;`) — unlike sitepages/siteadds/
   // domainadds, which merely `continue` to the next rule. Quirk ported.
-  private case object Abort extends Tok
-  private case class Bool(matched: Boolean) extends Tok
+  private[graft] case object Abort extends Tok
+  private[graft] case class Bool(matched: Boolean) extends Tok
 
   /** First matching rule index, or -1 (Spider.cpp:11695-13536).
     * `siteListEmpty`: with an empty site list `insitelist` always matches
@@ -211,8 +211,9 @@ object UrlFilters {
     if (parts.nonEmpty) 1 else 0
   }
 
-  // evaluate one token (with optional leading '!')
-  private def evalToken(tokIn: String, req: UfnRequest, rep: Option[UfnReply], now: Long,
+  // evaluate one token (with optional leading '!'); RuleCompiler's
+  // bridge calls it for the tokens it has no native form for
+  private[graft] def evalToken(tokIn: String, req: UfnRequest, rep: Option[UfnReply], now: Long,
                         ctx: RuleCtx): Tok = {
     var tok = tokIn
     var neg = false
@@ -424,7 +425,7 @@ object UrlFilters {
   }
 
   /** `name op value` parse (Spider.cpp:12623-12655). sign==0 → not a cmp. */
-  private[rules] def parseCmp(tok: String): (String, Int, String) = {
+  private[graft] def parseCmp(tok: String): (String, Int, String) = {
     var i = 0
     while (i < tok.length && tok.charAt(i).isLetter) i += 1
     val name = tok.substring(0, i)

@@ -54,18 +54,31 @@ object GenPlans {
   scans as PushedFilters""",
       so.dole)
 
+    // the same scan under a site list: the insitelist token compiles to
+    // a native substring test, the rest of the plan as above
+    val siteListed = cfg.copy(siteList = Seq("contains:.test"))
+    section("schedule, site list (F6): the same plan, `insitelist` native",
+      """What to look for:
+- the plan of the section above, with the waiting-tree prune and ONE
+  Exchange: a site list keeps the compiled path and the waiting tree
+- `insitelist` is `Contains(url, .test)` in the rule chain's CASE: no
+  `UDF`, no request or reply struct, no quota join""",
+      Crawl.scheduleWake(st.requests, st.replies, st.ipState, st.domState, siteListed, i + 1,
+        st.inlinks, st.quotaState, st.ipNext).dole)
+
     // the fetch of that dole, on the inputs Crawl.run gives it; the
     // redirect closure as a cut leaf (its own plan is an unrolled loop)
     val batch = GraftShim.cutLineage(so.dole.persist()).filter(col("seq_in_ip") >= 0).as[FetchTask]
-    section("fetch (S6+X5+X7): pages join → frames, one list per uh48 → robots → per-page map",
+    section("fetch (S6+X5+X7): pages join → robots → frame urls fan out → one row per task → per-page map",
       """What to look for:
-- pages joins twice: the batch rows on `eff_url`, and their frame urls
-  on `f_src`; the first join feeds both the frame candidates and the
-  rows the map reads, so the plan computes it in each of those branches
-- the frames reach the rows as ONE `collect_list` per `f_uh48`
-  (ObjectHashAggregate), joined left outer on uh48: a url held under
-  two first_ips stays two rows
-- ONE Exchange on `task.first_ip` feeds ONE per-page typed map""",
+- the batch rows (the batch ⋈ redirect-closure join and the pages
+  join on `eff_url`) are computed ONCE: no branch of the plan
+  repeats them
+- each row fans out to its frame urls (`Generate explode`), which
+  join pages on `f_src` and robots on their host, left outer
+- ONE Exchange on `first_ip` feeds ONE ObjectHashAggregate that folds
+  the rows back to one per (first_ip, uh48, seq_in_ip) with the frame
+  contents as ONE `collect_list`, then ONE per-page typed map""",
       Crawl.fetch(batch, Corpus.pages(spark, spec).persist(), Corpus.robots(spark, spec), cfg, i + 1,
         GraftShim.cutLineage(Crawl.redirectClosure(Corpus.redirects(spark, spec))), st.titleVecs).toDF)
 

@@ -210,6 +210,25 @@ class CrawlSpec extends AnyFunSuite with TempDirs {
     assert(replies.distinct.size == replies.size, s"one reply per task: ${replies.diff(replies.distinct)}")
   }
 
+  test("compaction is invisible: the same crawl at compactEvery 1, 4 and 100") {
+    // a 40-day clock step makes every answered add-url seed's fake-IP
+    // request and every crawled page due again within the run; an
+    // answered fake-IP request must not be doled again before a
+    // compaction drops it
+    val stepped = cfg.copy(clockStepMs = 40L * 86400L * 1000L)
+    val runs = Seq(1, 4, 100).map { every =>
+      val d = tmpdir()
+      val results = Crawl.run(spark, d, spec, 8, stepped, compactEvery = every)
+      (every, results.map(_.scheduled), fetchOrder(d, 8), seenSet(d, 8))
+    }
+    val (_, scheduled, order, seen) = runs.head
+    for ((every, s, o, u) <- runs.tail) {
+      assert(s == scheduled, s"scheduled per iteration at compactEvery $every: $s vs $scheduled at 1")
+      assert(o == order, s"fetch_log at compactEvery $every differs from compactEvery 1")
+      assert(u == seen, s"seen set at compactEvery $every differs from compactEvery 1")
+    }
+  }
+
   test("A8 overflow guard: over-cap IPs admit no outlinks") {
     import spark.implicits._
     val capped = cfg.copy(overflowCap = 2L)

@@ -145,9 +145,13 @@ class PlanSpec extends AnyFunSuite {
     val so = Crawl.scheduleWake(reqs, reps, ips, doms, cfg, 1, inlinks, null,
       Some(Seq(1, 2, 3).toDF("first_ip").withColumn("next_ms", lit(0L))))
     assert(so.wake, "default rules must be wake-safe")
+    // a site list keeps the compiled path: `insitelist` is native
+    val siteListed = cfg.copy(siteList = Seq("contains:.test"))
     val plans = Seq(
       "schedule" -> Crawl.schedule(reqs, reps, ips, doms, cfg, 1, inlinks).toDF(),
-      "scheduleWake" -> so.dole)
+      "scheduleWake" -> so.dole,
+      "scheduleWake with a site list" -> Crawl.scheduleWake(reqs, reps, ips, doms, siteListed, 1, inlinks, null,
+        Some(Seq(1, 2, 3).toDF("first_ip").withColumn("next_ms", lit(0L)))).dole)
     val shapes = plans.map { case (name, df) => (name, caseBranches(df), maxMethodBytes(df)) }
     val report = shapes.map { case (n, c, b) => s"$n: $c CASE branches, largest method $b bytes" }
       .mkString("; ")

@@ -5,8 +5,9 @@ import graft.core.GbUrl
 import graft.frontier._
 import graft.rules._
 
-/** F6 site list + F4 matchesucp/matchesupp + isparentindexed. */
-class SiteListSpec extends AnyFunSuite {
+/** F6 site list + F4 matchesucp/matchesupp + isparentindexed, and the
+  * waiting tree under a site list. */
+class SiteListSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -92,7 +93,23 @@ class SiteListSpec extends AnyFunSuite {
     assert(nAdd == 1, "manual add must NOT override matchesupp")
   }
 
-  test("interpreter fallback engages for site-list crawls (compiled == interpreted)") {
+  test("insitelist's native column agrees with the site-list engine") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val urls = for (h <- Seq("h1.test", "www.h1.test", "h2.org", "sub.h3.de", "H4.com");
+                    p <- Seq("/", "/p/x.html", "/m?q=1", "/qz")) yield GbUrl.parse(s"http://$h$p").url
+    val lists = Seq(Seq("h1.test"), Seq("www.h1.test/p"), Seq("http://h2.org/m"),
+      Seq("-contains:q", "h1.test", "contains:.org"), Seq("contains:/p/", "sub.h3.de"),
+      Seq("h3.de/m", "tag:x h4.com"), Seq("-contains:www", "site:h1.test/p/"))
+    for (lines <- lists) {
+      val sl = new SiteList(lines)
+      val got = urls.toDF("url").select(col("url"), sl.matchColumn(col("url"))).as[(String, Boolean)].collect().toMap
+      for (u <- urls) assert(got(u) == sl.matchingPattern(GbUrl.parse(u)), s"$lines on $u")
+      assert(got.values.toSet == Set(true, false), s"$lines must match some urls and miss others: $got")
+    }
+  }
+
+  test("site-list schedule: compiled == interpreted") {
     import spark.implicits._
     val cfg = Crawl.Config(siteList = Seq("h0.test", "h1.test"))
     val reqs = spark.createDataset((0 until 6).map { k =>
@@ -105,5 +122,45 @@ class SiteListSpec extends AnyFunSuite {
     // only h0/h1 survive (others hit the !insitelist delete row)
     assert(batch.map(_.url).toSet ==
       Set("http://www.h0.test/p.html", "http://www.h1.test/p.html"), batch.mkString(", "))
+  }
+
+  test("a site-list crawl keeps the waiting tree; each dole equals the interpreter's on its state") {
+    import spark.implicits._
+    val spec = Corpus.micro
+    // hosts 0 and 1 listed; the other seeds and their outlinks hit the
+    // `!ismanualadd && !insitelist` delete row once answered
+    val cfg = Crawl.Config(siteList = Seq(Corpus.host(0), s"contains:${Corpus.host(1)}"))
+    assert(Crawl.wakeSafeRules(cfg))
+    val d = tmpdir("graftsitelist")
+    val iterations = 5
+    val results = Crawl.run(spark, d, spec, iterations, cfg, compactEvery = 100)
+    assert(results.map(_.scheduled).sum > results.head.scheduled, s"the crawl must go on: $results")
+    for (i <- 1 to iterations) {
+      val manifest = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(Crawl.snapDir(d, i), "MANIFEST.json")))
+      assert(manifest.contains(s"\"rules\":\"${Crawl.rulesFingerprint(cfg)}\""),
+        s"snapshot $i rolled no waiting tree forward: $manifest")
+      val st = Crawl.loadLoopState(spark, d, i - 1, cfg)
+      val interp = Crawl.scheduleInterpreted(st.requests, st.replies, st.ipState, st.domState, cfg, i,
+        st.inlinks, st.quotaState).collect().map(t => (t.first_ip, t.seq_in_ip, t.url, t.priority)).sorted.toSeq
+      val doled = spark.read.parquet(s"${Crawl.snapDir(d, i)}/fetch_log")
+        .select("first_ip", "seq", "url", "priority").as[(Int, Int, String, Int)].collect().sorted.toSeq
+      assert(doled == interp, s"iteration $i: doled ${doled.diff(interp)} vs interpreted ${interp.diff(doled)}")
+      // off the list, only the seeds (manual adds) are fetched
+      assert(doled.forall(t => t._3.contains(Corpus.host(0)) || t._3.contains(Corpus.host(1)) ||
+        Corpus.seeds(spec).contains(t._3)), s"iteration $i doled an off-list outlink: $doled")
+    }
+  }
+
+  test("wakeSafeRules: the clock and quota comparisons, not their substrings") {
+    def safe(exprs: String*) = Crawl.wakeSafeRules(Crawl.Config(rules =
+      exprs.map(e => UrlFilterRule(e, harvestLinks = true, 1, 9, 7, 1000, 50)).toIndexedSeq))
+    assert(safe("default"))
+    for (t <- Seq("age>86400", "!age<=3", "urlage>5", "spiderwaited>=60", "sitepages>5", "domainpages<3",
+        "siteadds==0", "domainadds!=2", "hopcount==0 && age>86400"))
+      assert(!safe(t, "default"), s"$t moves with the clock or other IPs' fetches")
+    // tokens that merely contain those names are row-local
+    for (t <- Seq("$page", "$\\.page", "^http://age.test/", "pagesite", "isnew && $domainpages.html", "lang==en", "tld==de"))
+      assert(safe(t, "default"), s"$t is row-local")
   }
 }
